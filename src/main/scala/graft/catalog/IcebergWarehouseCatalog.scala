@@ -61,13 +61,14 @@ class IcebergWarehouseCatalog extends TableCatalog with SupportsNamespaces {
     warehouse = Option(options.get("warehouse")).getOrElse(throw new IllegalArgumentException(
       s"IcebergWarehouseCatalog '$name' needs spark.sql.catalog.$name.warehouse=<dir>"))
     // LOG-GOVERNED mount (the Nessie capability on foreign tables,
-    // X136): reads resolve the snapshot the IcebergLakeCommits head
-    // pins — unpublished table-line commits are invisible to SQL.
+    // X136): reads resolve the snapshot the CommitLog head pins (its
+    // IcebergLakeCommits face) — unpublished table-line commits are
+    // invisible to SQL.
     // Three transports: `commitlog=<dir>` reads the numbered-commit
     // log off shared storage; `uri=http://…` (r18 — how the
     // reference's own deployment registers its catalog,
     // datalake_gold_spark_dag.py:181-186) resolves the same pins over
-    // the Nessie-v2-shaped wire (IcebergLakeHttpServer); `uri=` +
+    // the Nessie-v2-shaped wire (NessieServer); `uri=` +
     // `type=rest-shape` (r19, X144) resolves the Iceberg REST
     // protocol's catalog-pinned metadata (IcebergRestHttpServer) —
     // the wire real deployments converge on.
@@ -229,9 +230,9 @@ class IcebergWarehouseCatalog extends TableCatalog with SupportsNamespaces {
       partitions: Array[Transform], properties: util.Map[String, String]): Table = rest match {
     case None => refuseDdl("CREATE TABLE")
     case Some(r) =>
-      import graft.io.LakeHttp.jesc
+      import graft.io.Json.escape
       val fields = schema.fields.zipWithIndex.map { case (f, i) =>
-        s"""{"id":${i + 1},"name":"${jesc(f.name)}","required":${!f.nullable},""" +
+        s"""{"id":${i + 1},"name":"${escape(f.name)}","required":${!f.nullable},""" +
           s""""type":"${icebergTypeOf(f.dataType)}"}"""
       }.mkString(",")
       val idOf = schema.fieldNames.zipWithIndex.map { case (n, i) => n -> (i + 1) }.toMap
@@ -240,7 +241,7 @@ class IcebergWarehouseCatalog extends TableCatalog with SupportsNamespaces {
           s"CREATE TABLE through the REST mount supports identity partitioning; " +
             s"got transform '${tr.name}' — use the wire client for hidden-partition specs")
         val col = tr.references.head.fieldNames.mkString(".")
-        s"""{"name":"${jesc(col)}","transform":"identity","source-id":${idOf(col)},""" +
+        s"""{"name":"${escape(col)}","transform":"identity","source-id":${idOf(col)},""" +
           s""""field-id":${1000 + i}}"""
       }
       import scala.jdk.CollectionConverters._
@@ -251,7 +252,7 @@ class IcebergWarehouseCatalog extends TableCatalog with SupportsNamespaces {
         if (specFields.isEmpty) None
         else Some(s"""{"fields":[${specFields.mkString(",")}]}"""),
         if (props.isEmpty) None
-        else Some(props.map { case (k, v) => s""""${jesc(k)}":"${jesc(v)}"""" }
+        else Some(props.map { case (k, v) => s""""${escape(k)}":"${escape(v)}"""" }
           .mkString("{", ",", "}")))
       loadTable(ident)
   }

@@ -73,7 +73,8 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces with StagingT
   }
 
   /** LOG-GOVERNED mode (`spark.sql.catalog.<name>.commitlog=<dir>`) —
-    * the SQL face of [[graft.io.LakeCommits]], the reference's Nessie
+    * the SQL face of the [[graft.io.CommitLog]] (through its
+    * [[graft.io.LakeCommits]] face), the reference's Nessie
     * catalog semantics: reads resolve each table's version from the
     * commit log's HEAD (per statement), so a table version committed
     * but not yet published is invisible to SQL; writes and DML

@@ -48,7 +48,7 @@ import org.apache.spark.sql.types.{BooleanType, DataType, IntegerType, LongType,
   *    meta-less version dirs past the grace, manifests whose version
   *    is gone); [[SnapshotTables.removeOrphans]]
   *  - `expire_log(keep)` — prune the governed catalog's commit log
-  *    (governed catalogs only); [[graft.io.LakeCommits.expireLog]]
+  *    (governed catalogs only); [[graft.io.CommitLog.expireLog]]
   *  - `export_iceberg_metadata(table, dest)` — materialize Iceberg v2
   *    metadata (JSON + Avro manifest lists/manifests) over the table's
   *    existing parquet at `dest`, O(metadata), data untouched;

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** The filesystem atomicity primitives the snapshot layer's commit
   * protocol is built on, shared by [[SnapshotTables]] (per-table
-  * version CAS) and [[LakeCommits]] (catalog-level commit-log CAS) so
+  * version CAS) and [[CommitLog]] (catalog-level commit-log CAS) so
   * both lines of commits have IDENTICAL semantics.
   *
   * See the concurrency notes on [[SnapshotTables]] for why local-FS

@@ -284,7 +284,7 @@ object IcebergExport {
     def structJson(s: StructType): String =
       s.fields.map { f =>
         val id = fieldId.incrementAndGet()
-        s"""{"id":$id,"name":"${esc(f.name)}","required":${!f.nullable},"type":${icebergType(f.dataType)}}"""
+        s"""{"id":$id,"name":"${Json.escape(f.name)}","required":${!f.nullable},"type":${icebergType(f.dataType)}}"""
       }.mkString("""{"type":"struct","fields":[""", ",", "]}")
     // top-level primitive columns get exported file stats (Iceberg's
     // value/null counts and lower/upper bounds) — capture their field
@@ -308,7 +308,7 @@ object IcebergExport {
       val id = fieldId.incrementAndGet()
       topIds(f.name) = id
       if (statKind(f.dataType).nonEmpty) statCols(f.name) = (id, statKind(f.dataType))
-      s"""{"id":$id,"name":"${esc(f.name)}","required":${!f.nullable},"type":${icebergType(f.dataType)}}"""
+      s"""{"id":$id,"name":"${Json.escape(f.name)}","required":${!f.nullable},"type":${icebergType(f.dataType)}}"""
     }.mkString("""{"type":"struct","fields":[""", ",", "]}")
     val schemaJson = schemaFields.patch(
       schemaFields.indexOf('{') + 1, """"schema-id":0,""", 0)
@@ -384,7 +384,7 @@ object IcebergExport {
     val unpartSpecId = if (spec0Fields.isEmpty) 0 else 1
     def specFieldsJson(fields: Seq[SpecField]): String = fields.map { f =>
       val srcId = topIds(f.srcCol)
-      s"""{"name":"${esc(f.name)}","transform":"${f.transform}","source-id":$srcId,"field-id":${f.fid}}"""
+      s"""{"name":"${Json.escape(f.name)}","transform":"${f.transform}","source-id":$srcId,"field-id":${f.fid}}"""
     }.mkString("[", ",", "]")
     val specsById: Map[Int, Seq[SpecField]] =
       if (spec0Fields.isEmpty) Map(0 -> Nil) else Map(0 -> spec0Fields, 1 -> Nil)
@@ -783,7 +783,7 @@ object IcebergExport {
             s""""added-rows":${segAddedRows.getOrElse(head, 0L)},"""
         }
       s"""{"snapshot-id":$v,$parent"sequence-number":$v,$lineage"timestamp-ms":$now,""" +
-        s""""summary":{"operation":"$op"},"manifest-list":"${esc(listPaths(v))}","schema-id":0}"""
+        s""""summary":{"operation":"$op"},"manifest-list":"${Json.escape(listPaths(v))}","schema-id":0}"""
     }.mkString("[", ",", "]")
     val snapshotLog = versions
       .map(v => s"""{"timestamp-ms":$now,"snapshot-id":$v}""").mkString("[", ",", "]")
@@ -791,7 +791,7 @@ object IcebergExport {
       s"""{"spec-id":$id,"fields":${specFieldsJson(fields)}}"""
     }.mkString("[", ",", "]")
     val json =
-      s"""{"format-version":$formatVersion,"table-uuid":"$uuid","location":"${esc(destDir)}",""" +
+      s"""{"format-version":$formatVersion,"table-uuid":"$uuid","location":"${Json.escape(destDir)}",""" +
         (if (v3) s""""next-row-id":$nextRowIdTotal,""" else "") +
         s""""last-sequence-number":$cur,"last-updated-ms":$now,"last-column-id":$lastColumnId,""" +
         s""""current-schema-id":0,"schemas":[$schemaJson],""" +
@@ -1057,9 +1057,6 @@ object IcebergExport {
     val os = f.create(p, true)
     try os.write(s.getBytes("UTF-8")) finally os.close()
   }
-
-  private def esc(s: String): String =
-    s.replace("\\", "\\\\").replace("\"", "\\\"")
 
   /** Iceberg v2 `manifest_file` Avro schema (spec "Manifest Lists":
     * field-ids 500-517; optional v1-only fields omitted). */

@@ -1,114 +1,34 @@
 package graft.io
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Catalog-level atomic commits across MANY FOREIGN Iceberg tables —
-  * [[LakeCommits]] (X81, the Nessie capability the reference's
-  * deployment registers for exactly this:
-  * `airflow/dags/datalake_gold_spark_dag.py:181-186` runs silver and
-  * gold under one `nessie` catalog so a pipeline run lands as one
-  * consistent state) re-expressed over tables graft did NOT write:
-  * the pinned versions are Iceberg SNAPSHOT IDS, staging is the
-  * foreign WAP surface (X130 branches), and reads resolve through
-  * [[IcebergImport]].
-  *
-  * Same model, same primitive: a line of numbered commit files, each
-  * holding the FULL tableDir→snapshot mapping, advanced by ONE
-  * exclusive-create CAS ([[AtomicFs.createExclusive]]) with
-  * rebase-and-retry on lost races. Per-table commits land FIRST
-  * (snapshots exist on the table lines but are not yet visible through
-  * the log); the log flips visibility for all of them at once. A
-  * reader resolving through the log observes either every table
-  * advanced or none — never gold computed from unpublished silver.
-  *
-  * [[publishBranches]] is the catalog-level WAP flow on foreign
-  * tables: each staged branch fast-forwards to main
-  * ([[IcebergEvolve.fastForward]] — refused when main diverged, so a
-  * failed table aborts the whole publish with NO log commit), then the
-  * log pins every published snapshot in one commit.
-  *
-  * SQL face: mount the warehouse with
-  * `spark.sql.catalog.<n>.commitlog=<logRoot>`
-  * ([[graft.catalog.IcebergWarehouseCatalog]]) and every 3-level-name
-  * read resolves the log-pinned snapshot — unpublished commits are
-  * invisible to SQL exactly as under Nessie; explicit `VERSION AS OF`
-  * time travel still wins (an explicit pin is a stronger ask).
-  *
-  * Retention interplay: a snapshot pinned only by an old log commit
-  * can be physically retired by [[IcebergMaintenance.expireSnapshots]]
-  * — size `keepLast` to the log depth you intend to keep readable.
-  * Every operation here is metadata-sized. */
-final class IcebergLakeCommits(spark: SparkSession, logRoot: String) {
-
-  import IcebergLakeCommits._
-
-  private def hconf = spark.sparkContext.hadoopConfiguration
-  private val commitsDir = new Path(logRoot, "commits")
-  private def fs: FileSystem = commitsDir.getFileSystem(hconf)
-  private def commitPath(c: Int) = new Path(commitsDir, f"c$c%09d.json")
+/** The [[CommitLog]] over FOREIGN Iceberg tables: pins are SNAPSHOT
+  * IDS, keyed by the qualified table dir; staging is the foreign WAP
+  * surface ([[IcebergEvolve]] branches) and reads resolve through
+  * [[IcebergImport]]. Explicit `VERSION AS OF` on a governed
+  * [[graft.catalog.IcebergWarehouseCatalog]] mount still wins over the
+  * pin (an explicit pin is a stronger ask). */
+final class IcebergLakeCommits(spark: SparkSession, logRoot: String)
+    extends CommitLog[Long](spark, logRoot, PinCodec.snapshotId) {
 
   /** The canonical key of a table dir — qualified, so `/wh/dw/t` and
     * `file:/wh/dw/t` govern the same table. */
-  private def key(tableDir: String): String =
-    fs.makeQualified(new Path(tableDir)).toString
-
-  /** Newest committed log entry, 0 when the log is empty. */
-  def headCommit: Int = {
-    val f = fs
-    if (!f.exists(commitsDir)) 0
-    else
-      f.listStatus(commitsDir).toSeq
-        .map(_.getPath.getName)
-        .collect { case n if n.startsWith("c") && n.endsWith(".json") =>
-          n.stripPrefix("c").stripSuffix(".json").toInt }
-        .maxOption.getOrElse(0)
-  }
-
-  /** The tableDir→snapshot mapping at commit `c` (default: head). */
-  def state(c: Int = headCommit): Map[String, Long] =
-    if (c == 0) Map.empty
-    else parseState(AtomicFs.readSmall(fs, commitPath(c)))
-
-  /** All commits, ascending. */
-  def log: Seq[Int] = {
-    val f = fs
-    if (!f.exists(commitsDir)) Nil
-    else
-      f.listStatus(commitsDir).toSeq
-        .map(_.getPath.getName)
-        .collect { case n if n.startsWith("c") && n.endsWith(".json") =>
-          n.stripPrefix("c").stripSuffix(".json").toInt }
-        .sorted
-  }
+  private[io] def key(tableDir: String): String = fs.makeQualified(new Path(tableDir)).toString
 
   /** ONE atomic commit pinning each table at its CURRENT head snapshot
     * — call after landing the per-table commits. Tables already in the
     * log but absent here carry their pins forward. Returns the new
     * commit number. */
-  def publish(tableDirs: Seq[String]): Int = {
-    val updates = tableDirs.map { d =>
-      val snap = IcebergImport.currentSnapshot(spark, d).getOrElse(
-        throw new IllegalArgumentException(
-          s"table $d has no committed snapshot to publish"))
-      key(d) -> snap
-    }.toMap
-    publishSnapshots(updates)
-  }
+  def publish(tableDirs: Seq[String]): Int =
+    advance(tableDirs.map(d => key(d) -> IcebergLakeCommits.headSnapshot(spark, d)).toMap)
 
-  /** Pin EXACT snapshot ids in one commit — the publish-through hook
-    * so two writers' publishes cannot mis-pin each other's heads.
-    *
-    * `expectedParent` (the HTTP face's CAS contract): when given, the
-    * commit lands as child of EXACTLY that commit or not at all —
-    * the file-CAS on commit `expectedParent+1` IS the check, so a
-    * direct file-CAS publisher racing in between the server's hash
-    * check and this call loses nothing: this commit fails with
-    * [[LakeCommits.StaleParentCommit]] (→ HTTP 409) instead of
-    * silently rebasing over the interloper's pins. Without it the
-    * in-process rebase-and-retry semantics are unchanged. */
+  /** Pin EXACT snapshot ids in one commit — the publish-through hook so
+    * two writers' publishes cannot mis-pin each other's heads. With
+    * `expectedParent` the commit lands as child of exactly that commit
+    * or throws [[CommitLog.StaleParentCommit]]. */
   def publishExact(updates: Seq[(String, Long)], expectedParent: Option[Int] = None): Int =
-    publishSnapshots(updates.map { case (d, s) => key(d) -> s }.toMap, expectedParent)
+    advance(updates.map { case (d, s) => key(d) -> s }.toMap, expectedParent)
 
   /** The catalog-level WAP flow: every staged branch fast-forwards to
     * main (each snapshot becomes the table head but log readers still
@@ -116,106 +36,62 @@ final class IcebergLakeCommits(spark: SparkSession, logRoot: String) {
     * The published snapshot id is resolved from the branch BEFORE the
     * fast-forward, so the log pins exactly what was audited. A
     * fast-forward refusal (main diverged since the fork) aborts with
-    * NO log commit — already-fast-forwarded tables are visible only to
-    * readers bypassing the log, the documented trade of reading a
-    * table directly instead of through the catalog. */
-  def publishBranches(staged: Seq[(String, String)]): Int = {
-    val published = staged.map { case (dir, branch) =>
+    * NO log commit. */
+  def publishBranches(staged: Seq[(String, String)]): Int =
+    advance(staged.map { case (dir, branch) =>
       val refs = IcebergImport.refs(spark, dir)
       val (snap, tpe) = refs.getOrElse(branch, throw new IllegalArgumentException(
         s"no ref '$branch' on $dir — have: ${refs.keys.toSeq.sorted.mkString(", ")}"))
       require(tpe == "branch", s"ref '$branch' on $dir is a $tpe — stage on a branch")
       IcebergEvolve.fastForward(spark, dir, branch)
       key(dir) -> snap
-    }
-    publishSnapshots(published.toMap)
-  }
+    }.toMap)
 
   /** The snapshot the head commit pins for `tableDir`, if governed. */
   def pinnedSnapshot(tableDir: String): Option[Long] = state().get(key(tableDir))
 
-  /** The snapshot commit `c` pins for `tableDir` (key-normalized —
-    * `/wh/db/t` and `file:/wh/db/t` resolve the same pin); the HTTP
-    * face ([[IcebergLakeHttpServer]]) answers `/contents` with this. */
+  /** The snapshot commit `c` pins for `tableDir` (key-normalized). */
   def pinnedSnapshotAt(c: Int, tableDir: String): Option[Long] = state(c).get(key(tableDir))
 
   /** Resolve `tableDir` through the log: the pinned snapshot, or the
     * table head when the log does not govern it (yet). */
-  def read(tableDir: String): DataFrame =
-    IcebergImport.read(spark, tableDir, state().get(key(tableDir)))
+  def read(tableDir: String): DataFrame = IcebergImport.read(spark, tableDir, pinnedSnapshot(tableDir))
 
   /** Whole-lake time travel to commit `c`. */
   def readAt(c: Int, tableDir: String): DataFrame =
-    IcebergImport.read(spark, tableDir, state(c).get(key(tableDir)))
+    IcebergImport.read(spark, tableDir, pinnedSnapshotAt(c, tableDir))
 
-  /** Resolve MANY tables from ONE head state — the both-or-neither
-    * read: all frames reflect the same log commit even if a publisher
-    * flips the log between the building of one and the next. */
+  /** Resolve MANY tables from ONE head state — the both-or-neither read. */
   def readAll(tableDirs: Seq[String]): Seq[DataFrame] = {
     val s = state()
     tableDirs.map(d => IcebergImport.read(spark, d, s.get(key(d))))
   }
-
-  private def publishSnapshots(updates: Map[String, Long],
-      expectedParent: Option[Int] = None): Int = {
-    expectedParent match {
-      case Some(p) =>
-        // anchored CAS: merge over the EXPECTED parent's state and
-        // create exactly commit p+1 — if any writer (HTTP or direct
-        // file-CAS) landed p+1 first, the create fails and the caller
-        // gets the 409 the expectedHash contract promises, never a
-        // silent rebase over the interloper's pins
-        val merged = state(p) ++ updates
-        if (AtomicFs.createExclusive(fs, commitPath(p + 1), renderState(p + 1, p, merged)))
-          p + 1
-        else throw LakeCommits.StaleParentCommit(p, headCommit)
-      case None =>
-        var attempts = 0
-        while (attempts < 20) {
-          attempts += 1
-          val head = headCommit
-          val next = head + 1
-          val merged = state(head) ++ updates
-          if (AtomicFs.createExclusive(fs, commitPath(next), renderState(next, head, merged)))
-            return next
-          // lost the slot — loop re-reads the winner's state and rebases
-        }
-        throw new IllegalStateException(
-          s"iceberg lake commit lost $attempts consecutive CAS races — livelock or stuck publisher")
-    }
-  }
-
-  /** Retire log history (each commit is the FULL mapping, so head
-    * resolution never changes — only how far back [[readAt]] reaches). */
-  def expireLog(keep: Int): Unit = {
-    require(keep >= 1, "must keep at least the head commit")
-    val f = fs
-    log.dropRight(keep).foreach(c => f.delete(commitPath(c), false))
-  }
 }
 
 object IcebergLakeCommits {
+  private[io] def headSnapshot(spark: SparkSession, tableDir: String): Long =
+    IcebergImport.currentSnapshot(spark, tableDir).getOrElse(
+      throw new IllegalArgumentException(s"table $tableDir has no committed snapshot to publish"))
+}
 
-  private def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
-  private def unesc(s: String) = s.replace("\\\"", "\"").replace("\\\\", "\\")
+/** The [[NessieServer]] wire over an [[IcebergLakeCommits]] log — the
+  * URI mount (`spark.sql.catalog.<n>.uri=<url>` on
+  * [[graft.catalog.IcebergWarehouseCatalog]]): content keys are table
+  * dirs, normalized server-side to the log's qualified spelling; pins
+  * are `snapshotId`s. */
+final class IcebergLakeHttpServer(lake: IcebergLakeCommits, port: Int = 0)
+  extends NessieServer[Long](lake, lake.key, identity, port)
 
-  private[io] def renderState(commit: Int, parent: Int, tables: Map[String, Long]): String = {
-    val entries = tables.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"""    "${esc(k)}": $v""" }
-      .mkString(",\n")
-    s"""{
-       |  "commit": $commit,
-       |  "parent": $parent,
-       |  "tables": {
-       |$entries
-       |  }
-       |}""".stripMargin
-  }
+/** The [[NessieClient]] for an [[IcebergLakeHttpServer]]. */
+final class RemoteIcebergLake(baseUrl: String)
+    extends NessieClient[Long](baseUrl, PinCodec.snapshotId) {
 
-  private val entryRe = """"((?:[^"\\]|\\.)*)":\s*(\d+)""".r
+  /** The snapshot id pinned for `tableDir`, at head or at a hash. */
+  def pinnedSnapshot(tableDir: String, hash: Option[String] = None): Option[Long] =
+    pinOf(tableDir, hash)
 
-  private[io] def parseState(json: String): Map[String, Long] = {
-    val body = json.substring(json.indexOf("\"tables\""))
-    entryRe.findAllMatchIn(body).map(m => unesc(m.group(1)) -> m.group(2).toLong).toMap
-  }
+  /** Publish each table at its CURRENT head snapshot — the wire twin
+    * of [[IcebergLakeCommits.publish]]. */
+  def publish(spark: SparkSession, tableDirs: Seq[String]): String =
+    commit(tableDirs.map(d => d -> IcebergLakeCommits.headSnapshot(spark, d)))
 }

@@ -130,7 +130,7 @@ final class IcebergRestHttpServer(spark: SparkSession, warehouse: String, port: 
   }
 
   private def errorBody(code: Int, tpe: String, msg: String): String =
-    s"""{"error":{"message":"${LakeHttp.jesc(msg)}","type":"$tpe","code":$code}}"""
+    s"""{"error":{"message":"${Json.escape(msg)}","type":"$tpe","code":$code}}"""
 
   /** The spec's requirement vocabulary this server validates. */
   private def checkRequirements(reqs: JsonNode, doc: ObjectNode): Option[String] = {
@@ -240,7 +240,7 @@ final class IcebergRestHttpServer(spark: SparkSession, warehouse: String, port: 
         }.toMap
       (ex.getRequestMethod, path) match {
         case ("GET", "/v1/config") =>
-          send(ex, 200, s"""{"defaults":{},"overrides":{"warehouse":"${LakeHttp.jesc(warehouse)}"}}""")
+          send(ex, 200, s"""{"defaults":{},"overrides":{"warehouse":"${Json.escape(warehouse)}"}}""")
         case ("POST", "/v1/namespaces") => this.synchronized {
           // CreateNamespaceRequest: {"namespace":["ns"],"properties":{}}
           val body = om.readTree(ex.getRequestBody)
@@ -255,8 +255,8 @@ final class IcebergRestHttpServer(spark: SparkSession, warehouse: String, port: 
               p.fieldNames().forEachRemaining(k => props += k -> p.get(k).asText)
             }
             nsProps.put(ns, props.toMap)
-            send(ex, 200, s"""{"namespace":["${LakeHttp.jesc(ns)}"],"properties":{""" +
-              props.map { case (k, v) => s""""${LakeHttp.jesc(k)}":"${LakeHttp.jesc(v)}"""" }
+            send(ex, 200, s"""{"namespace":["${Json.escape(ns)}"],"properties":{""" +
+              props.map { case (k, v) => s""""${Json.escape(k)}":"${Json.escape(v)}"""" }
                 .mkString(",") + "}}")
           }
         }
@@ -300,7 +300,7 @@ final class IcebergRestHttpServer(spark: SparkSession, warehouse: String, port: 
             else f.listStatus(r).toSeq.filter(s => s.isDirectory &&
               !s.getPath.getName.startsWith(".") &&
               !f.exists(new Path(s.getPath, "metadata"))).map(_.getPath.getName).sorted
-          send(ex, 200, nss.map(n => s"""["${LakeHttp.jesc(n)}"]""")
+          send(ex, 200, nss.map(n => s"""["${Json.escape(n)}"]""")
             .mkString("""{"namespaces":[""", ",", "]}"))
         case ("POST", NsPropsPath(ns)) => this.synchronized {
           // UpdateNamespacePropertiesRequest: {"removals":[],"updates":{}}
@@ -324,7 +324,7 @@ final class IcebergRestHttpServer(spark: SparkSession, warehouse: String, port: 
             }
             nsProps.put(ns, cur.toMap)
             def arr(xs: Seq[String]) =
-              xs.map(x => s""""${LakeHttp.jesc(x)}"""").mkString("[", ",", "]")
+              xs.map(x => s""""${Json.escape(x)}"""").mkString("[", ",", "]")
             send(ex, 200, s"""{"updated":${arr(updated.toSeq)},"removed":${arr(removed.toSeq)},""" +
               s""""missing":${arr(missing.toSeq)}}""")
           }
@@ -335,8 +335,8 @@ final class IcebergRestHttpServer(spark: SparkSession, warehouse: String, port: 
             send(ex, 404, errorBody(404, "NoSuchNamespaceException", s"namespace $ns not found"))
           else {
             val props = nsProps.getOrElse(ns, Map.empty)
-            send(ex, 200, s"""{"namespace":["${LakeHttp.jesc(ns)}"],"properties":{""" +
-              props.map { case (k, v) => s""""${LakeHttp.jesc(k)}":"${LakeHttp.jesc(v)}"""" }
+            send(ex, 200, s"""{"namespace":["${Json.escape(ns)}"],"properties":{""" +
+              props.map { case (k, v) => s""""${Json.escape(k)}":"${Json.escape(v)}"""" }
                 .mkString(",") + "}}")
           }
         case ("HEAD", NsPath(ns)) =>
@@ -426,7 +426,7 @@ final class IcebergRestHttpServer(spark: SparkSession, warehouse: String, port: 
                 pins.put(s"$ns/$t", mdPath)
                 dropped.remove(s"$ns/$t") // a fresh create revives the name
                 send(ex, 200,
-                  s"""{"metadata-location":"${LakeHttp.jesc(f.makeQualified(mdPath).toString)}",""" +
+                  s"""{"metadata-location":"${Json.escape(f.makeQualified(mdPath).toString)}",""" +
                     s""""metadata":${om.writeValueAsString(doc)},"config":{}}""")
               }
             }
@@ -445,10 +445,10 @@ final class IcebergRestHttpServer(spark: SparkSession, warehouse: String, port: 
                   case _ => (remaining, false)
                 }
                 val idents = page.map(t =>
-                  s"""{"namespace":["${LakeHttp.jesc(ns)}"],"name":"${LakeHttp.jesc(t)}"}""")
+                  s"""{"namespace":["${Json.escape(ns)}"],"name":"${Json.escape(t)}"}""")
                   .mkString("""[""", ",", "]")
                 val tokenField =
-                  if (more) s""","next-page-token":"${LakeHttp.jesc(page.last)}"""" else ""
+                  if (more) s""","next-page-token":"${Json.escape(page.last)}"""" else ""
                 send(ex, 200, s"""{"identifiers":$idents$tokenField}""")
               }
             case ("DELETE", Some(t)) => this.synchronized {
@@ -477,7 +477,7 @@ final class IcebergRestHttpServer(spark: SparkSession, warehouse: String, port: 
                 val pin = pinOf(ns, t)
                 val doc = readDoc(pin)
                 send(ex, 200,
-                  s"""{"metadata-location":"${LakeHttp.jesc(fsOf(pin).makeQualified(pin).toString)}",""" +
+                  s"""{"metadata-location":"${Json.escape(fsOf(pin).makeQualified(pin).toString)}",""" +
                     s""""metadata":${om.writeValueAsString(doc)},"config":{}}""")
               }
             case ("POST", Some(t)) => this.synchronized {
@@ -501,7 +501,7 @@ final class IcebergRestHttpServer(spark: SparkSession, warehouse: String, port: 
                     try os.write(om.writeValueAsString(doc).getBytes("UTF-8")) finally os.close()
                     pins.put(s"$ns/$t", newPath)
                     send(ex, 200,
-                      s"""{"metadata-location":"${LakeHttp.jesc(f.makeQualified(newPath).toString)}",""" +
+                      s"""{"metadata-location":"${Json.escape(f.makeQualified(newPath).toString)}",""" +
                         s""""metadata":${om.writeValueAsString(doc)}}""")
                 }
               }
@@ -620,8 +620,8 @@ final class RemoteIcebergRest(baseUrl: String) {
     * IllegalStateException on an existing destination (409). */
   def renameTable(srcNs: String, srcTable: String, dstNs: String, dstTable: String): Unit = {
     val body =
-      s"""{"source":{"namespace":["${LakeHttp.jesc(srcNs)}"],"name":"${LakeHttp.jesc(srcTable)}"},""" +
-        s""""destination":{"namespace":["${LakeHttp.jesc(dstNs)}"],"name":"${LakeHttp.jesc(dstTable)}"}}"""
+      s"""{"source":{"namespace":["${Json.escape(srcNs)}"],"name":"${Json.escape(srcTable)}"},""" +
+        s""""destination":{"namespace":["${Json.escape(dstNs)}"],"name":"${Json.escape(dstTable)}"}}"""
     val (code, j) = sendJson("POST", "/v1/tables/rename", Some(body))
     code match {
       case 204 | 200 => ()
@@ -636,8 +636,8 @@ final class RemoteIcebergRest(baseUrl: String) {
   /** CreateNamespace; throws IllegalStateException on 409. */
   def createNamespace(ns: String, properties: Map[String, String] = Map.empty): Unit = {
     val props = properties.map { case (k, v) =>
-      s""""${LakeHttp.jesc(k)}":"${LakeHttp.jesc(v)}"""" }.mkString("{", ",", "}")
-    val body = s"""{"namespace":["${LakeHttp.jesc(ns)}"],"properties":$props}"""
+      s""""${Json.escape(k)}":"${Json.escape(v)}"""" }.mkString("{", ",", "}")
+    val body = s"""{"namespace":["${Json.escape(ns)}"],"properties":$props}"""
     val (code, j) = sendJson("POST", "/v1/namespaces", Some(body))
     if (code == 409)
       throw new IllegalStateException(s"createNamespace($ns) conflict (409): ${errMsg(j)}")
@@ -678,8 +678,8 @@ final class RemoteIcebergRest(baseUrl: String) {
   def updateNamespaceProperties(ns: String, updates: Map[String, String],
       removals: Seq[String] = Nil): (Seq[String], Seq[String], Seq[String]) = {
     val u = updates.map { case (k, v) =>
-      s""""${LakeHttp.jesc(k)}":"${LakeHttp.jesc(v)}"""" }.mkString("{", ",", "}")
-    val r = removals.map(x => s""""${LakeHttp.jesc(x)}"""").mkString("[", ",", "]")
+      s""""${Json.escape(k)}":"${Json.escape(v)}"""" }.mkString("{", ",", "}")
+    val r = removals.map(x => s""""${Json.escape(x)}"""").mkString("[", ",", "]")
     val (code, j) = sendJson("POST", s"/v1/namespaces/${enc(ns)}/properties",
       Some(s"""{"removals":$r,"updates":$u}"""))
     require(code == 200, s"updateNamespaceProperties($ns) -> $code: ${errMsg(j)}")
@@ -717,7 +717,7 @@ final class RemoteIcebergRest(baseUrl: String) {
   def createTable(ns: String, name: String, schemaJson: String,
       partitionSpecJson: Option[String] = None,
       propertiesJson: Option[String] = None): String = {
-    val body = s"""{"name":"${LakeHttp.jesc(name)}","schema":$schemaJson""" +
+    val body = s"""{"name":"${Json.escape(name)}","schema":$schemaJson""" +
       partitionSpecJson.map(p => s""","partition-spec":$p""").getOrElse("") +
       propertiesJson.map(p => s""","properties":$p""").getOrElse("") + "}"
     val r = http.send(

@@ -1,90 +1,13 @@
 package graft.io
 
-import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Catalog-level atomic commits across MANY snapshot tables — the
-  * capability the reference gets from its `nessie` catalog (a
-  * Nessie-style commit log: `readme.md:93-114`,
-  * `airflow/dags/datalake_gold_spark_dag.py:181-186` run silver and
-  * gold under one catalog so a pipeline run lands as one consistent
-  * state). Per-table WAP branches ([[SnapshotTables.createBranch]])
-  * isolate ONE table's staging; this log makes a MULTI-table publish
-  * atomic for readers: a silver+gold pipeline publishes both tables in
-  * one commit, and a reader resolving through the log observes either
-  * both advanced or neither — never gold computed from unpublished
-  * silver.
-  *
-  * Model (Nessie's, re-expressed on the snapshot layer): the log is a
-  * line of numbered commit files, each holding the FULL table→version
-  * mapping (metadata-sized: one line per table). Advancing the log is
-  * one exclusive-create CAS on the next commit file — the identical
-  * primitive ([[AtomicFs.createExclusive]]) every per-table commit
-  * uses, so multi-writer semantics match: racing publishers get one
-  * winner per slot, the loser rebases its updates onto the winner's
-  * state and retries. Table data/versions are committed by the normal
-  * per-table machinery FIRST (those versions exist but are not yet
-  * visible through the log), then the log flips visibility for all of
-  * them at once — analogous to Nessie-over-Iceberg, where table
-  * metadata advances first and the reference commit governs what a
-  * catalog reader resolves.
-  *
-  * Readers: [[read]] resolves a table's version from the head commit
-  * (a table not yet in the log falls back to its current version —
-  * un-governed tables behave as before); [[readAll]] resolves one
-  * consistent map ONCE for a whole multi-table query, which is the
-  * both-or-neither guarantee; [[readAt]] time-travels the whole lake
-  * to a historical commit.
-  *
-  * Retention interplay: the per-table retention
-  * (`previousVersionsMax`) must cover however far back log readers
-  * reach — a version pinned only by an old commit can be physically
-  * expired by [[SnapshotTables.expire]], exactly like Iceberg snapshot
-  * expiry invalidating old Nessie refs. Size retention to the log
-  * depth you intend to keep readable.
-  *
-  * Scale: every operation here is metadata-sized (one small file per
-  * commit, N lines for N tables); no data moves or rewrites — publish
-  * cost is independent of table size.
-  */
-final class LakeCommits(spark: SparkSession, logRoot: String) {
+/** The [[CommitLog]] over [[SnapshotTables]]: pins are table VERSIONS,
+  * keyed `<tablesRoot>|<table>`. */
+final class LakeCommits(spark: SparkSession, logRoot: String)
+    extends CommitLog[Int](spark, logRoot, PinCodec.version) {
 
-  import LakeCommits._
-
-  private def hconf = spark.sparkContext.hadoopConfiguration
-  private val commitsDir = new Path(logRoot, "commits")
-  private def fs: FileSystem = commitsDir.getFileSystem(hconf)
-  private def commitPath(c: Int) = new Path(commitsDir, f"c$c%09d.json")
-
-  /** Newest committed log entry, 0 when the log is empty. */
-  def headCommit: Int = {
-    val f = fs
-    if (!f.exists(commitsDir)) 0
-    else
-      f.listStatus(commitsDir).toSeq
-        .map(_.getPath.getName)
-        .collect { case n if n.startsWith("c") && n.endsWith(".json") =>
-          n.stripPrefix("c").stripSuffix(".json").toInt }
-        .maxOption.getOrElse(0)
-  }
-
-  /** The table→version mapping at commit `c` (default: head). Empty
-    * map for an empty log. Keys are `<tablesRoot>|<table>`. */
-  def state(c: Int = headCommit): Map[String, Int] =
-    if (c == 0) Map.empty
-    else parseState(AtomicFs.readSmall(fs, commitPath(c)))
-
-  /** All commits, ascending. */
-  def log: Seq[Int] = {
-    val f = fs
-    if (!f.exists(commitsDir)) Nil
-    else
-      f.listStatus(commitsDir).toSeq
-        .map(_.getPath.getName)
-        .collect { case n if n.startsWith("c") && n.endsWith(".json") =>
-          n.stripPrefix("c").stripSuffix(".json").toInt }
-        .sorted
-  }
+  import LakeCommits.key
 
   /** ONE atomic commit pinning each listed table at its CURRENT
     * per-table version — call after landing the per-table commits.
@@ -93,23 +16,23 @@ final class LakeCommits(spark: SparkSession, logRoot: String) {
     * publisher re-reads the winner's state, re-merges, and retries —
     * both racers' updates land, in two adjacent commits. Returns the
     * new commit number. */
-  def publish(tables: Seq[(SnapshotTables, String)]): Int = {
-    val updates = tables.map { case (st, t) =>
+  def publish(tables: Seq[(SnapshotTables, String)]): Int =
+    advance(tables.map { case (st, t) =>
       val v = st.currentVersion(t)
       require(v > 0, s"table ${st.rootPath}/$t has no committed version to publish")
       key(st, t) -> v
-    }.toMap
-    publishVersions(updates)
-  }
+    }.toMap)
 
   /** Pin EXACT versions in one commit — the publish-through hook for a
     * log-governed catalog ([[graft.catalog.SnapshotCatalog]] with a
     * `commitlog`): a writer publishes the precise version it just
     * committed, not whatever is current at publish time, so two
-    * writers' publishes cannot mis-pin each other's versions. */
+    * writers' publishes cannot mis-pin each other's versions. With
+    * `expectedParent` the commit lands as child of exactly that commit
+    * or throws [[CommitLog.StaleParentCommit]]. */
   def publishExact(updates: Seq[(SnapshotTables, String, Int)],
       expectedParent: Option[Int] = None): Int =
-    publishVersions(updates.map { case (st, t, v) => key(st, t) -> v }.toMap, expectedParent)
+    advance(updates.map { case (st, t, v) => key(st, t) -> v }.toMap, expectedParent)
 
   /** The version the head commit pins for `table`, if governed. */
   def pinnedVersion(st: SnapshotTables, table: String): Option[Int] =
@@ -119,124 +42,55 @@ final class LakeCommits(spark: SparkSession, logRoot: String) {
     * content; this publishes EVERY branch to its main line (normal
     * [[SnapshotTables.publish]] fast-forwards — data becomes real main
     * versions but log readers still resolve the old mapping), then
-    * flips the log once. A reader through the log never observes the
-    * intermediate where some branches are published and others are
-    * not. If a per-table publish fails (concurrent main commit since
-    * the fork), NO log commit happens — already-fast-forwarded tables
-    * are visible only to readers that bypass the log, which is the
-    * documented trade of reading a table directly instead of through
-    * the catalog. Returns the new commit number. */
-  def publishBranches(staged: Seq[(SnapshotTables, String, String)]): Int = {
-    val published = staged.map { case (st, t, branch) => key(st, t) -> st.publish(t, branch) }
-    publishVersions(published.toMap)
-  }
+    * flips the log once. If a per-table publish fails (concurrent main
+    * commit since the fork), NO log commit happens — already-fast-
+    * forwarded tables are visible only to readers that bypass the log,
+    * the documented trade of reading a table directly instead of
+    * through the catalog. Returns the new commit number. */
+  def publishBranches(staged: Seq[(SnapshotTables, String, String)]): Int =
+    advance(staged.map { case (st, t, branch) => key(st, t) -> st.publish(t, branch) }.toMap)
 
   /** Resolve `table` through the log: the version the head commit
     * pins, or the table's current version when the log does not govern
     * it (yet). */
-  def read(st: SnapshotTables, table: String): DataFrame =
-    readAtState(state(), st, table)
+  def read(st: SnapshotTables, table: String): DataFrame = readIn(state(), st, table)
 
   /** Whole-lake time travel: resolve through the mapping of commit `c`. */
-  def readAt(c: Int, st: SnapshotTables, table: String): DataFrame =
-    readAtState(state(c), st, table)
+  def readAt(c: Int, st: SnapshotTables, table: String): DataFrame = readIn(state(c), st, table)
 
-  /** Resolve MANY tables from ONE head snapshot — the both-or-neither
-    * read: all DataFrames reflect the same log commit even if a
-    * publisher flips the log between the building of one and the next.
-    * Returned in input order. */
+  /** Resolve MANY tables from ONE head state — the both-or-neither
+    * read. Returned in input order. */
   def readAll(tables: Seq[(SnapshotTables, String)]): Seq[DataFrame] = {
     val s = state()
-    tables.map { case (st, t) => readAtState(s, st, t) }
+    tables.map { case (st, t) => readIn(s, st, t) }
   }
 
-  private def readAtState(s: Map[String, Int], st: SnapshotTables, table: String): DataFrame =
-    s.get(key(st, table)) match {
-      case Some(v) => st.readVersion(table, v)
-      case None => st.read(table)
-    }
-
-  /** CAS-advance the log with `updates` merged over the head state,
-    * retrying on lost races (rebase-and-retry, bounded). With
-    * `expectedParent` the commit is ANCHORED: it lands as child of
-    * exactly that commit or throws [[LakeCommits.StaleParentCommit]]
-    * — the HTTP face's expectedHash contract, safe against direct
-    * file-CAS writers racing between hash check and commit. */
-  private def publishVersions(updates: Map[String, Int],
-      expectedParent: Option[Int] = None): Int = {
-    expectedParent match {
-      case Some(p) =>
-        val merged = state(p) ++ updates
-        if (AtomicFs.createExclusive(fs, commitPath(p + 1), renderState(p + 1, p, merged)))
-          p + 1
-        else throw LakeCommits.StaleParentCommit(p, headCommit)
-      case None =>
-        var attempts = 0
-        while (attempts < 20) {
-          attempts += 1
-          val head = headCommit
-          val next = head + 1
-          val merged = state(head) ++ updates
-          if (AtomicFs.createExclusive(fs, commitPath(next), renderState(next, head, merged)))
-            return next
-          // lost the slot — loop re-reads the winner's state and rebases
-        }
-        throw new IllegalStateException(
-          s"lake commit lost $attempts consecutive CAS races — livelock or stuck publisher")
-    }
-  }
-
-  /** Retire log history: keep the newest `keep` commits, delete older
-    * files. Each commit holds the FULL mapping (not a delta), so
-    * deleting history never affects head resolution — only how far
-    * back [[readAt]] can reach. Align with the per-table retention:
-    * there is no point keeping log entries whose pinned versions
-    * [[SnapshotTables.expire]] already removed. The head itself is
-    * never deleted. */
-  def expireLog(keep: Int): Unit = {
-    require(keep >= 1, "must keep at least the head commit")
-    val f = fs
-    log.dropRight(keep).foreach(c => f.delete(commitPath(c), false))
-  }
-
-  private def key(st: SnapshotTables, table: String): String = s"${st.rootPath}|$table"
+  private def readIn(s: Map[String, Int], st: SnapshotTables, table: String): DataFrame =
+    s.get(key(st, table)).fold(st.read(table))(st.readVersion(table, _))
 }
 
 object LakeCommits {
+  private[io] def key(st: SnapshotTables, table: String): String = s"${st.rootPath}|$table"
+}
 
-  /** An anchored (expectedParent) publish found a different head at
-    * file-CAS time — the HTTP faces map this to 409 CONFLICT. Carried
-    * as a typed exception so the wire layer never confuses a genuine
-    * CAS loss with an IO failure. */
-  final case class StaleParentCommit(expected: Int, actual: Int)
-    extends RuntimeException(
-      s"commit expected parent c$expected but another writer advanced the log " +
-        s"(head now c$actual) — stale expectedHash")
+/** The [[NessieServer]] wire over a [[LakeCommits]] log: content keys
+  * are table names of `tables`, pins are `version`s. */
+final class LakeHttpServer(lake: LakeCommits, tables: SnapshotTables, port: Int = 0)
+  extends NessieServer[Int](lake, LakeCommits.key(tables, _),
+    k => k.substring(k.lastIndexOf('|') + 1), port)
 
-  /** One line per table: `"<key>": <version>` inside a "tables" object;
-    * hand-rolled like the snapshot layer's other metadata (no JSON lib
-    * dependency), with keys escaped for the two JSON-special
-    * characters a path could carry. */
-  private def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
-  private def unesc(s: String) = s.replace("\\\"", "\"").replace("\\\\", "\\")
+/** The [[NessieClient]] for a [[LakeHttpServer]]. */
+final class RemoteLake(baseUrl: String) extends NessieClient[Int](baseUrl, PinCodec.version) {
 
-  private[io] def renderState(commit: Int, parent: Int, tables: Map[String, Int]): String = {
-    val entries = tables.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"""    "${esc(k)}": $v""" }
-      .mkString(",\n")
-    s"""{
-       |  "commit": $commit,
-       |  "parent": $parent,
-       |  "tables": {
-       |$entries
-       |  }
-       |}""".stripMargin
-  }
+  /** The version pinned for `table`, at head or at a reference hash. */
+  def pinnedVersion(table: String, hash: Option[String] = None): Option[Int] = pinOf(table, hash)
 
-  private val entryRe = """"((?:[^"\\]|\\.)*)":\s*(\d+)""".r
-
-  private[io] def parseState(json: String): Map[String, Int] = {
-    val body = json.substring(json.indexOf("\"tables\""))
-    entryRe.findAllMatchIn(body).map(m => unesc(m.group(1)) -> m.group(2).toInt).toMap
+  /** Read `table` through the catalog: resolve the pinned version over
+    * the wire, read the data from shared storage — Nessie's division
+    * of labor. Pass the same `hash` across tables for both-or-neither. */
+  def read(st: SnapshotTables, table: String, hash: Option[String] = None): DataFrame = {
+    val v = pinnedVersion(table, hash).getOrElse(
+      throw new IllegalArgumentException(s"table '$table' is not governed at $baseUrl"))
+    st.readVersion(table, v)
   }
 }

@@ -231,7 +231,7 @@ object PuffinDeletionVectors {
       val blobsJson = refs.map { r =>
         s"""{"type":"deletion-vector-v1","fields":[],"snapshot-id":$snapshotId,""" +
           s""""sequence-number":$sequenceNumber,"offset":${r.offset},"length":${r.length},""" +
-          s""""properties":{"referenced-data-file":"${LakeHttp.jesc(r.referencedDataFile)}",""" +
+          s""""properties":{"referenced-data-file":"${Json.escape(r.referencedDataFile)}",""" +
           s""""cardinality":"${r.cardinality}"}}"""
       }.mkString(",")
       val payload =

@@ -3837,7 +3837,7 @@ final class SnapshotTables(
     * An explicit maintenance call, not a policy: the per-commit
     * count-based window keeps running regardless. On a LOG-GOVERNED
     * catalog the same contract as the count window applies
-    * ([[LakeCommits]] scaladoc): keep the cutoff behind however far
+    * ([[CommitLog]] scaladoc): keep the cutoff behind however far
     * back log readers reach — expiring a version an old log commit
     * pins invalidates that commit's reads, exactly like Iceberg
     * snapshot expiry invalidating old Nessie refs. Returns the number
@@ -3909,7 +3909,7 @@ final class SnapshotTables(
   private[graft] def sparkSession: SparkSession = spark
 
   /** The table root this instance manages — identifies tables in
-    * [[LakeCommits]]' catalog-level commit log. */
+    * the catalog-level [[CommitLog]] ([[LakeCommits]]' keys). */
   private[graft] def rootPath: String = root
 
   private[graft] def snapshotDirString(table: String, v: Int): String =

@@ -2077,7 +2077,7 @@ object ExtensionCorpus {
 
   /** Cross-table atomic publish (the Nessie capability) end-to-end,
     * oracle-pinned: silver lineitem and its gold aggregate land as one
-    * [[graft.io.LakeCommits]] commit, a coordinated restatement stages
+    * [[graft.io.CommitLog]] commit, a coordinated restatement stages
     * on per-table WAP branches and publishes atomically, and the final
     * query re-derives the gold aggregate FROM the lake-resolved silver
     * and joins it to the lake-resolved gold — stored and recomputed
@@ -2140,9 +2140,9 @@ object ExtensionCorpus {
     * published. The final statement is ONE SQL join over 3-part names
     * comparing stored gold to gold recomputed from silver — it
     * hash-matches the oracle only if (a) both tables resolve from the
-    * same log commit (the Nessie both-or-neither) and (b) the
-    * unpublished poison rows are invisible to SQL readers. Either
-    * governance failure changes the numbers. */
+    * same [[graft.io.CommitLog]] commit (the Nessie both-or-neither)
+    * and (b) the unpublished poison rows are invisible to SQL readers.
+    * Either governance failure changes the numbers. */
   private val q128 = Q(
     "q128_governed_catalog_sql",
     (s, dir) => {
@@ -3382,7 +3382,8 @@ object ExtensionCorpus {
     * lineitem and its gold aggregate exported as Iceberg tables and
     * mounted with `commitlog`; a coordinated restatement stages on
     * FOREIGN WAP branches (X130) and [[graft.io.IcebergLakeCommits
-    * .publishBranches]] fast-forwards both + flips ONE log commit;
+    * .publishBranches]] fast-forwards both + flips ONE
+    * [[graft.io.CommitLog]] commit;
     * then a POISON append lands on silver's table line WITHOUT being
     * published. The final 3-part-name SQL join of stored gold vs gold
     * recomputed from silver hash-matches only if (a) both tables
@@ -3538,7 +3539,7 @@ object ExtensionCorpus {
     * `datalake_gold_spark_dag.py:181-186`; a shared-filesystem commit
     * log is not how engines mount a lake): silver+gold exported under
     * one warehouse, the lake's commit log served over the
-    * Nessie-v2-shaped loopback wire ([[graft.io.IcebergLakeHttpServer]]),
+    * Nessie-v2-shaped loopback wire ([[graft.io.NessieServer]]),
     * the catalog mounted with `spark.sql.catalog.<n>.uri=` — then a
     * coordinated restatement published OVER THE WIRE (CAS commit) and
     * a POISON append landed on silver's table line unpublished. The

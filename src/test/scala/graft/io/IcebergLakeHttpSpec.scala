@@ -130,7 +130,7 @@ class IcebergLakeHttpSpec extends SparkSpec {
     // over the interloper's pins.
     val c2 = lake.publishExact(Seq(liDir -> (liSnap + 100)), expectedParent = Some(1))
     assert(c2 == 2) // the "interloper": anchored at the true head, lands
-    val e = intercept[LakeCommits.StaleParentCommit] {
+    val e = intercept[CommitLog.StaleParentCommit] {
       lake.publishExact(Seq(liDir -> liSnap), expectedParent = Some(1)) // parent 1 is stale now
     }
     assert(e.expected == 1 && e.actual == 2)
@@ -175,5 +175,39 @@ class IcebergLakeHttpSpec extends SparkSpec {
     def msgs(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ msgs(x.getCause))
     assert(msgs(e).exists(_.contains("not both")))
+  }
+
+  test("a hash the log never minted is a 404 on the ref, its entries and its contents") {
+    val lake = new IcebergLakeCommits(spark, tmp("hash-log"))
+    val dir = tmp("hash-t")
+    withServer(lake) { srv =>
+      val remote = new RemoteIcebergLake(srv.url)
+      (1 to 3).foreach(i => remote.commit(Seq(dir -> i.toLong)))
+      lake.expireLog(keep = 2)
+      val enc = java.net.URLEncoder.encode(dir, "UTF-8")
+      // an alias of c2's hash, a hash past the head, and expired c1's hash
+      for (h <- Seq("0000000100000002", "0000000000000004", "0000000000000001");
+           sub <- Seq("", "/entries", s"/contents/$enc")) {
+        val (code, body) = LakeHttpSpec.call(srv.url + s"/api/v2/trees/main@$h$sub")
+        assert(code == 404, s"main@$h$sub -> $code: $body")
+      }
+      assert(remote.pinnedSnapshot(dir, Some("0000000000000002")).contains(2L))
+    }
+  }
+
+  test("a commit PUT whose snapshotId is not an integral long is a 400 and writes nothing") {
+    val lake = new IcebergLakeCommits(spark, tmp("put-log"))
+    val dir = tmp("put-t")
+    withServer(lake) { srv =>
+      val remote = new RemoteIcebergLake(srv.url)
+      val head = remote.commit(Seq(dir -> 7L))
+      Seq("\"abc\"", "1.9", "99999999999999999999", "null").foreach { v =>
+        val (code, body) = LakeHttpSpec.call(srv.url + "/api/v2/trees/main/history/commit",
+          Some(s"""{"expectedHash":"$head","operations":[{"op":"PUT","key":"$dir","snapshotId":$v}]}"""))
+        assert(code == 400, s"snapshotId $v -> $code: $body")
+      }
+      assert(remote.mainRef()._2 == head && lake.log == Seq(1))
+      assert(remote.pinnedSnapshot(dir).contains(7L))
+    }
   }
 }

@@ -151,10 +151,51 @@ class LakeCommitsSpec extends SparkSpec {
     assert(lake.publishExact(Seq((gold, "s", 1)), expectedParent = Some(1)) == 2)
     // anchored at a now-stale parent: the commit's own file-CAS refuses
     // (the HTTP face maps this to 409) — gold's pin is not overwritten
-    val e = intercept[LakeCommits.StaleParentCommit] {
+    val e = intercept[CommitLog.StaleParentCommit] {
       lake.publishExact(Seq((silver, "t", 1)), expectedParent = Some(1))
     }
     assert(e.expected == 1 && e.actual == 2)
     assert(lake.pinnedVersion(gold, "s").contains(1))
+  }
+
+  test("publishExact refuses a non-positive version and writes no commit") {
+    val (lake, silver, _) = newLake()
+    silver.overwriteTable(Seq((1, "a")).toDF("id", "v"), "t")
+    lake.publish(Seq(silver -> "t"))
+    Seq(0, -1).foreach { v =>
+      intercept[IllegalArgumentException] { lake.publishExact(Seq((silver, "t", v))) }
+    }
+    assert(lake.log == Seq(1) && lake.pinnedVersion(silver, "t").contains(1))
+  }
+
+  test("on-disk compatibility: a commit file in the earlier rendering resolves under both faces") {
+    val logDir = java.nio.file.Files.createTempDirectory("graft-lake-compat").toString
+    val commits = java.nio.file.Paths.get(logDir, "commits")
+    java.nio.file.Files.createDirectories(commits)
+    // the earlier hand-rolled rendering, byte for byte: sorted keys with
+    // only `"` and `\` escaped, one entry per line
+    val written =
+      """{
+        |  "commit": 1,
+        |  "parent": 0,
+        |  "tables": {
+        |    "/wh/gold\\x|s": 7,
+        |    "/wh/sil\"ver|t": 3
+        |  }
+        |}""".stripMargin
+    java.nio.file.Files.write(commits.resolve("c000000001.json"), written.getBytes("UTF-8"))
+    val want = Map("/wh/gold\\x|s" -> 7, "/wh/sil\"ver|t" -> 3)
+    val lake = new LakeCommits(spark, logDir)
+    val ice = new IcebergLakeCommits(spark, logDir)
+    assert(lake.log == Seq(1) && ice.headCommit == 1)
+    assert(lake.state() == want)
+    assert(ice.state(1) == want.map { case (k, v) => k -> v.toLong })
+    // the log keeps growing from it, under the same file and key names
+    val silver = new SnapshotTables(spark, "/wh/sil\"ver")
+    assert(lake.publishExact(Seq((silver, "u", 2))) == 2)
+    assert(lake.state(2) == want + ("/wh/sil\"ver|u" -> 2))
+    val c2 = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(commits.resolve("c000000002.json").toFile)
+    assert(c2.get("commit").asInt == 2 && c2.get("parent").asInt == 1 && c2.get("tables").size == 3)
   }
 }

@@ -102,4 +102,46 @@ class LakeHttpSpec extends SparkSpec {
       assert(msg.contains("""ta"b\le"""))
     } finally server.stop()
   }
+
+  test("a hash the log never minted is a 404 on the ref, its entries and its contents") {
+    val (_, lake, server, client) = fixture()
+    try {
+      (1 to 3).foreach(v => client.commit(Seq("t" -> v)))
+      lake.expireLog(keep = 2)
+      // an alias of c2's hash, a hash past the head, and expired c1's hash
+      for (h <- Seq("0000000100000002", "0000000000000004", "0000000000000001");
+           sub <- Seq("", "/entries", "/contents/t")) {
+        val (code, body) = LakeHttpSpec.call(server.url + s"/api/v2/trees/main@$h$sub")
+        assert(code == 404, s"main@$h$sub -> $code: $body")
+      }
+      assert(client.pinnedVersion("t", Some("0000000000000002")).contains(2))
+    } finally server.stop()
+  }
+
+  test("a commit PUT whose version is not a positive integral int is a 400 and writes nothing") {
+    val (_, lake, server, client) = fixture()
+    try {
+      val head = client.commit(Seq("t" -> 1))
+      Seq("\"abc\"", "1.9", "9999999999", "0", "-1", "null").foreach { v =>
+        val (code, body) = LakeHttpSpec.call(server.url + "/api/v2/trees/main/history/commit",
+          Some(s"""{"expectedHash":"$head","operations":[{"op":"PUT","key":"t","version":$v}]}"""))
+        assert(code == 400, s"version $v -> $code: $body")
+      }
+      assert(client.mainRef()._2 == head && lake.log == Seq(1))
+      assert(client.pinnedVersion("t").contains(1))
+    } finally server.stop()
+  }
+}
+
+object LakeHttpSpec {
+  private val http = java.net.http.HttpClient.newHttpClient()
+
+  /** One raw request (a GET, or a POST of `body`): (status, body). */
+  def call(url: String, body: Option[String] = None): (Int, String) = {
+    val b = java.net.http.HttpRequest.newBuilder(java.net.URI.create(url))
+    val r = http.send(
+      body.fold(b.GET())(p => b.POST(java.net.http.HttpRequest.BodyPublishers.ofString(p))).build(),
+      java.net.http.HttpResponse.BodyHandlers.ofString())
+    (r.statusCode, r.body)
+  }
 }
