@@ -2,7 +2,6 @@ package graft.io
 
 import scala.jdk.CollectionConverters._
 
-import com.fasterxml.jackson.core.json.JsonReadFeature
 import com.fasterxml.jackson.databind.JsonNode
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
@@ -132,7 +131,7 @@ abstract class CommitLog[P](spark: SparkSession, logRoot: String, private[io] va
   }
 
   private def parse(text: String): Map[String, P] =
-    reader.readTree(text).get("tables").properties.asScala
+    Json.reader.readTree(text).get("tables").properties.asScala
       .map(e => e.getKey -> pin.decode(e.getValue)).toMap
 }
 
@@ -149,9 +148,6 @@ object CommitLog {
 
   private val MaxAttempts = 20
   private val CommitFile = """c(\d+)\.json""".r
-  // logs written before the Jackson rendering left control characters
-  // in keys unescaped
-  private val reader = Json.mapper.reader().`with`(JsonReadFeature.ALLOW_UNESCAPED_CONTROL_CHARS)
 }
 
 /** What one commit log pins: the pin's JSON field on the wire and the

@@ -60,8 +60,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * is that design on this format: data files are written ONCE into
   * their final location under the table's shared pool
   * (`<table>/data/<writerUUID>/`), the version metadata records that
-  * location (`"data_dir"`, an absolute URI, before the schema like
-  * every commit field), and the metadata CAS **is the entire
+  * location (`"data_dir"`, an absolute URI — see
+  * [[SnapshotTables.VersionMeta]]), and the metadata CAS **is the entire
   * commit** — no rename, no orphan window (data precedes the CAS, so
   * a won CAS is instantly complete), and publish/WAP/fold/rollback
   * never move a data byte: publish adopts the branch commit's pool
@@ -93,6 +93,8 @@ final class SnapshotTables(
   // degrading the configured false-positive rate with no error.
   require(sketchHashes >= 1 && sketchHashes <= 8,
     s"sketchHashes must be in [1, 8], got $sketchHashes")
+
+  import SnapshotTables.{RefFile, VersionMeta}
 
   private def fs(p: Path): FileSystem =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -162,24 +164,24 @@ final class SnapshotTables(
       if (fs(p).exists(p)) fs(p).delete(p, false)
   }
 
-  /** The `data_dir` a version's commit metadata records (direct
-    * layout), None for rename-layout versions or unreadable/missing
-    * metas. Commit fields are parsed only BEFORE the embedded schema
-    * json, like every meta field. */
-  private def metaDataDirString(table: String, v: Int): Option[String] = {
-    val m = new Path(metaDir(table), f"v$v%05d.json")
-    try {
-      if (!fs(m).exists(m)) None
-      else {
-        val raw = readSmallFile(m)
-        val json = raw.indexOf("\"schema\":") match {
-          case -1 => raw
-          case i => raw.substring(0, i)
-        }
-        "\"data_dir\":\"([^\"]+)\"".r.findFirstMatchIn(json).map(_.group(1))
-      }
-    } catch { case _: java.io.IOException => None }
+  private def metaPath(table: String, v: Int) = new Path(metaDir(table), f"v$v%05d.json")
+
+  /** Version `v`'s commit metadata ([[SnapshotTables.VersionMeta]]);
+    * None when its file is absent (never written, or expired since it
+    * was listed). A meta that exists but does not parse throws an
+    * IOException naming the file. */
+  private def readMeta(table: String, v: Int): Option[VersionMeta] = {
+    val m = metaPath(table, v)
+    try if (fs(m).exists(m)) Some(parseMetaAt(m, v)) else None
+    catch { case _: java.io.FileNotFoundException => None }
   }
+
+  private def parseMetaAt(m: Path, v: Int): VersionMeta =
+    try VersionMeta.parse(v, readSmallFile(m))
+    catch {
+      case e: com.fasterxml.jackson.core.JsonProcessingException =>
+        throw new java.io.IOException(s"$m does not parse as version metadata (torn or corrupt)", e)
+    }
 
   /** A version's data directory: the commit metadata's recorded
     * write-once pool location (direct layout) or the version-line dir
@@ -187,7 +189,7 @@ final class SnapshotTables(
     * and delete resolves through here — the version meta is
     * authoritative, never the directory convention. */
   private def dataDirOf(table: String, v: Int): Path =
-    metaDataDirString(table, v).map(new Path(_)).getOrElse(snapDir(table, v))
+    readMeta(table, v).fold(snapDir(table, v))(dataDirOfMeta(table, _))
 
   private[io] def dataDirOfMeta(table: String, m: SnapshotTables.VersionMeta): Path =
     m.dataDir.map(new Path(_)).getOrElse(snapDir(table, m.v))
@@ -234,7 +236,10 @@ final class SnapshotTables(
     * winner's commit record. The original winner, if merely paused
     * rather than crashed, discovers the theft when it re-reads the
     * meta around its data rename (see [[overwriteTable]]) and backs
-    * off — the reclaim grace is a lease, the UUID is the fence token. */
+    * off — the reclaim grace is a lease, the UUID is the fence token.
+    * An empty or torn meta (a crash between the CAS create and its
+    * write) is never a commit, so it is reclaimed the same way, in
+    * either layout. */
   private def casWithOrphanReclaim(table: String, next: Int, meta: Path, metaJson: String): Boolean =
     createExclusive(meta, metaJson) || {
       val f = fs(meta)
@@ -245,15 +250,13 @@ final class SnapshotTables(
         else None
       orphanContent.exists { statted =>
         // a DIRECT-layout meta is NEVER an orphan: its data was staged
-        // before the CAS, so meta presence is a complete commit — it
+        // before the CAS, so a complete meta is a complete commit — it
         // has no snapshot dir by design, and reclaiming it would
-        // delete a live commit record. (Commit fields parse only
-        // before the embedded schema json, as everywhere.)
-        val prefix = statted.indexOf("\"schema\":") match {
-          case -1 => statted
-          case i => statted.substring(0, i)
-        }
-        val isDirect = prefix.contains("\"data_dir\":\"")
+        // delete a live commit record. A meta that does not parse is a
+        // CAS create whose write never finished: never a commit.
+        val isDirect =
+          try VersionMeta.parse(next, statted).dataDir.isDefined
+          catch { case _: com.fasterxml.jackson.core.JsonProcessingException => false }
         // re-read right before the delete: if the meta changed hands
         // since we statted it, another reclaimer re-won — back off.
         val still = try f.exists(meta) && readSmallFile(meta) == statted
@@ -262,6 +265,13 @@ final class SnapshotTables(
           { f.delete(meta, false); createExclusive(meta, metaJson) }
       }
     }
+
+  /** Whether version `v`'s meta carries `writerId`'s fence token — the
+    * ownership re-check around a commit's data placement. An absent or
+    * unparseable meta (a reclaimer mid-write) is not ours. */
+  private def metaOwnedBy(table: String, v: Int, writerId: String): Boolean =
+    try readMeta(table, v).exists(_.writer == writerId)
+    catch { case _: java.io.IOException => false }
 
   private def readSmallFile(p: Path): String = AtomicFs.readSmall(fs(p), p)
 
@@ -285,10 +295,12 @@ final class SnapshotTables(
     * layout) plus direct-layout commits, whose ONLY on-disk footprint
     * under the version line is the metadata file — for those, a
     * version is committed iff its meta exists AND records a
-    * `data_dir` (data is staged before the CAS, so meta presence is
+    * `data_dir` (data is staged before the CAS, so a complete meta is
     * completion). A meta with neither dir nor data_dir is a
     * rename-layout commit inside its CAS→rename window, or a crash
-    * orphan — not history, exactly as before. */
+    * orphan — not history. Nor is a meta that does not parse: the CAS
+    * creates the file before writing it, so a crash in between leaves
+    * it empty or torn. */
   def history(table: String): Seq[Int] = {
     val d = new Path(tableDir(table), "snapshots")
     val f = fs(d)
@@ -312,7 +324,9 @@ final class SnapshotTables(
               n.stripPrefix("v").stripSuffix(".json").toInt
           }
           .filterNot(dirSet)
-          .filter(v => metaDataDirString(table, v).isDefined)
+          .filter(v =>
+            try readMeta(table, v).exists(_.dataDir.isDefined)
+            catch { case _: java.io.IOException => false })
     (viaDirs ++ viaMeta).sorted
   }
 
@@ -364,7 +378,7 @@ final class SnapshotTables(
 
   private def overwriteImpl(df: DataFrame, table: String, partitionCols: Seq[String],
       statsCols: Seq[String], sketchCols: Seq[String], applySortOrder: Boolean,
-      metaExtra: String = "", expectedNext: Option[Int] = None): Unit = {
+      commit: VersionMeta = VersionMeta(0), expectedNext: Option[Int] = None): Unit = {
     // statsCols is a persistent TABLE PROPERTY, not a per-write flag:
     // once set, every later commit — merge, delete, compact,
     // overwritePartitions all route through here — keeps maintaining
@@ -406,7 +420,7 @@ final class SnapshotTables(
       },
       partitionCols1 = partitionCols1,
       schemaJson = df1.schema.json,
-      metaExtra = metaExtra,
+      commit = commit,
       expectedNext = expectedNext,
       afterWin = () => {
         if (statsCols.nonEmpty) replaceSmallFile(statsColsPath(table), statsCols.mkString(","))
@@ -483,9 +497,11 @@ final class SnapshotTables(
     * the version CAS, rename into the version line with the full
     * ownership re-check dance, then run post-commit bookkeeping
     * (stats/sketch property persistence via `afterWin`, manifest,
-    * pointer advance, retention). `metaExtra` rides inside the version
-    * metadata JSON — empty for a full snapshot; delta commits record
-    * `"kind"`/`"base"`/`"key_cols"` there. `expectedNext` fences
+    * pointer advance, retention). `commit` carries the kind-specific
+    * version metadata — a bare `VersionMeta(0)` for a full snapshot;
+    * delta commits set kind, base and key columns there — and this
+    * fills in the version, writer, layout, data dir and schema.
+    * `expectedNext` fences
     * content races for delta producers whose staged rows were computed
     * AGAINST a specific base version: if another writer committed since
     * the producer read that base, the commit fails with
@@ -497,7 +513,7 @@ final class SnapshotTables(
       stage: Path => Unit,
       partitionCols1: Seq[String],
       schemaJson: String,
-      metaExtra: String,
+      commit: VersionMeta,
       expectedNext: Option[Int],
       afterWin: () => Unit,
       manifestStats: Seq[String],
@@ -521,21 +537,13 @@ final class SnapshotTables(
       if (direct) new Path(dataPoolDir(table), writerId)
       else new Path(tableDir(table), s"snapshots/.tmp-$writerId")
     withHeartbeat(tmp) { stage(tmp) }
-    val meta = new Path(metaDir(table), f"v$next%05d.json")
+    val meta = metaPath(table, next)
     // writer UUID = the fence token for orphan reclaim: ownership of
     // version `next` is decided by which attempt's content sits in the
     // meta file, not merely by the file existing.
-    val dataDirJson =
-      if (direct) s""""data_dir":"${fs(tmp).makeQualified(tmp)}",""" else ""
-    val metaJson =
-      s"""{"version":$next,"writer":"$writerId",""" +
-        s""""partition_cols":${partitionCols1.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
-        dataDirJson +
-        metaExtra +
-        s""""schema":$schemaJson}"""
-    def metaIsOurs: Boolean =
-      try fs(meta).exists(meta) && readSmallFile(meta).contains(s""""writer":"$writerId"""")
-      catch { case _: java.io.IOException => false }
+    val metaJson = commit.copy(v = next, writer = writerId, partitionCols = partitionCols1,
+      dataDir = Option.when(direct)(fs(tmp).makeQualified(tmp).toString), schema = schemaJson).render
+    def metaIsOurs: Boolean = metaOwnedBy(table, next, writerId)
     // The CAS: exclusive-create of the version metadata file decides
     // the winner of version `next`.
     if (!casWithOrphanReclaim(table, next, meta, metaJson)) {
@@ -780,31 +788,9 @@ final class SnapshotTables(
   // version still needs.
   // ------------------------------------------------------------------
 
-  import SnapshotTables.VersionMeta
-
-  private def versionMeta(table: String, v: Int): VersionMeta = {
-    val m = new Path(metaDir(table), f"v$v%05d.json")
-    require(fs(m).exists(m),
-      s"version $v of $table is not retained (metadata missing) — its delta chain cannot be resolved")
-    val raw = readSmallFile(m)
-    // commit fields live BEFORE the embedded schema json — a column
-    // whose field metadata happens to contain "kind"/"base"/"fold"
-    // keys must never be read as commit metadata
-    val json = raw.indexOf("\"schema\":") match {
-      case -1 => raw
-      case i => raw.substring(0, i)
-    }
-    val kind = "\"kind\":\"([^\"]+)\"".r.findFirstMatchIn(json).map(_.group(1)).getOrElse("full")
-    val base = "\"base\":(\\d+)".r.findFirstMatchIn(json).map(_.group(1).toInt).getOrElse(v - 1)
-    val keys = "\"key_cols\":\\[([^\\]]*)\\]".r.findFirstMatchIn(json)
-      .map(_.group(1).split(',').toSeq.map(_.trim.stripPrefix("\"").stripSuffix("\"")).filter(_.nonEmpty))
-      .getOrElse(Nil)
-    val fold = json.contains("\"fold\":true")
-    val txn = "\"txn\":\"([^\"]+)\"".r.findFirstMatchIn(json).map(_.group(1))
-    val evolved = json.contains("\"schema_evolved\":true")
-    val dataDir = "\"data_dir\":\"([^\"]+)\"".r.findFirstMatchIn(json).map(_.group(1))
-    VersionMeta(v, kind, base, keys, fold, txn, evolved, dataDir)
-  }
+  private def versionMeta(table: String, v: Int): VersionMeta =
+    readMeta(table, v).getOrElse(throw new IllegalArgumentException(
+      s"version $v of $table is not retained (metadata missing) — its delta chain cannot be resolved"))
 
   /** The delta chain of `v`, ascending: a full base first, then every
     * delta up to and including `v`. A full version is its own
@@ -959,7 +945,7 @@ final class SnapshotTables(
           },
           partitionCols1 = currentPartitionCols(table),
           schemaJson = read(table).schema.json,
-          metaExtra = s""""kind":"append","base":$baseV,"fold":true,""",
+          commit = VersionMeta(0, "append", baseV, fold = true),
           expectedNext = Some(cur + 1),
           afterWin = () => (),
           manifestStats = mStats, manifestSketch = mSketch)
@@ -987,12 +973,12 @@ final class SnapshotTables(
       case (x, None) => x
       case (None, y) => y
     }
-    def commitFold(kindJson: String, stage: Path => Unit,
+    def commitFold(kind: String, keyCols: Seq[String], stage: Path => Unit,
         mStats: Seq[String], mSketch: Seq[String]): Unit = {
       commitVersion(table, stage,
         partitionCols1 = currentPartitionCols(table),
         schemaJson = schemaJson,
-        metaExtra = kindJson + s""""base":$head,"fold":true,""",
+        commit = VersionMeta(0, kind, head, keyCols, fold = true),
         expectedNext = Some(cur + 1),
         afterWin = () => (),
         manifestStats = mStats, manifestSketch = mSketch)
@@ -1014,7 +1000,7 @@ final class SnapshotTables(
             if (fs(sp).exists(sp)) readSmallFile(sp).split(',').toSeq.filter(_.nonEmpty) else Nil
           val mSketch =
             if (fs(kp).exists(kp)) readSmallFile(kp).split(',').toSeq.filter(_.nonEmpty) else Nil
-          commitFold(s""""kind":"append",""", tmp => layoutWrite(f, tmp), mStats, mSketch)
+          commitFold("append", Nil, tmp => layoutWrite(f, tmp), mStats, mSketch)
           true
       }
     } else if (!kinds.contains("mor_patch")) {
@@ -1051,8 +1037,7 @@ final class SnapshotTables(
         }
       }
       val dk = delKeys.map(_.distinct())
-      commitFold(
-        s""""kind":"mor_revise","key_cols":${kcols.map("\"" + _ + "\"").mkString("[", ",", "]")},""",
+      commitFold("mor_revise", kcols,
         tmp => {
           dk.foreach(_.write.mode(SaveMode.Overwrite).parquet(new Path(tmp, "del").toString))
           add.foreach(a => layoutWrite(a, new Path(tmp, "add")))
@@ -1080,7 +1065,7 @@ final class SnapshotTables(
         d = unionOpt(d, dNew)
         a = unionOpt(aAfterDel, ai)
       }
-      commitFold(s""""kind":"mor_patch",""",
+      commitFold("mor_patch", Nil,
         tmp => {
           d.foreach(_.write.mode(SaveMode.Overwrite).parquet(new Path(tmp, "del").toString))
           a.foreach(_.write.mode(SaveMode.Overwrite).parquet(new Path(tmp, "add").toString))
@@ -1182,19 +1167,18 @@ final class SnapshotTables(
     * ConcurrentCommitException retry then SEES the winner's txn and
     * skips). Txn memory = the retention window — size retention to the
     * longest possible retry horizon, the same trade Delta documents
-    * for its transaction identifiers. */
+    * for its transaction identifiers. A version expired between the
+    * listing and the read went with its txn; any other unreadable or
+    * torn meta throws — read as "not committed" it would let the txn
+    * commit twice. */
   private def txnAlreadyCommitted(table: String, txn: String): Boolean =
-    history(table).exists { v =>
-      try versionMeta(table, v).txn.contains(txn)
-      catch { case _: Exception => false }
-    }
+    history(table).exists(v => readMeta(table, v).exists(_.txn.contains(txn)))
 
-  private def txnJson(txnId: Option[String]): String =
-    txnId.map { tx =>
-      require(tx.matches("[A-Za-z0-9._:\\-]+"),
-        s"txnId must be [A-Za-z0-9._:-]+ (got '$tx')")
-      s""""txn":"$tx","""
-    }.getOrElse("")
+  private def checkedTxn(txnId: Option[String]): Option[String] = {
+    txnId.foreach(tx => require(tx.matches("[A-Za-z0-9._:\\-]+"),
+      s"txnId must be [A-Za-z0-9._:-]+ (got '$tx')"))
+    txnId
+  }
 
   /** FAST APPEND — the O(delta) commit every ingestion pipeline leans
     * on (Iceberg's appendFiles): ONLY the new rows are written, as a
@@ -1211,12 +1195,13 @@ final class SnapshotTables(
     val cur = currentVersion(table)
     if (cur == 0) {
       // bootstrap commit records the txn in ITS version meta too
-      overwriteImpl(df, table, Nil, Nil, Nil, applySortOrder = true, metaExtra = txnJson(txnId))
+      overwriteImpl(df, table, Nil, Nil, Nil, applySortOrder = true,
+        commit = VersionMeta(0, txn = checkedTxn(txnId)))
       return
     }
     requireSameColumns(table, df, "append")
     ensureChainBudget(table)
-    commitDelta(table, df, s""""kind":"append",${txnJson(txnId)}""", withLayout = true, manifest = true)
+    commitDelta(table, df, "append", Nil, txnId, withLayout = true, manifest = true)
   }
 
   /** Merge-on-read UPSERT: commit ONLY the replacement rows; readers
@@ -1231,7 +1216,8 @@ final class SnapshotTables(
     if (txnId.exists(txnAlreadyCommitted(table, _))) return
     val cur = currentVersion(table)
     if (cur == 0) {
-      overwriteImpl(updates, table, Nil, Nil, Nil, applySortOrder = true, metaExtra = txnJson(txnId))
+      overwriteImpl(updates, table, Nil, Nil, Nil, applySortOrder = true,
+        commit = VersionMeta(0, txn = checkedTxn(txnId)))
       return
     }
     requireSameColumns(table, updates, "upsertMor")
@@ -1239,9 +1225,7 @@ final class SnapshotTables(
       s"upsertMor keys ${keyCols.mkString(",")} must be columns of the updates frame")
     requireJoinableKeys(updates, keyCols, "upsertMor")
     ensureChainBudget(table)
-    commitDelta(table, updates,
-      s""""kind":"mor_upsert","key_cols":${keyCols.map("\"" + _ + "\"").mkString("[", ",", "]")},${txnJson(txnId)}""",
-      withLayout = true, manifest = false)
+    commitDelta(table, updates, "mor_upsert", keyCols, txnId, withLayout = true, manifest = false)
   }
 
   /** Merge-on-read keyed DELETE: commit ONLY the deleted keys (a
@@ -1259,9 +1243,7 @@ final class SnapshotTables(
     require(missing.isEmpty, s"deleteKeysMor keys not in table: ${missing.mkString(",")}")
     requireJoinableKeys(keys, keyCols, "deleteKeysMor")
     ensureChainBudget(table)
-    commitDelta(table, keys,
-      s""""kind":"mor_delete","key_cols":${keyCols.map("\"" + _ + "\"").mkString("[", ",", "]")},${txnJson(txnId)}""",
-      withLayout = false, manifest = false)
+    commitDelta(table, keys, "mor_delete", keyCols, txnId, withLayout = false, manifest = false)
   }
 
   /** Merge-on-read predicate DELETE: the matching rows are computed
@@ -1320,8 +1302,8 @@ final class SnapshotTables(
     * if any writer committed since `base` was read — a delta recorded
     * against a base that is no longer the predecessor would corrupt
     * resolution. */
-  private def commitDelta(table: String, df: DataFrame, kindJson: String,
-      withLayout: Boolean, manifest: Boolean): Unit = {
+  private def commitDelta(table: String, df: DataFrame, kind: String, keyCols: Seq[String],
+      txnId: Option[String], withLayout: Boolean, manifest: Boolean): Unit = {
     val base = currentVersion(table)
     val (df1, pcols) =
       if (withLayout) withTableLayout(df, table, Nil) else (df, Seq.empty[String])
@@ -1342,7 +1324,7 @@ final class SnapshotTables(
       // layout inheritance reads through delta heads unchanged
       partitionCols1 = if (withLayout) pcols else currentPartitionCols(table),
       schemaJson = read(table).schema.json,
-      metaExtra = kindJson + s""""base":$base,""",
+      commit = VersionMeta(0, kind, base, keyCols, txn = checkedTxn(txnId)),
       expectedNext = Some(base + 1),
       afterWin = () => (),
       manifestStats = mStats,
@@ -1377,7 +1359,7 @@ final class SnapshotTables(
       },
       partitionCols1 = currentPartitionCols(table),
       schemaJson = read(table).schema.json,
-      metaExtra = s""""kind":"mor_patch","base":$base,""",
+      commit = VersionMeta(0, "mor_patch", base),
       expectedNext = Some(base + 1),
       afterWin = () => (),
       manifestStats = Nil,
@@ -1992,7 +1974,7 @@ final class SnapshotTables(
     requireBranchName(branch)
     val base = currentVersion(table)
     require(base > 0, s"table $table has no committed version to branch from")
-    if (!createExclusive(refPath(table, branch), s"""{"base":$base}"""))
+    if (!createExclusive(refPath(table, branch), RefFile.render("base", base)))
       throw new IllegalStateException(s"branch '$branch' already exists on table '$table'")
     // Table properties cross the fork seam: seed the branch's
     // stats/sketch columns and hidden-partition transform spec from
@@ -2014,7 +1996,7 @@ final class SnapshotTables(
   def branchBase(table: String, branch: String): Int = {
     val p = refPath(table, branch)
     require(fs(p).exists(p), s"no branch '$branch' on table '$table'")
-    "\"base\":(\\d+)".r.findFirstMatchIn(readSmallFile(p)).get.group(1).toInt
+    RefFile.parse("base", readSmallFile(p))
   }
 
   // ------------------------------------------------------------------
@@ -2042,7 +2024,7 @@ final class SnapshotTables(
     val v = version.getOrElse(currentVersion(table))
     require(history(table).contains(v),
       s"version $v of table '$table' is not retained — cannot tag it")
-    if (!createExclusive(tagPath(table, tag), s"""{"version":$v}"""))
+    if (!createExclusive(tagPath(table, tag), RefFile.render("version", v)))
       throw new IllegalStateException(s"tag '$tag' already exists on table '$table'")
   }
 
@@ -2050,7 +2032,7 @@ final class SnapshotTables(
   def tagVersion(table: String, tag: String): Int = {
     val p = tagPath(table, tag)
     require(fs(p).exists(p), s"no tag '$tag' on table '$table'")
-    "\"version\":(\\d+)".r.findFirstMatchIn(readSmallFile(p)).get.group(1).toInt
+    RefFile.parse("version", readSmallFile(p))
   }
 
   /** Live (tag, version) pairs, sorted by name. */
@@ -2182,19 +2164,14 @@ final class SnapshotTables(
     val next = cur + 1
     val writerId = java.util.UUID.randomUUID.toString
     // main's meta = branch's meta with version renumbered and this
-    // publisher's fence token (same JSON we wrote at branch commit)
-    val bMeta = readSmallFile(new Path(bt.metaDir(branch), f"v$bv%05d.json"))
-    val metaJson = bMeta
-      .replaceFirst("\"version\":\\d+", s""""version":$next""")
-      .replaceFirst("\"writer\":\"[^\"]*\"", s""""writer":"$writerId"""")
-    val meta = new Path(metaDir(table), f"v$next%05d.json")
-    def metaIsOurs: Boolean =
-      try fs(meta).exists(meta) && readSmallFile(meta).contains(s""""writer":"$writerId"""")
-      catch { case _: java.io.IOException => false }
-    if (!casWithOrphanReclaim(table, next, meta, metaJson))
+    // publisher's fence token
+    val bMeta = bt.versionMeta(branch, bv)
+    val meta = metaPath(table, next)
+    def metaIsOurs: Boolean = metaOwnedBy(table, next, writerId)
+    if (!casWithOrphanReclaim(table, next, meta, bMeta.copy(v = next, writer = writerId).render))
       throw new SnapshotTables.ConcurrentCommitException(table, next)
     if (!metaIsOurs) throw new SnapshotTables.ConcurrentCommitException(table, next)
-    if (bt.metaDataDirString(branch, bv).isDefined) {
+    if (bMeta.dataDir.isDefined) {
       // DIRECT-layout branch head: main's meta (built from the
       // branch's meta above) carries the branch commit's `data_dir`
       // verbatim — an absolute pool path under THIS table's shared
@@ -3188,13 +3165,7 @@ final class SnapshotTables(
     * dirs for the queried column and its rows would silently vanish
     * from a token-filtered count. */
   private[graft] def uniformIdentityLayout(table: String, ver: Int): Seq[String] = try {
-    val per = chainOf(table, ver).map { s =>
-      val m = new Path(metaDir(table), f"v${s.v}%05d.json")
-      if (!fs(m).exists(m)) return Nil
-      "\"partition_cols\":\\[([^\\]]*)\\]".r.findFirstMatchIn(readSmallFile(m))
-        .map(_.group(1).split(',').toSeq.map(_.trim.stripPrefix("\"").stripSuffix("\"")).filter(_.nonEmpty))
-        .getOrElse(Nil)
-    }
+    val per = chainOf(table, ver).map(_.partitionCols)
     if (per.isEmpty || per.exists(_.exists(_.startsWith("__p_"))) || per.distinct.length != 1) Nil
     else per.head
   } catch { case _: Exception => Nil }
@@ -3462,20 +3433,15 @@ final class SnapshotTables(
   }
 
   /** The data schema a version's commit metadata declares (hidden
-    * `__p_*` layout columns stripped); None when unparseable. */
-  private[graft] def versionDataSchema(table: String, v: Int): Option[org.apache.spark.sql.types.StructType] = {
-    val m = new Path(metaDir(table), f"v$v%05d.json")
-    if (!fs(m).exists(m)) return None
-    val json = readSmallFile(m)
-    val i = json.indexOf("\"schema\":")
-    if (i < 0) return None
-    try {
-      val s = org.apache.spark.sql.types.DataType
-        .fromJson(json.substring(i + "\"schema\":".length, json.length - 1))
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
-      Some(org.apache.spark.sql.types.StructType(s.filterNot(_.name.startsWith("__p_"))))
-    } catch { case _: Exception => None }
-  }
+    * `__p_*` layout columns stripped); None when the meta is absent or
+    * records no schema. */
+  private[graft] def versionDataSchema(table: String, v: Int): Option[org.apache.spark.sql.types.StructType] =
+    readMeta(table, v).flatMap(m => structOf(m.schema))
+      .map(s => org.apache.spark.sql.types.StructType(s.filterNot(_.name.startsWith("__p_"))))
+
+  private def structOf(schemaJson: String): Option[org.apache.spark.sql.types.StructType] =
+    Option.when(schemaJson.nonEmpty)(org.apache.spark.sql.types.DataType.fromJson(schemaJson)
+      .asInstanceOf[org.apache.spark.sql.types.StructType])
 
   /** Whether any segment of `v`'s chain is a metadata-only schema
     * evolution — such chains read ONLY through the resolved
@@ -3553,7 +3519,7 @@ final class SnapshotTables(
       stage = tmp => { fs(tmp).mkdirs(tmp); () }, // an EMPTY version directory: pure metadata
       partitionCols1 = currentPartitionCols(table),
       schemaJson = newSchema.json,
-      metaExtra = s""""kind":"append","base":$base,"schema_evolved":true,""",
+      commit = VersionMeta(0, "append", base, schemaEvolved = true),
       expectedNext = Some(base + 1),
       afterWin = () => (),
       manifestStats = Nil,
@@ -3694,12 +3660,11 @@ final class SnapshotTables(
     * main's or any branch's, still points at it (reachability, the
     * Iceberg GC model). */
   private def dropVersion(table: String, v: Int): Unit = {
-    val d = dataDirOf(table, v)
-    val direct = metaDataDirString(table, v).isDefined
-    if (!direct || !poolDirReferenced(d,
-        excludeMeta = Some(new Path(metaDir(table), f"v$v%05d.json"))))
+    val vm = readMeta(table, v)
+    val d = vm.fold(snapDir(table, v))(dataDirOfMeta(table, _))
+    val m = metaPath(table, v)
+    if (!vm.exists(_.dataDir.isDefined) || !poolDirReferenced(d, excludeMeta = Some(m)))
       fs(d).delete(d, true)
-    val m = new Path(metaDir(table), f"v$v%05d.json")
     fs(m).delete(m, false)
     val mf = manifestPath(table, v)
     fs(mf).delete(mf, true)
@@ -3714,7 +3679,7 @@ final class SnapshotTables(
     * count as references (never widen a delete on bad reads). */
   private def poolDirReferenced(d: Path, excludeMeta: Option[Path]): Boolean = {
     val f = fs(d)
-    val needle = "\"data_dir\":\"" + f.makeQualified(d).toString + "\""
+    val qualified = f.makeQualified(d).toString
     val self = excludeMeta.map(p => f.makeQualified(p).toString)
     val owner = d.getParent.getParent
     def metasUnder(md: Path): Seq[Path] =
@@ -3734,14 +3699,9 @@ final class SnapshotTables(
     (metasUnder(new Path(owner, "metadata")) ++ branchMetas)
       .filterNot(p => self.contains(f.makeQualified(p).toString))
       .exists { p =>
-        try {
-          val raw = readSmallFile(p)
-          val json = raw.indexOf("\"schema\":") match {
-            case -1 => raw
-            case i => raw.substring(0, i)
-          }
-          json.contains(needle)
-        } catch { case _: java.io.IOException => true }
+        try parseMetaAt(p, p.getName.stripPrefix("v").stripSuffix(".json").toInt)
+          .dataDir.contains(qualified)
+        catch { case _: java.io.IOException => true }
       }
   }
 
@@ -3800,7 +3760,7 @@ final class SnapshotTables(
         val n = s.getPath.getName
         if (s.isDirectory && n.startsWith("v") && n.drop(1).nonEmpty && n.drop(1).forall(_.isDigit)) {
           val v = n.drop(1).toInt
-          val meta = new Path(metaDir(table), f"v$v%05d.json")
+          val meta = metaPath(table, v)
           if (!fs(meta).exists(meta) &&
               System.currentTimeMillis - s.getModificationTime >= graceMs) {
             sf.delete(s.getPath, true)
@@ -3925,8 +3885,7 @@ final class SnapshotTables(
   private[graft] def declareTable(table: String, schema: org.apache.spark.sql.types.StructType,
       partitionCols: Seq[String], transforms: Seq[SnapshotTables.PartitionTransform]): Unit = {
     replaceSmallFile(declaredPath(table),
-      s"""{"partition_cols":${partitionCols.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
-        s""""schema":${schema.json}}""")
+      VersionMeta(0, partitionCols = partitionCols, schema = schema.json).render)
     if (transforms.nonEmpty)
       replaceSmallFile(transformSpecPath(table), SnapshotTables.PartitionTransform.formatSpec(transforms))
     else {
@@ -3937,24 +3896,17 @@ final class SnapshotTables(
     }
   }
 
-  private[graft] def declaredSchema(table: String): Option[org.apache.spark.sql.types.StructType] = {
+  /** The DDL declaration, a version-0 [[SnapshotTables.VersionMeta]]. */
+  private def declared(table: String): Option[VersionMeta] = {
     val p = declaredPath(table)
-    if (!fs(p).exists(p)) None
-    else {
-      val json = readSmallFile(p)
-      val schemaJson = json.substring(json.indexOf("\"schema\":") + "\"schema\":".length, json.length - 1)
-      Some(org.apache.spark.sql.types.DataType.fromJson(schemaJson)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-    }
+    if (fs(p).exists(p)) Some(parseMetaAt(p, 0)) else None
   }
 
-  private[graft] def declaredPartitionCols(table: String): Seq[String] = {
-    val p = declaredPath(table)
-    if (!fs(p).exists(p)) Nil
-    else "\"partition_cols\":\\[([^\\]]*)\\]".r.findFirstMatchIn(readSmallFile(p))
-      .map(_.group(1).split(',').toSeq.map(_.trim.stripPrefix("\"").stripSuffix("\"")).filter(_.nonEmpty))
-      .getOrElse(Nil)
-  }
+  private[graft] def declaredSchema(table: String): Option[org.apache.spark.sql.types.StructType] =
+    declared(table).flatMap(d => structOf(d.schema))
+
+  private[graft] def declaredPartitionCols(table: String): Seq[String] =
+    declared(table).fold(Seq.empty[String])(_.partitionCols)
 
   private[graft] def persistedTransforms(table: String): Seq[SnapshotTables.PartitionTransform] =
     effectiveTransforms(table)
@@ -3989,14 +3941,7 @@ final class SnapshotTables(
   private[graft] def currentPartitionCols(table: String): Seq[String] = {
     val v = currentVersion(table)
     if (v == 0) declaredPartitionCols(table)
-    else {
-      val m = new Path(metaDir(table), f"v$v%05d.json")
-      if (!fs(m).exists(m)) Nil
-      else "\"partition_cols\":\\[([^\\]]*)\\]".r.findFirstMatchIn(readSmallFile(m))
-        .map(_.group(1).split(',').toSeq.map(_.trim.stripPrefix("\"").stripSuffix("\"")).filter(_.nonEmpty))
-        .getOrElse(Nil)
-        .filterNot(_.startsWith("__p_"))
-    }
+    else readMeta(table, v).fold(Seq.empty[String])(_.partitionCols.filterNot(_.startsWith("__p_")))
   }
 
   /** Retained versions with their commit times (millis; commit time =
@@ -4007,7 +3952,7 @@ final class SnapshotTables(
     * are dropped rather than reported with a fake time. */
   def versionHistory(table: String): Seq[(Int, Long)] =
     history(table).flatMap { v =>
-      val m = new Path(metaDir(table), f"v$v%05d.json")
+      val m = metaPath(table, v)
       try
         if (fs(m).exists(m)) Some((v, fs(m).getFileStatus(m).getModificationTime)) else None
       catch { case _: java.io.IOException => None }
@@ -4017,13 +3962,19 @@ final class SnapshotTables(
     * version-metadata file mtime) — `TIMESTAMP AS OF` resolution. */
   private[graft] def versionAtTimestamp(table: String, millis: Long): Option[Int] =
     history(table).filter { v =>
-      val m = new Path(metaDir(table), f"v$v%05d.json")
+      val m = metaPath(table, v)
       try fs(m).exists(m) && fs(m).getFileStatus(m).getModificationTime <= millis
       catch { case _: java.io.IOException => false }
     }.lastOption
 }
 
 object SnapshotTables {
+  import scala.jdk.CollectionConverters._
+  import com.fasterxml.jackson.core.JsonParser
+  import com.fasterxml.jackson.databind.{JsonMappingException, JsonNode}
+  import com.fasterxml.jackson.databind.node.ObjectNode
+  import com.fasterxml.jackson.databind.util.RawValue
+
   /** Live-writer heartbeat marker inside a `.tmp-*` staging dir (name
     * starts with '.', so it is hidden from every reader). */
   private[io] val HeartbeatName = "._graft_heartbeat"
@@ -4102,11 +4053,107 @@ object SnapshotTables {
           : Boolean = size() > RelationCacheMax
     }
 
-  /** One link of a version's delta chain, parsed from the version
-    * metadata ("kind" absent = a full snapshot). */
-  private[io] final case class VersionMeta(v: Int, kind: String, base: Int, keyCols: Seq[String],
-      fold: Boolean = false, txn: Option[String] = None, schemaEvolved: Boolean = false,
-      dataDir: Option[String] = None)
+  /** One version's commit metadata, `metadata/v<NNNNN>.json`: one
+    * compact JSON object, rendered by [[render]] and parsed by
+    * [[VersionMeta.parse]] and nowhere else. Each field by its JSON
+    * name, with the value a parse gives when it is absent, and the
+    * commits that write it:
+    *  - `version` — the file name's number — every commit. A parse
+    *    takes `v` from the file name.
+    *  - `writer` — "" — every commit: the attempt's UUID, the fence
+    *    token of orphan reclaim.
+    *  - `partition_cols` — [] — every commit: the identity layout,
+    *    derived `__p_*` transform columns included.
+    *  - `data_dir` — none — direct-layout commits: the absolute URI of
+    *    the write-once pool dir holding the version's data.
+    *  - `kind` — "full" — delta commits: "append", "mor_upsert",
+    *    "mor_delete", "mor_patch", "mor_revise".
+    *  - `key_cols` — [] — "mor_upsert", "mor_delete", "mor_revise".
+    *  - `txn` — none — commits made with a `txnId`.
+    *  - `base` — v − 1 — every delta kind.
+    *  - `fold` — false — minor-compaction commits.
+    *  - `schema_evolved` — false — metadata-only ADD/DROP COLUMN
+    *    commits (kind "append").
+    *  - `schema` — "" — every commit: the version's Spark schema JSON,
+    *    embedded as a JSON value and held here as its text.
+    * Fields are read at the top level only, so field metadata inside
+    * `schema` can never pass for a commit field. `declared.json` (a DDL
+    * declaration before the first commit) is the same codec at version
+    * 0, which renders only `partition_cols` and `schema`. */
+  private[io] final case class VersionMeta(v: Int, kind: String = "full", base: Int = 0,
+      keyCols: Seq[String] = Nil, fold: Boolean = false, txn: Option[String] = None,
+      schemaEvolved: Boolean = false, dataDir: Option[String] = None, writer: String = "",
+      partitionCols: Seq[String] = Nil, schema: String = "") {
+
+    def render: String = {
+      val o = Json.mapper.createObjectNode()
+      if (v > 0) o.put("version", v)
+      if (writer.nonEmpty) o.put("writer", writer)
+      putTexts(o, "partition_cols", partitionCols)
+      dataDir.foreach(o.put("data_dir", _))
+      if (kind != "full") o.put("kind", kind)
+      if (keyCols.nonEmpty) putTexts(o, "key_cols", keyCols)
+      txn.foreach(o.put("txn", _))
+      if (kind != "full") o.put("base", base)
+      if (fold) o.put("fold", true)
+      if (schemaEvolved) o.put("schema_evolved", true)
+      if (schema.nonEmpty) o.putRawValue("schema", new RawValue(schema))
+      Json.mapper.writeValueAsString(o)
+    }
+  }
+
+  private[io] object VersionMeta {
+    /** Version `v`'s meta from its file text. A text that is not one
+      * JSON object with these field types — empty, or torn by a crash
+      * between the CAS create and its write — throws a Jackson
+      * `JsonProcessingException` (an IOException). */
+    def parse(v: Int, text: String): VersionMeta = {
+      val o = Json.readObject(text)
+      VersionMeta(v,
+        kind = textField(o, "kind").getOrElse("full"),
+        base = intField(o, "base").getOrElse(v - 1),
+        keyCols = textsField(o, "key_cols"),
+        fold = boolField(o, "fold"),
+        txn = textField(o, "txn"),
+        schemaEvolved = boolField(o, "schema_evolved"),
+        dataDir = textField(o, "data_dir"),
+        writer = textField(o, "writer").getOrElse(""),
+        partitionCols = textsField(o, "partition_cols"),
+        schema = Option(o.get("schema")).fold("")(_.toString))
+    }
+  }
+
+  /** A ref file's one number: a branch ref `refs/<branch>` is
+    * `{"base":n}` (the main version it forked from), a tag
+    * `tags/<tag>` is `{"version":v}`. Both name a committed version. */
+  private[io] object RefFile {
+    def render(field: String, v: Int): String =
+      Json.mapper.writeValueAsString(Json.mapper.createObjectNode().put(field, v))
+
+    def parse(field: String, text: String): Int =
+      intField(Json.readObject(text), field).filter(_ >= 1).getOrElse(
+        throw new IllegalStateException(s"ref file has no committed version under '$field': $text"))
+  }
+
+  // typed reads of one top-level field: absent gives None, Nil or
+  // false; present with the wrong JSON type does not parse
+  private def field(o: ObjectNode, name: String)(ok: JsonNode => Boolean): Option[JsonNode] =
+    Option(o.get(name)).map { n =>
+      if (ok(n)) n else throw JsonMappingException.from(null: JsonParser, s"field '$name' has the wrong type: $n")
+    }
+  private def textField(o: ObjectNode, name: String): Option[String] =
+    field(o, name)(_.isTextual).map(_.textValue)
+  private def intField(o: ObjectNode, name: String): Option[Int] =
+    field(o, name)(n => n.isIntegralNumber && n.canConvertToInt).map(_.intValue)
+  private def boolField(o: ObjectNode, name: String): Boolean =
+    field(o, name)(_.isBoolean).exists(_.booleanValue)
+  private def textsField(o: ObjectNode, name: String): Seq[String] =
+    field(o, name)(n => n.isArray && n.asScala.forall(_.isTextual))
+      .fold(Seq.empty[String])(_.asScala.map(_.textValue).toSeq)
+  private def putTexts(o: ObjectNode, name: String, vs: Seq[String]): Unit = {
+    val a = o.putArray(name)
+    vs.foreach(s => a.add(s))
+  }
 
   /** One `.partitions` relation row: a live partition directory value
     * ("" = unpartitioned) with its data-file and pending-MOR-delete

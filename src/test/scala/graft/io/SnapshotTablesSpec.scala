@@ -798,6 +798,45 @@ class SnapshotTablesSpec extends SparkSpec {
     assert(t.history("tab") == Seq(1, 2))
   }
 
+  test("crash-orphaned metadata that is empty or torn is never a commit and is reclaimed, both layouts") {
+    // the CAS creates the meta file, then writes it: a crash in between
+    // leaves it empty or holding a prefix of the rendering
+    Seq("rename", "direct").foreach { layout =>
+      val inputs = Seq("{}", "", """{"version":2,"writer":"dead-wr""") ++
+        (if (layout == "direct")
+          Seq("""{"version":2,"writer":"dead-writer","partition_cols":[],""" +
+            "\"data_dir\":\"file:/tmp/graft-dead/tab/data/dead-writer\",")
+        else Nil)
+      inputs.foreach { orphan =>
+        val root = java.nio.file.Files.createTempDirectory("graft-snap").toString
+        val t = new SnapshotTables(spark, root, orphanGraceMs = 0L)
+        t.setCommitLayout("tab", Some(layout))
+        t.overwriteTable(Seq((1, "a")).toDF("id", "v"), "tab")
+        java.nio.file.Files.write(
+          java.nio.file.Paths.get(root, "tab", "metadata", "v00002.json"), orphan.getBytes("UTF-8"))
+        val clue = s"$layout layout, orphan '$orphan'"
+        assert(t.history("tab") == Seq(1), clue)
+        t.overwriteTable(Seq((2, "b")).toDF("id", "v"), "tab") // reclaims instead of wedging
+        assert(t.currentVersion("tab") == 2, clue)
+        assert(t.history("tab") == Seq(1, 2), clue)
+        assert(t.read("tab").as[(Int, String)].collect().toSeq == Seq((2, "b")), clue)
+      }
+    }
+  }
+
+  test("a retained version whose meta does not parse fails loudly") {
+    val root = java.nio.file.Files.createTempDirectory("graft-snap").toString
+    val t = new SnapshotTables(spark, root)
+    t.overwriteTable(Seq((1, "a")).toDF("id", "v"), "tab")
+    t.append(Seq((2, "b")).toDF("id", "v"), "tab")
+    val meta = java.nio.file.Paths.get(root, "tab", "metadata", "v00002.json")
+    val text = java.nio.file.Files.readString(meta)
+    java.nio.file.Files.writeString(meta, text.take(text.length / 2))
+    assert(t.history("tab") == Seq(1, 2)) // the version dir is still there
+    intercept[java.io.IOException](t.read("tab").collect())
+    intercept[java.io.IOException](t.chainKinds("tab", 2))
+  }
+
   test("an orphan still inside the grace period is NOT reclaimed (winner may be mid-rename)") {
     val root = java.nio.file.Files.createTempDirectory("graft-snap").toString
     val t = new SnapshotTables(spark, root, orphanGraceMs = 3600000L)
