@@ -62,27 +62,31 @@ final class SnapshotTableV2(
 
   private def snapDirStr: String = st.snapshotDirString(table, version)
 
-  /** The parquet directories a DIRECT scan of this version may read:
-    * the single snapshot dir of a full version, or every segment dir
-    * of an UNPARTITIONED append-only chain (multi-root scans of
-    * hive-partitioned layouts trip Spark's conflicting-directory
-    * check, and merge-on-read chains need anti-join resolution — both
-    * return None and are planned by [[graft.plans.DeltaResolveRule]]
-    * instead). */
-  private[graft] def directScanDirs: Option[Seq[String]] =
-    st.appendChainDirs(table, version) match {
-      case Some(dirs) if dirs.length == 1 => Some(dirs)
-      case Some(dirs) if st.currentPartitionCols(table).isEmpty &&
-          st.persistedTransforms(table).isEmpty => Some(dirs)
+  /** The parquet directories a DIRECT scan of this version may read,
+    * with their read schema from the version metadata (None: infer it
+    * from the footers): the single snapshot dir of a full version, or
+    * every segment dir of an UNPARTITIONED append-only chain
+    * (multi-root scans of hive-partitioned layouts trip Spark's
+    * conflicting-directory check, and merge-on-read chains need
+    * anti-join resolution — both return None and are planned by
+    * [[graft.plans.DeltaResolveRule]] instead). */
+  private lazy val directScan: Option[(Seq[String], Option[StructType])] =
+    st.appendChainScan(table, version) match {
+      case Some(scan @ (dirs, _)) if dirs.length == 1 => Some(scan)
+      case Some(scan) if st.currentPartitionCols(table).isEmpty &&
+          st.persistedTransforms(table).isEmpty => Some(scan)
       case _ => None
     }
 
+  private[graft] def directScanDirs: Option[Seq[String]] = directScan.map(_._1)
+
   private[graft] def pinnedVersionNumber: Int = version
 
-  /** Directory-discovered schema of the pinned snapshot (partition
-    * columns included, `__p_*` derived columns concealed); None when
-    * the version holds no data files. Delta-chained versions discover
-    * through the RESOLVED read (a schema-only analysis, no job). */
+  /** Schema of the pinned snapshot (partition columns included,
+    * `__p_*` derived columns concealed) — the version metadata's read
+    * schema where it records one, so no footer is opened; None when the
+    * version holds no data files. Delta-chained versions discover
+    * through the RESOLVED read (a schema-only analysis). */
   private lazy val discovered: Option[StructType] =
     if (version == 0) None
     else if (st.chainSchemaEvolved(table, version))
@@ -91,14 +95,16 @@ final class SnapshotTableV2(
       st.versionDataSchema(table, version).filter(_.nonEmpty)
     else
       try {
-        val s = directScanDirs match {
+        val s = directScan match {
           // single-dir scans resolve through the write-once relation
           // cache (the common full-version case); multi-dir unions are
           // rare enough to build fresh
-          case Some(dirs) if dirs.length == 1 =>
-            st.cachedParquet(new org.apache.hadoop.fs.Path(dirs.head))
+          case Some((dirs, read)) if dirs.length == 1 =>
+            st.cachedParquet(new org.apache.hadoop.fs.Path(dirs.head), read)
               .map(_.schema).getOrElse(spark.read.parquet(dirs.head).schema)
-          case Some(dirs) => spark.read.parquet(dirs: _*).schema
+          case Some((dirs, read)) =>
+            val df = read.fold(spark.read)(spark.read.schema(_)).parquet(dirs: _*)
+            if (df.inputFiles.isEmpty) new StructType() else df.schema
           case None => st.readVersion(table, version).schema
         }
         if (s.isEmpty) None else Some(StructType(s.filterNot(_.name.startsWith("__p_"))))
@@ -166,9 +172,9 @@ final class SnapshotTableV2(
           }
         }
       case Some(_) =>
-        directScanDirs match {
-          case Some(dirs) =>
-            ParquetTable(fullName, spark, options, dirs, None, classOf[ParquetFileFormat])
+        directScan match {
+          case Some((dirs, read)) =>
+            ParquetTable(fullName, spark, options, dirs, read, classOf[ParquetFileFormat])
               .newScanBuilder(options)
           case None =>
             // merge-on-read / partitioned delta chain: the scan is a

@@ -815,19 +815,51 @@ final class SnapshotTables(
   private[graft] def commitKind(table: String, v: Int): String =
     versionMeta(table, v).kind
 
-  /** Data directories of an APPEND-ONLY chain (base + append segment
-    * dirs, ascending), or None when the chain contains a merge-on-read
-    * segment — the SQL scan path reads Some(dirs) as a plain
-    * multi-path parquet scan with full pushdown. */
-  private[graft] def appendChainDirs(table: String, v: Int): Option[Seq[String]] = {
+  /** The segments of an APPEND-ONLY chain (base + append segments,
+    * ascending), or None when the chain contains a merge-on-read
+    * segment. */
+  private def appendChain(table: String, v: Int): Option[Seq[VersionMeta]] = {
     val segs = chainOf(table, v)
     // a schema-evolved chain must read RESOLVED (the declared schema is
     // applied there; a raw multi-dir scan would expose file schemas)
     if (segs.forall(s => s.kind == "full" || s.kind == "append") &&
-        !segs.exists(_.schemaEvolved))
-      Some(segs.map(s => dataDirOfMeta(table, s).toString))
+        !segs.exists(_.schemaEvolved)) Some(segs)
     else None
   }
+
+  /** An APPEND-ONLY chain as one scan: its data dirs and their read
+    * schema ([[filesSchema]], when every segment records the same one;
+    * None makes the scan infer from footers), or None when the chain
+    * contains a merge-on-read segment — the SQL scan path reads it as a
+    * plain multi-path parquet scan with full pushdown. */
+  private[graft] def appendChainScan(table: String, v: Int)
+      : Option[(Seq[String], Option[org.apache.spark.sql.types.StructType])] =
+    appendChain(table, v).map { segs =>
+      val schemas = segs.map(filesSchema(_)).distinct
+      (segs.map(s => dataDirOfMeta(table, s).toString), schemas.head.filter(_ => schemas.length == 1))
+    }
+
+  /** The read schema of the files in `m`'s data dir (`sub`: one side of
+    * a patch), from the meta alone — no footer is opened. Every field is
+    * nullable, as a file-source read makes it, and the layout's
+    * partition columns keep their written types (Spark's partition-type
+    * inference would re-type a string partition value that looks like a
+    * number: "007" → 7). The recorded schema describes the files of a
+    * full version (its written frame), and of a delta side written with
+    * the table's layout — an append or mor_upsert dir, a mor_revise
+    * `add/` — when the meta marks it so (`files_schema`, see
+    * [[deltaSchema]]). None — infer from the footers — for a meta with
+    * no recorded schema, for a delta meta without the mark (one whose
+    * types differ from the table's, or written before the mark
+    * existed), and for the other sides, which hold key rows or row
+    * images written without a layout. */
+  private def filesSchema(m: VersionMeta, sub: String = ""): Option[org.apache.spark.sql.types.StructType] =
+    (m.kind, sub) match {
+      case ("full", "") => structOf(m.schema).map(SnapshotTables.nullable)
+      case ("append" | "mor_upsert", "") | ("mor_revise", "add") if m.schemaOfFiles =>
+        structOf(m.schema).map(SnapshotTables.nullable)
+      case _ => None
+    }
 
   /** Upper bound on a delta chain before a delta commit materializes a
     * full snapshot first (every chain segment is one more scan + union
@@ -928,7 +960,7 @@ final class SnapshotTables(
     }.reverse
     if (run.length < 2) return false
     val baseV = segs(segs.length - run.length - 1).v
-    val folded = run.flatMap(s => segRead(table, s.v)).reduceOption(_ unionByName _)
+    val folded = run.flatMap(s => segRead(table, s)).reduceOption(_ unionByName _)
     folded match {
       case None => false // every run segment empty: nothing to write
       case Some(f) =>
@@ -938,14 +970,15 @@ final class SnapshotTables(
         val mSketch =
           if (fs(kp).exists(kp)) readSmallFile(kp).split(',').toSeq.filter(_.nonEmpty) else Nil
         val (df1, pcols) = withTableLayout(f, table, Nil)
+        val (schema, ofFiles) = deltaSchema(read(table).schema, df1)
         commitVersion(table,
           stage = tmp => {
             val w = df1.write.mode(SaveMode.Overwrite)
             (if (pcols.nonEmpty) w.partitionBy(pcols: _*) else w).parquet(tmp.toString)
           },
           partitionCols1 = currentPartitionCols(table),
-          schemaJson = read(table).schema.json,
-          commit = VersionMeta(0, "append", baseV, fold = true),
+          schemaJson = schema.json,
+          commit = VersionMeta(0, "append", baseV, fold = true, schemaOfFiles = ofFiles),
           expectedNext = Some(cur + 1),
           afterWin = () => (),
           manifestStats = mStats, manifestSketch = mSketch)
@@ -966,32 +999,36 @@ final class SnapshotTables(
     // materialize conforms everything and restores the fast paths)
     if (deltas.exists(_.schemaEvolved)) return false
     val kinds = deltas.map(_.kind).toSet
-    val schemaJson = read(table).schema.json
+    val tableSchema = read(table).schema
 
     def unionOpt(a: Option[DataFrame], b: Option[DataFrame]): Option[DataFrame] = (a, b) match {
       case (Some(x), Some(y)) => Some(x.unionByName(y))
       case (x, None) => x
       case (None, y) => y
     }
-    def commitFold(kind: String, keyCols: Seq[String], stage: Path => Unit,
+    // the append fold's dir and a revise fold's add/ are written with the
+    // table's layout (`laid`, the staged frame), and described by the meta
+    // when their types are the table's ([[deltaSchema]])
+    def commitFold(kind: String, keyCols: Seq[String], laid: Option[DataFrame], stage: Path => Unit,
         mStats: Seq[String], mSketch: Seq[String]): Unit = {
+      val (schema, ofFiles) = laid.fold((tableSchema, false))(deltaSchema(tableSchema, _))
       commitVersion(table, stage,
         partitionCols1 = currentPartitionCols(table),
-        schemaJson = schemaJson,
-        commit = VersionMeta(0, kind, head, keyCols, fold = true),
+        schemaJson = schema.json,
+        commit = VersionMeta(0, kind, head, keyCols, fold = true, schemaOfFiles = ofFiles),
         expectedNext = Some(cur + 1),
         afterWin = () => (),
         manifestStats = mStats, manifestSketch = mSketch)
       ()
     }
-    def layoutWrite(df: DataFrame, dest: Path): Unit = {
-      val (df1, pcols) = withTableLayout(df, table, Nil)
+    def layoutWrite(laid: (DataFrame, Seq[String]), dest: Path): Unit = {
+      val (df1, pcols) = laid
       val w = df1.write.mode(SaveMode.Overwrite)
       (if (pcols.nonEmpty) w.partitionBy(pcols: _*) else w).parquet(dest.toString)
     }
 
     if (kinds == Set("append")) {
-      val folded = deltas.flatMap(s => segRead(table, s.v)).reduceOption(_ unionByName _)
+      val folded = deltas.flatMap(s => segRead(table, s)).reduceOption(_ unionByName _)
       folded match {
         case None => false // every segment empty: nothing to write, chain is already trivial
         case Some(f) =>
@@ -1000,7 +1037,8 @@ final class SnapshotTables(
             if (fs(sp).exists(sp)) readSmallFile(sp).split(',').toSeq.filter(_.nonEmpty) else Nil
           val mSketch =
             if (fs(kp).exists(kp)) readSmallFile(kp).split(',').toSeq.filter(_.nonEmpty) else Nil
-          commitFold("append", Nil, tmp => layoutWrite(f, tmp), mStats, mSketch)
+          val laid = withTableLayout(f, table, Nil)
+          commitFold("append", Nil, Some(laid._1), tmp => layoutWrite(laid, tmp), mStats, mSketch)
           true
       }
     } else if (!kinds.contains("mor_patch")) {
@@ -1011,15 +1049,15 @@ final class SnapshotTables(
       var add: Option[DataFrame] = None
       deltas.foreach { s =>
         s.kind match {
-          case "append" => add = unionOpt(add, segRead(table, s.v))
+          case "append" => add = unionOpt(add, segRead(table, s))
           case "mor_upsert" =>
-            segRead(table, s.v).foreach { u =>
+            segRead(table, s).foreach { u =>
               val uk = u.select(kcols.map(col): _*).distinct()
               add = unionOpt(add.map(_.join(uk, kcols, "left_anti")), Some(u))
               delKeys = unionOpt(delKeys, Some(uk))
             }
           case "mor_delete" =>
-            segRead(table, s.v).foreach { d =>
+            segRead(table, s).foreach { d =>
               val dk = d.select(kcols.map(col): _*).distinct()
               add = add.map(_.join(dk, kcols, "left_anti"))
               delKeys = unionOpt(delKeys, Some(dk))
@@ -1027,28 +1065,29 @@ final class SnapshotTables(
           case "mor_revise" =>
             // a PREVIOUS fold's segment re-folding: apply its del keys
             // like a delete, then union its add rows — same invariant
-            segRead(table, s.v, "del").foreach { d =>
+            segRead(table, s, "del").foreach { d =>
               val dk = d.select(kcols.map(col): _*).distinct()
               add = add.map(_.join(dk, kcols, "left_anti"))
               delKeys = unionOpt(delKeys, Some(dk))
             }
-            add = unionOpt(add, segRead(table, s.v, "add"))
+            add = unionOpt(add, segRead(table, s, "add"))
           case other => throw new IllegalStateException(s"unexpected kind '$other' in keyed fold")
         }
       }
       val dk = delKeys.map(_.distinct())
-      commitFold("mor_revise", kcols,
+      val laid = add.map(withTableLayout(_, table, Nil))
+      commitFold("mor_revise", kcols, laid.map(_._1),
         tmp => {
           dk.foreach(_.write.mode(SaveMode.Overwrite).parquet(new Path(tmp, "del").toString))
-          add.foreach(a => layoutWrite(a, new Path(tmp, "add")))
+          laid.foreach(layoutWrite(_, new Path(tmp, "add")))
         }, Nil, Nil)
       true
     } else if (kinds == Set("mor_patch")) {
       var d: Option[DataFrame] = None
       var a: Option[DataFrame] = None
       deltas.foreach { s =>
-        val di = segRead(table, s.v, "del")
-        val ai = segRead(table, s.v, "add")
+        val di = segRead(table, s, "del")
+        val ai = segRead(table, s, "add")
         // D' = D ⊎ (dᵢ ∖ A);  A' = (A ∖ dᵢ) ⊎ aᵢ
         val dNew = di.map { x =>
           a match {
@@ -1065,7 +1104,7 @@ final class SnapshotTables(
         d = unionOpt(d, dNew)
         a = unionOpt(aAfterDel, ai)
       }
-      commitFold("mor_patch", Nil,
+      commitFold("mor_patch", Nil, None,
         tmp => {
           d.foreach(_.write.mode(SaveMode.Overwrite).parquet(new Path(tmp, "del").toString))
           a.foreach(_.write.mode(SaveMode.Overwrite).parquet(new Path(tmp, "add").toString))
@@ -1157,6 +1196,27 @@ final class SnapshotTables(
     require(cur == got,
       s"$what on $table needs the table's exact columns; " +
         s"missing ${(cur -- got).mkString(",")} extra ${(got -- cur).mkString(",")}")
+  }
+
+  /** What the meta of a delta written with the table's layout records,
+    * and whether that is the read schema of the delta's files
+    * ([[filesSchema]]). The files hold `laidOut`, the staged frame. When
+    * its columns are the table's, each with the table's type (nested
+    * field names and order included; nullability aside, as a file read
+    * makes every column nullable), the meta records the table's columns
+    * plus the `__p_*` layout columns, marked as the files' schema.
+    * Otherwise it records the table's schema alone, and reads of the
+    * delta infer from its footers: a delta of other types (int rows in a
+    * bigint column, a struct with reordered fields) reads, resolves and
+    * folds as it always did. */
+  private def deltaSchema(tableSchema: org.apache.spark.sql.types.StructType,
+      laidOut: DataFrame): (org.apache.spark.sql.types.StructType, Boolean) = {
+    val (layout, cols) = laidOut.schema.fields.partition(_.name.startsWith("__p_"))
+    def types(fs: Seq[org.apache.spark.sql.types.StructField]) =
+      fs.map(f => f.name -> SnapshotTables.nullable(f.dataType))
+    if (cols.length == tableSchema.length && types(cols).toMap == types(tableSchema).toMap)
+      (org.apache.spark.sql.types.StructType(tableSchema.fields ++ layout), true)
+    else (tableSchema, false)
   }
 
   /** IDEMPOTENT-COMMIT guard (Delta's `txn` appId/version shape, a
@@ -1307,6 +1367,8 @@ final class SnapshotTables(
     val base = currentVersion(table)
     val (df1, pcols) =
       if (withLayout) withTableLayout(df, table, Nil) else (df, Seq.empty[String])
+    val tableSchema = read(table).schema
+    val (schema, ofFiles) = if (withLayout) deltaSchema(tableSchema, df1) else (tableSchema, false)
     val (mStats, mSketch) =
       if (!manifest) (Nil, Nil)
       else {
@@ -1323,8 +1385,8 @@ final class SnapshotTables(
       // record the INHERITED identity layout so the next commit's
       // layout inheritance reads through delta heads unchanged
       partitionCols1 = if (withLayout) pcols else currentPartitionCols(table),
-      schemaJson = read(table).schema.json,
-      commit = VersionMeta(0, kind, base, keyCols, txn = checkedTxn(txnId)),
+      schemaJson = schema.json,
+      commit = VersionMeta(0, kind, base, keyCols, txn = checkedTxn(txnId), schemaOfFiles = ofFiles),
       expectedNext = Some(base + 1),
       afterWin = () => (),
       manifestStats = mStats,
@@ -1367,23 +1429,36 @@ final class SnapshotTables(
     ()
   }
 
-  /** Guarded raw read of one data directory (`__p_*` layout columns
-    * KEPT — the hidden-partition readers filter on them): None when the
-    * dir is absent or holds no data files. A zero-file segment is
-    * committable (e.g. a dynamic-partition write of 0 rows emits only
-    * _SUCCESS), and an unguarded `spark.read.parquet` on it throws
+  /** Guarded raw read of one segment's data dir (or a patch side) with
+    * its [[filesSchema]] (`__p_*` layout columns KEPT — the
+    * hidden-partition readers filter on them): None when the dir is
+    * absent or holds no data files. A zero-file segment is committable
+    * (e.g. a dynamic-partition write of 0 rows emits only _SUCCESS),
+    * and an unguarded `spark.read.parquet` on it throws
     * AnalysisException (unable to infer schema) — every multi-segment
     * reader must union only the non-empty segments. */
-  private def readDirOpt(dir: String): Option[DataFrame] =
-    cachedParquet(new Path(dir))
+  private def segDirOpt(table: String, m: VersionMeta, sub: String = ""): Option[DataFrame] = {
+    val d = dataDirOfMeta(table, m)
+    cachedParquet(if (sub.isEmpty) d else new Path(d, sub), filesSchema(m, sub))
+  }
+
+  /** A parquet reader for files of `m`'s data dir (a manifest-pruned
+    * file list), carrying its [[filesSchema]]. */
+  private def segReader(m: VersionMeta): org.apache.spark.sql.DataFrameReader =
+    filesSchema(m).fold(spark.read)(spark.read.schema(_))
 
   /** One (modTime,len)-guarded resolve of a write-once parquet path
     * (segment data dir or stats manifest file) through the JVM-wide
     * [[SnapshotTables.relationCache]] — see its doc for why this can
     * never serve stale data. None = path absent or no data files.
-    * Package-visible so the catalog face ([[graft.catalog.SnapshotTableV2]]
-    * schema discovery) reuses the same cached relations. */
-  private[graft] def cachedParquet(d: Path): Option[DataFrame] = {
+    * `schema` is the read schema when the caller knows it (a segment
+    * dir's [[filesSchema]]: no footer is opened), else the footers are
+    * inferred; a path is cached in one form, and a call with the other
+    * form replaces it. Package-visible so the catalog face
+    * ([[graft.catalog.SnapshotTableV2]] schema discovery) reuses the
+    * same cached relations. */
+  private[graft] def cachedParquet(d: Path,
+      schema: Option[org.apache.spark.sql.types.StructType] = None): Option[DataFrame] = {
     val f = fs(d)
     val st =
       try f.getFileStatus(d)
@@ -1394,15 +1469,17 @@ final class SnapshotTables(
       Option(SnapshotTables.relationCache.get(key))
     }
     hit match {
-      case Some((m, l, df)) if m == st.getModificationTime && l == st.getLen => df
+      case Some((m, l, s, df)) if m == st.getModificationTime && l == st.getLen && s == schema => df
       case _ =>
         val v =
           try {
-            val df = spark.read.parquet(d.toString)
-            if (df.schema.isEmpty) None else Some(df)
+            val df = schema.fold(spark.read)(spark.read.schema(_)).parquet(d.toString)
+            // a given schema skips inference, so a dir with no data files
+            // shows only as an empty listing
+            if (df.schema.isEmpty || df.inputFiles.isEmpty) None else Some(df)
           } catch { case _: org.apache.spark.sql.AnalysisException => None }
         SnapshotTables.relationCache.synchronized {
-          SnapshotTables.relationCache.put(key, (st.getModificationTime, st.getLen, v))
+          SnapshotTables.relationCache.put(key, (st.getModificationTime, st.getLen, schema, v))
         }
         v
     }
@@ -1411,11 +1488,8 @@ final class SnapshotTables(
   /** Read one chain segment's dir (or subdir) as a frame, None when it
     * holds no data files (empty delta side) — `__p_*` layout columns
     * concealed like every read here. */
-  private def segRead(table: String, v: Int, sub: String = ""): Option[DataFrame] = {
-    val d0 = dataDirOf(table, v)
-    val d = if (sub.isEmpty) d0 else new Path(d0, sub)
-    readDirOpt(d.toString).map(df => df.drop(df.columns.filter(_.startsWith("__p_")): _*))
-  }
+  private def segRead(table: String, m: VersionMeta, sub: String = ""): Option[DataFrame] =
+    segDirOpt(table, m, sub).map(df => df.drop(df.columns.filter(_.startsWith("__p_")): _*))
 
   /** Fold a delta chain into one resolved DataFrame plan — unions and
     * anti-joins over per-segment parquet scans, fully distributed. */
@@ -1432,11 +1506,11 @@ final class SnapshotTables(
       case (None, y) => y
       case (x, None) => x
     }
-    val out = segs.tail.foldLeft(segRead(table, segs.head.v)) { (acc, s) =>
+    val out = segs.tail.foldLeft(segRead(table, segs.head)) { (acc, s) =>
       s.kind match {
-        case "append" => union(acc, segRead(table, s.v))
+        case "append" => union(acc, segRead(table, s))
         case "mor_upsert" =>
-          val up = segRead(table, s.v)
+          val up = segRead(table, s)
           (acc, up) match {
             case (Some(a), Some(u)) =>
               Some(a.join(u.select(s.keyCols.map(col): _*).distinct(), s.keyCols, "left_anti")
@@ -1446,7 +1520,7 @@ final class SnapshotTables(
           }
         case "mor_delete" =>
           acc.map { a =>
-            segRead(table, s.v) match {
+            segRead(table, s) match {
               case None => a
               case Some(del) =>
                 a.join(del.select(s.keyCols.map(col): _*).distinct(), s.keyCols, "left_anti")
@@ -1454,32 +1528,32 @@ final class SnapshotTables(
           }
         case "mor_patch" =>
           val afterDel = acc.map { a =>
-            segRead(table, s.v, "del") match {
+            segRead(table, s, "del") match {
               case None => a
               case Some(d) => graft.core.MapSafeSetOps.exceptAll(a, d)
             }
           }
-          union(afterDel, segRead(table, s.v, "add"))
+          union(afterDel, segRead(table, s, "add"))
         case "mor_revise" =>
           // minor compaction's folded segment: del/ holds KEY rows to
           // remove from the base, add/ the full replacement+appended
           // rows — (base ⟕̸ keys) ∪ add, the keyed generalization of
           // mor_upsert (add rows need not cover every deleted key)
           val afterDel = acc.map { a =>
-            segRead(table, s.v, "del") match {
+            segRead(table, s, "del") match {
               case None => a
               case Some(d) =>
                 a.join(d.select(s.keyCols.map(col): _*).distinct(), s.keyCols, "left_anti")
             }
           }
-          union(afterDel, segRead(table, s.v, "add"))
+          union(afterDel, segRead(table, s, "add"))
         case other =>
           throw new IllegalStateException(s"unknown commit kind '$other' at $table v${s.v}")
       }
     }
     // a fully-empty chain reads like a plain empty version (same
     // error/empty behavior as the single-dir path)
-    out.orElse(cachedParquet(dataDirOfMeta(table, segs.last)))
+    out.orElse(segDirOpt(table, segs.last))
       .getOrElse(spark.read.parquet(dataDirOfMeta(table, segs.last).toString))
   }
 
@@ -1562,16 +1636,16 @@ final class SnapshotTables(
     require(pt.ordered, s"${pt.name} does not preserve order — use readPartitionValues")
     val v = currentVersion(table)
     val bounds = spark.range(1).select(pt.exprOf(lit(lo)), pt.exprOf(lit(hi))).head()
-    appendChainDirs(table, v) match {
-      case Some(dirs) =>
+    appendChain(table, v) match {
+      case Some(segs) =>
         // append-only chain: per-segment scans (each root discovers its
         // own partition dirs — Spark refuses mixed multi-root layouts),
         // filtered BEFORE the union so directory pruning applies per
         // segment, then unioned. Zero-file segments are skipped
-        // (readDirOpt) — an unguarded read of one would fail the whole
+        // (segDirOpt) — an unguarded read of one would fail the whole
         // table's range scans forever.
-        val perSeg = dirs.flatMap { dir =>
-          readDirOpt(dir).map { raw =>
+        val perSeg = segs.flatMap { seg =>
+          segDirOpt(table, seg).map { raw =>
             val filtered =
               if (raw.columns.contains(pt.name))
                 raw.filter(col(pt.name) >= lit(bounds.get(0)) && col(pt.name) <= lit(bounds.get(1)))
@@ -1601,10 +1675,10 @@ final class SnapshotTables(
     val v = currentVersion(table)
     val derived = spark.range(1).select(values.map(pv => pt.exprOf(lit(pv))): _*)
       .head().toSeq.distinct
-    appendChainDirs(table, v) match {
-      case Some(dirs) =>
-        val perSeg = dirs.flatMap { dir =>
-          readDirOpt(dir).map { raw =>
+    appendChain(table, v) match {
+      case Some(segs) =>
+        val perSeg = segs.flatMap { seg =>
+          segDirOpt(table, seg).map { raw =>
             val filtered =
               if (raw.columns.contains(pt.name)) raw.filter(col(pt.name).isin(derived: _*))
               else raw.filter(pt.expr.isin(derived: _*))
@@ -1671,9 +1745,9 @@ final class SnapshotTables(
       }) {
         // to = from ⊎ seg₁ ⊎ … ⊎ segₖ  ⇒  to∖from = ⊎segᵢ, from∖to = ∅
         val to = readVersion(table, toV)
-        val segs = (fromV + 1 to toV)
-          .filterNot(v => versionMeta(table, v).fold)
-          .flatMap(v => segRead(table, v))
+        val segs = (fromV + 1 to toV).map(versionMeta(table, _))
+          .filterNot(_.fold)
+          .flatMap(segRead(table, _))
         Some(segs.reduceOption(_.unionByName(_, allowMissingColumns = true))
           .map(u => cdcAligned(u, to, table, fromV, toV))
           .getOrElse(to.where(lit(false)))
@@ -1757,9 +1831,9 @@ final class SnapshotTables(
     if (m.kind != "full" && m.base != v - 1) return None
     m.kind match {
       case "append" =>
-        Some(segRead(table, v).map(ins).getOrElse(emptyDiff))
+        Some(segRead(table, m).map(ins).getOrElse(emptyDiff))
       case "mor_patch" =>
-        (segRead(table, v, "del"), segRead(table, v, "add")) match {
+        (segRead(table, m, "del"), segRead(table, m, "add")) match {
           case (None, None) => Some(emptyDiff)
           case (None, Some(a)) => Some(ins(a))
           case (Some(d), None) => Some(del(d))
@@ -1768,14 +1842,14 @@ final class SnapshotTables(
               .unionByName(del(graft.core.MapSafeSetOps.exceptAll(d, aligned(a, d)))))
         }
       case "mor_delete" =>
-        segRead(table, v) match {
+        segRead(table, m) match {
           case None => Some(emptyDiff)
           case Some(k) =>
             val keys = k.select(m.keyCols.map(col): _*).distinct()
             Some(del(readVersion(table, m.base).join(keys, m.keyCols, "left_semi")))
         }
       case "mor_upsert" =>
-        segRead(table, v) match {
+        segRead(table, m) match {
           case None => Some(emptyDiff)
           case Some(u) =>
             val keys = u.select(m.keyCols.map(col): _*).distinct()
@@ -1876,7 +1950,7 @@ final class SnapshotTables(
       .filter(col("__change").isNotNull)
     m.kind match {
       case "append" =>
-        Some(segRead(table, v) match {
+        Some(segRead(table, m) match {
           case None =>
             packed(readVersion(table, v).where(lit(false)), "__new")
               .select((keyCols.map(col) :+ nul("__old")) :+ col("__new"): _*)
@@ -1887,8 +1961,8 @@ final class SnapshotTables(
               .withColumn("__change", lit("insert"))
         })
       case "mor_patch" =>
-        val d = segRead(table, v, "del").map(packed(_, "__old"))
-        val a = segRead(table, v, "add").map(packed(_, "__new"))
+        val d = segRead(table, m, "del").map(packed(_, "__old"))
+        val a = segRead(table, m, "add").map(packed(_, "__new"))
         (d, a) match {
           case (None, None) =>
             Some(packed(readVersion(table, v).where(lit(false)), "__new")
@@ -1903,7 +1977,7 @@ final class SnapshotTables(
           case (Some(dd), Some(aa)) => Some(classify(dd.join(aa, keyCols, "full_outer")))
         }
       case "mor_delete" if m.keyCols == keyCols =>
-        Some(segRead(table, v) match {
+        Some(segRead(table, m) match {
           case None =>
             packed(readVersion(table, v).where(lit(false)), "__old")
               .select((keyCols.map(col) :+ col("__old")) :+ nul("__new"): _*)
@@ -1915,7 +1989,7 @@ final class SnapshotTables(
               .withColumn("__change", lit("delete"))
         })
       case "mor_upsert" if m.keyCols == keyCols =>
-        segRead(table, v).map { u =>
+        segRead(table, m).map { u =>
           val keys = u.select(keyCols.map(col): _*).distinct()
           val touched = readVersion(table, m.base).join(keys, keyCols, "left_semi")
           classify(packed(touched, "__old").join(packed(u, "__new"), keyCols, "full_outer"))
@@ -2570,7 +2644,7 @@ final class SnapshotTables(
     // append-only chain: each segment prunes independently against its
     // OWN manifest (appends keep writing them), results union — file
     // skipping survives O(delta) commits
-    val perSeg = segs.flatMap(s => prunedBoxSegment(table, s.v, bounds))
+    val perSeg = segs.flatMap(s => prunedBoxSegment(table, s, bounds))
     if (perSeg.isEmpty) readVersion(table, v).where(lit(false))
     else if (segs.length == 1) perSeg.head
     else perSeg.map(d => d.drop(d.columns.filter(_.startsWith("__p_")): _*)).reduce(_ unionByName _)
@@ -2580,15 +2654,15 @@ final class SnapshotTables(
     * whose stats MAY intersect every bound, or the whole segment when
     * it has no usable manifest / the keep-list exceeds the driver
     * budget; None when nothing in the segment can match. */
-  private def prunedBoxSegment(table: String, v: Int,
+  private def prunedBoxSegment(table: String, seg: VersionMeta,
       bounds: Seq[(String, Any, Any)]): Option[DataFrame] = {
     import org.apache.spark.sql.functions._
-    val mp = manifestPath(table, v)
-    if (!fs(mp).exists(mp)) return segRead(table, v)
+    val mp = manifestPath(table, seg.v)
+    if (!fs(mp).exists(mp)) return segRead(table, seg)
     // the manifest is a single small parquet: re-reading it per branch
     // is cheaper than pinning checkpoint blocks for every pruned read
     val m = cachedParquet(mp).getOrElse(spark.read.parquet(mp.toString))
-    if (m.isEmpty) return segRead(table, v) // degenerate manifest (older writers): full scan, never empty answers
+    if (m.isEmpty) return segRead(table, seg) // degenerate manifest (older writers): full scan, never empty answers
     val all = m.select("file").distinct()
     val keepDf = bounds
       .map { case (statColumn, lo, hi) =>
@@ -2609,11 +2683,11 @@ final class SnapshotTables(
     // than the driver-list budget, stop enumerating and full-scan
     val lim = maxPrunedFileList
     val keep = keepDf.distinct().limit(lim + 1).collect().map(_.getString(0))
-    val base = dataDirOf(table, v)
+    val base = dataDirOfMeta(table, seg)
     if (keep.isEmpty) None
-    else if (keep.length > lim) segRead(table, v)
+    else if (keep.length > lim) segRead(table, seg)
     else
-      Some(spark.read.option("basePath", base.toString)
+      Some(segReader(seg).option("basePath", base.toString)
         .parquet(keep.map(n => new Path(base, n).toString): _*))
   }
 
@@ -2651,7 +2725,7 @@ final class SnapshotTables(
     val hashes: Seq[Long] = spark.range(1)
       .select(values.map(pv => xxhash64(lit(pv).cast(dt))): _*)
       .head().toSeq.map(_.asInstanceOf[Long])
-    val perSeg = segs.flatMap(s => prunedInSegment(table, s.v, statColumn, values, hashes, dt))
+    val perSeg = segs.flatMap(s => prunedInSegment(table, s, statColumn, values, hashes, dt))
     if (perSeg.isEmpty) readVersion(table, v).where(lit(false))
     else if (segs.length == 1) perSeg.head
     else perSeg.map(d => d.drop(d.columns.filter(_.startsWith("__p_")): _*)).reduce(_ unionByName _)
@@ -2676,14 +2750,14 @@ final class SnapshotTables(
     }.reduce(_ && _)
   }
 
-  private def prunedInSegment(table: String, v: Int, statColumn: String, values: Seq[Any],
+  private def prunedInSegment(table: String, seg: VersionMeta, statColumn: String, values: Seq[Any],
       hashes: Seq[Long], dt: org.apache.spark.sql.types.DataType): Option[DataFrame] = {
     import org.apache.spark.sql.functions._
-    val mp = manifestPath(table, v)
-    if (!fs(mp).exists(mp)) return segRead(table, v)
+    val mp = manifestPath(table, seg.v)
+    if (!fs(mp).exists(mp)) return segRead(table, seg)
     val m = cachedParquet(mp).getOrElse(spark.read.parquet(mp.toString))
-    if (!m.columns.contains("sketch")) return segRead(table, v) // pre-sketch-era manifest: full scan
-    if (m.isEmpty) return segRead(table, v) // degenerate manifest (older writers): full scan, never empty answers
+    if (!m.columns.contains("sketch")) return segRead(table, seg) // pre-sketch-era manifest: full scan
+    if (m.isEmpty) return segRead(table, seg) // degenerate manifest (older writers): full scan, never empty answers
     val forCol = m.filter(col("column") === lit(statColumn))
     val all = m.select("file").distinct()
     val survivors = values.zip(hashes).map { case (pv, h) =>
@@ -2701,11 +2775,11 @@ final class SnapshotTables(
     val lim = maxPrunedFileList
     val keep = survivors.union(all.except(forCol.select("file")))
       .distinct().limit(lim + 1).collect().map(_.getString(0))
-    val base = dataDirOf(table, v)
+    val base = dataDirOfMeta(table, seg)
     if (keep.isEmpty) None
-    else if (keep.length > lim) segRead(table, v)
+    else if (keep.length > lim) segRead(table, seg)
     else
-      Some(spark.read.option("basePath", base.toString)
+      Some(segReader(seg).option("basePath", base.toString)
         .parquet(keep.map(n => new Path(base, n).toString): _*))
   }
 
@@ -2756,7 +2830,7 @@ final class SnapshotTables(
         }
     if (bounds.isEmpty && typedProbes.isEmpty) return None
     val contribs: Seq[(VersionMeta, Either[Option[DataFrame], (Seq[String], Long)])] =
-      segs.map(s => s -> scanKeepForSegment(table, s.v, bounds, typedProbes))
+      segs.map(s => s -> scanKeepForSegment(table, s, bounds, typedProbes))
     val skipped = contribs.exists {
       case (_, Right((keep, total))) => keep.length < total
       case _ => false
@@ -2765,8 +2839,8 @@ final class SnapshotTables(
     val parts = contribs.flatMap {
       case (_, Left(full)) => full
       case (s, Right((keep, _))) if keep.nonEmpty =>
-        val base = dataDirOf(table, s.v)
-        val df = spark.read.option("basePath", base.toString)
+        val base = dataDirOfMeta(table, s)
+        val df = segReader(s).option("basePath", base.toString)
           .parquet(keep.map(n => new Path(base, n).toString): _*)
         Some(df.drop(df.columns.filter(_.startsWith("__p_")).toSeq: _*))
       case _ => None // segment fully pruned
@@ -2929,24 +3003,24 @@ final class SnapshotTables(
     * scope — absence of stats can only keep, never skip. Small
     * manifests evaluate entirely on the driver (collected once,
     * cached); over-budget ones keep the distributed evaluation. */
-  private def scanKeepForSegment(table: String, v: Int,
+  private def scanKeepForSegment(table: String, seg: VersionMeta,
       bounds: Seq[(String, Option[Any], Option[Any])],
       probes: Seq[(String, Seq[(Any, Any, Long)])])
       : Either[Option[DataFrame], (Seq[String], Long)] = {
     import org.apache.spark.sql.functions._
-    val mp = manifestPath(table, v)
-    if (!fs(mp).exists(mp)) return Left(segRead(table, v))
-    collectedManifest(table, v) match {
+    val mp = manifestPath(table, seg.v)
+    if (!fs(mp).exists(mp)) return Left(segRead(table, seg))
+    collectedManifest(table, seg.v) match {
       case SnapshotTables.ManifestRows(rs) if rs.nonEmpty =>
         return Right(scanKeepInMemory(rs, bounds, probes))
       case SnapshotTables.ManifestRows(_) => // degenerate empty manifest
-        return Left(segRead(table, v))
+        return Left(segRead(table, seg))
       case SnapshotTables.ManifestUnreadable => // corrupt/IO-failed, verdict cached:
-        return Left(segRead(table, v)) // full read — never re-consult, never skip
+        return Left(segRead(table, seg)) // full read — never re-consult, never skip
       case SnapshotTables.ManifestOverBudget => () // distributed evaluation below
     }
     val m = cachedParquet(mp).getOrElse(spark.read.parquet(mp.toString))
-    if (m.isEmpty) return Left(segRead(table, v))
+    if (m.isEmpty) return Left(segRead(table, seg))
     val hasSketch = m.columns.contains("sketch")
     val all = m.select("file").distinct()
     val boundKeeps = bounds.map { case (statColumn, lo, hi) =>
@@ -2985,7 +3059,7 @@ final class SnapshotTables(
     val lim = maxPrunedFileList
     val total = all.count()
     val keep = keeps.distinct().limit(lim + 1).collect().map(_.getString(0)).toSeq
-    if (keep.length > lim) Left(segRead(table, v)) else Right((keep, total))
+    if (keep.length > lim) Left(segRead(table, seg)) else Right((keep, total))
   }
 
   /** METADATA-ONLY aggregates from the stats manifest — the
@@ -3026,7 +3100,7 @@ final class SnapshotTables(
     val perSeg = segs.flatMap { s =>
       val mp = manifestPath(table, s.v)
       if (fs(mp).exists(mp)) Some(cachedParquet(mp).getOrElse(spark.read.parquet(mp.toString)))
-      else if (segRead(table, s.v).forall(_.isEmpty)) None // zero-row segment: nothing to list
+      else if (segRead(table, s).forall(_.isEmpty)) None // zero-row segment: nothing to list
       else throw new IllegalArgumentException(
         s"table $table v${s.v} has no stats manifest — commit with statsCols/sketchCols first")
     }
@@ -3218,7 +3292,7 @@ final class SnapshotTables(
       if (fs(mp).exists(mp))
         Some(cachedParquet(mp).getOrElse(spark.read.parquet(mp.toString))
           .withColumn("__seg", lit(s.v)))
-      else if (segRead(table, s.v).forall(_.isEmpty)) None // empty segment: zero rows
+      else if (segRead(table, s).forall(_.isEmpty)) None // empty segment: zero rows
       else return None // rows with no manifest: nothing provable
     }
     Some(ms)
@@ -3244,7 +3318,7 @@ final class SnapshotTables(
         // metadata answers must decline, not skip the segment
         case SnapshotTables.ManifestUnreadable => return None
       }
-      else if (segRead(table, s.v).forall(_.isEmpty)) None // empty segment
+      else if (segRead(table, s).forall(_.isEmpty)) None // empty segment
       else return None // rows with no manifest: nothing provable
     }
     if (overBudget) Some(None) else Some(Some(collected.flatten))
@@ -3380,26 +3454,26 @@ final class SnapshotTables(
     require(segs.forall(s => s.kind == "full" || s.kind == "append"),
       s"table $table v$v has merge-on-read deltas pending — fastCount needs materialized rows; " +
         "run materialize()/compact() first")
-    segs.map(s => fastCountOfVersion(table, s.v)).sum
+    segs.map(s => fastCountOfVersion(table, s)).sum
   }
 
-  private def fastCountOfVersion(table: String, v: Int): Long = {
+  private def fastCountOfVersion(table: String, seg: VersionMeta): Long = {
     import org.apache.spark.sql.functions._
-    val mp = manifestPath(table, v)
+    val mp = manifestPath(table, seg.v)
     if (!fs(mp).exists(mp)) {
       // an EMPTY segment (no files, or files with zero rows — footer
       // stats of a 0-row file are nothing to manifest) contributes
       // zero; a segment WITH rows but no manifest cannot be counted
       // from metadata
-      require(segRead(table, v).forall(_.isEmpty),
-        s"table $table v$v has no stats manifest — commit with statsCols first")
+      require(segRead(table, seg).forall(_.isEmpty),
+        s"table $table v${seg.v} has no stats manifest — commit with statsCols first")
       return 0L
     }
     val m = cachedParquet(mp).getOrElse(spark.read.parquet(mp.toString))
     val filesTotal = m.select(countDistinct(col("file"))).head().getLong(0)
     val withRows = m.filter(col("rows").isNotNull).select(col("file"), col("rows")).distinct()
     require(withRows.count() == filesTotal,
-      s"manifest of $table v$v lacks row counts for some files — fastCount would be wrong")
+      s"manifest of $table v${seg.v} lacks row counts for some files — fastCount would be wrong")
     val r = withRows.agg(sum(col("rows"))).head()
     if (r.isNullAt(0)) 0L else r.getLong(0)
   }
@@ -3420,8 +3494,8 @@ final class SnapshotTables(
     val segs = chainOf(table, version)
     val df0 =
       if (segs.length == 1) {
-        val dd = dataDirOfMeta(table, segs.head)
-        val df = cachedParquet(dd).getOrElse(spark.read.parquet(dd.toString))
+        val df = segDirOpt(table, segs.head)
+          .getOrElse(spark.read.parquet(dataDirOfMeta(table, segs.head).toString))
         val hidden = df.columns.filter(_.startsWith("__p_"))
         if (hidden.isEmpty) df else df.drop(hidden: _*)
       } else resolveChain(table, segs)
@@ -4045,13 +4119,27 @@ object SnapshotTables {
     * This caches INPUT METADATA of immutable files, never query
     * results: every bench/oracle run re-executes the full read path. */
   private val RelationCacheMax = 256
+  private type CachedRelation = (Long, Long, Option[org.apache.spark.sql.types.StructType],
+    Option[org.apache.spark.sql.DataFrame])
   private[io] val relationCache =
-    new java.util.LinkedHashMap[String, (Long, Long, Option[org.apache.spark.sql.DataFrame])](
-      16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, (Long, Long, Option[org.apache.spark.sql.DataFrame])])
-          : Boolean = size() > RelationCacheMax
+    new java.util.LinkedHashMap[String, CachedRelation](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[String, CachedRelation]): Boolean =
+        size() > RelationCacheMax
     }
+
+  /** `dt` with every field, element and map value nullable — the type a
+    * file-source read gives a column, whatever the writer's frame had
+    * (Spark's own `asNullable` is internal). */
+  private[io] def nullable[T <: org.apache.spark.sql.types.DataType](dt: T): T = {
+    import org.apache.spark.sql.types._
+    (dt match {
+      case s: StructType =>
+        StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+      case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+      case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+      case other => other
+    }).asInstanceOf[T]
+  }
 
   /** One version's commit metadata, `metadata/v<NNNNN>.json`: one
     * compact JSON object, rendered by [[render]] and parsed by
@@ -4075,7 +4163,18 @@ object SnapshotTables {
     *  - `schema_evolved` — false — metadata-only ADD/DROP COLUMN
     *    commits (kind "append").
     *  - `schema` — "" — every commit: the version's Spark schema JSON,
-    *    embedded as a JSON value and held here as its text.
+    *    embedded as a JSON value and held here as its text. A full
+    *    commit records its written frame, `__p_*` layout columns
+    *    included: the read schema of its files
+    *    ([[SnapshotTables.filesSchema]]), so reads open no footer to
+    *    learn it. A delta records the table's schema; a metadata-only
+    *    schema evolution records the declared schema.
+    *  - `files_schema` — false — a delta written with the table's
+    *    layout (append, mor_upsert, an append or mor_revise fold) whose
+    *    columns have the table's types: its `schema` adds the `__p_*`
+    *    layout columns and is the read schema of its files (of `add/`
+    *    for mor_revise). Without it a delta's files are read with
+    *    footer inference.
     * Fields are read at the top level only, so field metadata inside
     * `schema` can never pass for a commit field. `declared.json` (a DDL
     * declaration before the first commit) is the same codec at version
@@ -4083,7 +4182,7 @@ object SnapshotTables {
   private[io] final case class VersionMeta(v: Int, kind: String = "full", base: Int = 0,
       keyCols: Seq[String] = Nil, fold: Boolean = false, txn: Option[String] = None,
       schemaEvolved: Boolean = false, dataDir: Option[String] = None, writer: String = "",
-      partitionCols: Seq[String] = Nil, schema: String = "") {
+      partitionCols: Seq[String] = Nil, schema: String = "", schemaOfFiles: Boolean = false) {
 
     def render: String = {
       val o = Json.mapper.createObjectNode()
@@ -4097,6 +4196,7 @@ object SnapshotTables {
       if (kind != "full") o.put("base", base)
       if (fold) o.put("fold", true)
       if (schemaEvolved) o.put("schema_evolved", true)
+      if (schemaOfFiles) o.put("files_schema", true)
       if (schema.nonEmpty) o.putRawValue("schema", new RawValue(schema))
       Json.mapper.writeValueAsString(o)
     }
@@ -4119,7 +4219,8 @@ object SnapshotTables {
         dataDir = textField(o, "data_dir"),
         writer = textField(o, "writer").getOrElse(""),
         partitionCols = textsField(o, "partition_cols"),
-        schema = Option(o.get("schema")).fold("")(_.toString))
+        schema = Option(o.get("schema")).fold("")(_.toString),
+        schemaOfFiles = boolField(o, "files_schema"))
     }
   }
 

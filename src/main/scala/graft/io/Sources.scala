@@ -20,9 +20,26 @@ object Sources {
     spark.read.schema(schema).json(path)
 
   /** NDJSON with schema inference — parity mode for
-    * `.option('inferSchema','true').json(prefix)` (job_silver.py:143-147). */
-  def ndjsonInfer(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("inferSchema", "true").json(path)
+    * `.option('inferSchema','true').json(prefix)` (job_silver.py:143-147).
+    *
+    * The lines are read first and Spark's own JSON inference
+    * (`TextInputJsonDataSource.inferFromDataset`, the one the file
+    * reader calls) runs over them; the returned frame is the file-source
+    * scan with that schema, the same relation the inferring reader
+    * builds. Handing the path to the inferring reader instead costs a
+    * Spark job before inference even starts: its inference re-opens
+    * every leaf file as a root path of its own, and past
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32) root
+    * paths Spark lists them in a distributed "Listing leaf files" job —
+    * one task per file, on every daily prefix of more than 32 pages.
+    * Reading the lines lists the prefix once, as one root path, with no
+    * job. A prefix with no data files keeps the inferring reader's
+    * error ("unable to infer schema"). */
+  def ndjsonInfer(spark: SparkSession, path: String): DataFrame = {
+    val lines = spark.read.textFile(path)
+    if (lines.inputFiles.isEmpty) spark.read.json(path)
+    else spark.read.schema(spark.read.json(lines).schema).json(path)
+  }
 
   /** NDJSON read with a malformed-line guard (the read-side half of the
     * reference's `is_valid_json` gate): lines that fail try_parse_json
