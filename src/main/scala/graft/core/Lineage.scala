@@ -28,26 +28,4 @@ object Lineage {
         df.checkpoint(eager = true)
       case None => df.localCheckpoint(eager = true)
     }
-
-  /** Shuffle width proportional to the frame's actual bytes (one
-    * reduce partition per ~`targetBytes`), for iterative operators
-    * whose rounds execute eagerly inside the operator: a tiny frame
-    * must not pay the session-wide reduce-task floor on every round
-    * (pure scheduling overhead at fixture scale), while a 100 TB frame
-    * reports petabyte-range stats and takes the cap — the larger of
-    * the session's configured width and the frame's own partition
-    * count, both of which arrive scale-proportional on a real cluster.
-    * Catalyst's `defaultSizeInBytes` sentinel (stats unknown) also
-    * lands on the cap, so unknown size never narrows the shuffle. */
-  def widthFor(df: DataFrame, targetBytes: Long = 64L << 20): Int = {
-    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val byBytes = (bytes / targetBytes) + 1
-    // the conf value may be non-numeric on some platforms ("auto");
-    // fall back to cluster parallelism rather than throwing
-    val configured = scala.util.Try(
-      df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    ).getOrElse(df.sparkSession.sparkContext.defaultParallelism)
-    val cap = math.max(configured, df.rdd.getNumPartitions)
-    byBytes.min(BigInt(cap)).max(BigInt(1)).toInt
-  }
 }

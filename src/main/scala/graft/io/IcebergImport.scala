@@ -68,16 +68,23 @@ object IcebergImport {
   /** JVM-wide footer-class cache (r20 optimization): whether a data
     * file's parquet footer carries field ids, plus its column names.
     * Iceberg data files are write-once (compaction and DML write NEW
-    * files), so a path's verdict never changes; without this, every
-    * post-commit reload of a table re-opened every footer during
-    * planning. Bounded LRU; entries for deleted files age out. */
+    * files); without this, every post-commit reload of a table
+    * re-opened every footer during planning. Keyed on (path, the
+    * manifest's `file_size_in_bytes`): a file rewritten at the same
+    * path — a table dropped and re-created in place — is re-probed,
+    * not given the old file's verdict. Bounded LRU; entries for
+    * deleted files age out. */
   private val FooterClassCacheMax = 8192
   private[io] val footerClassCache =
-    new java.util.LinkedHashMap[String, (Boolean, Seq[String])](64, 0.75f, true) {
+    new java.util.LinkedHashMap[(String, Long), (Boolean, Seq[String])](64, 0.75f, true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[String, (Boolean, Seq[String])]): Boolean =
+          e: java.util.Map.Entry[(String, Long), (Boolean, Seq[String])]): Boolean =
         size() > FooterClassCacheMax
     }
+
+  /** A data file to read: absolute path, file format (PARQUET / ORC /
+    * AVRO) and the manifest's `file_size_in_bytes` (-1 when absent). */
+  private[graft] final case class FileRef(path: String, fmt: String, size: Long)
 
   /** A live data file with its data sequence number. `raw` keeps the
     * manifest's own spelling — position-delete rows address files by
@@ -95,7 +102,9 @@ object IcebergImport {
       lower: Map[Int, Array[Byte]] = Map.empty, upper: Map[Int, Array[Byte]] = Map.empty,
       recordCount: Long = -1L, scope: Seq[ScopeCond] = Nil, fmt: String = "PARQUET",
       partDisplay: Seq[(String, String)] = Nil,
-      firstRowId: Option[Long] = None)
+      firstRowId: Option[Long] = None, size: Long = -1L) {
+    def ref: FileRef = FileRef(path, fmt, size)
+  }
   /** One partition-scope condition of an equality delete: the SOURCE
     * column, the spec transform over it (`identity` or `bucket[N]` —
     * graft computes murmur3 buckets itself via
@@ -155,7 +164,7 @@ object IcebergImport {
         .map(s => spark.createDataFrame(java.util.Collections.emptyList[Row](), s))
         .getOrElse(spark.emptyDataFrame)
     if (plan.deletes.isEmpty)
-      mixedFrame(spark, plan.data.map(d => (d.path, d.fmt)), plan.fieldNames,
+      mixedFrame(spark, plan.data.map(_.ref), plan.fieldNames,
         plan.schema, plan.nameMapping, plan.loc, plan.snap, withMeta = false)
     else applyDeletes(spark, plan)
   }
@@ -169,30 +178,30 @@ object IcebergImport {
     * position (`_metadata.row_index` is parquet-only), so a caller
     * that needs REAL positions sets `posRequired` and ORC refuses
     * loudly instead of mis-addressing rows. */
-  private def mixedFrame(spark: SparkSession, refs: Seq[(String, String)],
+  private def mixedFrame(spark: SparkSession, refs: Seq[FileRef],
       fieldNames: Map[Int, String], schema: Option[StructType],
       nameMapping: Map[Int, Seq[String]], loc: String, snap: Option[Long],
       withMeta: Boolean, posRequired: Boolean = false): DataFrame = {
-    val (parq, rest) = refs.partition(_._2 == "PARQUET")
-    val (avro, orc) = rest.partition(_._2 == "AVRO")
+    val (parq, rest) = refs.partition(_.fmt == "PARQUET")
+    val (avro, orc) = rest.partition(_.fmt == "AVRO")
     def typedSchema(what: String): StructType = schema.getOrElse(
       throw new IllegalArgumentException(
         s"$what data files under $loc need a parseable table schema, and the " +
           "metadata JSON's schema could not be mapped"))
     val frames = Seq.newBuilder[DataFrame]
     if (parq.nonEmpty)
-      frames += baseFrame(spark, parq.map(_._1), fieldNames.values.toSet,
+      frames += baseFrame(spark, parq, fieldNames.values.toSet,
         withMeta = withMeta, tableLoc = loc, snap = snap,
         idSchema = schema, nameMapping = nameMapping)
     if (avro.nonEmpty)
-      frames += IcebergAvroData.read(spark, avro.map(_._1), typedSchema("Avro"),
+      frames += IcebergAvroData.read(spark, avro.map(_.path), typedSchema("Avro"),
         withPos = withMeta)
     if (orc.nonEmpty) {
       require(!posRequired,
         s"rows in ORC data files under $loc cannot be addressed BY POSITION " +
           "(Spark's _metadata.row_index is parquet-only) — position deletes and " +
           "position-delete DML need parquet; compact the table to parquet first")
-      frames += IcebergOrcData.read(spark, orc.map(_._1), typedSchema("ORC"),
+      frames += IcebergOrcData.read(spark, orc.map(_.path), typedSchema("ORC"),
         nameMapping, withFile = withMeta)
     }
     frames.result().reduce(_ unionByName _)
@@ -218,7 +227,7 @@ object IcebergImport {
           s.add(FileCol, StringType).add(PosCol, LongType)))
         .getOrElse(spark.emptyDataFrame)
     if (plan.deletes.isEmpty)
-      mixedFrame(spark, plan.data.map(d => (d.path, d.fmt)), plan.fieldNames,
+      mixedFrame(spark, plan.data.map(_.ref), plan.fieldNames,
         plan.schema, plan.nameMapping, plan.loc, plan.snap, withMeta = true,
         posRequired = true)
     else applyDeletes(spark, plan, keepLineage = true)
@@ -472,6 +481,7 @@ object IcebergImport {
           val raw = df.get("file_path").toString
           val abs = resolve(tableDir, raw).toString
           val rc = fieldOpt(df, "record_count").map(_.asInstanceOf[Long]).getOrElse(-1L)
+          val size = fieldOpt(df, "file_size_in_bytes").map(_.asInstanceOf[Long]).getOrElse(-1L)
           content match {
             case 0 =>
               val explicitFirst = fieldOpt(df, "first_row_id").map(_.asInstanceOf[Long])
@@ -483,7 +493,7 @@ object IcebergImport {
               dataB += DataEntry(abs, raw, seq,
                 kvBytesOf(df, "lower_bounds"), kvBytesOf(df, "upper_bounds"), rc,
                 dataScope(specFields, df, fieldNames), fmt,
-                partitionDisplay(specFields, df), assignedFirst)
+                partitionDisplay(specFields, df), assignedFirst, size)
             case 1 => delB += DeleteEntry(abs, raw, seq, 1, Nil, Nil, rc, dvTriple)
             case 2 =>
               val idsNode = fieldOpt(df, "equality_ids").orNull
@@ -745,11 +755,13 @@ object IcebergImport {
     * [[baseFrame]]); past it a stride sample decides per class. */
   private[graft] val ProbeBudgetConf = "graft.iceberg.footerProbeBudget"
 
-  private def baseFrame(spark: SparkSession, files: Seq[String], schemaCols: Set[String],
+  private def baseFrame(spark: SparkSession, refs: Seq[FileRef], schemaCols: Set[String],
       withMeta: Boolean, tableLoc: String, snap: Option[Long] = None,
       idSchema: Option[StructType] = None,
       nameMapping: Map[Int, Seq[String]] = Map.empty): DataFrame = {
     val hconf = spark.sparkContext.hadoopConfiguration
+    val files = refs.map(_.path)
+    val sizeOf = refs.map(r => r.path -> r.size).toMap
     def tagged(r: org.apache.spark.sql.DataFrameReader) = {
       val r1 = r.option(DirOption, tableLoc)
       snap.fold(r1)(s => r1.option(SnapOption, s.toString))
@@ -770,18 +782,20 @@ object IcebergImport {
     // id-resolution against an id-less footer) instead of silently
     // matching wrong columns — raise the budget to re-plan exactly.
     val idAware = idSchema.exists(_.fields.exists(_.metadata.contains("parquet.field.id")))
-    // footer classes are cached JVM-wide ([[footerClassCache]]): data
-    // files are write-once under the Iceberg contract, so a file's
-    // id-carrying verdict never changes — without the shared cache
-    // every post-commit reload of a table re-opened every footer
-    // (driver-profiled at 3-5 % of the DML lifecycle queries, r20)
+    // footer classes are cached JVM-wide ([[footerClassCache]], keyed
+    // on path and manifest size): data files are write-once under the
+    // Iceberg contract, so a file's id-carrying verdict never changes
+    // — without the shared cache every post-commit reload of a table
+    // re-opened every footer (driver-profiled at 3-5 % of the DML
+    // lifecycle queries, r20)
     // `footers` additionally records WHICH files this planning pass
     // probed (the byId derivation below distinguishes probed files
     // from budget-skipped ones), so the global hit still lands there.
     val footers = new java.util.concurrent.ConcurrentHashMap[String, (Boolean, Seq[String])]()
     def footer(path: String): (Boolean, Seq[String]) = footers.computeIfAbsent(path, { _ =>
+      val key = (path, sizeOf(path))
       val hit = IcebergImport.footerClassCache.synchronized {
-        Option(IcebergImport.footerClassCache.get(path))
+        Option(IcebergImport.footerClassCache.get(key))
       }
       hit.getOrElse {
         val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(path), hconf)
@@ -792,7 +806,7 @@ object IcebergImport {
           (fs0.exists(_.getId != null), fs0.map(_.getName).toSeq)
         } finally r.close()
         IcebergImport.footerClassCache.synchronized {
-          IcebergImport.footerClassCache.put(path, v)
+          IcebergImport.footerClassCache.put(key, v)
         }
         v
       }
@@ -988,7 +1002,7 @@ object IcebergImport {
     // ORC rows cannot take REAL positions: refuse when this plan needs
     // them (position deletes present, or the caller wants lineage for
     // a position-delete write); equality-only MOR over ORC is fine
-    val base = mixedFrame(spark, plan.data.map(d => (d.path, d.fmt)), plan.fieldNames,
+    val base = mixedFrame(spark, plan.data.map(_.ref), plan.fieldNames,
       plan.schema, plan.nameMapping, plan.loc, plan.snap, withMeta = true,
       posRequired = keepLineage || plan.deletes.exists(_.content == 1))
     val userCols = base.columns.filterNot(Set(FileCol, PosCol)).toSeq
@@ -1390,11 +1404,11 @@ object IcebergImport {
   // ------------------------------------------------------------------
 
   /** One snapshot's contribution to an incremental append range: its
-    * id, commit time, operation, and the data files it ADDED as
-    * (path, file format) pairs (empty for `replace` — a compaction
-    * rewrites existing rows, it adds none). */
+    * id, commit time, operation, and the data files it ADDED (empty
+    * for `replace` — a compaction rewrites existing rows, it adds
+    * none). */
   private[graft] final case class AppendStep(snapshotId: Long, timestampMs: Long,
-      operation: String, files: Seq[(String, String)])
+      operation: String, files: Seq[FileRef])
 
   /** Rows APPENDED to the table strictly after `fromSnapshot` and up
     * to (inclusive) `toSnapshot` — Iceberg's incremental append scan,
@@ -1563,7 +1577,7 @@ object IcebergImport {
     * is this snapshot's. An append snapshot adding a DELETE file is a
     * contradiction and refuses. */
   private def addedDataFiles(fs: org.apache.hadoop.fs.FileSystem, tableDir: String,
-      snap: com.fasterxml.jackson.databind.JsonNode, mdPath: Path): Seq[(String, String)] = {
+      snap: com.fasterxml.jackson.databind.JsonNode, mdPath: Path): Seq[FileRef] = {
     val sid = snap.get("snapshot-id").asLong
     // (manifest path, the manifest-list entry's added_snapshot_id)
     val manifests: Seq[(String, Option[Long])] =
@@ -1577,7 +1591,7 @@ object IcebergImport {
         (0 until a.size).map(i => (a.get(i).asText, None))
       } else throw new IllegalArgumentException(
         s"snapshot $sid has no manifest list in $mdPath")
-    val out = Seq.newBuilder[(String, String)]
+    val out = Seq.newBuilder[FileRef]
     manifests.foreach { case (mPathRaw, listAdded) =>
       // a manifest carried forward from an earlier snapshot cannot
       // contain THIS snapshot's adds — entries inheriting a snapshot
@@ -1598,7 +1612,8 @@ object IcebergImport {
             require(fmt == "PARQUET" || fmt == "AVRO" || fmt == "ORC",
               s"data file format $fmt added by snapshot $sid in $mPath is not supported — " +
                 "parquet, orc and avro only")
-            out += ((resolve(tableDir, df.get("file_path").toString).toString, fmt))
+            out += FileRef(resolve(tableDir, df.get("file_path").toString).toString, fmt,
+              fieldOpt(df, "file_size_in_bytes").map(_.asInstanceOf[Long]).getOrElse(-1L))
           }
         }
       }

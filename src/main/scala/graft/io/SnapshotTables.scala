@@ -3521,9 +3521,11 @@ final class SnapshotTables(
     * evolution — such chains read ONLY through the resolved
     * ([[readVersion]]) path, where the declared schema is applied;
     * multi-dir / pruned fast paths fall back until a full rewrite
-    * (materialize/compact/optimize) re-aligns files with the schema. */
+    * (materialize/compact/optimize) re-aligns files with the schema.
+    * A chain meta that cannot be read or parsed throws (naming the
+    * file): an unreadable chain is never taken as un-evolved. */
   private[graft] def chainSchemaEvolved(table: String, v: Int): Boolean =
-    (try chainOf(table, v) catch { case _: Exception => Nil }).exists(_.schemaEvolved)
+    chainOf(table, v).exists(_.schemaEvolved)
 
   private def conformToVersionSchema(df: DataFrame, table: String, v: Int): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}

@@ -473,24 +473,14 @@ object Dedup {
       case l: java.lang.Long => l.longValue
       case other => other.toString.toLong
     }
-    val edges0 = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
+    // rounds run in the caller's session at its configured width: AQE
+    // coalesces each round's tiny shuffles to the bytes they carry, and
+    // a session clone (to narrow the width) would give every call a
+    // fresh task class loader, recompiling the rounds' generated code
+    val edges = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
       .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
       .distinct()
       .localCheckpoint(true)
-    // Right-size the iteration shuffles to the edge relation's actual
-    // bytes (same rationale as kmeansCentroids: the rounds execute
-    // eagerly in here, tiny label frames should not pay a
-    // 32-reduce-task floor per round, and a web-scale edge set takes
-    // the scale-proportional cap inside widthFor). The narrowed width
-    // lives on an ISOLATED session clone — concurrent queries on the
-    // caller's session are never affected, and nothing needs restoring
-    // on exit. The checkpointed edge frame moves in, the final label
-    // frame moves back out, via plan re-binding (same SparkContext).
-    val spark = pairs.sparkSession
-    val iterSession = org.apache.spark.sql.GraftSqlBridge.cloneSession(spark)
-    iterSession.conf.set("spark.sql.shuffle.partitions",
-      graft.core.Lineage.widthFor(edges0).toString)
-    val edges = org.apache.spark.sql.GraftSqlBridge.inSession(edges0, iterSession)
     val obs0 = Observation()
     var labels = graft.core.Lineage.cut(
       edges.select(col("src").as("id")).distinct()
@@ -531,11 +521,9 @@ object Dedup {
       labels = next
       iter += 1
     }
-    // materialize the final frame (its plan still references the
-    // narrow-width iteration rounds), then hand the caller a frame
-    // bound to THEIR session so downstream queries run at their width
-    org.apache.spark.sql.GraftSqlBridge.inSession(
-      graft.core.Lineage.cut(labels, checkpointDir), spark)
+    // materialize the final frame: its plan still references the last
+    // round's doubling join
+    graft.core.Lineage.cut(labels, checkpointDir)
   }
 
   /** Rolling-style positional document fingerprint:

@@ -350,26 +350,15 @@ object Similarity {
   ): DataFrame = {
     // norms ride the checkpointed frame: each Lloyd step scores every
     // vector against k candidate centroids, and without this the row
-    // norm would be recomputed k times per row per iteration
-    val vecs0 = corpus.select(col(idCol).cast("long").as("__vid"),
+    // norm would be recomputed k times per row per iteration. The steps
+    // run in the caller's session at its configured width: AQE
+    // coalesces each step's shuffles to the bytes they carry, and a
+    // session clone (to narrow the width) would give every call a fresh
+    // task class loader, recompiling the steps' generated code
+    val vecs = corpus.select(col(idCol).cast("long").as("__vid"),
       transform(col(vecCol), x => x.cast("double")).as("__v"))
       .withColumn("__nrm", norm(col("__v")))
       .localCheckpoint(true)
-    // Right-size the iteration shuffles to the corpus's actual bytes
-    // instead of the session constant: every Lloyd step executes
-    // eagerly in here, and a tiny corpus paying a 32-reduce-task floor
-    // per stage is pure scheduling overhead (measured 3-5x the whole
-    // audit's compute at fixture scale), while a 100 TB corpus takes
-    // the scale-proportional cap inside widthFor. AQE still coalesces
-    // and skew-splits within that budget. The narrowed width lives on
-    // an ISOLATED session clone, so concurrent queries on the caller's
-    // session keep their configured width; the returned frame is
-    // re-bound to the caller's session below.
-    val spark = corpus.sparkSession
-    val iterSession = org.apache.spark.sql.GraftSqlBridge.cloneSession(spark)
-    iterSession.conf.set("spark.sql.shuffle.partitions",
-      graft.core.Lineage.widthFor(vecs0).toString)
-    val vecs = org.apache.spark.sql.GraftSqlBridge.inSession(vecs0, iterSession)
     var cent = vecs.filter(col("__vid") < k)
       .select(col("__vid").as("cell_id"), col("__v").as("cent_vec"), lit(1L).as("n"))
       .localCheckpoint(true)
@@ -403,10 +392,8 @@ object Similarity {
           graft.core.Lineage.cut(next, checkpointDir)
         else next
     }
-    // the final frame is already checkpointed (i == iters-1 always
-    // cuts); re-bind it to the caller's session so downstream queries
-    // run at the caller's configured shuffle width
-    org.apache.spark.sql.GraftSqlBridge.inSession(cent, spark)
+    // already checkpointed: i == iters-1 always cuts
+    cent
   }
 
   /** Mean within-cluster cosine distance (1 - cos) — the quantity each

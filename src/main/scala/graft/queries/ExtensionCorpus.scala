@@ -1099,8 +1099,8 @@ object ExtensionCorpus {
       // the frame's byte-sized width (tried; reverted) measured 2-3x
       // slower at sf0.1 — the byte heuristic underestimates the audit's
       // row-amplified shuffles (scored query-corpus pairs, per-variant
-      // assignment rows). kmeansCentroids still narrows its own
-      // iteration rounds internally, where the frames are its own.
+      // assignment rows). kmeansCentroids runs its Lloyd steps at the
+      // same width; AQE coalesces their small shuffles.
       val e = fixture(s, dir, "embeddings").localCheckpoint(true)
       val qs = e.filter(col("vec_id") < 10)
       // truth and k-means are INDEPENDENT eager chains (each ends in a

@@ -22,25 +22,6 @@ object GraftSqlBridge {
   def eagerExpression(c: Column): Expression =
     classic.ColumnNodeToExpressionConverter.apply(c.node)
 
-  /** Full-state clone of a session: same SparkContext and shared
-    * state, but an ISOLATED copy of the runtime SQLConf. Iterative
-    * operators that want a narrowed `spark.sql.shuffle.partitions`
-    * for their internal rounds set it on the clone, leaving the
-    * caller's session untouched for concurrent queries (`cloneSession`
-    * is `private[sql]` in Spark 4, hence the bridge). */
-  def cloneSession(s: SparkSession): SparkSession =
-    s.asInstanceOf[classic.SparkSession].cloneSession()
-
-  /** Re-bind a DataFrame's logical plan to another session sharing the
-    * same SparkContext (e.g. move a checkpointed frame into/out of an
-    * isolated-conf clone). The plan is re-analyzed in the target
-    * session; for materialized (checkpointed) frames this is a free
-    * LogicalRDD re-wrap. */
-  def inSession(df: DataFrame, s: SparkSession): DataFrame =
-    classic.Dataset.ofRows(
-      s.asInstanceOf[classic.SparkSession],
-      df.queryExecution.logical)
-
   /** Wrap an analyzed logical plan as a DataFrame (`Dataset.ofRows` is
     * `private[sql]` in Spark 4) — the DML rewrite rule uses this to
     * hand a MERGE source plan back to the DataFrame algebra. */

@@ -338,4 +338,26 @@ class IcebergEvolutionSpec extends SparkSpec {
         Set((1L, 10.5), (2L, 20.5)))
     } finally spark.conf.unset(IcebergImport.ProbeBudgetConf)
   }
+
+  test("a data file rewritten at the same path is re-probed, not given the old footer's class") {
+    val fields =
+      """{"id":1,"name":"id","required":false,"type":"long"},
+        |{"id":2,"name":"amount","required":false,"type":"double"}""".stripMargin
+    // an id-carrying file, read once: its footer class is now cached
+    val file = writeIdParquet(Seq(Row(1L, 10.5)), idAmount)
+    val idSize = java.nio.file.Files.size(java.nio.file.Paths.get(file))
+    assert(IcebergImport.read(spark, writeForeign(Seq(file), fields))
+      .as[(Long, Double)].collect().toSeq == Seq((1L, 10.5)))
+    // the same path re-written with an id-less file, as when a table is
+    // dropped and re-created in place; its manifest records the new size
+    val dir0 = java.nio.file.Files.createTempDirectory("graft-ice-noid").toString
+    Seq((2L, 20.5)).toDF("id", "amount").coalesce(1).write.mode("overwrite").parquet(dir0)
+    val plain = new java.io.File(dir0).listFiles().filter(_.getName.endsWith(".parquet")).head
+    val target = java.nio.file.Paths.get(file)
+    java.nio.file.Files.copy(plain.toPath, target, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    java.nio.file.Files.deleteIfExists(target.resolveSibling(s".${target.getFileName}.crc"))
+    assert(java.nio.file.Files.size(target) != idSize)
+    assert(IcebergImport.read(spark, writeForeign(Seq(file), fields))
+      .as[(Long, Double)].collect().toSeq == Seq((2L, 20.5)))
+  }
 }

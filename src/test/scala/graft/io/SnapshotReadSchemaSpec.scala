@@ -173,4 +173,19 @@ class SnapshotReadSchemaSpec extends SparkSpec {
       Seq(Row("micro", "Ireland", 2L, java.sql.Date.valueOf("2024-01-02")),
         Row("nano", null, 1L, java.sql.Date.valueOf("2024-01-02"))))
   }
+
+  test("a SQL read of a chain whose delta meta is torn fails loudly and names the file") {
+    val (c, st) = newCatalog()
+    st.overwriteTable(Seq((1, "a")).toDF("id", "v"), "t")
+    st.append(Seq((2, "b")).toDF("id", "v"), "t")
+    st.append(Seq((3, "c")).toDF("id", "v"), "t")
+    assert(st.chainKinds("t", 3) == Seq("full", "append", "append"))
+    // the middle delta's meta is torn; the head's still parses
+    val (p, text) = metaOf(st, "t", 2)
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(p.toUri.getPath), text.take(text.length / 2))
+    val e = intercept[Exception](spark.sql(s"SELECT * FROM $c.dw.t").collect())
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(x => String.valueOf(x.getMessage)).toSeq
+    assert(messages.exists(_.contains("v00002.json")), messages.mkString(" <- "))
+  }
 }
