@@ -21,12 +21,18 @@ import java.util
   * consistent snapshot even if a writer commits mid-query — the same
   * isolation [[SnapshotTables.read]] gives the Scala API).
   *
-  * Read path: delegates the scan to Spark's own parquet DSv2 table
-  * over the version's snapshot directory — predicate pushdown, column
+  * Read path: the version's chain scan ([[SnapshotTables.chainScan]],
+  * the one function every snapshot read takes its dirs and schemas
+  * from) gives the schema — the same one [[SnapshotTables.readVersion]]
+  * reads, derived hidden-partition (`__p_*`) columns concealed. A
+  * direct chain (one data dir, or unpartitioned append dirs of one read
+  * schema) delegates the scan to Spark's own parquet DSv2 table over
+  * those dirs with that read schema — predicate pushdown, column
   * pruning, partition-directory pruning and vectorized reading are the
-  * stock parquet path's; derived hidden-partition (`__p_*`) columns
-  * are concealed from the schema exactly like [[SnapshotTables
-  * .readVersion]] conceals them.
+  * stock parquet path's; every other chain is planned as its resolved
+  * read by [[graft.plans.DeltaResolveRule]]. A version with no data
+  * files scans as zero rows; one whose data dir is missing fails the
+  * query.
   *
   * Write path: V1 write fallback — the planner hands this table an
   * ANALYZED DataFrame and the commit goes through
@@ -60,60 +66,27 @@ final class SnapshotTableV2(
 
   private def spark: SparkSession = st.sparkSession
 
-  private def snapDirStr: String = st.snapshotDirString(table, version)
+  /** The pinned version's chain as every read takes it
+    * ([[SnapshotTables.chainScan]]): its data dirs with their read
+    * schemas, its output schema, and whether it is one direct scan. */
+  private lazy val scan: Option[graft.io.SnapshotReads.ChainScan] =
+    Option.when(version > 0)(st.chainScan(table, version))
 
-  /** The parquet directories a DIRECT scan of this version may read,
-    * with their read schema from the version metadata (None: infer it
-    * from the footers): the single snapshot dir of a full version, or
-    * every segment dir of an UNPARTITIONED append-only chain
-    * (multi-root scans of hive-partitioned layouts trip Spark's
-    * conflicting-directory check, and merge-on-read chains need
-    * anti-join resolution — both return None and are planned by
-    * [[graft.plans.DeltaResolveRule]] instead). */
-  private lazy val directScan: Option[(Seq[String], Option[StructType])] =
-    st.appendChainScan(table, version) match {
-      case Some(scan @ (dirs, _)) if dirs.length == 1 => Some(scan)
-      case Some(scan) if st.currentPartitionCols(table).isEmpty &&
-          st.persistedTransforms(table).isEmpty => Some(scan)
-      case _ => None
-    }
-
-  private[graft] def directScanDirs: Option[Seq[String]] = directScan.map(_._1)
+  /** The parquet directories a DIRECT scan of this version reads; None
+    * when the chain is planned by [[graft.plans.DeltaResolveRule]]
+    * instead (see [[SnapshotTables.chainScan]]). */
+  private[graft] def directScanDirs: Option[Seq[String]] =
+    scan.filter(_.direct).map(_.dirs.map(_.path.toString))
 
   private[graft] def pinnedVersionNumber: Int = version
 
-  /** Schema of the pinned snapshot (partition columns included,
-    * `__p_*` derived columns concealed) — the version metadata's read
-    * schema where it records one, so no footer is opened; None when the
-    * version holds no data files. Delta-chained versions discover
-    * through the RESOLVED read (a schema-only analysis). */
-  private lazy val discovered: Option[StructType] =
-    if (version == 0) None
-    else if (st.chainSchemaEvolved(table, version))
-      // metadata-only schema evolution: the version's DECLARED schema
-      // is authoritative (files don't carry added/dropped columns yet)
-      st.versionDataSchema(table, version).filter(_.nonEmpty)
-    else
-      try {
-        val s = directScan match {
-          // single-dir scans resolve through the write-once relation
-          // cache (the common full-version case); multi-dir unions are
-          // rare enough to build fresh
-          case Some((dirs, read)) if dirs.length == 1 =>
-            st.cachedParquet(new org.apache.hadoop.fs.Path(dirs.head), read)
-              .map(_.schema).getOrElse(spark.read.parquet(dirs.head).schema)
-          case Some((dirs, read)) =>
-            val df = read.fold(spark.read)(spark.read.schema(_)).parquet(dirs: _*)
-            if (df.inputFiles.isEmpty) new StructType() else df.schema
-          case None => st.readVersion(table, version).schema
-        }
-        if (s.isEmpty) None else Some(StructType(s.filterNot(_.name.startsWith("__p_"))))
-      } catch { case _: org.apache.spark.sql.AnalysisException => None }
-
   override def name(): String = fullName
 
+  /** Schema of the pinned snapshot (partition columns included,
+    * `__p_*` derived columns concealed): the chain's output schema, or
+    * the DDL declaration before the first commit. */
   override def schema(): StructType =
-    discovered.orElse(st.declaredSchema(table)).getOrElse(new StructType())
+    scan.map(_.schema).orElse(st.declaredSchema(table)).getOrElse(new StructType())
 
   override def partitioning(): Array[Transform] =
     SnapshotCatalog.toV2Transforms(st.currentPartitionCols(table), st.persistedTransforms(table))
@@ -160,10 +133,10 @@ final class SnapshotTableV2(
   }
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    discovered match {
+    scan.filter(_.dirs.nonEmpty) match {
       case None =>
-        // declared-but-empty table (or an empty snapshot): zero rows
-        // with the declared schema, planned as a local scan
+        // declared-but-empty table (or a version with no data files):
+        // zero rows with its schema, planned as a local scan
         val s = schema()
         new ScanBuilder {
           override def build(): Scan = new LocalScan {
@@ -171,20 +144,18 @@ final class SnapshotTableV2(
             override def readSchema(): StructType = s
           }
         }
+      case Some(c) if c.direct =>
+        // the dirs share one read schema: no footer is opened here
+        ParquetTable(fullName, spark, options, c.dirs.map(_.path.toString), Some(c.dirs.head.schema),
+          classOf[ParquetFileFormat]).newScanBuilder(options)
       case Some(_) =>
-        directScan match {
-          case Some((dirs, read)) =>
-            ParquetTable(fullName, spark, options, dirs, read, classOf[ParquetFileFormat])
-              .newScanBuilder(options)
-          case None =>
-            // merge-on-read / partitioned delta chain: the scan is a
-            // resolved plan (anti-joins + unions), substituted at
-            // analysis time by graft.plans.DeltaResolveRule. Reaching
-            // here means the rule is not active.
-            throw new IllegalStateException(
-              s"$fullName v$version is a delta chain — scans resolve through " +
-                "graft.plans.DeltaResolveRule; enable spark.sql.extensions=graft.GraftExtensions")
-        }
+        // merge-on-read, partitioned or mixed-type delta chain: the scan
+        // is a resolved plan (anti-joins + unions), substituted at
+        // analysis time by graft.plans.DeltaResolveRule. Reaching here
+        // means the rule is not active.
+        throw new IllegalStateException(
+          s"$fullName v$version is a delta chain — scans resolve through " +
+            "graft.plans.DeltaResolveRule; enable spark.sql.extensions=graft.GraftExtensions")
     }
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
@@ -331,16 +302,18 @@ private[catalog] final class HistoryMetadataTable(
           val hist = st.versionHistory(table)
           val cur = st.currentVersion(table)
           val retained = hist.map(_._1).toSet
-          hist.map { case (v, millis) =>
+          hist.flatMap { case (v, millis) =>
             val parent = if (v <= 1) null else Integer.valueOf(v - 1)
-            val kind =
-              try st.commitKind(table, v) catch { case _: Exception => "full" }
-            // parent may itself be expired; report it anyway — lineage
-            // is about ORDER, retention about readability
-            InternalRow(millis * 1000L, v,
-              if (parent == null) null else parent.intValue(),
-              v == cur && retained.contains(v),
-              org.apache.spark.unsafe.types.UTF8String.fromString(kind))
+            // a meta expired since the listing drops its row; one that
+            // does not parse fails the scan, naming the file
+            st.listedKind(table, v).map { kind =>
+              // parent may itself be expired; report it anyway — lineage
+              // is about ORDER, retention about readability
+              InternalRow(millis * 1000L, v,
+                if (parent == null) null else parent.intValue(),
+                v == cur && retained.contains(v),
+                org.apache.spark.unsafe.types.UTF8String.fromString(kind))
+            }
           }.toArray
         }
         override def readSchema(): StructType = HistoryMetadataTable.Schema

@@ -2,6 +2,7 @@ package graft.io
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Versioned-snapshot tables on plain parquet — the Iceberg write
   * semantics the reference relies on (overwrite commits a new table
@@ -95,6 +96,8 @@ final class SnapshotTables(
     s"sketchHashes must be in [1, 8], got $sketchHashes")
 
   import SnapshotTables.{RefFile, VersionMeta}
+  import SnapshotReads.{ChainDir, ChainScan}
+  import SnapshotReads.ChainDir.rowsOf
 
   private def fs(p: Path): FileSystem =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -810,34 +813,15 @@ final class SnapshotTables(
   private[graft] def chainKinds(table: String, v: Int): Seq[String] =
     chainOf(table, v).map(_.kind)
 
-  /** A single version's commit kind ("full" / "append" / "mor_*") —
-    * the `.history` metadata table's `kind` column. */
+  /** A single version's commit kind ("full" / "append" / "mor_*"). */
   private[graft] def commitKind(table: String, v: Int): String =
     versionMeta(table, v).kind
 
-  /** The segments of an APPEND-ONLY chain (base + append segments,
-    * ascending), or None when the chain contains a merge-on-read
-    * segment. */
-  private def appendChain(table: String, v: Int): Option[Seq[VersionMeta]] = {
-    val segs = chainOf(table, v)
-    // a schema-evolved chain must read RESOLVED (the declared schema is
-    // applied there; a raw multi-dir scan would expose file schemas)
-    if (segs.forall(s => s.kind == "full" || s.kind == "append") &&
-        !segs.exists(_.schemaEvolved)) Some(segs)
-    else None
-  }
-
-  /** An APPEND-ONLY chain as one scan: its data dirs and their read
-    * schema ([[filesSchema]], when every segment records the same one;
-    * None makes the scan infer from footers), or None when the chain
-    * contains a merge-on-read segment — the SQL scan path reads it as a
-    * plain multi-path parquet scan with full pushdown. */
-  private[graft] def appendChainScan(table: String, v: Int)
-      : Option[(Seq[String], Option[org.apache.spark.sql.types.StructType])] =
-    appendChain(table, v).map { segs =>
-      val schemas = segs.map(filesSchema(_)).distinct
-      (segs.map(s => dataDirOfMeta(table, s).toString), schemas.head.filter(_ => schemas.length == 1))
-    }
+  /** A listed version's commit kind — the `.history` metadata table's
+    * `kind` column; None when its meta is absent (expired since the
+    * listing). A meta that does not parse throws, naming the file. */
+  private[graft] def listedKind(table: String, v: Int): Option[String] =
+    readMeta(table, v).map(_.kind)
 
   /** The read schema of the files in `m`'s data dir (`sub`: one side of
     * a patch), from the meta alone — no footer is opened. Every field is
@@ -960,7 +944,7 @@ final class SnapshotTables(
     }.reverse
     if (run.length < 2) return false
     val baseV = segs(segs.length - run.length - 1).v
-    val folded = run.flatMap(s => segRead(table, s)).reduceOption(_ unionByName _)
+    val folded = run.flatMap(dirsOf(table, _)).map(_.rows).reduceOption(_ unionByName _)
     folded match {
       case None => false // every run segment empty: nothing to write
       case Some(f) =>
@@ -990,7 +974,8 @@ final class SnapshotTables(
     import org.apache.spark.sql.functions.col
     val cur = currentVersion(table)
     require(cur > 0, s"table $table has no committed version")
-    val segs = chainOf(table, cur)
+    val scan = chainScan(table, cur)
+    val segs = scan.segs
     if (segs.length <= 2) return false
     val head = segs.head.v
     val deltas = segs.tail
@@ -999,7 +984,7 @@ final class SnapshotTables(
     // materialize conforms everything and restores the fast paths)
     if (deltas.exists(_.schemaEvolved)) return false
     val kinds = deltas.map(_.kind).toSet
-    val tableSchema = read(table).schema
+    val tableSchema = scan.schema
 
     def unionOpt(a: Option[DataFrame], b: Option[DataFrame]): Option[DataFrame] = (a, b) match {
       case (Some(x), Some(y)) => Some(x.unionByName(y))
@@ -1028,7 +1013,7 @@ final class SnapshotTables(
     }
 
     if (kinds == Set("append")) {
-      val folded = deltas.flatMap(s => segRead(table, s)).reduceOption(_ unionByName _)
+      val folded = deltas.flatMap(scan.rows(_)).reduceOption(_ unionByName _)
       folded match {
         case None => false // every segment empty: nothing to write, chain is already trivial
         case Some(f) =>
@@ -1049,15 +1034,15 @@ final class SnapshotTables(
       var add: Option[DataFrame] = None
       deltas.foreach { s =>
         s.kind match {
-          case "append" => add = unionOpt(add, segRead(table, s))
+          case "append" => add = unionOpt(add, scan.rows(s))
           case "mor_upsert" =>
-            segRead(table, s).foreach { u =>
+            scan.rows(s).foreach { u =>
               val uk = u.select(kcols.map(col): _*).distinct()
               add = unionOpt(add.map(_.join(uk, kcols, "left_anti")), Some(u))
               delKeys = unionOpt(delKeys, Some(uk))
             }
           case "mor_delete" =>
-            segRead(table, s).foreach { d =>
+            scan.rows(s).foreach { d =>
               val dk = d.select(kcols.map(col): _*).distinct()
               add = add.map(_.join(dk, kcols, "left_anti"))
               delKeys = unionOpt(delKeys, Some(dk))
@@ -1065,12 +1050,12 @@ final class SnapshotTables(
           case "mor_revise" =>
             // a PREVIOUS fold's segment re-folding: apply its del keys
             // like a delete, then union its add rows — same invariant
-            segRead(table, s, "del").foreach { d =>
+            scan.rows(s, "del").foreach { d =>
               val dk = d.select(kcols.map(col): _*).distinct()
               add = add.map(_.join(dk, kcols, "left_anti"))
               delKeys = unionOpt(delKeys, Some(dk))
             }
-            add = unionOpt(add, segRead(table, s, "add"))
+            add = unionOpt(add, scan.rows(s, "add"))
           case other => throw new IllegalStateException(s"unexpected kind '$other' in keyed fold")
         }
       }
@@ -1086,8 +1071,8 @@ final class SnapshotTables(
       var d: Option[DataFrame] = None
       var a: Option[DataFrame] = None
       deltas.foreach { s =>
-        val di = segRead(table, s, "del")
-        val ai = segRead(table, s, "add")
+        val di = scan.rows(s, "del")
+        val ai = scan.rows(s, "add")
         // D' = D ⊎ (dᵢ ∖ A);  A' = (A ∖ dᵢ) ⊎ aᵢ
         val dNew = di.map { x =>
           a match {
@@ -1429,23 +1414,74 @@ final class SnapshotTables(
     ()
   }
 
-  /** Guarded raw read of one segment's data dir (or a patch side) with
-    * its [[filesSchema]] (`__p_*` layout columns KEPT — the
-    * hidden-partition readers filter on them): None when the dir is
-    * absent or holds no data files. A zero-file segment is committable
-    * (e.g. a dynamic-partition write of 0 rows emits only _SUCCESS),
-    * and an unguarded `spark.read.parquet` on it throws
-    * AnalysisException (unable to infer schema) — every multi-segment
-    * reader must union only the non-empty segments. */
-  private def segDirOpt(table: String, m: VersionMeta, sub: String = ""): Option[DataFrame] = {
-    val d = dataDirOfMeta(table, m)
-    cachedParquet(if (sub.isEmpty) d else new Path(d, sub), filesSchema(m, sub))
+  /** THE read path: version `v`'s chain as every route from its files
+    * to a DataFrame takes it — [[readVersion]], the SQL scan
+    * ([[graft.catalog.SnapshotTableV2]], and
+    * [[graft.plans.DeltaResolveRule]] for chains it cannot scan
+    * directly), the hidden-partition and manifest-pruned readers, folds
+    * and CDC:
+    *  - `dirs`: the chain's data dirs that hold data files, one per
+    *    (segment, side) ([[dirsOf]]), each read with its [[filesSchema]]
+    *    or else with the schema its footers give — inferred here, once
+    *    per dir state ([[cachedParquet]]), and nowhere else;
+    *  - `schema`: the declared schema of a schema-evolved chain;
+    *    otherwise the row dirs' schemas widened as their union widens
+    *    them, `__p_*` layout columns concealed; when no dir holds data,
+    *    the version meta's schema (else the DDL declaration's);
+    *  - `direct`: an append-only chain whose dirs are one, or
+    *    unpartitioned and of one read schema, reads as ONE multi-dir
+    *    parquet scan. Every other chain resolves ([[resolve]]): a
+    *    multi-root scan of partitioned layouts trips Spark's
+    *    conflicting-directory check, a scan of dirs of other types fails
+    *    on the narrower files, and merge-on-read segments need anti-join
+    *    resolution. */
+  private[graft] def chainScan(table: String, v: Int): ChainScan = {
+    val segs = chainOf(table, v)
+    val dirs = segs.flatMap(dirsOf(table, _))
+    val evolved = segs.exists(_.schemaEvolved)
+    val appendOnly = !evolved && segs.forall(s => s.kind == "full" || s.kind == "append")
+    def concealed(s: StructType) = StructType(s.filterNot(_.name.startsWith("__p_")))
+    val recorded = structOf(segs.last.schema).map(s => SnapshotTables.nullable(concealed(s)))
+    val rowSchemas = dirs.filter(_.holdsRows).map(d => concealed(d.schema))
+    val schema = recorded.filter(_ => evolved)
+      .orElse(Option.when(rowSchemas.nonEmpty)(widened(rowSchemas)))
+      .orElse(recorded)
+      .orElse(declaredSchema(table).map(SnapshotTables.nullable))
+      .getOrElse(new StructType())
+    val direct = appendOnly && (dirs.length <= 1 ||
+      (dirs.map(_.schema).distinct.length == 1 && dirs.forall(_.seg.partitionCols.isEmpty)))
+    ChainScan(segs, dirs, schema, appendOnly, direct)
   }
 
-  /** A parquet reader for files of `m`'s data dir (a manifest-pruned
-    * file list), carrying its [[filesSchema]]. */
-  private def segReader(m: VersionMeta): org.apache.spark.sql.DataFrameReader =
-    filesSchema(m).fold(spark.read)(spark.read.schema(_))
+  /** The dirs of segment `m` that hold data files: its data dir, or
+    * the `del/` and `add/` sides of a patch or fold. A dir with no data
+    * files — a zero-row write that left only `_SUCCESS`, TRUNCATE of a
+    * partitioned table, a schema-evolution commit, an absent side — is
+    * left out, and reads as no rows. A segment whose data dir is
+    * missing throws: a retained version's data never reads as empty. */
+  private[io] def dirsOf(table: String, m: VersionMeta): Seq[ChainDir] = {
+    val d = dataDirOfMeta(table, m)
+    val sides = if (m.kind == "mor_patch" || m.kind == "mor_revise") Seq("del", "add") else Seq("")
+    val found = sides.flatMap { side =>
+      val p = if (side.isEmpty) d else new Path(d, side)
+      cachedParquet(p, filesSchema(m, side)).map(ChainDir(m, side, p, _))
+    }
+    if (found.isEmpty && !fs(d).exists(d))
+      throw new java.io.FileNotFoundException(
+        s"data dir $d of $table v${m.v} is missing — the version cannot be read")
+    found
+  }
+
+  /** Row schemas as a union of frames of those schemas widens them
+    * (by name; types widen, nested struct fields align, missing
+    * columns null-fill) — without building the frames when they agree. */
+  private def widened(schemas: Seq[StructType]): StructType = schemas.distinct match {
+    case Seq(one) => one
+    case many => many.map(emptyFrame).reduce(_.unionByName(_, allowMissingColumns = true)).schema
+  }
+
+  private def emptyFrame(schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
 
   /** One (modTime,len)-guarded resolve of a write-once parquet path
     * (segment data dir or stats manifest file) through the JVM-wide
@@ -1454,11 +1490,9 @@ final class SnapshotTables(
     * `schema` is the read schema when the caller knows it (a segment
     * dir's [[filesSchema]]: no footer is opened), else the footers are
     * inferred; a path is cached in one form, and a call with the other
-    * form replaces it. Package-visible so the catalog face
-    * ([[graft.catalog.SnapshotTableV2]] schema discovery) reuses the
-    * same cached relations. */
-  private[graft] def cachedParquet(d: Path,
-      schema: Option[org.apache.spark.sql.types.StructType] = None): Option[DataFrame] = {
+    * form replaces it. Callers: [[dirsOf]] for data dirs, the manifest
+    * readers for stats manifests. */
+  private[io] def cachedParquet(d: Path, schema: Option[StructType] = None): Option[DataFrame] = {
     val f = fs(d)
     val st =
       try f.getFileStatus(d)
@@ -1477,7 +1511,12 @@ final class SnapshotTables(
             // a given schema skips inference, so a dir with no data files
             // shows only as an empty listing
             if (df.schema.isEmpty || df.inputFiles.isEmpty) None else Some(df)
-          } catch { case _: org.apache.spark.sql.AnalysisException => None }
+          } catch {
+            // footer inference over a dir with no data files; any other
+            // failure (a path gone since the probe, an unreadable footer)
+            // is not "empty" and propagates
+            case e: org.apache.spark.sql.AnalysisException if e.getCondition == "UNABLE_TO_INFER_SCHEMA" => None
+          }
         SnapshotTables.relationCache.synchronized {
           SnapshotTables.relationCache.put(key, (st.getModificationTime, st.getLen, schema, v))
         }
@@ -1485,77 +1524,69 @@ final class SnapshotTables(
     }
   }
 
-  /** Read one chain segment's dir (or subdir) as a frame, None when it
-    * holds no data files (empty delta side) — `__p_*` layout columns
-    * concealed like every read here. */
-  private def segRead(table: String, m: VersionMeta, sub: String = ""): Option[DataFrame] =
-    segDirOpt(table, m, sub).map(df => df.drop(df.columns.filter(_.startsWith("__p_")): _*))
-
-  /** Fold a delta chain into one resolved DataFrame plan — unions and
-    * anti-joins over per-segment parquet scans, fully distributed. */
-  private def resolveChain(table: String, segs: Seq[VersionMeta]): DataFrame = {
+  /** Fold a chain into one resolved DataFrame plan — unions and
+    * anti-joins over per-dir parquet scans, fully distributed. Unions
+    * go by name with missing columns null-filled: chains carrying a
+    * metadata-only schema evolution hold segments with heterogeneous
+    * file schemas (older files lack added columns), which
+    * [[readScan]] then conforms to the declared schema. */
+  private def resolve(scan: ChainScan): DataFrame = {
     import org.apache.spark.sql.functions.col
-    // allowMissingColumns: chains carrying a metadata-only schema
-    // evolution hold segments with heterogeneous file schemas (older
-    // files lack added columns) — missing sides null-fill, exactly the
-    // declared-schema semantics readVersion's conformance then orders.
-    // On non-evolved chains every segment has identical columns
-    // (requireSameColumns), so this is a no-op.
     def union(a: Option[DataFrame], b: Option[DataFrame]): Option[DataFrame] = (a, b) match {
       case (Some(x), Some(y)) => Some(x.unionByName(y, allowMissingColumns = true))
       case (None, y) => y
       case (x, None) => x
     }
-    val out = segs.tail.foldLeft(segRead(table, segs.head)) { (acc, s) =>
+    def withoutKeys(a: DataFrame, keyRows: Option[DataFrame], keyCols: Seq[String]): DataFrame =
+      keyRows.fold(a)(k => a.join(k.select(keyCols.map(col): _*).distinct(), keyCols, "left_anti"))
+    val out = scan.segs.tail.foldLeft(scan.rows(scan.segs.head)) { (acc, s) =>
       s.kind match {
-        case "append" => union(acc, segRead(table, s))
+        case "append" => union(acc, scan.rows(s))
         case "mor_upsert" =>
-          val up = segRead(table, s)
-          (acc, up) match {
-            case (Some(a), Some(u)) =>
-              Some(a.join(u.select(s.keyCols.map(col): _*).distinct(), s.keyCols, "left_anti")
-                .unionByName(u, allowMissingColumns = true))
-            case (None, u) => u
-            case (a, None) => a
-          }
-        case "mor_delete" =>
-          acc.map { a =>
-            segRead(table, s) match {
-              case None => a
-              case Some(del) =>
-                a.join(del.select(s.keyCols.map(col): _*).distinct(), s.keyCols, "left_anti")
-            }
-          }
+          val up = scan.rows(s)
+          union(acc.map(withoutKeys(_, up, s.keyCols)), up)
+        case "mor_delete" => acc.map(withoutKeys(_, scan.rows(s), s.keyCols))
         case "mor_patch" =>
-          val afterDel = acc.map { a =>
-            segRead(table, s, "del") match {
-              case None => a
-              case Some(d) => graft.core.MapSafeSetOps.exceptAll(a, d)
-            }
-          }
-          union(afterDel, segRead(table, s, "add"))
+          val afterDel = acc.map(a => scan.rows(s, "del").fold(a)(graft.core.MapSafeSetOps.exceptAll(a, _)))
+          union(afterDel, scan.rows(s, "add"))
         case "mor_revise" =>
           // minor compaction's folded segment: del/ holds KEY rows to
           // remove from the base, add/ the full replacement+appended
           // rows — (base ⟕̸ keys) ∪ add, the keyed generalization of
           // mor_upsert (add rows need not cover every deleted key)
-          val afterDel = acc.map { a =>
-            segRead(table, s, "del") match {
-              case None => a
-              case Some(d) =>
-                a.join(d.select(s.keyCols.map(col): _*).distinct(), s.keyCols, "left_anti")
-            }
-          }
-          union(afterDel, segRead(table, s, "add"))
+          union(acc.map(withoutKeys(_, scan.rows(s, "del"), s.keyCols)), scan.rows(s, "add"))
         case other =>
-          throw new IllegalStateException(s"unknown commit kind '$other' at $table v${s.v}")
+          throw new IllegalStateException(s"unknown commit kind '$other' at v${s.v}")
       }
     }
-    // a fully-empty chain reads like a plain empty version (same
-    // error/empty behavior as the single-dir path)
-    out.orElse(segDirOpt(table, segs.last))
-      .getOrElse(spark.read.parquet(dataDirOfMeta(table, segs.last).toString))
+    out.getOrElse(emptyFrame(scan.schema))
   }
+
+  /** A chain scan's rows in its output schema: the resolved plan, with
+    * its columns projected onto the declared schema where a schema
+    * evolution made them differ — added columns read NULL, dropped ones
+    * are projected away. */
+  private[io] def readScan(scan: ChainScan): DataFrame = {
+    import org.apache.spark.sql.functions.{col, lit}
+    val df = resolve(scan)
+    if (df.schema == scan.schema) df
+    else df.select(scan.schema.fields.toSeq.map { f =>
+      if (!df.columns.contains(f.name)) lit(null).cast(f.dataType).as(f.name)
+      else if (df.schema(f.name).dataType == f.dataType) col(f.name)
+      else col(f.name).cast(f.dataType).as(f.name)
+    }: _*)
+  }
+
+  /** The given data files of `dir` (a manifest-pruned file list, names
+    * relative to it), read with its read schema. */
+  private[io] def filesOf(dir: ChainDir, files: Seq[String]): DataFrame =
+    spark.read.schema(dir.schema).option("basePath", dir.path.toString)
+      .parquet(files.map(n => new Path(dir.path, n).toString): _*)
+
+  /** A committed version's data files, read with the schema their
+    * footers give (the manifest writer's sketch pass: no partition
+    * columns, which live in dir names, not file data). */
+  private[io] def footerRead(files: Seq[String]): DataFrame = spark.read.parquet(files: _*)
 
   /** HIDDEN PARTITIONING (Iceberg's partition transforms): commit with
     * partition values DERIVED from data columns — days(ts),
@@ -1632,37 +1663,10 @@ final class SnapshotTables(
     * [[readPartitionValues]]. */
   def readPartitionRange(table: String, pt: SnapshotTables.PartitionTransform,
       lo: Any, hi: Any): DataFrame = {
-    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.functions.lit
     require(pt.ordered, s"${pt.name} does not preserve order — use readPartitionValues")
-    val v = currentVersion(table)
     val bounds = spark.range(1).select(pt.exprOf(lit(lo)), pt.exprOf(lit(hi))).head()
-    appendChain(table, v) match {
-      case Some(segs) =>
-        // append-only chain: per-segment scans (each root discovers its
-        // own partition dirs — Spark refuses mixed multi-root layouts),
-        // filtered BEFORE the union so directory pruning applies per
-        // segment, then unioned. Zero-file segments are skipped
-        // (segDirOpt) — an unguarded read of one would fail the whole
-        // table's range scans forever.
-        val perSeg = segs.flatMap { seg =>
-          segDirOpt(table, seg).map { raw =>
-            val filtered =
-              if (raw.columns.contains(pt.name))
-                raw.filter(col(pt.name) >= lit(bounds.get(0)) && col(pt.name) <= lit(bounds.get(1)))
-              else raw.filter(pt.expr >= lit(bounds.get(0)) && pt.expr <= lit(bounds.get(1)))
-            filtered.drop(raw.columns.filter(_.startsWith("__p_")): _*)
-          }
-        }
-        if (perSeg.nonEmpty) perSeg.reduce(_ unionByName _)
-        else emptyFrameOf(table, v)
-      case None =>
-        // merge-on-read chain: directory skipping would resurrect
-        // deleted rows — filter the RESOLVED rows on the re-derived
-        // transform value (same rows, no pruning until materialize)
-        val d = pt.expr
-        readVersion(table, v)
-          .filter(d >= lit(bounds.get(0)) && d <= lit(bounds.get(1)))
-    }
+    partitionScan(table, pt)(c => c >= lit(bounds.get(0)) && c <= lit(bounds.get(1)))
   }
 
   /** Point/IN scan over a hidden-partitioned table: each probe value
@@ -1670,36 +1674,31 @@ final class SnapshotTables(
     * only matching partition directories are read. */
   def readPartitionValues(table: String, pt: SnapshotTables.PartitionTransform,
       values: Seq[Any]): DataFrame = {
-    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.functions.lit
     require(values.nonEmpty, "readPartitionValues needs at least one probe value")
-    val v = currentVersion(table)
     val derived = spark.range(1).select(values.map(pv => pt.exprOf(lit(pv))): _*)
       .head().toSeq.distinct
-    appendChain(table, v) match {
-      case Some(segs) =>
-        val perSeg = segs.flatMap { seg =>
-          segDirOpt(table, seg).map { raw =>
-            val filtered =
-              if (raw.columns.contains(pt.name)) raw.filter(col(pt.name).isin(derived: _*))
-              else raw.filter(pt.expr.isin(derived: _*))
-            filtered.drop(raw.columns.filter(_.startsWith("__p_")): _*)
-          }
-        }
-        if (perSeg.nonEmpty) perSeg.reduce(_ unionByName _)
-        else emptyFrameOf(table, v)
-      case None =>
-        readVersion(table, v).filter(pt.expr.isin(derived: _*))
-    }
+    partitionScan(table, pt)(_.isin(derived: _*))
   }
 
-  /** Zero-row frame with a version's declared data schema — the honest
-    * answer when every chain segment turned out to hold no data files. */
-  private def emptyFrameOf(table: String, v: Int): DataFrame =
-    versionDataSchema(table, v) match {
-      case Some(s) =>
-        spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), s)
-      case None => readVersion(table, v).where(org.apache.spark.sql.functions.lit(false))
-    }
+  /** The current version's rows whose transform value passes `keep`.
+    * An append-only chain reads per dir (each root discovers its own
+    * partition dirs — Spark refuses mixed multi-root layouts), filtered
+    * BEFORE the union so directory pruning applies per dir: on the
+    * derived column where the dir was written under this transform, on
+    * the re-derived value where it was not. A merge-on-read chain
+    * filters its RESOLVED rows — directory skipping would resurrect
+    * deleted rows (same rows, no pruning until materialize). */
+  private def partitionScan(table: String, pt: SnapshotTables.PartitionTransform)(
+      keep: org.apache.spark.sql.Column => org.apache.spark.sql.Column): DataFrame = {
+    val scan = chainScan(table, currentVersion(table))
+    if (!scan.appendOnly) readScan(scan).filter(keep(pt.expr))
+    else if (scan.dirs.isEmpty) readScan(scan)
+    else scan.dirs.map { d =>
+      val derived = d.raw.columns.contains(pt.name)
+      d.copy(raw = d.raw.filter(keep(if (derived) org.apache.spark.sql.functions.col(pt.name) else pt.expr))).rows
+    }.reduce(_ unionByName _)
+  }
 
   /** ROLLBACK: re-commit a retained version's content as the NEW
     * current version (Iceberg's rollback semantics on a forward-only
@@ -1747,7 +1746,7 @@ final class SnapshotTables(
         val to = readVersion(table, toV)
         val segs = (fromV + 1 to toV).map(versionMeta(table, _))
           .filterNot(_.fold)
-          .flatMap(segRead(table, _))
+          .flatMap(dirsOf(table, _)).map(_.rows)
         Some(segs.reduceOption(_.unionByName(_, allowMissingColumns = true))
           .map(u => cdcAligned(u, to, table, fromV, toV))
           .getOrElse(to.where(lit(false)))
@@ -1829,11 +1828,12 @@ final class SnapshotTables(
     // preceding version; a re-based segment (fold without the marker —
     // defensive) must take the generic two-resolution path
     if (m.kind != "full" && m.base != v - 1) return None
+    lazy val own = dirsOf(table, m)
     m.kind match {
       case "append" =>
-        Some(segRead(table, m).map(ins).getOrElse(emptyDiff))
+        Some(rowsOf(own).map(ins).getOrElse(emptyDiff))
       case "mor_patch" =>
-        (segRead(table, m, "del"), segRead(table, m, "add")) match {
+        (rowsOf(own, "del"), rowsOf(own, "add")) match {
           case (None, None) => Some(emptyDiff)
           case (None, Some(a)) => Some(ins(a))
           case (Some(d), None) => Some(del(d))
@@ -1842,14 +1842,14 @@ final class SnapshotTables(
               .unionByName(del(graft.core.MapSafeSetOps.exceptAll(d, aligned(a, d)))))
         }
       case "mor_delete" =>
-        segRead(table, m) match {
+        rowsOf(own) match {
           case None => Some(emptyDiff)
           case Some(k) =>
             val keys = k.select(m.keyCols.map(col): _*).distinct()
             Some(del(readVersion(table, m.base).join(keys, m.keyCols, "left_semi")))
         }
       case "mor_upsert" =>
-        segRead(table, m) match {
+        rowsOf(own) match {
           case None => Some(emptyDiff)
           case Some(u) =>
             val keys = u.select(m.keyCols.map(col): _*).distinct()
@@ -1948,9 +1948,10 @@ final class SnapshotTables(
           .when(col("__new").isNull, "delete")
           .when(!(col("__old") <=> col("__new")), "update"))
       .filter(col("__change").isNotNull)
+    val own = dirsOf(table, m)
     m.kind match {
       case "append" =>
-        Some(segRead(table, m) match {
+        Some(rowsOf(own) match {
           case None =>
             packed(readVersion(table, v).where(lit(false)), "__new")
               .select((keyCols.map(col) :+ nul("__old")) :+ col("__new"): _*)
@@ -1961,8 +1962,8 @@ final class SnapshotTables(
               .withColumn("__change", lit("insert"))
         })
       case "mor_patch" =>
-        val d = segRead(table, m, "del").map(packed(_, "__old"))
-        val a = segRead(table, m, "add").map(packed(_, "__new"))
+        val d = rowsOf(own, "del").map(packed(_, "__old"))
+        val a = rowsOf(own, "add").map(packed(_, "__new"))
         (d, a) match {
           case (None, None) =>
             Some(packed(readVersion(table, v).where(lit(false)), "__new")
@@ -1977,7 +1978,7 @@ final class SnapshotTables(
           case (Some(dd), Some(aa)) => Some(classify(dd.join(aa, keyCols, "full_outer")))
         }
       case "mor_delete" if m.keyCols == keyCols =>
-        Some(segRead(table, m) match {
+        Some(rowsOf(own) match {
           case None =>
             packed(readVersion(table, v).where(lit(false)), "__old")
               .select((keyCols.map(col) :+ col("__old")) :+ nul("__new"): _*)
@@ -1989,7 +1990,7 @@ final class SnapshotTables(
               .withColumn("__change", lit("delete"))
         })
       case "mor_upsert" if m.keyCols == keyCols =>
-        segRead(table, m).map { u =>
+        rowsOf(own).map { u =>
           val keys = u.select(keyCols.map(col): _*).distinct()
           val touched = readVersion(table, m.base).join(keys, keyCols, "left_semi")
           classify(packed(touched, "__old").join(packed(u, "__new"), keyCols, "full_outer"))
@@ -2546,7 +2547,7 @@ final class SnapshotTables(
         val relExpr = variants.foldLeft(col("__file")) { (acc, p) =>
           when(col("__file").startsWith(p), col("__file").substr(lit(p.length + 1), lit(Int.MaxValue))).otherwise(acc)
         }
-        val data = spark.read.parquet(files.toSeq: _*)
+        val data = footerRead(files.toSeq)
         val present = sketchCols.filter(data.columns.contains) // partition cols live in dir names, not file data
         if (present.isEmpty) withSketchSchema(stats)
         else {
@@ -2634,19 +2635,17 @@ final class SnapshotTables(
       require(lo.isInstanceOf[String] == hi.isInstanceOf[String],
         s"bound on '$c' mixes string and numeric endpoints — it would mis-prune silently")
     }
-    val v = currentVersion(table)
-    val segs = chainOf(table, v)
+    val scan = chainScan(table, currentVersion(table))
     // merge-on-read segments rewrite/subtract rows at RESOLUTION time —
     // per-file skipping over the raw segments could resurrect deleted
     // rows; read resolved until materialize()/compact()
-    if (segs.exists(s => (s.kind != "full" && s.kind != "append") || s.schemaEvolved))
-      return readVersion(table, v)
+    if (!scan.appendOnly) return readScan(scan)
     // append-only chain: each segment prunes independently against its
     // OWN manifest (appends keep writing them), results union — file
     // skipping survives O(delta) commits
-    val perSeg = segs.flatMap(s => prunedBoxSegment(table, s, bounds))
-    if (perSeg.isEmpty) readVersion(table, v).where(lit(false))
-    else if (segs.length == 1) perSeg.head
+    val perSeg = scan.segs.flatMap(s => prunedBoxSegment(table, scan, s, bounds))
+    if (perSeg.isEmpty) readScan(scan).where(lit(false))
+    else if (scan.segs.length == 1) perSeg.head
     else perSeg.map(d => d.drop(d.columns.filter(_.startsWith("__p_")): _*)).reduce(_ unionByName _)
   }
 
@@ -2654,15 +2653,16 @@ final class SnapshotTables(
     * whose stats MAY intersect every bound, or the whole segment when
     * it has no usable manifest / the keep-list exceeds the driver
     * budget; None when nothing in the segment can match. */
-  private def prunedBoxSegment(table: String, seg: VersionMeta,
+  private def prunedBoxSegment(table: String, scan: ChainScan, seg: VersionMeta,
       bounds: Seq[(String, Any, Any)]): Option[DataFrame] = {
     import org.apache.spark.sql.functions._
+    val whole = scan.dir(seg).map(_.rows)
     val mp = manifestPath(table, seg.v)
-    if (!fs(mp).exists(mp)) return segRead(table, seg)
+    if (!fs(mp).exists(mp)) return whole
     // the manifest is a single small parquet: re-reading it per branch
     // is cheaper than pinning checkpoint blocks for every pruned read
     val m = cachedParquet(mp).getOrElse(spark.read.parquet(mp.toString))
-    if (m.isEmpty) return segRead(table, seg) // degenerate manifest (older writers): full scan, never empty answers
+    if (m.isEmpty) return whole // degenerate manifest (older writers): full scan, never empty answers
     val all = m.select("file").distinct()
     val keepDf = bounds
       .map { case (statColumn, lo, hi) =>
@@ -2683,12 +2683,9 @@ final class SnapshotTables(
     // than the driver-list budget, stop enumerating and full-scan
     val lim = maxPrunedFileList
     val keep = keepDf.distinct().limit(lim + 1).collect().map(_.getString(0))
-    val base = dataDirOfMeta(table, seg)
     if (keep.isEmpty) None
-    else if (keep.length > lim) segRead(table, seg)
-    else
-      Some(segReader(seg).option("basePath", base.toString)
-        .parquet(keep.map(n => new Path(base, n).toString): _*))
+    else if (keep.length > lim) whole
+    else scan.dir(seg).map(filesOf(_, keep.toSeq))
   }
 
   /** Point-lookup pruned scan: `column IN (values)` answered by the
@@ -2711,13 +2708,11 @@ final class SnapshotTables(
   def readPrunedIn(table: String, statColumn: String, values: Seq[Any]): DataFrame = {
     import org.apache.spark.sql.functions._
     require(values.nonEmpty, "readPrunedIn needs at least one probe value")
-    val v = currentVersion(table)
-    val segs = chainOf(table, v)
+    val scan = chainScan(table, currentVersion(table))
     // same rule as readPrunedBox: merge-on-read chains read resolved
-    if (segs.exists(s => (s.kind != "full" && s.kind != "append") || s.schemaEvolved))
-      return readVersion(table, v)
-    val schema = readVersion(table, v).schema
-    if (!schema.fieldNames.contains(statColumn)) return readVersion(table, v) // unknown column: conservative full scan
+    if (!scan.appendOnly) return readScan(scan)
+    val schema = scan.schema
+    if (!schema.fieldNames.contains(statColumn)) return readScan(scan) // unknown column: conservative full scan
     val dt = schema(statColumn).dataType
     // hash each probe value exactly as the build pass hashed the
     // column (xxhash64 over the column type) — one driver-side job
@@ -2725,9 +2720,9 @@ final class SnapshotTables(
     val hashes: Seq[Long] = spark.range(1)
       .select(values.map(pv => xxhash64(lit(pv).cast(dt))): _*)
       .head().toSeq.map(_.asInstanceOf[Long])
-    val perSeg = segs.flatMap(s => prunedInSegment(table, s, statColumn, values, hashes, dt))
-    if (perSeg.isEmpty) readVersion(table, v).where(lit(false))
-    else if (segs.length == 1) perSeg.head
+    val perSeg = scan.segs.flatMap(s => prunedInSegment(table, scan, s, statColumn, values, hashes, dt))
+    if (perSeg.isEmpty) readScan(scan).where(lit(false))
+    else if (scan.segs.length == 1) perSeg.head
     else perSeg.map(d => d.drop(d.columns.filter(_.startsWith("__p_")): _*)).reduce(_ unionByName _)
   }
 
@@ -2750,14 +2745,15 @@ final class SnapshotTables(
     }.reduce(_ && _)
   }
 
-  private def prunedInSegment(table: String, seg: VersionMeta, statColumn: String, values: Seq[Any],
-      hashes: Seq[Long], dt: org.apache.spark.sql.types.DataType): Option[DataFrame] = {
+  private def prunedInSegment(table: String, scan: ChainScan, seg: VersionMeta, statColumn: String,
+      values: Seq[Any], hashes: Seq[Long], dt: org.apache.spark.sql.types.DataType): Option[DataFrame] = {
     import org.apache.spark.sql.functions._
+    val whole = scan.dir(seg).map(_.rows)
     val mp = manifestPath(table, seg.v)
-    if (!fs(mp).exists(mp)) return segRead(table, seg)
+    if (!fs(mp).exists(mp)) return whole
     val m = cachedParquet(mp).getOrElse(spark.read.parquet(mp.toString))
-    if (!m.columns.contains("sketch")) return segRead(table, seg) // pre-sketch-era manifest: full scan
-    if (m.isEmpty) return segRead(table, seg) // degenerate manifest (older writers): full scan, never empty answers
+    if (!m.columns.contains("sketch")) return whole // pre-sketch-era manifest: full scan
+    if (m.isEmpty) return whole // degenerate manifest (older writers): full scan, never empty answers
     val forCol = m.filter(col("column") === lit(statColumn))
     val all = m.select("file").distinct()
     val survivors = values.zip(hashes).map { case (pv, h) =>
@@ -2775,12 +2771,9 @@ final class SnapshotTables(
     val lim = maxPrunedFileList
     val keep = survivors.union(all.except(forCol.select("file")))
       .distinct().limit(lim + 1).collect().map(_.getString(0))
-    val base = dataDirOfMeta(table, seg)
     if (keep.isEmpty) None
-    else if (keep.length > lim) segRead(table, seg)
-    else
-      Some(segReader(seg).option("basePath", base.toString)
-        .parquet(keep.map(n => new Path(base, n).toString): _*))
+    else if (keep.length > lim) whole
+    else scan.dir(seg).map(filesOf(_, keep.toSeq))
   }
 
   /** File-skipping decision for a SQL scan of version `version` — the
@@ -2807,9 +2800,9 @@ final class SnapshotTables(
       probes: Seq[(String, Seq[(Any, Any)])]): Option[DataFrame] = {
     import org.apache.spark.sql.functions._
     if ((bounds.isEmpty && probes.isEmpty) || ver <= 0) return None
-    val segs = chainOf(table, ver)
-    if (segs.exists(s => (s.kind != "full" && s.kind != "append") || s.schemaEvolved)) return None
-    val schema = readVersion(table, ver).schema
+    val scan = chainScan(table, ver)
+    if (!scan.appendOnly) return None
+    val schema = scan.schema
     // hash every probe value with the build pass's xxhash64-on-column-
     // type, evaluated DRIVER-SIDE (Literal + foldable Cast + XxHash64
     // interpreted eval — planning must not spawn a job per query)
@@ -2830,7 +2823,7 @@ final class SnapshotTables(
         }
     if (bounds.isEmpty && typedProbes.isEmpty) return None
     val contribs: Seq[(VersionMeta, Either[Option[DataFrame], (Seq[String], Long)])] =
-      segs.map(s => s -> scanKeepForSegment(table, s, bounds, typedProbes))
+      scan.segs.map(s => s -> scanKeepForSegment(table, scan, s, bounds, typedProbes))
     val skipped = contribs.exists {
       case (_, Right((keep, total))) => keep.length < total
       case _ => false
@@ -2839,14 +2832,11 @@ final class SnapshotTables(
     val parts = contribs.flatMap {
       case (_, Left(full)) => full
       case (s, Right((keep, _))) if keep.nonEmpty =>
-        val base = dataDirOfMeta(table, s)
-        val df = segReader(s).option("basePath", base.toString)
-          .parquet(keep.map(n => new Path(base, n).toString): _*)
-        Some(df.drop(df.columns.filter(_.startsWith("__p_")).toSeq: _*))
+        scan.dir(s).map(d => d.copy(raw = filesOf(d, keep)).rows)
       case _ => None // segment fully pruned
     }
     Some(
-      if (parts.isEmpty) readVersion(table, ver).where(lit(false))
+      if (parts.isEmpty) readScan(scan).where(lit(false))
       else if (parts.length == 1) parts.head
       else parts.reduce(_ unionByName _))
   }
@@ -3003,24 +2993,25 @@ final class SnapshotTables(
     * scope — absence of stats can only keep, never skip. Small
     * manifests evaluate entirely on the driver (collected once,
     * cached); over-budget ones keep the distributed evaluation. */
-  private def scanKeepForSegment(table: String, seg: VersionMeta,
+  private def scanKeepForSegment(table: String, scan: ChainScan, seg: VersionMeta,
       bounds: Seq[(String, Option[Any], Option[Any])],
       probes: Seq[(String, Seq[(Any, Any, Long)])])
       : Either[Option[DataFrame], (Seq[String], Long)] = {
     import org.apache.spark.sql.functions._
+    val whole = scan.dir(seg).map(_.rows)
     val mp = manifestPath(table, seg.v)
-    if (!fs(mp).exists(mp)) return Left(segRead(table, seg))
+    if (!fs(mp).exists(mp)) return Left(whole)
     collectedManifest(table, seg.v) match {
       case SnapshotTables.ManifestRows(rs) if rs.nonEmpty =>
         return Right(scanKeepInMemory(rs, bounds, probes))
       case SnapshotTables.ManifestRows(_) => // degenerate empty manifest
-        return Left(segRead(table, seg))
+        return Left(whole)
       case SnapshotTables.ManifestUnreadable => // corrupt/IO-failed, verdict cached:
-        return Left(segRead(table, seg)) // full read — never re-consult, never skip
+        return Left(whole) // full read — never re-consult, never skip
       case SnapshotTables.ManifestOverBudget => () // distributed evaluation below
     }
     val m = cachedParquet(mp).getOrElse(spark.read.parquet(mp.toString))
-    if (m.isEmpty) return Left(segRead(table, seg))
+    if (m.isEmpty) return Left(whole)
     val hasSketch = m.columns.contains("sketch")
     val all = m.select("file").distinct()
     val boundKeeps = bounds.map { case (statColumn, lo, hi) =>
@@ -3059,7 +3050,7 @@ final class SnapshotTables(
     val lim = maxPrunedFileList
     val total = all.count()
     val keep = keeps.distinct().limit(lim + 1).collect().map(_.getString(0)).toSeq
-    if (keep.length > lim) Left(segRead(table, seg)) else Right((keep, total))
+    if (keep.length > lim) Left(whole) else Right((keep, total))
   }
 
   /** METADATA-ONLY aggregates from the stats manifest — the
@@ -3100,7 +3091,7 @@ final class SnapshotTables(
     val perSeg = segs.flatMap { s =>
       val mp = manifestPath(table, s.v)
       if (fs(mp).exists(mp)) Some(cachedParquet(mp).getOrElse(spark.read.parquet(mp.toString)))
-      else if (segRead(table, s).forall(_.isEmpty)) None // zero-row segment: nothing to list
+      else if (rowsOf(dirsOf(table, s)).forall(_.isEmpty)) None // zero-row segment: nothing to list
       else throw new IllegalArgumentException(
         s"table $table v${s.v} has no stats manifest — commit with statsCols/sketchCols first")
     }
@@ -3292,7 +3283,7 @@ final class SnapshotTables(
       if (fs(mp).exists(mp))
         Some(cachedParquet(mp).getOrElse(spark.read.parquet(mp.toString))
           .withColumn("__seg", lit(s.v)))
-      else if (segRead(table, s).forall(_.isEmpty)) None // empty segment: zero rows
+      else if (rowsOf(dirsOf(table, s)).forall(_.isEmpty)) None // empty segment: zero rows
       else return None // rows with no manifest: nothing provable
     }
     Some(ms)
@@ -3318,7 +3309,7 @@ final class SnapshotTables(
         // metadata answers must decline, not skip the segment
         case SnapshotTables.ManifestUnreadable => return None
       }
-      else if (segRead(table, s).forall(_.isEmpty)) None // empty segment
+      else if (rowsOf(dirsOf(table, s)).forall(_.isEmpty)) None // empty segment
       else return None // rows with no manifest: nothing provable
     }
     if (overBudget) Some(None) else Some(Some(collected.flatten))
@@ -3465,7 +3456,7 @@ final class SnapshotTables(
       // stats of a 0-row file are nothing to manifest) contributes
       // zero; a segment WITH rows but no manifest cannot be counted
       // from metadata
-      require(segRead(table, seg).forall(_.isEmpty),
+      require(rowsOf(dirsOf(table, seg)).forall(_.isEmpty),
         s"table $table v${seg.v} has no stats manifest — commit with statsCols first")
       return 0L
     }
@@ -3488,57 +3479,25 @@ final class SnapshotTables(
 
   /** Time travel to any retained version. Hidden-partitioning columns
     * (`__p_*`, [[overwriteTableTransformed]]) are concealed — they are
-    * directory layout, not data. */
+    * directory layout, not data. Under a metadata-only schema evolution
+    * the version's DECLARED schema is authoritative over what the files
+    * happen to carry — per version, so prior versions keep their own
+    * schema ([[chainScan]]). */
   def readVersion(table: String, version: Int): DataFrame = {
     require(version > 0, s"table $table has no committed version")
-    val segs = chainOf(table, version)
-    val df0 =
-      if (segs.length == 1) {
-        val df = segDirOpt(table, segs.head)
-          .getOrElse(spark.read.parquet(dataDirOfMeta(table, segs.head).toString))
-        val hidden = df.columns.filter(_.startsWith("__p_"))
-        if (hidden.isEmpty) df else df.drop(hidden: _*)
-      } else resolveChain(table, segs)
-    // metadata-only schema evolution: the version's DECLARED schema is
-    // authoritative over what the files happen to carry — added
-    // columns read NULL, dropped columns are projected away. Per
-    // version, so prior versions keep their own schema.
-    if (segs.exists(_.schemaEvolved)) conformToVersionSchema(df0, table, version) else df0
+    readScan(chainScan(table, version))
   }
 
   /** The data schema a version's commit metadata declares (hidden
     * `__p_*` layout columns stripped); None when the meta is absent or
     * records no schema. */
-  private[graft] def versionDataSchema(table: String, v: Int): Option[org.apache.spark.sql.types.StructType] =
+  private[graft] def versionDataSchema(table: String, v: Int): Option[StructType] =
     readMeta(table, v).flatMap(m => structOf(m.schema))
-      .map(s => org.apache.spark.sql.types.StructType(s.filterNot(_.name.startsWith("__p_"))))
+      .map(s => StructType(s.filterNot(_.name.startsWith("__p_"))))
 
-  private def structOf(schemaJson: String): Option[org.apache.spark.sql.types.StructType] =
+  private def structOf(schemaJson: String): Option[StructType] =
     Option.when(schemaJson.nonEmpty)(org.apache.spark.sql.types.DataType.fromJson(schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType])
-
-  /** Whether any segment of `v`'s chain is a metadata-only schema
-    * evolution — such chains read ONLY through the resolved
-    * ([[readVersion]]) path, where the declared schema is applied;
-    * multi-dir / pruned fast paths fall back until a full rewrite
-    * (materialize/compact/optimize) re-aligns files with the schema.
-    * A chain meta that cannot be read or parsed throws (naming the
-    * file): an unreadable chain is never taken as un-evolved. */
-  private[graft] def chainSchemaEvolved(table: String, v: Int): Boolean =
-    chainOf(table, v).exists(_.schemaEvolved)
-
-  private def conformToVersionSchema(df: DataFrame, table: String, v: Int): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    versionDataSchema(table, v) match {
-      case None => df
-      case Some(want) =>
-        if (want.fieldNames.toSeq == df.columns.toSeq) df
-        else df.select(want.fields.toSeq.map { f =>
-          if (df.columns.contains(f.name)) col(f.name)
-          else lit(null).cast(f.dataType).as(f.name)
-        }: _*)
-    }
-  }
+      .asInstanceOf[StructType])
 
   /** METADATA-ONLY ADD COLUMN (Iceberg's schema evolution, a pure
     * metadata operation by design — the COW alternative rewrites the
@@ -4181,7 +4140,7 @@ object SnapshotTables {
     * `schema` can never pass for a commit field. `declared.json` (a DDL
     * declaration before the first commit) is the same codec at version
     * 0, which renders only `partition_cols` and `schema`. */
-  private[io] final case class VersionMeta(v: Int, kind: String = "full", base: Int = 0,
+  private[graft] final case class VersionMeta(v: Int, kind: String = "full", base: Int = 0,
       keyCols: Seq[String] = Nil, fold: Boolean = false, txn: Option[String] = None,
       schemaEvolved: Boolean = false, dataDir: Option[String] = None, writer: String = "",
       partitionCols: Seq[String] = Nil, schema: String = "", schemaOfFiles: Boolean = false) {
