@@ -926,11 +926,6 @@ final class SnapshotTables(
     folded match {
       case None => false // every run segment empty: nothing to write
       case Some(f) =>
-        val sp = statsColsPath(table); val kp = sketchColsPath(table)
-        val mStats =
-          if (fs(sp).exists(sp)) readSmallFile(sp).split(',').toSeq.filter(_.nonEmpty) else Nil
-        val mSketch =
-          if (fs(kp).exists(kp)) readSmallFile(kp).split(',').toSeq.filter(_.nonEmpty) else Nil
         val (df1, pcols) = withTableLayout(f, table, Nil)
         val (schema, ofFiles) = deltaSchema(read(table).schema, df1)
         commitVersion(table,
@@ -943,7 +938,7 @@ final class SnapshotTables(
           commit = VersionMeta(0, "append", baseV, fold = true, schemaOfFiles = ofFiles),
           expectedNext = Some(cur + 1),
           afterWin = () => (),
-          manifestStats = mStats, manifestSketch = mSketch)
+          manifestStats = statsColsFor(table), manifestSketch = sketchColsFor(table))
         true
     }
   }
@@ -995,13 +990,9 @@ final class SnapshotTables(
       folded match {
         case None => false // every segment empty: nothing to write, chain is already trivial
         case Some(f) =>
-          val sp = statsColsPath(table); val kp = sketchColsPath(table)
-          val mStats =
-            if (fs(sp).exists(sp)) readSmallFile(sp).split(',').toSeq.filter(_.nonEmpty) else Nil
-          val mSketch =
-            if (fs(kp).exists(kp)) readSmallFile(kp).split(',').toSeq.filter(_.nonEmpty) else Nil
           val laid = withTableLayout(f, table, Nil)
-          commitFold("append", Nil, Some(laid._1), tmp => layoutWrite(laid, tmp), mStats, mSketch)
+          commitFold("append", Nil, Some(laid._1), tmp => layoutWrite(laid, tmp),
+            statsColsFor(table), sketchColsFor(table))
           true
       }
     } else if (!kinds.contains("mor_patch")) {
@@ -1334,11 +1325,7 @@ final class SnapshotTables(
     val (schema, ofFiles) = if (withLayout) deltaSchema(tableSchema, df1) else (tableSchema, false)
     val (mStats, mSketch) =
       if (!manifest) (Nil, Nil)
-      else {
-        val sp = statsColsPath(table); val kp = sketchColsPath(table)
-        (if (fs(sp).exists(sp)) readSmallFile(sp).split(',').toSeq.filter(_.nonEmpty) else Nil,
-          if (fs(kp).exists(kp)) readSmallFile(kp).split(',').toSeq.filter(_.nonEmpty) else Nil)
-      }
+      else (statsColsFor(table), sketchColsFor(table))
     commitVersion(
       table,
       stage = tmp => {
@@ -1571,15 +1558,7 @@ final class SnapshotTables(
     // evolution (ADD COLUMN) emits no change rows — empty diff, in the
     // NEW schema, at zero scans. A destructive one (DROP/re-type)
     // falls to the generic path, where [[cdcAligned]] raises loudly.
-    if (m.schemaEvolved) {
-      val additive = (for {
-        fromS <- versionDataSchema(table, m.base)
-        toS <- versionDataSchema(table, v)
-      } yield fromS.fields.forall(f =>
-        toS.fields.exists(g => g.name == f.name && g.dataType == f.dataType)))
-        .getOrElse(false)
-      return if (additive) Some(emptyDiff) else None
-    }
+    if (m.schemaEvolved) return Option.when(additiveEvolution(table, m))(emptyDiff)
     // every per-kind proof below assumes the step's meta base IS the
     // preceding version; a re-based segment (fold without the marker —
     // defensive) must take the generic two-resolution path
@@ -1662,69 +1641,43 @@ final class SnapshotTables(
     import org.apache.spark.sql.functions._
     val m = try versionMeta(table, v) catch { case _: Exception => return None }
     if (m.kind == "full") return None
-    val cols = readVersion(table, v).columns.toSeq
+    val to = readVersion(table, v)
+    val cols = to.columns.toSeq
     if (!keyCols.forall(cols.contains)) return None
-    // fold commits are content-preserving: empty classified diff, zero
-    // scans; any other re-based segment (defensive) → generic path
-    if (m.fold) {
-      val rest = cols.filterNot(keyCols.contains)
-      val structDt = readVersion(table, v).select(struct(rest.map(col): _*)).schema.head.dataType
-      return Some(readVersion(table, v).where(lit(false))
-        .select(keyCols.map(col) :+ lit(null).cast(structDt).as("__old") :+
-          lit(null).cast(structDt).as("__new"): _*)
-        .withColumn("__change", lit("insert")).filter(lit(false)))
-    }
-    // additive evolution step: no rows committed, no change rows
-    // (Delta CDF) — empty classified diff in the new schema; a
-    // destructive step falls to the generic path's loud cdcAligned
-    if (m.schemaEvolved) {
-      val additive = (for {
-        fromS <- versionDataSchema(table, m.base)
-        toS <- versionDataSchema(table, v)
-      } yield fromS.fields.forall(f =>
-        toS.fields.exists(g => g.name == f.name && g.dataType == f.dataType)))
-        .getOrElse(false)
-      if (!additive) return None
-      val rest = cols.filterNot(keyCols.contains)
-      val structDt = readVersion(table, v).select(struct(rest.map(col): _*)).schema.head.dataType
-      return Some(readVersion(table, v).where(lit(false))
-        .select(keyCols.map(col) :+ lit(null).cast(structDt).as("__old") :+
-          lit(null).cast(structDt).as("__new"): _*)
-        .withColumn("__change", lit("insert")).filter(lit(false)))
-    }
-    if (m.base != v - 1) return None
     val rest = cols.filterNot(keyCols.contains)
     def packed(df: DataFrame, as: String) =
       df.select(keyCols.map(col) :+ struct(rest.map(col): _*).as(as): _*)
-    val structDt = readVersion(table, v).select(struct(rest.map(col): _*)).schema.head.dataType
+    val structDt = to.select(struct(rest.map(col): _*)).schema.head.dataType
     def nul(as: String) = lit(null).cast(structDt).as(as)
+    // the classified diff's shape, with no rows
+    def noChange = to.where(lit(false))
+      .select(keyCols.map(col) :+ nul("__old") :+ nul("__new"): _*)
+      .withColumn("__change", lit("insert"))
     def classify(joined: DataFrame) = joined
       .withColumn("__change",
         when(col("__old").isNull, "insert")
           .when(col("__new").isNull, "delete")
           .when(!(col("__old") <=> col("__new")), "update"))
       .filter(col("__change").isNotNull)
+    // fold commits are content-preserving: empty classified diff, zero
+    // scans; any other re-based segment (defensive) → generic path
+    if (m.fold) return Some(noChange)
+    // additive evolution step: no rows committed, no change rows
+    // (Delta CDF) — empty classified diff in the new schema; a
+    // destructive step falls to the generic path's loud cdcAligned
+    if (m.schemaEvolved) return Option.when(additiveEvolution(table, m))(noChange)
+    if (m.base != v - 1) return None
     val own = dirsOf(table, m)
     m.kind match {
       case "append" =>
-        Some(rowsOf(own) match {
-          case None =>
-            packed(readVersion(table, v).where(lit(false)), "__new")
-              .select((keyCols.map(col) :+ nul("__old")) :+ col("__new"): _*)
-              .withColumn("__change", lit("insert")).filter(lit(false))
-          case Some(seg) =>
-            packed(seg, "__new")
-              .select((keyCols.map(col) :+ nul("__old")) :+ col("__new"): _*)
-              .withColumn("__change", lit("insert"))
-        })
+        Some(rowsOf(own).fold(noChange)(seg => packed(seg, "__new")
+          .select((keyCols.map(col) :+ nul("__old")) :+ col("__new"): _*)
+          .withColumn("__change", lit("insert"))))
       case "mor_patch" =>
         val d = rowsOf(own, "del").map(packed(_, "__old"))
         val a = rowsOf(own, "add").map(packed(_, "__new"))
         (d, a) match {
-          case (None, None) =>
-            Some(packed(readVersion(table, v).where(lit(false)), "__new")
-              .select((keyCols.map(col) :+ nul("__old")) :+ col("__new"): _*)
-              .withColumn("__change", lit("insert")).filter(lit(false)))
+          case (None, None) => Some(noChange)
           case (Some(dd), None) =>
             Some(dd.select((keyCols.map(col) :+ col("__old")) :+ nul("__new"): _*)
               .withColumn("__change", lit("delete")))
@@ -1734,29 +1687,31 @@ final class SnapshotTables(
           case (Some(dd), Some(aa)) => Some(classify(dd.join(aa, keyCols, "full_outer")))
         }
       case "mor_delete" if m.keyCols == keyCols =>
-        Some(rowsOf(own) match {
-          case None =>
-            packed(readVersion(table, v).where(lit(false)), "__old")
-              .select((keyCols.map(col) :+ col("__old")) :+ nul("__new"): _*)
-              .withColumn("__change", lit("delete"))
-          case Some(k) =>
-            val keys = k.select(keyCols.map(col): _*).distinct()
-            packed(readVersion(table, m.base).join(keys, keyCols, "left_semi"), "__old")
-              .select((keyCols.map(col) :+ col("__old")) :+ nul("__new"): _*)
-              .withColumn("__change", lit("delete"))
+        Some(rowsOf(own).fold(noChange) { k =>
+          val keys = k.select(keyCols.map(col): _*).distinct()
+          packed(readVersion(table, m.base).join(keys, keyCols, "left_semi"), "__old")
+            .select((keyCols.map(col) :+ col("__old")) :+ nul("__new"): _*)
+            .withColumn("__change", lit("delete"))
         })
       case "mor_upsert" if m.keyCols == keyCols =>
-        rowsOf(own).map { u =>
+        Some(rowsOf(own).fold(noChange) { u =>
           val keys = u.select(keyCols.map(col): _*).distinct()
           val touched = readVersion(table, m.base).join(keys, keyCols, "left_semi")
           classify(packed(touched, "__old").join(packed(u, "__new"), keyCols, "full_outer"))
-        }.orElse(Some(
-          packed(readVersion(table, v).where(lit(false)), "__new")
-            .select((keyCols.map(col) :+ nul("__old")) :+ col("__new"): _*)
-            .withColumn("__change", lit("insert")).filter(lit(false))))
+        })
       case _ => None
     }
   }
+
+  /** Whether schema-evolution step `m` only added columns: every column
+    * of its base keeps its name and type. */
+  private def additiveEvolution(table: String, m: VersionMeta): Boolean =
+    (for {
+      fromS <- versionDataSchema(table, m.base)
+      toS <- versionDataSchema(table, m.v)
+    } yield fromS.fields.forall(f => toS.fields.exists(g => g.name == f.name && g.dataType == f.dataType)))
+      .getOrElse(false)
+
 
   // ------------------------------------------------------------------
   // Branches — the write-audit-publish (WAP) pattern on the snapshot
