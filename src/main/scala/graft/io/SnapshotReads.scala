@@ -179,9 +179,11 @@ private[io] trait SnapshotReads { self: SnapshotTables =>
     sparkSession.read.schema(dir.schema).option("basePath", dir.path.toString)
       .parquet(files.map(n => new Path(dir.path, n).toString): _*)
 
-  /** A committed version's data files, read with the schema their
-    * footers give (the manifest writer's sketch pass: no partition
-    * columns, which live in dir names, not file data). */
+  /** Committed data files read one by one, with the schema their
+    * footers give: no partition columns (they live in dir names, not
+    * file data), and Spark's `_metadata` file columns at hand — the
+    * manifest writer's sketch pass and the Iceberg export's per-file
+    * passes. */
   private[io] def footerRead(files: Seq[String]): DataFrame = sparkSession.read.parquet(files: _*)
 
   /** The read schema of the files in `m`'s data dir (`sub`: one side of

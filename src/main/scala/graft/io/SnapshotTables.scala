@@ -785,10 +785,12 @@ final class SnapshotTables(
   //                  (base ⟕̸ keys) ∪ add. Only [[compactDeltas]]
   //                  commits it; its meta carries `fold:true` so CDC
   //                  knows the commit was content-preserving.
-  // Time travel, diff/CDC, rollback, branches and the change feed all
-  // read through [[readVersion]] and therefore resolve chains
-  // transparently; retention protects every chain ancestor a retained
-  // version still needs.
+  // Reading a chain — its data dirs, their read schemas, the output
+  // schema and the resolution rules above — is io/SnapshotReads.scala
+  // ([[chainScan]]): time travel, diff/CDC, rollback, branches, the
+  // change feed and SQL scans all read through it and therefore
+  // resolve chains transparently; retention protects every chain
+  // ancestor a retained version still needs.
   // ------------------------------------------------------------------
 
   private def versionMeta(table: String, v: Int): VersionMeta =
