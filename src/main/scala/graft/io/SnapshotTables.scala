@@ -3814,7 +3814,7 @@ object SnapshotTables {
     *    embedded as a JSON value and held here as its text. A full
     *    commit records its written frame, `__p_*` layout columns
     *    included: the read schema of its files
-    *    ([[SnapshotTables.filesSchema]]), so reads open no footer to
+    *    (`filesSchema`, [[SnapshotReads]]), so reads open no footer to
     *    learn it. A delta records the table's schema; a metadata-only
     *    schema evolution records the declared schema.
     *  - `files_schema` — false — a delta written with the table's
