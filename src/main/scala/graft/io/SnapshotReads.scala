@@ -20,9 +20,10 @@ private[io] trait SnapshotReads { self: SnapshotTables =>
     *    (segment, side) ([[dirsOf]]), each read with its [[filesSchema]]
     *    or else with the schema its footers give — inferred here, once
     *    per dir state ([[cachedParquet]]), and nowhere else;
-    *  - `schema`: the declared schema of a schema-evolved chain;
-    *    otherwise the row dirs' schemas widened as their union widens
-    *    them, `__p_*` layout columns concealed; when no dir holds data,
+    *  - `schema`: the row dirs' schemas widened as their union widens
+    *    them, `__p_*` layout columns concealed; for a schema-evolved
+    *    chain, the declared names and order, a declared column the files
+    *    hold typed as that union types it; when no dir holds data,
     *    the version meta's schema (else the DDL declaration's);
     *  - `direct`: an append-only chain whose dirs are one, or
     *    unpartitioned and of one read schema, reads as ONE multi-dir
@@ -39,8 +40,14 @@ private[io] trait SnapshotReads { self: SnapshotTables =>
     def concealed(s: StructType) = StructType(s.filterNot(_.name.startsWith("__p_")))
     val recorded = structOf(segs.last.schema).map(s => SnapshotTables.nullable(concealed(s)))
     val rowSchemas = dirs.filter(_.holdsRows).map(d => concealed(d.schema))
+    val rowSchema = Option.when(rowSchemas.nonEmpty)(widened(rowSchemas))
+    // an evolved chain keeps its declared names and order, but a column
+    // the files hold keeps the type their union widens it to: a delta of
+    // wider types than the declaration's is never narrowed back to it
     val schema = recorded.filter(_ => evolved)
-      .orElse(Option.when(rowSchemas.nonEmpty)(widened(rowSchemas)))
+      .map(declared => StructType(declared.map(f =>
+        rowSchema.flatMap(_.find(_.name == f.name)).getOrElse(f))))
+      .orElse(rowSchema)
       .orElse(recorded)
       .orElse(declaredSchema(table).map(SnapshotTables.nullable))
       .getOrElse(new StructType())
@@ -178,13 +185,6 @@ private[io] trait SnapshotReads { self: SnapshotTables =>
   private[io] def filesOf(dir: ChainDir, files: Seq[String]): DataFrame =
     sparkSession.read.schema(dir.schema).option("basePath", dir.path.toString)
       .parquet(files.map(n => new Path(dir.path, n).toString): _*)
-
-  /** Committed data files read one by one, with the schema their
-    * footers give: no partition columns (they live in dir names, not
-    * file data), and Spark's `_metadata` file columns at hand — the
-    * manifest writer's sketch pass and the Iceberg export's per-file
-    * passes. */
-  private[io] def footerRead(files: Seq[String]): DataFrame = sparkSession.read.parquet(files: _*)
 
   /** The read schema of the files in `m`'s data dir (`sub`: one side of
     * a patch), from the meta alone — no footer is opened. Every field is

@@ -112,6 +112,21 @@ class SnapshotReadPathSpec extends SparkSpec {
       Seq("[1]", "[2]", "[3]"))
   }
 
+  test("an evolved chain keeps a wider-typed delta's type: a BIGINT above Int.MaxValue in an INT table") {
+    val (c, st) = newCatalog()
+    st.overwriteTable(Seq((1, "a")).toDF("k", "v"), "w")
+    st.addColumn("w", "note", org.apache.spark.sql.types.StringType)
+    val big = Int.MaxValue.toLong + 7
+    st.append(Seq((big, "b", "n")).toDF("k", "v", "note"), "w")
+    assert(st.chainKinds("w", st.currentVersion("w")) == Seq("full", "append", "append"))
+    for (df <- Seq(st.read("w"), spark.table(s"$c.dw.w"))) {
+      assert(df.columns.toSeq == Seq("k", "v", "note"))
+      assert(df.schema("k").dataType == LongType)
+      assert(sorted(df) == Seq("[1,a,null]", s"[$big,b,n]"))
+    }
+    assert(spark.sql(s"SELECT v FROM $c.dw.w WHERE k > ${Int.MaxValue}").as[String].collect().toSeq == Seq("b"))
+  }
+
   test("a committed version whose data dir is missing fails its reads instead of reading as empty") {
     val (c, st) = newCatalog()
     st.overwriteTable(Seq((1, "a"), (2, "b")).toDF("k", "v"), "t")
