@@ -242,7 +242,7 @@ object IcebergExport {
     // equality columns per the spec.
     allSegs.filter(m => segFiles(m.v).exists(_._5)).foreach { m =>
       val delFiles = segFiles(m.v).filter(_._5).map(_._1)
-      val delDf = st.footerRead(delFiles)
+      val delDf = spark.read.parquet(delFiles: _*)
       val missing = m.keyCols.filterNot(delDf.columns.contains)
       require(missing.isEmpty,
         s"table $table v${m.v} delta files do not carry merge key(s) ${missing.mkString(", ")} " +
@@ -446,19 +446,19 @@ object IcebergExport {
         .flatMap(pm => segFiles.get(pm.v).toSeq.flatten.filter(_._4).map(_._1)).distinct
       if (priorData.isEmpty) None
       else {
-        val dataCols = st.footerRead(Seq(priorData.head)).columns.toSet
+        val dataCols = spark.read.parquet(priorData.head).columns.toSet
         val missing = m.keyCols.filterNot(dataCols.contains)
         require(missing.isEmpty,
           s"table $table v${m.v}: key column(s) ${missing.mkString(", ")} are not in the " +
             "prior data parquet (a Hive layout dropped them) — positions cannot be matched " +
             "for the v3 deletion-vector export; compact() first")
-        val keys = st.footerRead(segFiles(m.v).filter(_._5).map(_._1))
+        val keys = spark.read.parquet(segFiles(m.v).filter(_._5).map(_._1): _*)
           .select(m.keyCols.map(col): _*).distinct()
         // canonicalize _metadata.file_path to the spelling the data
         // manifests use, or one file would split into two DV groups
         val spellRows = priorData.flatMap(p => IcebergImport.spellings(p).toSeq.map(_ -> p))
         val spellDf = spark.createDataFrame(spellRows).toDF("__sp", "__canon")
-        val matched = st.footerRead(priorData)
+        val matched = spark.read.parquet(priorData: _*)
           .select(m.keyCols.map(col) :+ col("_metadata.file_path").as("__f")
             :+ col("_metadata.row_index").as("__p"): _*)
           .join(broadcast(keys), m.keyCols, "left_semi")
@@ -856,7 +856,7 @@ object IcebergExport {
       val dataParts = prefix.flatMap { m =>
         val files = segFiles(m.v).filter(_._4).map(_._1)
         if (files.isEmpty) None
-        else Some(st.footerRead(files)
+        else Some(spark.read.parquet(files: _*)
           .select(userCols.map(col) ++ Seq(
             lit(m.v.toLong).as("__seq"),
             col("_metadata.file_path").as("__file"),
@@ -865,7 +865,7 @@ object IcebergExport {
       val delSegs = (prefix.filter(_.kind == "mor_patch") :+ p).flatMap { q =>
         val files = segFiles(q.v).filter(_._6).map(_._1)
         if (files.isEmpty) None
-        else Some(st.footerRead(files)
+        else Some(spark.read.parquet(files: _*)
           .select(userCols.map(col): _*)
           .withColumn("__dseq", lit(q.v.toLong)))
       }
@@ -881,7 +881,7 @@ object IcebergExport {
         killSegs.foreach { m =>
           val kf = segFiles(m.v).filter(_._5).map(_._1)
           if (kf.nonEmpty) {
-            val keys = st.footerRead(kf).select(m.keyCols.map(col): _*)
+            val keys = spark.read.parquet(kf: _*).select(m.keyCols.map(col): _*)
               .distinct().withColumn(s"__k$ki", lit(m.v.toLong))
             data = data.join(broadcast(keys), m.keyCols, "left")
             ki += 1

@@ -815,15 +815,17 @@ final class SnapshotTables(
   private[graft] def chainKinds(table: String, v: Int): Seq[String] =
     chainOf(table, v).map(_.kind)
 
-  /** A single version's commit kind ("full" / "append" / "mor_*"). */
-  private[graft] def commitKind(table: String, v: Int): String =
-    versionMeta(table, v).kind
-
-  /** A listed version's commit kind — the `.history` metadata table's
-    * `kind` column; None when its meta is absent (expired since the
-    * listing). A meta that does not parse throws, naming the file. */
+  /** A listed version's commit kind ("full" / "append" / "mor_*") — the
+    * `.history` metadata table's `kind` column; None when its meta is
+    * absent (expired since the listing). A meta that does not parse
+    * throws, naming the file. */
   private[graft] def listedKind(table: String, v: Int): Option[String] =
     readMeta(table, v).map(_.kind)
+
+  /** [[listedKind]] of a version that must be retained. */
+  private[graft] def commitKind(table: String, v: Int): String =
+    listedKind(table, v).getOrElse(throw new IllegalArgumentException(
+      s"version $v of $table is not retained (metadata missing)"))
 
   /** Upper bound on a delta chain before a delta commit materializes a
     * full snapshot first (every chain segment is one more scan + union
@@ -2260,7 +2262,7 @@ final class SnapshotTables(
         val relExpr = variants.foldLeft(col("__file")) { (acc, p) =>
           when(col("__file").startsWith(p), col("__file").substr(lit(p.length + 1), lit(Int.MaxValue))).otherwise(acc)
         }
-        val data = footerRead(files.toSeq)
+        val data = spark.read.parquet(files.toSeq: _*)
         val present = sketchCols.filter(data.columns.contains) // partition cols live in dir names, not file data
         if (present.isEmpty) withSketchSchema(stats)
         else {

@@ -6,10 +6,12 @@ A code line is any line that is not blank, not a `//` comment line and
 not inside a `/* ... */` block; a line with code after a block's closing
 `*/` counts.
 
-    python3 tools/loc.py [repo-root] [--top N]
+    python3 tools/loc.py [repo-root]
 """
 import argparse
 import os
+
+TOP = 10  # largest files listed
 
 
 def code_lines(path):
@@ -47,7 +49,6 @@ def tree(root):
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("root", nargs="?", default=os.path.join(os.path.dirname(__file__), ".."))
-    ap.add_argument("--top", type=int, default=10, help="largest files to list")
     args = ap.parse_args()
     root = os.path.normpath(args.root)
     everything = {}
@@ -55,8 +56,8 @@ def main():
         counts = tree(os.path.join(root, part))
         everything.update(counts)
         print(f"{part}: {sum(counts.values()):,} code lines in {len(counts)} files")
-    print(f"largest {args.top}:")
-    for p, c in sorted(everything.items(), key=lambda kv: -kv[1])[: args.top]:
+    print(f"largest {TOP}:")
+    for p, c in sorted(everything.items(), key=lambda kv: -kv[1])[:TOP]:
         print(f"  {c:6,}  {os.path.relpath(p, root)}")
 
 
