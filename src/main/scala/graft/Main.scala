@@ -73,16 +73,14 @@ object Main {
         println(s"""{"pipeline":"brewery","date":"$date","silver_rows":$silverRows,"gold_rows":$goldRows}""")
       } finally spark.stop()
 
-    case "verify" :: sfDir :: outDir :: Nil => Verify.main(Array(sfDir, outDir))
-    case "bench" :: Nil => Bench.main(Array.empty)
+    case "verify" :: sfDir :: outDir :: names => Verify.main((sfDir :: outDir :: names).toArray)
     case _ =>
       System.err.println(
         """usage:
           |  graft.Main pipeline --bronze <dir> --date <yyyy-MM-dd>
           |      [--silver-table t] [--gold-table t] [--partition-overwrite]
           |      [--snapshot-root dir] | --from-spark-conf
-          |  graft.Main verify <sfDir> <outDir>
-          |  graft.Main bench""".stripMargin)
+          |  graft.Main verify <sfDir> <outDir> [query…]""".stripMargin)
       sys.exit(2)
   }
 }

@@ -14,7 +14,7 @@ object RunOne {
     val names = args.drop(1).filterNot(_ == "-explain")
     // GraftSession, not a raw builder: the extensions (SnapshotDmlRule,
     // RangeJoinRewrite, vec_* SQL functions) must be active here exactly
-    // as in Verify/Bench, or extension-dependent queries can't run
+    // as in Verify, or extension-dependent queries can't run
     val spark = graft.core.GraftSession
       .local("graft-run-one", Runtime.getRuntime.availableProcessors)
     spark.sparkContext.setLogLevel("WARN")

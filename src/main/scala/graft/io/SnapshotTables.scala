@@ -822,11 +822,6 @@ final class SnapshotTables(
   private[graft] def listedKind(table: String, v: Int): Option[String] =
     readMeta(table, v).map(_.kind)
 
-  /** [[listedKind]] of a version that must be retained. */
-  private[graft] def commitKind(table: String, v: Int): String =
-    listedKind(table, v).getOrElse(throw new IllegalArgumentException(
-      s"version $v of $table is not retained (metadata missing)"))
-
   /** Upper bound on a delta chain before a delta commit materializes a
     * full snapshot first (every chain segment is one more scan + union
     * or anti-join in each read plan — unbounded chains would trade
@@ -1786,8 +1781,15 @@ final class SnapshotTables(
   def branchBase(table: String, branch: String): Int = {
     val p = refPath(table, branch)
     require(fs(p).exists(p), s"no branch '$branch' on table '$table'")
-    RefFile.parse("base", readSmallFile(p))
+    readRef(p, "base")
   }
+
+  /** A branch ref's or tag's version. A torn or unreadable file throws
+    * an IllegalStateException naming it. */
+  private def readRef(p: Path, field: String): Int =
+    try RefFile.parse(field, readSmallFile(p))
+    catch { case e: Exception =>
+      throw new IllegalStateException(s"unreadable ref file $p: ${e.getMessage}", e) }
 
   // ------------------------------------------------------------------
   // TAGS (X116 — Iceberg's named immutable refs): a tag names ONE
@@ -1822,7 +1824,7 @@ final class SnapshotTables(
   def tagVersion(table: String, tag: String): Int = {
     val p = tagPath(table, tag)
     require(fs(p).exists(p), s"no tag '$tag' on table '$table'")
-    RefFile.parse("version", readSmallFile(p))
+    readRef(p, "version")
   }
 
   /** Live (tag, version) pairs, sorted by name. */
@@ -2006,10 +2008,14 @@ final class SnapshotTables(
   /** Base versions still referenced by live branches — retention must
     * not expire them while an uncommitted branch can still read them.
     * TAGGED versions (X116) are ref-protected the same way — a tag is
-    * a promise the version stays readable until the tag is dropped. */
+    * a promise the version stays readable until the tag is dropped.
+    * Only a branch dropped since the listing is skipped; a ref that
+    * cannot be read throws (see [[readRef]]) rather than expose its
+    * base. */
   private def branchProtectedVersions(table: String): Set[Int] =
     branches(table).flatMap { b =>
-      try Some(branchBase(table, b)) catch { case _: Exception => None }
+      val p = refPath(table, b)
+      if (fs(p).exists(p)) Some(readRef(p, "base")) else None
     }.toSet ++
       tags(table).map(_._2)
 
@@ -3357,8 +3363,13 @@ final class SnapshotTables(
   /** Drop snapshots older than the retention window (keep the current
     * one plus [[retentionFor]] predecessors). */
   private def expire(table: String, current: Int): Unit = {
+    // The commit has already landed: an unreadable ref must neither fail
+    // it (a retry would commit twice) nor expose the version it protects,
+    // so this pass expires nothing — kept conservatively, like an
+    // unreadable meta in the chain walk below.
+    val protectedV =
+      try branchProtectedVersions(table) catch { case _: IllegalStateException => return }
     val keep = retentionFor(table)
-    val protectedV = branchProtectedVersions(table)
     val hist = history(table)
     // Delta-chain protection: every version a RETAINED version's chain
     // still walks through must outlive the window — expiring a chain's
@@ -3765,7 +3776,7 @@ object SnapshotTables {
     * no-data-files verdict (empty dynamic-partition write) so empty
     * segments are probed exactly once per state. Keys carry the owning
     * session's identity — a DataFrame is bound to its session and must
-    * never leak across (tests and Bench run separate sessions).
+    * never leak across (tests and dev mains run separate sessions).
     * This caches INPUT METADATA of immutable files, never query
     * results: every bench/oracle run re-executes the full read path. */
   private val RelationCacheMax = 256

@@ -6,8 +6,8 @@ import java.time.LocalDate
 /** Deterministic brewery-shaped NDJSON generator (FIXTURES.md A.1) at
   * the reference's real dataset scale (~8.9k rows over ~45 files of
   * ≤200 records — datalake_bronze_fetch_raw_data_api_dag.py:25,
-  * meta.total ≈ 8900). Used by Bench to re-measure the reference's
-  * three runtime timer spans (BASELINE.md) on like-shaped input. */
+  * meta.total ≈ 8900): like-shaped bronze input for the schema-
+  * inference specs. */
 object BreweryFixture {
 
   private val types = Seq("micro", "brewpub", "regional", "contract", "planning", null)

@@ -24,7 +24,6 @@ import java.nio.file.{Files, Paths}
   *
   * Usage: Test/runMain graft.ScaleSmoke [replicas] [budgetSec] [outFile]
   * Writes SCALE_r12.json (repo root) by default: per-query seconds,
-  * ratio vs the BENCH_DETAIL.json sf0.1 COLD record when present,
   * failed/skipped lists.
   */
 object ScaleSmoke {
@@ -81,15 +80,6 @@ object ScaleSmoke {
       Files.write(ready, "ok".getBytes(StandardCharsets.UTF_8))
     } else println(s"[scale] reusing $out")
 
-    // committed sf0.1 cold record for scaling ratios
-    val prior: Map[String, Double] =
-      try {
-        val txt = new String(Files.readAllBytes(Paths.get("BENCH_DETAIL.json")), StandardCharsets.UTF_8)
-        val obj = (""""queries":\{([^}]*)\}""").r.findFirstMatchIn(txt).map(_.group(1)).getOrElse("")
-        """"([^"]+)":(-?[0-9.]+)""".r.findAllMatchIn(obj)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      } catch { case _: Throwable => Map.empty }
-
     def loadavg1(): Double =
       try new String(Files.readAllBytes(Paths.get("/proc/loadavg")), StandardCharsets.UTF_8)
         .split(" ")(0).toDouble
@@ -113,20 +103,17 @@ object ScaleSmoke {
             -1.0
           }
         done += q.name -> sec
-        println(f"[scale] ${q.name}%-28s ${sec}%8.2f s" +
-          prior.get(q.name).filter(_ > 0).map(p => f"  (${sec / p}%5.1fx sf0.1 cold)").getOrElse(""))
+        println(f"[scale] ${q.name}%-28s ${sec}%8.2f s")
       }
     }
     val la1 = loadavg1()
     val failed = done.filter(_._2 < 0).map(_._1)
     def r2(v: Double) = math.rint(v * 100) / 100
     val qjson = done.map { case (k, v) => s""""$k":${r2(v)}""" }.mkString("{", ",", "}")
-    val ratios = done.collect { case (k, v) if v >= 0 && prior.get(k).exists(_ > 0) =>
-      s""""$k":${r2(v / prior(k))}""" }.mkString("{", ",", "}")
     val json =
       s"""{"kind":"scale_smoke","sf_equiv":"~sf1.0 (${replicas}x sf0.1 synthetic replicas, dims fixed)",""" +
         s""""base":"$base","replicas":$replicas,"total":${r2(done.map(_._2).filter(_ >= 0).sum)},""" +
-        s""""queries":$qjson,"ratio_vs_sf01_cold":$ratios,""" +
+        s""""queries":$qjson,""" +
         s""""failed":${failed.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
         s""""skipped":${skipped.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
         s""""loadavg":[$la0,$la1],"budget_sec":$budgetSec}"""

@@ -604,6 +604,25 @@ class SnapshotTablesSpec extends SparkSpec {
     intercept[IllegalStateException](t.createBranch("tab", "b1"))
   }
 
+  test("a torn branch ref keeps its base: commits still land, expireSnapshots fails naming the ref") {
+    import java.nio.file.{Files, Paths}
+    val root = Files.createTempDirectory("graft-snap").toString
+    val t = new SnapshotTables(spark, root)
+    t.overwriteTable(Seq((1, "a")).toDF("id", "v"), "tab") // v1, the branch base
+    t.setRetention("tab", Some(1))
+    t.createBranch("tab", "torn")
+    Files.writeString(Paths.get(root, "tab", "metadata", "refs", "torn"), """{"base":""")
+    (2 to 4).foreach { i =>
+      t.overwriteTable(Seq((i, "x")).toDF("id", "v"), "tab")
+      assert(t.currentVersion("tab") == i)
+    }
+    val base = Paths.get(root, "tab", "snapshots", "v00001")
+    assert(Files.isDirectory(base), "an unreadable ref must not release its base")
+    val e = intercept[IllegalStateException](t.expireSnapshots("tab", Long.MaxValue))
+    assert(e.getMessage.contains("refs/torn"), e.getMessage)
+    assert(Files.isDirectory(base))
+  }
+
   test("branch base versions survive retention; published manifest still prunes") {
     import org.apache.spark.sql.functions._
     val t = newTables(retention = 2)
@@ -1052,7 +1071,7 @@ class SnapshotTablesSpec extends SparkSpec {
     // matching 0 rows: the dynamic-partition write emits no part files,
     // only _SUCCESS) — every later read must skip the dir, not throw
     t.append(df.where(lit(false)), "ev")
-    assert(t.commitKind("ev", t.currentVersion("ev")) == "append")
+    assert(t.listedKind("ev", t.currentVersion("ev")) == Some("append"))
     assert(t.read("ev").count() == 200)
     val ranged = t.readPartitionRange("ev", byDay, "2024-01-01 00:00:00", "2024-01-01 23:59:59")
     assert(ranged.count() == 144) // one full day @ 144 rows
