@@ -1,7 +1,7 @@
 package graft.io
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 /** Versioned-snapshot tables on plain parquet — the Iceberg write
@@ -82,16 +82,17 @@ final class SnapshotTables(
     orphanGraceMs: Long = 60000L,
     stagingGraceMs: Long = 3600000L,
     heartbeatMs: Long = 15000L,
-    sketchBits: Int = 1 << 17,
-    sketchHashes: Int = 4,
+    private[io] val sketchBits: Int = 1 << 17,
+    private[io] val sketchHashes: Int = 4,
     // branch instances write direct-layout data into the PARENT
     // table's pool (see the class doc's publish-by-reference design)
     dataPoolRoot: Option[String] = None
 ) extends TableFormat with SnapshotReads {
 
-  // readPrunedIn's codegen'd bloomHit unrolls at most 8 hash positions;
-  // a larger sketchHashes would silently test only the first 8,
-  // degrading the configured false-positive rate with no error.
+  // the membership test reads at most 8 hash positions per value
+  // (SnapshotManifests.bloomHitMem); a larger sketchHashes would silently
+  // test only the first 8, degrading the configured false-positive rate
+  // with no error.
   require(sketchHashes >= 1 && sketchHashes <= 8,
     s"sketchHashes must be in [1, 8], got $sketchHashes")
 
@@ -103,7 +104,7 @@ final class SnapshotTables(
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private def tableDir(table: String) = new Path(root, table)
-  private def metaDir(table: String) = new Path(tableDir(table), "metadata")
+  private[io] def metaDir(table: String) = new Path(tableDir(table), "metadata")
   private def snapDir(table: String, v: Int) =
     new Path(tableDir(table), f"snapshots/v$v%05d")
   private def pointer(table: String) = new Path(metaDir(table), "current")
@@ -793,7 +794,7 @@ final class SnapshotTables(
   // ancestor a retained version still needs.
   // ------------------------------------------------------------------
 
-  private def versionMeta(table: String, v: Int): VersionMeta =
+  private[io] def versionMeta(table: String, v: Int): VersionMeta =
     readMeta(table, v).getOrElse(throw new IllegalArgumentException(
       s"version $v of $table is not retained (metadata missing) — its delta chain cannot be resolved"))
 
@@ -2019,9 +2020,6 @@ final class SnapshotTables(
     }.toSet ++
       tags(table).map(_._2)
 
-  private def manifestPath(table: String, v: Int): Path =
-    new Path(metaDir(table), f"v$v%05d-manifest.parquet")
-
   private def statsColsPath(table: String): Path =
     new Path(metaDir(table), "stats_cols")
 
@@ -2142,16 +2140,28 @@ final class SnapshotTables(
     if (fs(p).exists(p)) SnapshotTables.PartitionTransform.parseSpec(readSmallFile(p)) else Nil
   }
 
+  /** (branch, forked-from main version, branch commits) for every live
+    * branch — the data behind the `<table>.refs` metadata table
+    * (Iceberg's refs relation). Branch count is operator-bounded;
+    * driver-sized by construction. */
+  def branchRefs(table: String): Seq[(String, Int, Int)] =
+    branches(table).map { b =>
+      (b, branchBase(table, b), branchTables(table).currentVersion(b))
+    }
+
+  private[io] def manifestPath(table: String, v: Int): Path =
+    new Path(metaDir(table), f"v$v%05d-manifest.parquet")
+
   /** Build the per-file stats manifest for version `v`: list the data
     * files (recursively — partitioned layouts nest), then read each
-    * file's parquet FOOTER on executors and reduce row-group stats to
-    * one (min, max, nulls, rows) row per (file, column). The work is
-    * O(files) metadata reads, fully distributed, and the result is
-    * written as a manifest parquet without ever collecting stats to
-    * the driver — at a 100k-file table the driver only handles the
-    * file-name list. */
+    * file's parquet FOOTER and reduce row-group stats to one (min, max,
+    * nulls, rows) row per (file, column); sketch columns add one data
+    * pass that builds a Bloom bitmap per (file, column). Footers are
+    * read once and the data pass runs once, inside the manifest write.
+    * At a 100k-file table the driver only handles the file-name list. */
   private def writeManifest(table: String, v: Int, statsCols: Seq[String], sketchCols: Seq[String] = Nil): Unit = {
-    val base = dataDirOf(table, v)
+    val meta = versionMeta(table, v)
+    val base = dataDirOfMeta(table, meta)
     val f = fs(base)
     // listFiles returns fully-qualified URIs (file:/..., hdfs://...);
     // qualify the base the same way or the relativization silently
@@ -2172,22 +2182,21 @@ final class SnapshotTables(
     }
     if (files.isEmpty) return
     val wanted = statsCols.toSet
-    val confSer = new org.apache.spark.SerializableWritable(spark.sparkContext.hadoopConfiguration)
-    val session = spark
+    val session = sparkSession
     import session.implicits._
     // Small-commit fast path (r20 optimization, same budgeted-driver
     // rationale as the round-13 planning fast path): for a handful of
-    // files, two distributed jobs (parallelize + footer reads, then
-    // the manifest write's own scan of the RDD) cost more in
-    // scheduling than the footer reads themselves — profiled at ~35 %
-    // of q111's wall. Under the budget the same per-footer reduction
-    // runs on the driver and the manifest writes from a LocalRelation
-    // (one 1-task job); a 100k-file table still takes the distributed
-    // path, so the driver never handles more than the budget.
-    val driverFooterBudget = spark.conf.getOption("graft.manifest.driverFooterBudget")
+    // files, a distributed footer job costs more in scheduling than the
+    // footer reads themselves — profiled at ~35 % of q111's wall. Under
+    // the budget the same per-footer reduction runs on the driver and
+    // the manifest writes from a LocalRelation; a 100k-file table
+    // still takes the distributed path, so the driver never handles
+    // more than the budget.
+    val driverFooterBudget = session.conf.getOption("graft.manifest.driverFooterBudget")
       .map(_.toInt).getOrElse(64)
+    // (the file's row count, one stats row per footer column wanted)
     def footerRows(abs: String, conf: org.apache.hadoop.conf.Configuration)
-        : Seq[(String, Long, String, Option[Double], Option[Double], Option[String], Option[String], Long)] = {
+        : (Long, Seq[(String, Long, String, Option[Double], Option[Double], Option[String], Option[String], Long)]) = {
         import scala.jdk.CollectionConverters._
         import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
         val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
@@ -2197,7 +2206,7 @@ final class SnapshotTables(
           val blocks = reader.getFooter.getBlocks.asScala.toSeq
           val rows = blocks.map(_.getRowCount).sum
           val rel = abs.stripPrefix(baseStr)
-          blocks
+          rows -> blocks
             .flatMap(_.getColumns.asScala)
             .filter(c => wanted.contains(c.getPath.toDotString))
             .groupBy(_.getPath.toDotString)
@@ -2230,49 +2239,72 @@ final class SnapshotTables(
         } finally reader.close()
       }
     val statCols = Seq("file", "rows", "column", "min_num", "max_num", "min_str", "max_str", "nulls")
-    val stats =
+    val footers =
       if (files.size <= driverFooterBudget) {
         // footer opens are independent metadata reads — do them
         // concurrently (latency ≈ max, not sum), same shape as the
         // IcebergImport footer probe
-        val rows =
+        val conf = session.sparkContext.hadoopConfiguration
+        Left(
           if (files.size > 4) {
             import scala.collection.parallel.CollectionConverters._
             val pc = files.toSeq.par
             pc.tasksupport = new scala.collection.parallel.ExecutionContextTaskSupport(
               scala.concurrent.ExecutionContext.global)
-            pc.flatMap(footerRows(_, spark.sparkContext.hadoopConfiguration)).seq
-          } else files.toSeq.flatMap(footerRows(_, spark.sparkContext.hadoopConfiguration))
-        rows.toDF(statCols: _*)
-      }
-      else
-        spark.sparkContext
+            pc.map(footerRows(_, conf)).seq
+          } else files.toSeq.map(footerRows(_, conf)))
+      } else {
+        // one job reads every footer into cached blocks that the
+        // manifest write then reads back
+        val confSer = new org.apache.spark.SerializableWritable(session.sparkContext.hadoopConfiguration)
+        Right(session.sparkContext
           .parallelize(files.toSeq, math.max(1, math.min(files.size, 64)))
-          .flatMap(abs => footerRows(abs, confSer.value))
-          .toDF(statCols: _*)
-    val manifest =
-      if (sketchCols.isEmpty) withSketchSchema(stats)
-      else {
-        // Membership sketches need one DATA pass over the committed
-        // files (footers don't carry value sets): one distributed scan
-        // computes every sketch column's bitmap per file in a single
-        // grouped aggregation — partial aggregation applies (the OR is
-        // associative/commutative), so each task ships one fixed-size
-        // bitmap per (file, column), never row data.
-        import org.apache.spark.sql.functions._
-        val bloom = udaf(new graft.functions.BloomSketchAggregator(sketchBits, sketchHashes),
-          org.apache.spark.sql.Encoders.scalaLong)
-        // input_file_name() may spell the scheme differently from
-        // makeQualified (file:/ vs file:///): relativize against both
-        val variants = Seq(baseStr, baseStr.replaceFirst("^file:/(?!/)", "file:///")).distinct
-        val relExpr = variants.foldLeft(col("__file")) { (acc, p) =>
-          when(col("__file").startsWith(p), col("__file").substr(lit(p.length + 1), lit(Int.MaxValue))).otherwise(acc)
-        }
-        val data = spark.read.parquet(files.toSeq: _*)
-        val present = sketchCols.filter(data.columns.contains) // partition cols live in dir names, not file data
+          .map(abs => footerRows(abs, confSer.value))
+          .persist())
+      }
+    try {
+      val (stats, hasStats, hasRows) = footers match {
+        case Left(per) =>
+          val rows = per.flatMap(_._2)
+          (rows.toDF(statCols: _*), rows.nonEmpty, per.exists(_._1 > 0))
+        case Right(per) =>
+          val (s, r) = per.map(p => (p._2.nonEmpty, p._1 > 0))
+            .fold((false, false))((a, b) => (a._1 || b._1, a._2 || b._2))
+          (per.flatMap(_._2).toDF(statCols: _*), s, r)
+      }
+      // the files' own columns and types (partition columns live in dir
+      // names, not file data) — the committed schema, so the sketch
+      // pass starts no inference job
+      lazy val dataSchema = org.apache.spark.sql.types.StructType(
+        dirsOf(table, meta).flatMap(_.schema.fields).distinctBy(_.name)
+          .filterNot(c => meta.partitionCols.contains(c.name) || c.name.startsWith("__p_")))
+      val present = sketchCols.filter(c => dataSchema.fieldNames.contains(c))
+      // An all-empty manifest must not exist: statsCols naming only
+      // partition columns (which live in dir names, not footers) would
+      // otherwise write a manifest with ZERO rows, and a pruned read
+      // over it would see no files AT ALL. No manifest = honest "nothing
+      // to prune with". Sketch rows exist iff a sketch column is in the
+      // files and some file holds a row.
+      if (!hasStats && (present.isEmpty || !hasRows)) return
+      val manifest =
         if (present.isEmpty) withSketchSchema(stats)
         else {
-          val grouped = data
+          // Membership sketches need one DATA pass over the committed
+          // files (footers don't carry value sets): one distributed scan
+          // computes every sketch column's bitmap per file in a single
+          // grouped aggregation — partial aggregation applies (the OR is
+          // associative/commutative), so each task ships one fixed-size
+          // bitmap per (file, column), never row data.
+          import org.apache.spark.sql.functions._
+          val bloom = udaf(new graft.functions.BloomSketchAggregator(sketchBits, sketchHashes),
+            org.apache.spark.sql.Encoders.scalaLong)
+          // input_file_name() may spell the scheme differently from
+          // makeQualified (file:/ vs file:///): relativize against both
+          val variants = Seq(baseStr, baseStr.replaceFirst("^file:/(?!/)", "file:///")).distinct
+          val relExpr = variants.foldLeft(col("__file")) { (acc, p) =>
+            when(col("__file").startsWith(p), col("__file").substr(lit(p.length + 1), lit(Int.MaxValue))).otherwise(acc)
+          }
+          val grouped = session.read.schema(dataSchema).parquet(files.toSeq: _*)
             .select(input_file_name().as("__file") +: present.map(c => xxhash64(col(c)).as(s"__h_$c")): _*)
             .groupBy(relExpr.as("file"))
             .agg(bloom(col(s"__h_${present.head}")).as(s"__s_${present.head}"),
@@ -2287,15 +2319,8 @@ final class SnapshotTables(
           withSketchSchema(stats).drop("sketch", "sketch_bits", "sketch_hashes")
             .join(sketches, Seq("file", "column"), "full_outer")
         }
-      }
-    // An all-empty manifest must not exist: statsCols naming only
-    // partition columns (which live in dir names, not footers) would
-    // otherwise write a manifest with ZERO rows, and a pruned read
-    // over it would see no files AT ALL — returning empty results
-    // instead of falling back to the full scan. No manifest = honest
-    // "nothing to prune with".
-    if (manifest.isEmpty) return
-    manifest.coalesce(1).write.mode(SaveMode.Overwrite).parquet(manifestPath(table, v).toString)
+      manifest.coalesce(1).write.mode(SaveMode.Overwrite).parquet(manifestPath(table, v).toString)
+    } finally footers.foreach(_.unpersist(blocking = false))
   }
 
   /** Align a stats-only frame to the full manifest schema (null sketch
@@ -2316,12 +2341,13 @@ final class SnapshotTables(
     * driver array + per-path scan entries costs more than it saves
     * (path-list planning is itself O(files)), and the driver list is
     * the only non-metadata-sized allocation in the read path. Past the
-    * limit the readers fall back to the full snapshot scan, which is
-    * never wrong: manifest pruning is a file-SKIPPING layer and the
-    * caller always still applies its row-level predicate. Tunable per
-    * session (specs set it low to exercise the fallback). */
+    * limit the segment reads whole, which is never wrong: manifest
+    * pruning is a file-SKIPPING layer and the caller always still
+    * applies its row-level predicate. Every pruned read applies it, the
+    * SQL scan included. Tunable per session (specs set it low to
+    * exercise the fallback). */
   private def maxPrunedFileList: Int =
-    spark.conf.getOption("graft.manifest.maxFileList") match {
+    sparkSession.conf.getOption("graft.manifest.maxFileList") match {
       case None => 10000
       case Some(raw) => raw.trim.toIntOption match {
         case Some(n) if n > 0 => n
@@ -2329,6 +2355,128 @@ final class SnapshotTables(
           s"graft.manifest.maxFileList must be a positive int, got '$raw'")
       }
     }
+
+  /** Driver-row budget for the planning fast path: a segment manifest
+    * at most this many rows is collected once (then LRU-cached — see
+    * [[SnapshotTables.manifestCache]]) and every pruning / metadata-
+    * aggregate decision on it is pure in-memory work; a bigger
+    * manifest is evaluated by the same functions in one Spark job (at
+    * that scale the scan being saved dwarfs the planning job). */
+  private def manifestDriverRows: Int =
+    sparkSession.conf.getOption("graft.scan.manifestDriverRows") match {
+      case None => 65536
+      case Some(raw) => raw.trim.toIntOption match {
+        case Some(n) if n >= 0 => n
+        case _ => throw new IllegalArgumentException(
+          s"graft.scan.manifestDriverRows must be a non-negative int, got '$raw'")
+      }
+    }
+
+  /** The manifest of segment version `v` as read: raw, with the columns
+    * its writer gave it. */
+  private def manifestParquet(table: String, v: Int): DataFrame = {
+    val mp = manifestPath(table, v)
+    cachedParquet(mp).getOrElse(sparkSession.read.parquet(mp.toString))
+  }
+
+  /** The manifest of segment version `v` as typed rows — a lazy read;
+    * casts normalize the stored types, and columns an older writer did
+    * not write read as absent. */
+  private def manifestFrame(table: String, v: Int): Dataset[SnapshotTables.MRow] = {
+    import org.apache.spark.sql.functions.{coalesce, col, lit}
+    val m = manifestParquet(table, v)
+    val has = m.columns.toSet
+    def c(name: String, t: String) = (if (has(name)) col(name) else lit(null)).cast(t)
+    m.select(col("file").cast("string").as("file"), col("column").cast("string").as("column"),
+        c("rows", "long").as("rows"), c("nulls", "long").as("nulls"),
+        c("min_num", "double").as("minNum"), c("max_num", "double").as("maxNum"),
+        c("min_str", "string").as("minStr"), c("max_str", "string").as("maxStr"),
+        c("sketch", "array<bigint>").as("sketch"),
+        coalesce(c("sketch_bits", "long"), lit(0L)).as("sketchBits"),
+        coalesce(c("sketch_hashes", "int"), lit(0)).as("sketchHashes"))
+      .as[SnapshotTables.MRow](Encoders.product[SnapshotTables.MRow])
+  }
+
+  /** THE manifest loader: segment version `v`'s manifest as a
+    * [[SnapshotTables.ManifestVerdict]] — missing (none, or one with no
+    * rows: nothing to prune or count with), unreadable, its rows when
+    * within [[manifestDriverRows]], or over budget. A verdict is
+    * collected once and LRU-cached per manifest state. */
+  private[io] def manifestOf(table: String, v: Int): SnapshotTables.ManifestVerdict = {
+    val mp = manifestPath(table, v)
+    val st =
+      try fs(mp).getFileStatus(mp)
+      catch { case _: java.io.FileNotFoundException => null }
+    if (st == null) return SnapshotTables.ManifestMissing
+    // the dir's mtime is part of the key: a manifest read while its
+    // write was still landing gets a fresh verdict once it has landed
+    val key = s"${fs(mp).makeQualified(mp)}@${st.getModificationTime}"
+    SnapshotTables.manifestCache.synchronized(Option(SnapshotTables.manifestCache.get(key))).getOrElse {
+      val lim = manifestDriverRows
+      val res =
+        try {
+          val taken = manifestFrame(table, v).limit(lim + 1).collect()
+          if (taken.isEmpty) SnapshotTables.ManifestMissing
+          else if (taken.length > lim) SnapshotTables.ManifestOverBudget
+          else SnapshotTables.ManifestRows(taken.toSeq)
+        } catch { case _: Exception => SnapshotTables.ManifestUnreadable } // read whole or declined by every caller: a plain scan's answer
+      SnapshotTables.manifestCache.synchronized(SnapshotTables.manifestCache.put(key, res))
+      res
+    }
+  }
+
+  /** Whether segment `s` holds no rows — no data files, or only empty
+    * ones (a zero-row file has no footer stats to manifest). */
+  private def segmentEmpty(table: String, s: VersionMeta): Boolean =
+    rowsOf(dirsOf(table, s)).forall(_.isEmpty)
+
+  /** xxhash64 of a probe value as the sketch pass hashed the column:
+    * the value cast to the files' type, evaluated on the driver
+    * (planning starts no job). None — no membership test — when the
+    * value does not cast to that type. */
+  private def probeHash(ext: Any, dt: org.apache.spark.sql.types.DataType): Option[Long] = {
+    import org.apache.spark.sql.catalyst.expressions.{Cast, XxHash64}
+    val le = org.apache.spark.sql.GraftSqlBridge.eagerExpression(org.apache.spark.sql.functions.lit(ext))
+    val casted =
+      if (le.dataType == dt) le
+      else Cast(le, dt, Some(sparkSession.sessionState.conf.sessionLocalTimeZone))
+    scala.util.Try(new XxHash64(Seq(casted), 42L).eval(null).asInstanceOf[Long]).toOption
+  }
+
+  /** Segment `seg`'s kept files under `bounds` and `probes` (IN-lists
+    * of (external lit()-compatible value, physical value) pairs):
+    * Some((kept names, manifest file count)), or None when the segment
+    * reads whole — no usable manifest, or more kept files than
+    * [[maxPrunedFileList]]. Probe values hash under the segment's own
+    * column type, the type its sketches were built over. */
+  private def segmentKeep(table: String, scan: ChainScan, seg: VersionMeta,
+      bounds: Seq[SnapshotManifests.Bound],
+      probes: Seq[(String, Seq[(Any, Any)])]): Option[(Seq[String], Long)] = {
+    lazy val hashed: Seq[SnapshotManifests.Probe] = probes.map { case (c, vs) =>
+      val dt = scan.dir(seg).flatMap(_.schema.find(_.name == c)).getOrElse(scan.schema(c)).dataType
+      c -> vs.map { case (ext, phys) => (phys, probeHash(ext, dt)) }
+    }
+    val lim = maxPrunedFileList
+    val kept = manifestOf(table, seg.v) match {
+      case SnapshotTables.ManifestRows(rs) => SnapshotManifests.keptFiles(rs, bounds, hashed)
+      case SnapshotTables.ManifestOverBudget =>
+        SnapshotManifests.keptFilesJob(manifestFrame(table, seg.v), bounds, hashed, lim)
+      case _ => return None
+    }
+    Option.when(kept._1.length <= lim)(kept)
+  }
+
+  /** An append-only chain's rows, each segment whole (None) or cut to
+    * its kept files. */
+  private def prunedRead(scan: ChainScan, kept: Seq[(VersionMeta, Option[(Seq[String], Long)])]): DataFrame = {
+    val parts = kept.flatMap {
+      case (s, None) => scan.dir(s).map(_.rows)
+      case (s, Some((files, _))) =>
+        if (files.isEmpty) None else scan.dir(s).map(d => d.copy(raw = filesOf(d, files)).rows)
+    }
+    if (parts.isEmpty) readScan(scan).where(org.apache.spark.sql.functions.lit(false))
+    else parts.reduce(_ unionByName _)
+  }
 
   /** Scan of the current version restricted to the files whose
     * manifest stats MAY contain `column` ∈ [lo, hi] (numeric bounds
@@ -2350,7 +2498,6 @@ final class SnapshotTables(
     * cluster columns at once and a box predicate drops most files.
     * Same conservativeness and fallback rules as [[readPruned]]. */
   def readPrunedBox(table: String, bounds: Seq[(String, Any, Any)]): DataFrame = {
-    import org.apache.spark.sql.functions._
     require(bounds.nonEmpty, "readPrunedBox needs at least one bound")
     bounds.foreach { case (c, lo, hi) =>
       require(lo.isInstanceOf[String] == hi.isInstanceOf[String],
@@ -2364,49 +2511,8 @@ final class SnapshotTables(
     // append-only chain: each segment prunes independently against its
     // OWN manifest (appends keep writing them), results union — file
     // skipping survives O(delta) commits
-    val perSeg = scan.segs.flatMap(s => prunedBoxSegment(table, scan, s, bounds))
-    if (perSeg.isEmpty) readScan(scan).where(lit(false))
-    else if (scan.segs.length == 1) perSeg.head
-    else perSeg.map(d => d.drop(d.columns.filter(_.startsWith("__p_")): _*)).reduce(_ unionByName _)
-  }
-
-  /** One chain segment's contribution to a pruned box read: the files
-    * whose stats MAY intersect every bound, or the whole segment when
-    * it has no usable manifest / the keep-list exceeds the driver
-    * budget; None when nothing in the segment can match. */
-  private def prunedBoxSegment(table: String, scan: ChainScan, seg: VersionMeta,
-      bounds: Seq[(String, Any, Any)]): Option[DataFrame] = {
-    import org.apache.spark.sql.functions._
-    val whole = scan.dir(seg).map(_.rows)
-    val mp = manifestPath(table, seg.v)
-    if (!fs(mp).exists(mp)) return whole
-    // the manifest is a single small parquet: re-reading it per branch
-    // is cheaper than pinning checkpoint blocks for every pruned read
-    val m = cachedParquet(mp).getOrElse(spark.read.parquet(mp.toString))
-    if (m.isEmpty) return whole // degenerate manifest (older writers): full scan, never empty answers
-    val all = m.select("file").distinct()
-    val keepDf = bounds
-      .map { case (statColumn, lo, hi) =>
-        val forCol = m.filter(col("column") === lit(statColumn))
-        val overlapping = (lo, hi) match {
-          case (l: String, h: String) =>
-            forCol.filter(col("min_str").isNull || col("max_str").isNull ||
-              !(col("min_str") > lit(h) || col("max_str") < lit(l)))
-          case _ =>
-            forCol.filter(col("min_num").isNull || col("max_num").isNull ||
-              !(col("min_num") > lit(hi).cast("double") || col("max_num") < lit(lo).cast("double")))
-        }
-        // files the manifest has no row for under this column stay in scope
-        overlapping.select("file").union(all.except(forCol.select("file")))
-      }
-      .reduce(_.intersect(_))
-    // limit+1, not collect-all: when the predicate keeps more files
-    // than the driver-list budget, stop enumerating and full-scan
-    val lim = maxPrunedFileList
-    val keep = keepDf.distinct().limit(lim + 1).collect().map(_.getString(0))
-    if (keep.isEmpty) None
-    else if (keep.length > lim) whole
-    else scan.dir(seg).map(filesOf(_, keep.toSeq))
+    val b = bounds.map { case (c, lo, hi) => (c, Option(lo), Option(hi)) }
+    prunedRead(scan, scan.segs.map(s => s -> segmentKeep(table, scan, s, b, Nil)))
   }
 
   /** Point-lookup pruned scan: `column IN (values)` answered by the
@@ -2417,84 +2523,26 @@ final class SnapshotTables(
     * nothing by range, while the sketch skips every file that never
     * saw the value, at ~(1−e^(−k·d/m))^k false-positive rate.
     *
-    * The membership test runs as codegen'd column expressions over the
-    * manifest rows (element_at / shiftright / bitwiseAND on the bitmap
-    * words — no UDF); probe values are hashed once with the SAME
-    * xxhash64-on-column-type the build pass used. Files with no sketch
-    * and no stats for the column are kept conservatively; a version
-    * with no manifest falls back to the full scan. As with every
-    * pruning layer here, false positives only KEEP files and the
-    * caller still applies the row-level predicate — pruning can never
-    * change answers (oracle-pinned by the q113 corpus entry). */
+    * Probe values are hashed on the driver with the SAME
+    * xxhash64-on-column-type the build pass used; the range test
+    * applies to string and numeric columns. Files with no sketch and
+    * no stats for the column are kept conservatively; a version with
+    * no manifest falls back to the full scan. As with every pruning
+    * layer here, false positives only KEEP files and the caller still
+    * applies the row-level predicate — pruning can never change
+    * answers (oracle-pinned by the q113 corpus entry). */
   def readPrunedIn(table: String, statColumn: String, values: Seq[Any]): DataFrame = {
-    import org.apache.spark.sql.functions._
     require(values.nonEmpty, "readPrunedIn needs at least one probe value")
     val scan = chainScan(table, currentVersion(table))
-    // same rule as readPrunedBox: merge-on-read chains read resolved
-    if (!scan.appendOnly) return readScan(scan)
-    val schema = scan.schema
-    if (!schema.fieldNames.contains(statColumn)) return readScan(scan) // unknown column: conservative full scan
-    val dt = schema(statColumn).dataType
-    // hash each probe value exactly as the build pass hashed the
-    // column (xxhash64 over the column type) — one driver-side job
-    // over a 1-row frame, |values| hashes
-    val hashes: Seq[Long] = spark.range(1)
-      .select(values.map(pv => xxhash64(lit(pv).cast(dt))): _*)
-      .head().toSeq.map(_.asInstanceOf[Long])
-    val perSeg = scan.segs.flatMap(s => prunedInSegment(table, scan, s, statColumn, values, hashes, dt))
-    if (perSeg.isEmpty) readScan(scan).where(lit(false))
-    else if (scan.segs.length == 1) perSeg.head
-    else perSeg.map(d => d.drop(d.columns.filter(_.startsWith("__p_")): _*)).reduce(_ unionByName _)
-  }
-
-  /** Kirsch–Mitzenmacher position i of hash h, as column arithmetic
-    * against a manifest row's OWN (sketch_bits, sketch_hashes) — a
-    * table re-committed under a different sizing stays correct. h1/h2
-    * are literals per probe value; only the bitmap words come from the
-    * row. */
-  private def bloomHit(h: Long): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions._
-    val h1 = h & 0xffffffffL
-    val h2 = (h >>> 32) | 1L
-    val maxHashes = 8 // static unroll bound; rows with fewer hashes short-circuit via the when()
-    (0 until maxHashes).map { i =>
-      val p = pmod(lit(h1) + lit(i.toLong) * lit(h2), col("sketch_bits").cast("long"))
-      when(lit(i) >= col("sketch_hashes"), lit(true))
-        .otherwise(call_function("shiftright",
-          element_at(col("sketch"), (p / 64).cast("int") + 1),
-          (p % 64).cast("int")).bitwiseAND(lit(1L)) === lit(1L))
-    }.reduce(_ && _)
-  }
-
-  private def prunedInSegment(table: String, scan: ChainScan, seg: VersionMeta, statColumn: String,
-      values: Seq[Any], hashes: Seq[Long], dt: org.apache.spark.sql.types.DataType): Option[DataFrame] = {
-    import org.apache.spark.sql.functions._
-    val whole = scan.dir(seg).map(_.rows)
-    val mp = manifestPath(table, seg.v)
-    if (!fs(mp).exists(mp)) return whole
-    val m = cachedParquet(mp).getOrElse(spark.read.parquet(mp.toString))
-    if (!m.columns.contains("sketch")) return whole // pre-sketch-era manifest: full scan
-    if (m.isEmpty) return whole // degenerate manifest (older writers): full scan, never empty answers
-    val forCol = m.filter(col("column") === lit(statColumn))
-    val all = m.select("file").distinct()
-    val survivors = values.zip(hashes).map { case (pv, h) =>
-      val range = dt match {
-        case org.apache.spark.sql.types.StringType =>
-          col("min_str").isNull || (lit(pv) >= col("min_str") && lit(pv) <= col("max_str"))
-        case _: org.apache.spark.sql.types.NumericType =>
-          col("min_num").isNull || (lit(pv).cast("double") >= col("min_num") && lit(pv).cast("double") <= col("max_num"))
-        case _ => lit(true)
-      }
-      forCol
-        .filter(range && when(col("sketch").isNull, lit(true)).otherwise(bloomHit(h)))
-        .select("file")
-    }.reduce(_ union _)
-    val lim = maxPrunedFileList
-    val keep = survivors.union(all.except(forCol.select("file")))
-      .distinct().limit(lim + 1).collect().map(_.getString(0))
-    if (keep.isEmpty) None
-    else if (keep.length > lim) whole
-    else scan.dir(seg).map(filesOf(_, keep.toSeq))
+    // same rule as readPrunedBox: merge-on-read chains read resolved;
+    // an unknown column reads whole
+    if (!scan.appendOnly || !scan.schema.fieldNames.contains(statColumn)) return readScan(scan)
+    val ranged = scan.schema(statColumn).dataType match {
+      case org.apache.spark.sql.types.StringType | _: org.apache.spark.sql.types.NumericType => true
+      case _ => false
+    }
+    val probe = statColumn -> values.map(v => (v, if (ranged) v else null))
+    prunedRead(scan, scan.segs.map(s => s -> segmentKeep(table, scan, s, Nil, Seq(probe))))
   }
 
   /** File-skipping decision for a SQL scan of version `version` — the
@@ -2508,9 +2556,8 @@ final class SnapshotTables(
     * pairs answered by the Bloom sketches AND per-value range checks —
     * so a probe on a stats-only column still range-prunes, and a
     * sketch column still prunes when the value sits inside every
-    * file's [min,max]. Returns the pruned read ONLY when every chain
-    * segment enumerated its keep-list under the driver budget and at
-    * least one file is provably skipped; merge-on-read segments,
+    * file's [min,max]. Returns the pruned read ONLY when at least one
+    * segment's keep-list provably skips a file; merge-on-read segments,
     * schema evolution, missing manifests or a zero-skip outcome return
     * None and the caller leaves the plan untouched — a None never
     * costs correctness, and a Some only drops files whose stats prove
@@ -2519,316 +2566,106 @@ final class SnapshotTables(
   def pruneForScan(table: String, ver: Int,
       bounds: Seq[(String, Option[Any], Option[Any])],
       probes: Seq[(String, Seq[(Any, Any)])]): Option[DataFrame] = {
-    import org.apache.spark.sql.functions._
     if ((bounds.isEmpty && probes.isEmpty) || ver <= 0) return None
     val scan = chainScan(table, ver)
     if (!scan.appendOnly) return None
-    val schema = scan.schema
-    // hash every probe value with the build pass's xxhash64-on-column-
-    // type, evaluated DRIVER-SIDE (Literal + foldable Cast + XxHash64
-    // interpreted eval — planning must not spawn a job per query)
-    val typedProbes: Seq[(String, Seq[(Any, Any, Long)])] =
-      probes.filter { case (c, vs) => vs.nonEmpty && schema.fieldNames.contains(c) }
-        .map { case (c, vs) =>
-          val dt = schema(c).dataType
-          val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
-          c -> vs.map { case (ext, phys) =>
-            val le = org.apache.spark.sql.GraftSqlBridge.eagerExpression(lit(ext))
-            val casted =
-              if (le.dataType == dt) le
-              else org.apache.spark.sql.catalyst.expressions.Cast(le, dt, tz)
-            val h = new org.apache.spark.sql.catalyst.expressions.XxHash64(Seq(casted), 42L)
-              .eval(null).asInstanceOf[Long]
-            (ext, phys, h)
-          }
-        }
-    if (bounds.isEmpty && typedProbes.isEmpty) return None
-    val contribs: Seq[(VersionMeta, Either[Option[DataFrame], (Seq[String], Long)])] =
-      scan.segs.map(s => s -> scanKeepForSegment(table, scan, s, bounds, typedProbes))
-    val skipped = contribs.exists {
-      case (_, Right((keep, total))) => keep.length < total
-      case _ => false
-    }
-    if (!skipped) return None
-    val parts = contribs.flatMap {
-      case (_, Left(full)) => full
-      case (s, Right((keep, _))) if keep.nonEmpty =>
-        scan.dir(s).map(d => d.copy(raw = filesOf(d, keep)).rows)
-      case _ => None // segment fully pruned
-    }
-    Some(
-      if (parts.isEmpty) readScan(scan).where(lit(false))
-      else if (parts.length == 1) parts.head
-      else parts.reduce(_ unionByName _))
+    val known = probes.filter { case (c, vs) => vs.nonEmpty && scan.schema.fieldNames.contains(c) }
+    if (bounds.isEmpty && known.isEmpty) return None
+    val kept = scan.segs.map(s => s -> segmentKeep(table, scan, s, bounds, known))
+    val skipped = kept.exists { case (_, k) => k.exists { case (files, total) => files.length < total } }
+    Option.when(skipped)(prunedRead(scan, kept))
   }
 
-  /** Driver-row budget for the planning fast path: a segment manifest
-    * at most this many rows is collected once (then LRU-cached — see
-    * [[SnapshotTables.manifestCache]]) and every pruning / metadata-
-    * aggregate decision on it is pure in-memory work; a bigger
-    * manifest keeps the distributed evaluation (at that scale the
-    * scan being saved dwarfs the planning jobs). */
-  private def manifestDriverRows: Int =
-    spark.conf.getOption("graft.scan.manifestDriverRows") match {
-      case None => 65536
-      case Some(raw) => raw.trim.toIntOption match {
-        case Some(n) if n >= 0 => n
-        case _ => throw new IllegalArgumentException(
-          s"graft.scan.manifestDriverRows must be a non-negative int, got '$raw'")
+  /** What the manifests of `segs` prove about `columns` over the files
+    * under `partTokens` ([[SnapshotManifests.Summary]]); Left(why) when
+    * a segment holding rows has no manifest or an unreadable one.
+    * Within-budget manifests are summarized on the driver, the rest in
+    * one Spark job. */
+  private def chainSummary(table: String, segs: Seq[VersionMeta], columns: Seq[String],
+      partTokens: Seq[String]): Either[String, SnapshotManifests.Summary] = {
+    import SnapshotManifests.{emptySummary, fileSummaries, summaryOf, total}
+    val verdicts = segs.map(s => s -> manifestOf(table, s.v))
+    verdicts.collectFirst {
+      case (s, SnapshotTables.ManifestUnreadable) => s"stats manifest of $table v${s.v} is unreadable"
+      case (s, SnapshotTables.ManifestMissing) if !segmentEmpty(table, s) =>
+        s"table $table v${s.v} has no stats manifest — commit with statsCols first"
+    }.toLeft {
+      val local = verdicts.collect { case (_, SnapshotTables.ManifestRows(rs)) => summaryOf(rs, columns, partTokens) }
+      val remote = verdicts.collect { case (s, SnapshotTables.ManifestOverBudget) =>
+        fileSummaries(manifestFrame(table, s.v), columns, partTokens)
+      }
+      val fromJob = if (remote.isEmpty) Nil else total(remote.reduce(_ union _)).collect().toSeq
+      (local ++ fromJob).foldLeft(emptySummary(columns.size))(SnapshotManifests.merge)
+    }
+  }
+
+  /** [[chainSummary]] for a SQL scan of version `ver`: None when the
+    * chain has merge-on-read or schema-evolved segments, or a manifest
+    * cannot answer — the caller then keeps the real scan. */
+  private def scanSummary(table: String, ver: Int, columns: Seq[String],
+      partTokens: Seq[String]): Option[SnapshotManifests.Summary] = try {
+    val segs = chainOf(table, ver)
+    if (segs.exists(s => (s.kind != "full" && s.kind != "append") || s.schemaEvolved)) None
+    else chainSummary(table, segs, columns, partTokens).toOption
+  } catch { case _: Exception => None } // None keeps the real scan, which computes the same answer
+
+  /** The segments of version `v` that carry a manifest, for the
+    * whole-version manifest surfaces: merge-on-read chains have no
+    * honest file-level story until the rewrite, and a segment holding
+    * rows without a manifest leaves the version unanswerable. */
+  private def manifestSegments(table: String, v: Int): Seq[VersionMeta] = {
+    val segs = chainOf(table, v)
+    require(segs.forall(s => s.kind == "full" || s.kind == "append"),
+      s"table $table v$v has merge-on-read deltas pending — materialize()/compact() before " +
+        "reading the manifest")
+    val withManifest = segs.filter { s =>
+      val mp = manifestPath(table, s.v)
+      fs(mp).exists(mp) || {
+        require(segmentEmpty(table, s),
+          s"table $table v${s.v} has no stats manifest — commit with statsCols/sketchCols first")
+        false
       }
     }
-
-  /** The segment manifest collected to the driver (budgeted + cached)
-    * as a tri-state [[SnapshotTables.ManifestVerdict]]. Types
-    * normalized via casts so era differences in the stored schema
-    * can't bite. */
-  private def collectedManifest(table: String, v: Int): SnapshotTables.ManifestVerdict = {
-    import org.apache.spark.sql.functions.col
-    val mp = manifestPath(table, v)
-    if (!fs(mp).exists(mp)) return SnapshotTables.ManifestUnreadable
-    val key = fs(mp).makeQualified(mp).toString
-    val hit = SnapshotTables.manifestCache.synchronized(
-      Option(SnapshotTables.manifestCache.get(key)))
-    hit match {
-      case Some(res) => res
-      case None =>
-        val lim = manifestDriverRows
-        val res: SnapshotTables.ManifestVerdict =
-          try {
-            val m = cachedParquet(mp).getOrElse(spark.read.parquet(mp.toString))
-            val has = m.columns.toSet
-            def c(name: String, t: String) =
-              (if (has(name)) col(name) else org.apache.spark.sql.functions.lit(null)).cast(t)
-            val taken = m.select(col("file").cast("string"), col("column").cast("string"),
-                c("rows", "long"), c("nulls", "long"),
-                c("min_num", "double"), c("max_num", "double"),
-                c("min_str", "string"), c("max_str", "string"),
-                c("sketch", "array<long>"), c("sketch_bits", "long"), c("sketch_hashes", "int"))
-              .limit(lim + 1).collect()
-            if (taken.length > lim) SnapshotTables.ManifestOverBudget
-            else SnapshotTables.ManifestRows(taken.toSeq.map { r =>
-              def lOpt(i: Int) = if (r.isNullAt(i)) None else Some(r.getLong(i))
-              def dOpt(i: Int) = if (r.isNullAt(i)) None else Some(r.getDouble(i))
-              def sOpt(i: Int) = if (r.isNullAt(i)) None else Some(r.getString(i))
-              SnapshotTables.MRow(r.getString(0), r.getString(1), lOpt(2), lOpt(3),
-                dOpt(4), dOpt(5), sOpt(6), sOpt(7),
-                if (r.isNullAt(8)) None else Some(r.getSeq[Long](8).toArray),
-                if (r.isNullAt(9)) 0L else r.getLong(9),
-                if (r.isNullAt(10)) 0 else r.getInt(10))
-            })
-          } catch { case _: Exception => SnapshotTables.ManifestUnreadable }
-        SnapshotTables.manifestCache.synchronized(SnapshotTables.manifestCache.put(key, res))
-        res
-    }
+    require(withManifest.nonEmpty,
+      s"table $table v$v has no stats manifest — commit with statsCols/sketchCols first")
+    withManifest
   }
 
-  /** In-memory twin of the JVM-side Kirsch–Mitzenmacher membership
-    * test — bit-for-bit the column-expression [[bloomHit]] (same 8-
-    * position unroll bound, same word/bit addressing); malformed rows
-    * keep the file conservatively. */
-  private def bloomHitMem(words: Array[Long], bits: Long, hashes: Int, h: Long): Boolean = {
-    if (bits <= 0 || hashes <= 0 || words.isEmpty) return true
-    val h1 = h & 0xffffffffL
-    val h2 = (h >>> 32) | 1L
-    var i = 0
-    val n = math.min(hashes, 8)
-    while (i < n) {
-      val m = (h1 + i.toLong * h2) % bits
-      val p = if (m < 0) m + bits else m
-      val wi = (p / 64).toInt
-      if (wi >= words.length) return true // malformed sizing: keep
-      if (((words(wi) >>> (p % 64).toInt) & 1L) != 1L) return false
-      i += 1
-    }
-    true
-  }
-
-  /** In-memory segment keep-list — the exact file-keeping semantics of
-    * the distributed evaluation below, over collected rows. */
-  private def scanKeepInMemory(rs: Seq[SnapshotTables.MRow],
-      bounds: Seq[(String, Option[Any], Option[Any])],
-      probes: Seq[(String, Seq[(Any, Any, Long)])]): (Seq[String], Long) = {
-    def toD(a: Any): Double = a match {
-      case d: Double => d
-      case f: Float => f.toDouble
-      case n: Number => n.doubleValue()
-      case other => other.toString.toDouble
-    }
-    // UTF-8 byte ordering, NOT Java String (UTF-16 code-unit) ordering:
-    // the manifest min_str/max_str are byte-wise parquet binary stats and
-    // the distributed twin compares with Spark's UTF8String (UTF-8 bytes).
-    // The orderings disagree for non-BMP characters (e.g. "￿" sorts
-    // AFTER an emoji in UTF-16 but BEFORE it in UTF-8), so Java ordering
-    // here would wrongly prune files and silently lose rows.
-    def cmpStr(a: String, b: String): Int =
-      org.apache.spark.unsafe.types.UTF8String.fromString(a)
-        .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(b))
-    val byFile = rs.groupBy(_.file)
-    def keepFile(rows: Seq[SnapshotTables.MRow]): Boolean = {
-      def forCol(c: String) = rows.filter(_.column == c)
-      val boundsOk = bounds.forall { case (c, lo, hi) =>
-        val cr = forCol(c)
-        cr.isEmpty || cr.exists { r => // no row for the column: stays in scope
-          val isStr = lo.exists(_.isInstanceOf[String]) || hi.exists(_.isInstanceOf[String])
-          if (isStr) (r.minStr, r.maxStr) match {
-            case (Some(mn), Some(mx)) =>
-              lo.forall(l => cmpStr(mx, l.asInstanceOf[String]) >= 0) &&
-                hi.forall(h => cmpStr(mn, h.asInstanceOf[String]) <= 0)
-            case _ => true
-          } else (r.minNum, r.maxNum) match {
-            case (Some(mn), Some(mx)) =>
-              lo.forall(l => mx >= toD(l)) && hi.forall(h => mn <= toD(h))
-            case _ => true
-          }
-        }
-      }
-      val probesOk = probes.forall { case (c, vh) =>
-        val cr = forCol(c)
-        cr.isEmpty || vh.exists { case (_, phys, h) => // ANY value may be present
-          cr.exists { r =>
-            val rangeOk = phys match {
-              case s: String => (r.minStr, r.maxStr) match {
-                case (Some(mn), Some(mx)) => cmpStr(s, mn) >= 0 && cmpStr(s, mx) <= 0
-                case _ => true
-              }
-              case n => (r.minNum, r.maxNum) match {
-                case (Some(mn), Some(mx)) => val d = toD(n); d >= mn && d <= mx
-                case _ => true
-              }
-            }
-            rangeOk && r.sketch.forall(w => bloomHitMem(w, r.sketchBits, r.sketchHashes, h))
-          }
-        }
-      }
-      boundsOk && probesOk
-    }
-    val keep = byFile.collect { case (f, rows) if keepFile(rows) => f }.toSeq.sorted
-    (keep, byFile.size.toLong)
-  }
-
-  /** One segment's contribution to [[pruneForScan]]: Right((files
-    * whose stats MAY satisfy every bound and every probe list, total
-    * manifest files)), Left(full segment read) when the segment has no
-    * usable manifest or the keep-list exceeds the driver budget. Files
-    * the manifest has no row for under a queried column always stay in
-    * scope — absence of stats can only keep, never skip. Small
-    * manifests evaluate entirely on the driver (collected once,
-    * cached); over-budget ones keep the distributed evaluation. */
-  private def scanKeepForSegment(table: String, scan: ChainScan, seg: VersionMeta,
-      bounds: Seq[(String, Option[Any], Option[Any])],
-      probes: Seq[(String, Seq[(Any, Any, Long)])])
-      : Either[Option[DataFrame], (Seq[String], Long)] = {
-    import org.apache.spark.sql.functions._
-    val whole = scan.dir(seg).map(_.rows)
-    val mp = manifestPath(table, seg.v)
-    if (!fs(mp).exists(mp)) return Left(whole)
-    collectedManifest(table, seg.v) match {
-      case SnapshotTables.ManifestRows(rs) if rs.nonEmpty =>
-        return Right(scanKeepInMemory(rs, bounds, probes))
-      case SnapshotTables.ManifestRows(_) => // degenerate empty manifest
-        return Left(whole)
-      case SnapshotTables.ManifestUnreadable => // corrupt/IO-failed, verdict cached:
-        return Left(whole) // full read — never re-consult, never skip
-      case SnapshotTables.ManifestOverBudget => () // distributed evaluation below
-    }
-    val m = cachedParquet(mp).getOrElse(spark.read.parquet(mp.toString))
-    if (m.isEmpty) return Left(whole)
-    val hasSketch = m.columns.contains("sketch")
-    val all = m.select("file").distinct()
-    val boundKeeps = bounds.map { case (statColumn, lo, hi) =>
-      val forCol = m.filter(col("column") === lit(statColumn))
-      val isStr = lo.exists(_.isInstanceOf[String]) || hi.exists(_.isInstanceOf[String])
-      val overlapping =
-        if (isStr) {
-          val loOk = lo.map(l => !(col("max_str") < lit(l))).getOrElse(lit(true))
-          val hiOk = hi.map(h => !(col("min_str") > lit(h))).getOrElse(lit(true))
-          forCol.filter(col("min_str").isNull || col("max_str").isNull || (loOk && hiOk))
-        } else {
-          val loOk = lo.map(l => !(col("max_num") < lit(l).cast("double"))).getOrElse(lit(true))
-          val hiOk = hi.map(h => !(col("min_num") > lit(h).cast("double"))).getOrElse(lit(true))
-          forCol.filter(col("min_num").isNull || col("max_num").isNull || (loOk && hiOk))
-        }
-      overlapping.select("file").union(all.except(forCol.select("file")))
-    }
-    val probeKeeps = probes.map { case (statColumn, vh) =>
-      val forCol = m.filter(col("column") === lit(statColumn))
-      val survivors = vh.map { case (_, phys, h) =>
-        val range = phys match {
-          case s: String =>
-            col("min_str").isNull || (lit(s) >= col("min_str") && lit(s) <= col("max_str"))
-          case n =>
-            col("min_num").isNull ||
-              (lit(n).cast("double") >= col("min_num") && lit(n).cast("double") <= col("max_num"))
-        }
-        val sketchOk =
-          if (hasSketch) when(col("sketch").isNull, lit(true)).otherwise(bloomHit(h))
-          else lit(true)
-        forCol.filter(range && sketchOk).select("file")
-      }.reduce(_ union _)
-      survivors.union(all.except(forCol.select("file")))
-    }
-    val keeps = (boundKeeps ++ probeKeeps).reduce(_ intersect _)
-    val lim = maxPrunedFileList
-    val total = all.count()
-    val keep = keeps.distinct().limit(lim + 1).collect().map(_.getString(0)).toSeq
-    if (keep.length > lim) Left(whole) else Right((keep, total))
-  }
-
-  /** METADATA-ONLY aggregates from the stats manifest — the
-    * scan-less answers Iceberg serves from its manifests: row count,
-    * numeric min/max, and null count per requested column, computed
-    * from the manifest parquet alone (no data file is ever opened —
-    * spec-asserted via inputFiles). One output row per column:
-    * (column, n_rows, min_num, max_num, n_nulls), ordered.
-    *
-    * Honesty rules: row counts come from parquet footer row counts so
-    * they are exact regardless of nulls; numeric min/max are exact
-    * parquet column statistics; if ANY file lacks stats for a column,
-    * its min/max are returned NULL rather than a silently-wrong bound
-    * over the covered subset (n_rows/n_nulls likewise). String
-    * columns' footer bounds may be truncated by parquet writers —
-    * bounds, not extrema — so this surface is numeric-only by design;
-    * use [[readPruned]] machinery for string range work. At a 100k-file
-    * table this turns COUNT(*)/MIN/MAX from a table scan into a
-    * manifest read. */
   /** The raw per-file stats manifest of the CURRENT version — one row
     * per (file, stats column): file, rows, column, min_num/max_num (or
     * min_str/max_str), nulls, plus membership-sketch columns when the
     * table commits with `sketchCols`. Iceberg's `files` metadata
     * relation, as a plain distributed DataFrame (manifest-sized —
-    * metadata rows, never data). SQL face:
-    * `graft_table_manifest('cat.ns.t')`. */
-  def manifest(table: String): DataFrame = {
-    val v = currentVersion(table)
-    val segs = chainOf(table, v)
-    // append-only chains union their per-segment manifests (file names
-    // stay relative to each segment's own snapshot dir — disjoint by
-    // construction since every segment writes fresh part files);
-    // merge-on-read chains have no honest file-level story until the
-    // rewrite, so they must materialize first.
-    require(segs.forall(s => s.kind == "full" || s.kind == "append"),
-      s"table $table v$v has merge-on-read deltas pending — materialize()/compact() before " +
-        "reading the manifest")
-    val perSeg = segs.flatMap { s =>
-      val mp = manifestPath(table, s.v)
-      if (fs(mp).exists(mp)) Some(cachedParquet(mp).getOrElse(spark.read.parquet(mp.toString)))
-      else if (rowsOf(dirsOf(table, s)).forall(_.isEmpty)) None // zero-row segment: nothing to list
-      else throw new IllegalArgumentException(
-        s"table $table v${s.v} has no stats manifest — commit with statsCols/sketchCols first")
-    }
-    require(perSeg.nonEmpty,
-      s"table $table v$v has no stats manifest — commit with statsCols/sketchCols first")
-    perSeg.reduce(_ unionByName _)
-  }
+    * metadata rows, never data); an append-only chain unions its
+    * segments' manifests (file names stay relative to each segment's
+    * own snapshot dir). SQL face: `graft_table_manifest('cat.ns.t')`. */
+  def manifest(table: String): DataFrame =
+    manifestSegments(table, currentVersion(table)).map(s => manifestParquet(table, s.v)).reduce(_ unionByName _)
 
-  /** (branch, forked-from main version, branch commits) for every live
-    * branch — the data behind the `<table>.refs` metadata table
-    * (Iceberg's refs relation). Branch count is operator-bounded;
-    * driver-sized by construction. */
-  def branchRefs(table: String): Seq[(String, Int, Int)] =
-    branches(table).map { b =>
-      (b, branchBase(table, b), branchTables(table).currentVersion(b))
-    }
+  /** METADATA-ONLY aggregates of the current version from its stats
+    * manifests — the scan-less answers Iceberg serves from its
+    * manifests: row count, numeric min/max, and null count per
+    * requested column, computed from the manifest parquet alone (no
+    * data file is ever opened — spec-asserted via inputFiles). One
+    * output row per requested column that has manifest rows:
+    * (column, n_rows, min_num, max_num, n_nulls), ordered; a lazy frame.
+    *
+    * Honesty rules ([[SnapshotManifests.colStats]], the rules the SQL
+    * metadata aggregates follow): row counts come from parquet footer
+    * row counts, exact regardless of nulls; numeric min/max are exact
+    * parquet column statistics; a field any file of the chain does not
+    * cover is NULL rather than a silently-wrong bound over the covered
+    * subset. String columns' footer bounds may be truncated by parquet
+    * writers — bounds, not extrema — so this surface is numeric-only by
+    * design. */
+  def manifestAgg(table: String, columns: Seq[String]): DataFrame = {
+    require(columns.nonEmpty, "manifestAgg needs at least one column")
+    val cols = columns.distinct
+    val perFile = manifestSegments(table, currentVersion(table))
+      .map(s => SnapshotManifests.fileSummaries(manifestFrame(table, s.v), cols, Nil))
+    SnapshotManifests.aggRows(SnapshotManifests.total(perFile.reduce(_ union _)), cols)
+      .toDF().orderBy("column")
+  }
 
   /** Per-partition file/row/byte stats of the CURRENT version — the
     * data behind the `<table>.partitions` metadata relation (Iceberg's
@@ -2902,45 +2739,13 @@ final class SnapshotTables(
       .toSeq.sortBy(_.partition)
   }
 
-  def manifestAgg(table: String, columns: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.functions._
-    require(columns.nonEmpty, "manifestAgg needs at least one column")
-    val v = currentVersion(table)
-    val mp = manifestPath(table, v)
-    require(fs(mp).exists(mp), s"table $table v$v has no stats manifest — commit with statsCols first")
-    // manifest-sized; the (modTime,len)-guarded relation cache makes
-    // per-branch re-reads free without pinning checkpoint blocks
-    val m = cachedParquet(mp).getOrElse(spark.read.parquet(mp.toString))
-    // a column absent from SOME files (schema evolution, sketch-only
-    // rows) must answer NULL, not a bound over the covered subset —
-    // compare each column's stats coverage against the table's full
-    // file set
-    val filesTotal = m.select(countDistinct(col("file"))).head().getLong(0)
-    m.filter(col("column").isin(columns: _*))
-      .groupBy(col("column"))
-      .agg(
-        sum(col("rows")).as("__rows"),
-        min(col("min_num")).as("__min"),
-        max(col("max_num")).as("__max"),
-        sum(col("nulls")).as("__nulls"),
-        count(col("min_num")).as("__files_with_stats"),
-        count(col("rows")).as("__files_with_rows"))
-      .select(
-        col("column"),
-        when(col("__files_with_rows") === filesTotal, col("__rows")).as("n_rows"),
-        when(col("__files_with_stats") === filesTotal, col("__min")).as("min_num"),
-        when(col("__files_with_stats") === filesTotal, col("__max")).as("max_num"),
-        when(col("__files_with_rows") === filesTotal, col("__nulls")).as("n_nulls"))
-      .orderBy(col("column"))
-  }
-
   /** Version-pinned, never-throwing metadata COUNT for the SQL
     * metadata-aggregate rule ([[graft.plans.MetadataAggRule]], X113):
     * Some(rows) only when every chain segment is full/append,
     * unevolved, and either empty or fully row-counted by its manifest
     * — anything else answers None and the caller keeps the real scan. */
   private[graft] def fastCountForScan(table: String, ver: Int): Option[Long] =
-    manifestRowsForScan(table, ver, Nil) // same coverage contract as fastCount, planning-fast-pathed
+    manifestRowsForScan(table, ver, Nil)
 
   /** The identity partition columns of version `ver`'s chain when
     * EVERY segment was committed under exactly that layout (no hidden
@@ -2954,7 +2759,7 @@ final class SnapshotTables(
     val per = chainOf(table, ver).map(_.partitionCols)
     if (per.isEmpty || per.exists(_.exists(_.startsWith("__p_"))) || per.distinct.length != 1) Nil
     else per.head
-  } catch { case _: Exception => Nil }
+  } catch { case _: Exception => Nil } // Nil declines the partition-scoped answer; the real scan gives it
 
   /** Version-pinned metadata row count of the files under the given
     * partition-directory tokens (X114 — `count(*)` scoped by identity-
@@ -2963,130 +2768,8 @@ final class SnapshotTables(
     * [[uniformIdentityLayout]]; an empty token list counts the whole
     * version. */
   private[graft] def manifestRowsForScan(table: String, ver: Int,
-      partTokens: Seq[String]): Option[Long] = try {
-    import org.apache.spark.sql.functions._
-    chainManifestRows(table, ver) match {
-      case None => return None
-      case Some(Some(rows)) =>
-        return if (rows.isEmpty) Some(0L) else rowsInMemory(rows, partTokens)
-      case Some(None) => () // over budget: distributed path below
-    }
-    scanManifests(table, ver) match {
-      case None => None
-      case Some(Nil) => Some(0L)
-      case Some(ms) =>
-        val m = partTokenFilter(ms.reduce(_ unionByName _), partTokens)
-        // (__seg, file) keys: relative file names repeat across segments
-        val perFile = m.select(col("__seg"), col("file"), col("rows")).distinct()
-        val a = perFile.agg(count(lit(1)), count(col("rows")),
-          countDistinct(col("__seg"), col("file")), sum(col("rows"))).head()
-        // one rows value per file, every file covered
-        if (a.getLong(0) != a.getLong(1) || a.getLong(0) != a.getLong(2)) None
-        else Some(if (a.isNullAt(3)) 0L else a.getLong(3))
-    }
-  } catch { case _: Exception => None }
-
-  /** Every chain segment's manifest frame for a metadata-served scan,
-    * each tagged with a `__seg` segment-version column — file names are
-    * only unique WITHIN a segment (each segment writes its own
-    * `part-*` files), so every per-file key downstream must be
-    * (__seg, file) or two segments sharing a relative name would
-    * collapse in distinct()/countDistinct and undercount. None when
-    * any non-empty segment lacks a manifest (nothing provable) or the
-    * chain has merge-on-read / evolved segments; Some(Nil) for a
-    * zero-row version. */
-  private def scanManifests(table: String, ver: Int): Option[Seq[DataFrame]] = {
-    import org.apache.spark.sql.functions.lit
-    val segs = chainOf(table, ver)
-    if (segs.exists(s => (s.kind != "full" && s.kind != "append") || s.schemaEvolved)) return None
-    val ms = segs.flatMap { s =>
-      val mp = manifestPath(table, s.v)
-      if (fs(mp).exists(mp))
-        Some(cachedParquet(mp).getOrElse(spark.read.parquet(mp.toString))
-          .withColumn("__seg", lit(s.v)))
-      else if (rowsOf(dirsOf(table, s)).forall(_.isEmpty)) None // empty segment: zero rows
-      else return None // rows with no manifest: nothing provable
-    }
-    Some(ms)
-  }
-
-  /** [[scanManifests]]'s driver fast-path twin: outer None = chain
-    * ineligible / a non-empty segment without a manifest (caller
-    * answers None); Some(None) = eligible but some manifest over the
-    * driver budget (caller takes the distributed path); Some(Some) =
-    * every segment's rows collected, keyed by segment index (file
-    * names are only unique within a segment). */
-  private def chainManifestRows(table: String, ver: Int)
-      : Option[Option[Seq[(Int, SnapshotTables.MRow)]]] = {
-    val segs = chainOf(table, ver)
-    if (segs.exists(s => (s.kind != "full" && s.kind != "append") || s.schemaEvolved)) return None
-    var overBudget = false
-    val collected = segs.zipWithIndex.flatMap { case (s, i) =>
-      val mp = manifestPath(table, s.v)
-      if (fs(mp).exists(mp)) collectedManifest(table, s.v) match {
-        case SnapshotTables.ManifestRows(rs) => Some(rs.map(r => (i, r)))
-        case SnapshotTables.ManifestOverBudget => overBudget = true; Some(Nil)
-        // unreadable manifest: nothing provable for the whole chain —
-        // metadata answers must decline, not skip the segment
-        case SnapshotTables.ManifestUnreadable => return None
-      }
-      else if (rowsOf(dirsOf(table, s)).forall(_.isEmpty)) None // empty segment
-      else return None // rows with no manifest: nothing provable
-    }
-    if (overBudget) Some(None) else Some(Some(collected.flatten))
-  }
-
-  private def tokenMatches(file: String, partTokens: Seq[String]): Boolean =
-    partTokens.forall(t => file.split('/').contains(t))
-
-  /** In-memory twin of [[manifestRowsForScan]]'s distributed
-    * aggregation — identical coverage rules. */
-  private def rowsInMemory(all: Seq[(Int, SnapshotTables.MRow)],
-      partTokens: Seq[String]): Option[Long] = {
-    val sub = all.filter(t => tokenMatches(t._2.file, partTokens))
-    val perFile = sub.map(t => (t._1, t._2.file, t._2.rows)).distinct
-    val files = perFile.map(t => (t._1, t._2)).distinct
-    // one rows value per file, every file covered
-    if (perFile.size != files.size || perFile.exists(_._3.isEmpty)) None
-    else Some(perFile.flatMap(_._3).sum)
-  }
-
-  /** In-memory twin of [[manifestStatsForScan]]'s distributed
-    * aggregation — identical coverage and honesty rules. */
-  private def statsInMemory(all: Seq[(Int, SnapshotTables.MRow)], statColumn: String,
-      partTokens: Seq[String]): SnapshotTables.ColStats = {
-    val sub = all.filter(t => tokenMatches(t._2.file, partTokens))
-    val filesTotal = sub.map(t => (t._1, t._2.file)).distinct.size
-    if (filesTotal == 0) // no file in scope: zero rows, exactly
-      return SnapshotTables.ColStats(Some(0L), Some(0L), Some(None), Some(None))
-    val forCol = sub.filter(_._2.column == statColumn).map(_._2)
-    val nf = sub.filter(_._2.column == statColumn).map(t => (t._1, t._2.file)).distinct.size
-    val nrows = forCol.size
-    if (nf != filesTotal || nf != nrows)
-      return SnapshotTables.ColStats(None, None, None, None)
-    val rows = if (forCol.forall(_.rows.isDefined)) Some(forCol.flatMap(_.rows).sum) else None
-    val nulls = if (forCol.forall(_.nulls.isDefined)) Some(forCol.flatMap(_.nulls).sum) else None
-    def allNull(r: SnapshotTables.MRow): Boolean =
-      (for { n <- r.nulls; rw <- r.rows } yield n == rw).getOrElse(false)
-    def ext(vals: Seq[Double], uncovered: Int, pick: Seq[Double] => Double): Option[Option[Double]] =
-      if (uncovered != 0) None // some file has rows but no bounds
-      else if (vals.isEmpty) {
-        if (rows.isDefined && nulls.isDefined && rows == nulls) Some(None) else None
-      } else Some(Some(pick(vals)))
-    SnapshotTables.ColStats(rows, nulls,
-      ext(forCol.flatMap(_.minNum), forCol.count(r => r.minNum.isEmpty && !allNull(r)), _.min),
-      ext(forCol.flatMap(_.maxNum), forCol.count(r => r.maxNum.isEmpty && !allNull(r)), _.max))
-  }
-
-  /** Keep only manifest rows whose (partition-dir-bearing, segment-
-    * relative) file path contains every token as an exact path
-    * component — identity `col=value` dirs partition the file set
-    * exactly, so the subset keeps full coverage semantics. */
-  private def partTokenFilter(m: DataFrame, partTokens: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.functions._
-    partTokens.foldLeft(m)((acc, t) =>
-      acc.filter(array_contains(split(col("file"), "/"), t)))
-  }
+      partTokens: Seq[String]): Option[Long] =
+    scanSummary(table, ver, Nil, partTokens).flatMap(SnapshotManifests.rowCount)
 
   /** Version-pinned per-column manifest aggregate for the SQL
     * metadata-aggregate rule (X113): each field is present ONLY when
@@ -3101,58 +2784,8 @@ final class SnapshotTables(
     * identity-partition directories — the caller must have verified
     * the layout via [[uniformIdentityLayout]]. */
   private[graft] def manifestStatsForScan(table: String, ver: Int, statColumn: String,
-      partTokens: Seq[String] = Nil): Option[SnapshotTables.ColStats] = try {
-    import org.apache.spark.sql.functions._
-    chainManifestRows(table, ver) match {
-      case None => return None
-      case Some(Some(rows)) =>
-        return Some(
-          if (rows.isEmpty) // version with zero rows: everything is exact
-            SnapshotTables.ColStats(Some(0L), Some(0L), Some(None), Some(None))
-          else statsInMemory(rows, statColumn, partTokens))
-      case Some(None) => () // over budget: distributed path below
-    }
-    val ms = scanManifests(table, ver) match {
-      case None => return None
-      case Some(Nil) => // version with zero rows: everything is exact
-        return Some(SnapshotTables.ColStats(Some(0L), Some(0L), Some(None), Some(None)))
-      case Some(seq) => seq
-    }
-    val m = partTokenFilter(ms.reduce(_ unionByName _), partTokens)
-    // (__seg, file) keys: relative file names repeat across segments
-    val filesTotal = m.select(countDistinct(col("__seg"), col("file"))).head().getLong(0)
-    if (filesTotal == 0) // no file under these partition tokens: zero rows, exactly
-      return Some(SnapshotTables.ColStats(Some(0L), Some(0L), Some(None), Some(None)))
-    val forCol = m.filter(col("column") === lit(statColumn))
-    // a file is min/max-covered when it has bounds OR is provably
-    // all-null (nulls == rows); comparisons against null row/null
-    // fields must count as NOT covered, hence the coalesce
-    val allNull = coalesce(col("nulls") === col("rows"), lit(false))
-    val a = forCol.agg(
-      countDistinct(col("__seg"), col("file")).as("nf"),
-      count(lit(1)).as("nrows"),
-      sum(col("rows")).as("rows"),
-      count(col("rows")).as("rows_cov"),
-      sum(col("nulls")).as("nulls"),
-      count(col("nulls")).as("nulls_cov"),
-      min(col("min_num")).as("mn"),
-      max(col("max_num")).as("mx"),
-      sum(when(col("min_num").isNull && !allNull, 1).otherwise(0)).as("unc_min"),
-      sum(when(col("max_num").isNull && !allNull, 1).otherwise(0)).as("unc_max")
-    ).head()
-    val nf = a.getLong(0); val nrows = a.getLong(1)
-    // one manifest row per file AND every table file covered — the
-    // precondition for every field below
-    if (nf != filesTotal || nf != nrows) return Some(SnapshotTables.ColStats(None, None, None, None))
-    val rows = if (a.getLong(3) == nrows) Some(a.getLong(2)) else None
-    val nulls = if (a.getLong(5) == nrows) Some(a.getLong(4)) else None
-    def ext(mIdx: Int, uncIdx: Int): Option[Option[Double]] =
-      if (a.getLong(uncIdx) != 0) None // some file has rows but no bounds
-      else if (a.isNullAt(mIdx)) { // every file all-null: NULL is exact iff coverage proves it
-        if (rows.isDefined && nulls.isDefined && rows == nulls) Some(None) else None
-      } else Some(Some(a.getDouble(mIdx)))
-    Some(SnapshotTables.ColStats(rows, nulls, ext(6, 8), ext(7, 9)))
-  } catch { case _: Exception => None }
+      partTokens: Seq[String] = Nil): Option[SnapshotTables.ColStats] =
+    scanSummary(table, ver, Seq(statColumn), partTokens).map(SnapshotManifests.colStats(_, 0))
 
   /** Metadata-only COUNT(*) of the current version (manifest row
     * counts summed over the file set). Requires every file to carry a
@@ -3166,28 +2799,11 @@ final class SnapshotTables(
     require(segs.forall(s => s.kind == "full" || s.kind == "append"),
       s"table $table v$v has merge-on-read deltas pending — fastCount needs materialized rows; " +
         "run materialize()/compact() first")
-    segs.map(s => fastCountOfVersion(table, s)).sum
-  }
-
-  private def fastCountOfVersion(table: String, seg: VersionMeta): Long = {
-    import org.apache.spark.sql.functions._
-    val mp = manifestPath(table, seg.v)
-    if (!fs(mp).exists(mp)) {
-      // an EMPTY segment (no files, or files with zero rows — footer
-      // stats of a 0-row file are nothing to manifest) contributes
-      // zero; a segment WITH rows but no manifest cannot be counted
-      // from metadata
-      require(rowsOf(dirsOf(table, seg)).forall(_.isEmpty),
-        s"table $table v${seg.v} has no stats manifest — commit with statsCols first")
-      return 0L
-    }
-    val m = cachedParquet(mp).getOrElse(spark.read.parquet(mp.toString))
-    val filesTotal = m.select(countDistinct(col("file"))).head().getLong(0)
-    val withRows = m.filter(col("rows").isNotNull).select(col("file"), col("rows")).distinct()
-    require(withRows.count() == filesTotal,
-      s"manifest of $table v${seg.v} lacks row counts for some files — fastCount would be wrong")
-    val r = withRows.agg(sum(col("rows"))).head()
-    if (r.isNullAt(0)) 0L else r.getLong(0)
+    segs.map { s =>
+      val sum = chainSummary(table, Seq(s), Nil, Nil).fold(why => throw new IllegalArgumentException(why), identity)
+      SnapshotManifests.rowCount(sum).getOrElse(throw new IllegalArgumentException(
+        s"manifest of $table v${s.v} lacks row counts for some files — fastCount would be wrong"))
+    }.sum
   }
 
   /** TableFormat read side — pipeline SQL resolves against the current
@@ -3722,33 +3338,33 @@ object SnapshotTables {
       rows: Option[Long], nulls: Option[Long],
       min: Option[Option[Double]], max: Option[Option[Double]])
 
-  /** One collected manifest row for the driver-side PLANNING fast
-    * path: SQL scan pruning and metadata aggregates run once per
-    * query at optimize time, and for the common small-manifest case a
-    * handful of distributed jobs per planning pass would dwarf the
-    * scan they save — the manifest is collected ONCE (budgeted) and
-    * every later planning decision on that version is in-memory. */
+  /** One manifest row, typed: every manifest rule
+    * ([[SnapshotManifests]]) reads these — collected ONCE per small
+    * segment manifest (budgeted), so SQL scan pruning and metadata
+    * aggregates plan in memory, or as the rows of a Spark job over a
+    * manifest past the budget. */
   private[io] final case class MRow(file: String, column: String,
       rows: Option[Long], nulls: Option[Long],
       minNum: Option[Double], maxNum: Option[Double],
       minStr: Option[String], maxStr: Option[String],
       sketch: Option[Array[Long]], sketchBits: Long, sketchHashes: Int)
 
-  /** Driver-side manifest cache for the planning fast path. Version
-    * manifests are written ONCE and never mutated (the commit CAS
-    * creates them; expiry only deletes), so entries never go stale —
+  /** Driver-side manifest cache for the planning fast path, keyed by
+    * manifest path and mtime. Version manifests are written ONCE and
+    * never mutated (expiry only deletes), so entries never go stale —
     * an expired version's entry is merely unreachable garbage, which
-    * the LRU bound reclaims. The over-budget verdict (None) is cached
-    * too, so a huge manifest is sized exactly once. */
+    * the LRU bound reclaims. The over-budget verdict is cached too, so
+    * a huge manifest is sized exactly once. */
   private val ManifestCacheMax = 64
-  /** Driver-side verdict on a (immutable) segment manifest: its rows
-    * when within the driver budget, over-budget (distributed
-    * evaluation is the right path), or unreadable (corrupt/IO-failed —
+  /** The loader's verdict on a segment manifest: missing (none, or one
+    * with no rows), its rows when within the driver budget, over budget
+    * (evaluated in a Spark job), or unreadable (corrupt/IO-failed —
     * cached so the fallback never re-reads a known-bad manifest on
     * every query; a transient failure sticks only until LRU eviction,
-    * and the verdict only ever degrades to a FULL segment read, never
-    * to a wrong skip). */
+    * and the verdict only ever degrades to a FULL segment read or a
+    * declined metadata answer, never to a wrong skip). */
   private[io] sealed trait ManifestVerdict
+  private[io] case object ManifestMissing extends ManifestVerdict
   private[io] final case class ManifestRows(rows: Seq[MRow]) extends ManifestVerdict
   private[io] case object ManifestOverBudget extends ManifestVerdict
   private[io] case object ManifestUnreadable extends ManifestVerdict
