@@ -22,12 +22,11 @@ import org.apache.spark.sql.expressions.Aggregator
   * for 1 % FPR at k=4..7. The manifest stores (bits, hashes) next to
   * each sketch, so readers never have to know the build configuration.
   *
-  * The MEMBERSHIP TEST itself is evaluated with codegen'd column
-  * expressions over the manifest rows (element_at + shiftright +
-  * bitwiseAND — see SnapshotTables.readPrunedIn), not with this class:
-  * false positives only KEEP extra files, and the caller's row-level
-  * predicate still applies, so sketch pruning can never change
-  * answers.
+  * The MEMBERSHIP TEST itself is `SnapshotManifests.bloomHitMem`, run
+  * over typed manifest rows on the driver or in a Spark job, not this
+  * class: false positives only KEEP extra files, and the caller's
+  * row-level predicate still applies, so sketch pruning can never
+  * change answers.
   */
 object BloomSketch {
   def words(numBits: Int): Int = (numBits + 63) >>> 6

@@ -210,15 +210,7 @@ private[io] trait SnapshotManifests { self: SnapshotTables =>
     * applies its row-level predicate. Every pruned read applies it, the
     * SQL scan included. Tunable per session (specs set it low to
     * exercise the fallback). */
-  private def maxPrunedFileList: Int =
-    sparkSession.conf.getOption("graft.manifest.maxFileList") match {
-      case None => 10000
-      case Some(raw) => raw.trim.toIntOption match {
-        case Some(n) if n > 0 => n
-        case _ => throw new IllegalArgumentException(
-          s"graft.manifest.maxFileList must be a positive int, got '$raw'")
-      }
-    }
+  private def maxPrunedFileList: Int = intConf("graft.manifest.maxFileList", 10000, 1)
 
   /** Driver-row budget for the planning fast path: a segment manifest
     * at most this many rows is collected once (then LRU-cached — see
@@ -226,38 +218,34 @@ private[io] trait SnapshotManifests { self: SnapshotTables =>
     * aggregate decision on it is pure in-memory work; a bigger
     * manifest is evaluated by the same functions in one Spark job (at
     * that scale the scan being saved dwarfs the planning job). */
-  private def manifestDriverRows: Int =
-    sparkSession.conf.getOption("graft.scan.manifestDriverRows") match {
-      case None => 65536
-      case Some(raw) => raw.trim.toIntOption match {
-        case Some(n) if n >= 0 => n
-        case _ => throw new IllegalArgumentException(
-          s"graft.scan.manifestDriverRows must be a non-negative int, got '$raw'")
-      }
+  private def manifestDriverRows: Int = intConf("graft.scan.manifestDriverRows", 65536, 0)
+
+  /** Session conf `key` as an int of at least `min` (0 or 1). */
+  private def intConf(key: String, default: Int, min: Int): Int =
+    sparkSession.conf.getOption(key).fold(default) { raw =>
+      raw.trim.toIntOption.filter(_ >= min).getOrElse(throw new IllegalArgumentException(
+        s"$key must be a ${if (min > 0) "positive" else "non-negative"} int, got '$raw'"))
     }
 
-  /** The manifest of segment version `v` as read: raw, with the columns
-    * its writer gave it. */
-  private def manifestParquet(table: String, v: Int): DataFrame = {
+  /** The manifest of segment version `v` as read: with the columns its
+    * writer gave it, or in `schema`. */
+  private def manifestParquet(table: String, v: Int,
+      schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame = {
     val mp = manifestPath(table, v)
-    cachedParquet(mp).getOrElse(sparkSession.read.parquet(mp.toString))
+    cachedParquet(mp, schema).getOrElse(sparkSession.read.parquet(mp.toString))
   }
 
-  /** The manifest of segment version `v` as typed rows — a lazy read;
-    * casts normalize the stored types, and columns an older writer did
-    * not write read as absent. */
+  /** The manifest of segment version `v` as typed rows — a lazy read in
+    * the schema the writer writes, so no footer is inferred; a column an
+    * older writer did not write reads as absent. */
   private def manifestFrame(table: String, v: Int): Dataset[SnapshotTables.MRow] = {
     import org.apache.spark.sql.functions.{coalesce, col, lit}
-    val m = manifestParquet(table, v)
-    val has = m.columns.toSet
-    def c(name: String, t: String) = (if (has(name)) col(name) else lit(null)).cast(t)
-    m.select(col("file").cast("string").as("file"), col("column").cast("string").as("column"),
-        c("rows", "long").as("rows"), c("nulls", "long").as("nulls"),
-        c("min_num", "double").as("minNum"), c("max_num", "double").as("maxNum"),
-        c("min_str", "string").as("minStr"), c("max_str", "string").as("maxStr"),
-        c("sketch", "array<bigint>").as("sketch"),
-        coalesce(c("sketch_bits", "long"), lit(0L)).as("sketchBits"),
-        coalesce(c("sketch_hashes", "int"), lit(0)).as("sketchHashes"))
+    manifestParquet(table, v, Some(SnapshotManifests.ReadSchema))
+      .select(col("file"), col("column"), col("rows"), col("nulls"),
+        col("min_num").as("minNum"), col("max_num").as("maxNum"),
+        col("min_str").as("minStr"), col("max_str").as("maxStr"), col("sketch"),
+        coalesce(col("sketch_bits").cast("long"), lit(0L)).as("sketchBits"),
+        coalesce(col("sketch_hashes"), lit(0)).as("sketchHashes"))
       .as[SnapshotTables.MRow](Encoders.product[SnapshotTables.MRow])
   }
 
@@ -283,7 +271,8 @@ private[io] trait SnapshotManifests { self: SnapshotTables =>
           if (taken.isEmpty) SnapshotTables.ManifestMissing
           else if (taken.length > lim) SnapshotTables.ManifestOverBudget
           else SnapshotTables.ManifestRows(taken.toSeq)
-        } catch { case _: Exception => SnapshotTables.ManifestUnreadable } // read whole or declined by every caller: a plain scan's answer
+          // unreadable: every caller reads the segment whole or declines, giving a plain scan's answer
+        } catch { case _: Exception => SnapshotTables.ManifestUnreadable }
       SnapshotTables.manifestCache.synchronized(SnapshotTables.manifestCache.put(key, res))
       res
     }
@@ -680,6 +669,11 @@ private[io] trait SnapshotManifests { self: SnapshotTables =>
   * [[fileSummaries]]). */
 private[io] object SnapshotManifests {
   import SnapshotTables.{ColStats, MRow}
+
+  /** The columns a manifest writer writes, as typed rows read them. */
+  val ReadSchema: org.apache.spark.sql.types.StructType = org.apache.spark.sql.types.StructType.fromDDL(
+    "file STRING, `column` STRING, rows BIGINT, nulls BIGINT, min_num DOUBLE, max_num DOUBLE, " +
+      "min_str STRING, max_str STRING, sketch ARRAY<BIGINT>, sketch_bits INT, sketch_hashes INT")
 
   /** A closed range on one column; an absent endpoint is unbounded.
     * Values are in the manifest's physical unit: strings compare as

@@ -1,7 +1,7 @@
 package graft.io
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 /** Versioned-snapshot tables on plain parquet — the Iceberg write
@@ -97,7 +97,6 @@ final class SnapshotTables(
     s"sketchHashes must be in [1, 8], got $sketchHashes")
 
   import SnapshotTables.{RefFile, VersionMeta}
-  import SnapshotReads.ChainScan
   import SnapshotReads.ChainDir.rowsOf
 
   private[io] def fs(p: Path): FileSystem =

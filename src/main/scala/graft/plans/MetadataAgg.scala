@@ -20,8 +20,9 @@ import org.apache.spark.sql.types._
   * into a manifest read.
   *
   * Honesty rules (inherited from [[SnapshotTables.manifestStatsForScan]]
-  * / [[SnapshotTables.fastCountForScan]] — the same contract
-  * `fastCount`/`manifestAgg` enforce on the Scala API):
+  * / [[SnapshotTables.fastCountForScan]], which share their coverage and
+  * stats functions with `fastCount`/`manifestAgg` on the Scala API —
+  * `SnapshotManifests.rowCount` and `SnapshotManifests.colStats`):
   *  - row counts need every file row-counted by a manifest; merge-on-
   *    read segments and schema-evolved chains never qualify;
   *  - `count(c)` = rows − nulls, both fully covered;
