@@ -76,22 +76,25 @@ private[graft] object AtomicFs {
 
   /** Overwrite a small metadata file WITHOUT a torn-read window: write
     * to a unique sibling temp, then move it over the destination. On
-    * the local FS the move is POSIX-atomic (ATOMIC_MOVE); elsewhere it
+    * the local FS the move is POSIX-atomic (ATOMIC_MOVE), and the temp
+    * is written with java.nio too: Hadoop's checksummed local FS would
+    * give it a `.crc` sidecar the move leaves behind. Elsewhere it
     * degrades to delete+rename — a reader can then briefly see the
     * file absent (and fall back to its documented no-file behavior)
     * but can never see half the content. */
   def replaceSmall(f: FileSystem, p: Path, content: String): Unit = {
     val tmp = new Path(p.getParent, s".${p.getName}.tmp-${java.util.UUID.randomUUID}")
-    val out = f.create(tmp, true)
-    try out.write(content.getBytes("UTF-8"))
-    finally out.close()
     if (f.getScheme == "file") {
-      java.nio.file.Files.move(
-        java.nio.file.Paths.get(tmp.toUri.getPath),
-        java.nio.file.Paths.get(p.toUri.getPath),
+      val local = java.nio.file.Paths.get(tmp.toUri.getPath)
+      java.nio.file.Files.createDirectories(local.getParent)
+      java.nio.file.Files.write(local, content.getBytes("UTF-8"))
+      java.nio.file.Files.move(local, java.nio.file.Paths.get(p.toUri.getPath),
         java.nio.file.StandardCopyOption.ATOMIC_MOVE,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     } else {
+      val out = f.create(tmp, true)
+      try out.write(content.getBytes("UTF-8"))
+      finally out.close()
       if (f.exists(p)) f.delete(p, false)
       if (!f.rename(tmp, p)) {
         f.delete(tmp, false)

@@ -190,9 +190,7 @@ object IcebergExport {
             // partition components, not Spark side-files — they must
             // survive the hidden-component skip (silently skipping them
             // would export an empty table)
-            val hidden = comps.exists(c =>
-              (c.startsWith("_") || c.startsWith(".")) && !(c.startsWith("__p_") && c.contains("=")))
-            if (s.isFile && rel.endsWith(".parquet") && !hidden) {
+            if (s.isFile && rel.endsWith(".parquet") && !SnapshotManifests.hidden(rel)) {
               val parts = comps.init.filter(_.contains("=")).toSeq.map { c =>
                 val i = c.indexOf('=')
                 val col = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils

@@ -40,8 +40,7 @@ private[io] trait SnapshotManifests { self: SnapshotTables =>
       // a racing rename must not leak its files into the manifest
       // (readPruned would then return rows a plain read does not see)
       val rel = s.getPath.toString.stripPrefix(baseStr)
-      val hidden = rel.split('/').exists(c => c.startsWith("_") || c.startsWith("."))
-      if (s.isFile && rel.endsWith(".parquet") && !hidden)
+      if (s.isFile && rel.endsWith(".parquet") && !SnapshotManifests.hidden(rel))
         files += s.getPath.toString
     }
     if (files.isEmpty) return
@@ -551,12 +550,7 @@ private[io] trait SnapshotManifests { self: SnapshotTables =>
           val s = it.next()
           val rel = s.getPath.toString.stripPrefix(baseStr)
           val comps = rel.split('/')
-          // a component carrying '=' is a partition directory — hidden
-          // transforms deliberately spell `__p_…=value` dirs, which
-          // Spark's partition discovery reads despite the underscore
-          val hidden = comps.exists(c =>
-            (c.startsWith("_") || c.startsWith(".")) && !c.contains("="))
-          if (s.isFile && rel.endsWith(".parquet") && !hidden) {
+          if (s.isFile && rel.endsWith(".parquet") && !SnapshotManifests.hidden(rel)) {
             val (isDel, pcomps) = (m.kind, comps.head) match {
               case ("mor_delete", _) => (true, comps.dropRight(1))
               case ("mor_patch" | "mor_revise", "del") => (true, comps.drop(1).dropRight(1))
@@ -669,6 +663,15 @@ private[io] trait SnapshotManifests { self: SnapshotTables =>
   * [[fileSummaries]]). */
 private[io] object SnapshotManifests {
   import SnapshotTables.{ColStats, MRow}
+
+  /** Whether a data file's path under its segment root is hidden from
+    * a read, by Spark's listing rule for every component: a `.` name
+    * (a `.tmp-*` staging dir nested by a racing rename), or a `_` name
+    * that is not a partition directory. Hidden transforms spell their
+    * dirs `__p_<name>=value`, and Spark reads them despite the
+    * underscore. */
+  def hidden(rel: String): Boolean =
+    rel.split('/').exists(c => c.startsWith(".") || (c.startsWith("_") && !c.contains("=")))
 
   /** The columns a manifest writer writes, as typed rows read them. */
   val ReadSchema: org.apache.spark.sql.types.StructType = org.apache.spark.sql.types.StructType.fromDDL(

@@ -416,11 +416,7 @@ final class SnapshotTables(
     val (df1, partitionCols1) = withTableLayout(df, table, partitionCols, applySortOrder)
     commitVersion(
       table,
-      stage = tmp => {
-        val w = df1.write.mode(SaveMode.Overwrite)
-        (if (partitionCols1.nonEmpty) w.partitionBy(partitionCols1: _*) else w)
-          .parquet(tmp.toString)
-      },
+      stage = stageWrite(df1, partitionCols1, _),
       partitionCols1 = partitionCols1,
       schemaJson = df1.schema.json,
       commit = commit,
@@ -492,6 +488,64 @@ final class SnapshotTables(
           s"graft.write.targetFileBytes must be a positive long, got '$raw'")
       }
     }
+
+  /** Stage `df` under `dir`, laid out by `pcols` as Spark's partitioned
+    * writer lays it out. A frame whose top projection binds every
+    * partition column to a non-null literal (a daily load stamped with
+    * its date) holds one partition: it is written without those
+    * columns straight into that partition's directory, so the value
+    * never reaches generated code and a new date compiles no class.
+    * Its rows are observed, and a zero-row write leaves no partition
+    * directory, as the partitioned writer leaves none. Every other
+    * frame takes `partitionBy`. */
+  private def stageWrite(df: DataFrame, pcols: Seq[String], dir: Path): Unit =
+    literalPartition(df, pcols) match {
+      case Some(sub) =>
+        import org.apache.spark.sql.functions.{count, lit}
+        val obs = org.apache.spark.sql.Observation()
+        df.drop(pcols: _*).observe(obs, count(lit(1)).as("rows"))
+          .write.mode(SaveMode.Overwrite).parquet(sub.foldLeft(dir)(new Path(_, _)).toString)
+        if (obs.get("rows") == 0L) {
+          val top = new Path(dir, sub.head)
+          fs(top).delete(top, true)
+          fs(dir).mkdirs(dir)
+        }
+      case None =>
+        val w = df.write.mode(SaveMode.Overwrite)
+        (if (pcols.nonEmpty) w.partitionBy(pcols: _*) else w).parquet(dir.toString)
+    }
+
+  /** The directories (`a=1`, `b=x`) all of `df`'s rows land in under
+    * `partitionBy(pcols)`, when its optimized plan's top projection
+    * (below any `observe`) binds each partition column to a non-null
+    * literal: the name Spark's dynamic writer gives, the value cast to
+    * string in the session time zone. */
+  private def literalPartition(df: DataFrame, pcols: Seq[String]): Option[Seq[String]] = {
+    import org.apache.spark.sql.catalyst.expressions.{Alias, Cast, Literal}
+    import org.apache.spark.sql.catalyst.plans.logical.{CollectMetrics, LogicalPlan, Project}
+    import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StringType, VariantType}
+    def belowMetrics(p: LogicalPlan): LogicalPlan = p match {
+      case c: CollectMetrics => belowMetrics(c.child)
+      case other => other
+    }
+    // partitionBy refuses nested and variant columns; those keep it
+    def scalar(t: DataType): Boolean = t match {
+      case _: StructType | _: ArrayType | _: MapType | _: VariantType => false
+      case _ => true
+    }
+    if (pcols.isEmpty) None
+    else belowMetrics(df.queryExecution.optimizedPlan) match {
+      case Project(list, _) =>
+        val tz = Some(spark.conf.get("spark.sql.session.timeZone"))
+        val dirs = pcols.map(c => list.collectFirst {
+          case Alias(l @ Literal(v, t), name) if name == c && v != null && scalar(t) =>
+            org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.getPartitionPathString(
+              c, Cast(l, StringType, tz).eval().toString)
+        })
+        Option.when(dirs.forall(_.isDefined))(dirs.flatten)
+      case _ => None
+    }
+  }
 
   /** The fenced commit machinery every commit shape shares — full
     * snapshots ([[overwriteTable]]) and delta commits ([[append]],
@@ -928,10 +982,7 @@ final class SnapshotTables(
         val (df1, pcols) = withTableLayout(f, table, Nil)
         val (schema, ofFiles) = deltaSchema(read(table).schema, df1)
         commitVersion(table,
-          stage = tmp => {
-            val w = df1.write.mode(SaveMode.Overwrite)
-            (if (pcols.nonEmpty) w.partitionBy(pcols: _*) else w).parquet(tmp.toString)
-          },
+          stage = stageWrite(df1, pcols, _),
           partitionCols1 = currentPartitionCols(table),
           schemaJson = schema.json,
           commit = VersionMeta(0, "append", baseV, fold = true, schemaOfFiles = ofFiles),
@@ -978,11 +1029,6 @@ final class SnapshotTables(
         manifestStats = mStats, manifestSketch = mSketch)
       ()
     }
-    def layoutWrite(laid: (DataFrame, Seq[String]), dest: Path): Unit = {
-      val (df1, pcols) = laid
-      val w = df1.write.mode(SaveMode.Overwrite)
-      (if (pcols.nonEmpty) w.partitionBy(pcols: _*) else w).parquet(dest.toString)
-    }
 
     if (kinds == Set("append")) {
       val folded = deltas.flatMap(scan.rows(_)).reduceOption(_ unionByName _)
@@ -990,7 +1036,7 @@ final class SnapshotTables(
         case None => false // every segment empty: nothing to write, chain is already trivial
         case Some(f) =>
           val laid = withTableLayout(f, table, Nil)
-          commitFold("append", Nil, Some(laid._1), tmp => layoutWrite(laid, tmp),
+          commitFold("append", Nil, Some(laid._1), stageWrite(laid._1, laid._2, _),
             statsColsFor(table), sketchColsFor(table))
           true
       }
@@ -1032,7 +1078,7 @@ final class SnapshotTables(
       commitFold("mor_revise", kcols, laid.map(_._1),
         tmp => {
           dk.foreach(_.write.mode(SaveMode.Overwrite).parquet(new Path(tmp, "del").toString))
-          laid.foreach(layoutWrite(_, new Path(tmp, "add")))
+          laid.foreach { case (df1, pcols) => stageWrite(df1, pcols, new Path(tmp, "add")) }
         }, Nil, Nil)
       true
     } else if (kinds == Set("mor_patch")) {
@@ -1327,10 +1373,7 @@ final class SnapshotTables(
       else (statsColsFor(table), sketchColsFor(table))
     commitVersion(
       table,
-      stage = tmp => {
-        val w = df1.write.mode(SaveMode.Overwrite)
-        (if (pcols.nonEmpty) w.partitionBy(pcols: _*) else w).parquet(tmp.toString)
-      },
+      stage = stageWrite(df1, pcols, _),
       // record the INHERITED identity layout so the next commit's
       // layout inheritance reads through delta heads unchanged
       partitionCols1 = if (withLayout) pcols else currentPartitionCols(table),

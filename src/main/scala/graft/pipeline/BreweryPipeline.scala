@@ -100,28 +100,30 @@ object BreweryPipeline {
   /** Silver: NDJSON under `bronzeRoot/sys_file_date=<d>/` → conform to the
     * brewery spec → stamp partition date → managed table. Returns rows
     * written, 0 when the emptiness gate fires (reference:
-    * job_silver.py:129,152-154,183-184). */
+    * job_silver.py:129,152-154,183-184).
+    *
+    * The reference counts the day before writing it, twice
+    * (job_silver.py:149,152); here the gate costs no pass of its own.
+    * Every inferred field comes from a record (a malformed line adds
+    * `_corrupt_record`), so a day whose schema has a field has a row;
+    * only a field-less day (blank lines, `[]`, `{}` records) takes a
+    * job to tell. The row count is observed during the write. */
   def runSilver(spark: SparkSession, conf: PipelineConf, date: LocalDate): Long = {
     val prefix = s"${conf.bronzeRoot}/${conf.partitionCol}=$date"
     if (!FsUtils.prefixExists(spark, prefix)) return 0L
 
     val raw = Sources.ndjsonInfer(spark, prefix)
+    if (raw.schema.isEmpty && raw.isEmpty) return 0L
     val conformed = Conform.withPartitionStamp(raw, Schema.brewerySpec, conf.partitionCol, date)
-    // single count via cache — the reference recomputes the scan for each
-    // of its back-to-back counts (job_silver.py:149,152)
-    conformed.cache()
-    val n = conformed.count()
-    if (n > 0) {
-      ensureDatabase(spark, conf.silverTable)
+    ensureDatabase(spark, conf.silverTable)
+    Metrics.observedRows(conformed, s"silver_$date") { df =>
       if (conf.parityOverwrite)
-        conf.format.overwriteTable(conformed, conf.silverTable, Seq(conf.partitionCol))
+        conf.format.overwriteTable(df, conf.silverTable, Seq(conf.partitionCol))
       else {
         createSilverIfAbsent(spark, conf)
-        conf.format.overwritePartitions(conformed, conf.silverTable, Seq(conf.partitionCol))
+        conf.format.overwritePartitions(df, conf.silverTable, Seq(conf.partitionCol))
       }
     }
-    conformed.unpersist()
-    n
   }
 
   private def createSilverIfAbsent(spark: SparkSession, conf: PipelineConf): Unit = {

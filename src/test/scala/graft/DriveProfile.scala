@@ -12,6 +12,17 @@ import scala.collection.mutable
   * queries before touching any code.
   *
   * {{{ sbt "Test/runMain graft.DriveProfile /root/testdata/sf0.1 q176_v3_dv_dml" }}}
+  *
+  * `daily [days]` profiles the paper's daily pipeline instead: it lands
+  * `days` (default 12) consecutive seeded days of ~8,900 brewery
+  * records in 45 NDJSON files and runs [[graft.pipeline.BreweryPipeline.run]]
+  * on each over 3-part snapshot-catalog names, printing per run every
+  * Spark job (start offset, duration, tasks, call site) and the Janino
+  * compiles and compile milliseconds of that run.
+  * With an out dir it also writes the last run's silver write plan
+  * (`silver_write.txt`) and gold query plan (`gold_query.txt`), its
+  * work-dir paths spelled `<work>`.
+  * {{{ sbt "Test/runMain graft.DriveProfile daily 12 plans/out" }}}
   */
 object DriveProfile {
   final case class J(id: Int, site: String, t0: Long) {
@@ -20,7 +31,109 @@ object DriveProfile {
     @volatile var tasks: Int = 0
   }
 
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit =
+    if (args.headOption.contains("daily")) daily(args.lift(1).fold(12)(_.toInt), args.lift(2))
+    else corpus(args)
+
+  /** One day shaped like the benchmark's landed day: 8,800–8,999
+    * records, 200 a file over 3 fetch nodes; a fifth of the files omit
+    * columns, a quarter carry columns the spec drops, and about 1% of
+    * phones and longitudes do not parse. */
+  private def landDay(root: java.nio.file.Path, date: java.time.LocalDate, rng: scala.util.Random): Unit = {
+    val dir = java.nio.file.Files.createDirectories(root.resolve(s"sys_file_date=$date"))
+    val types = Seq("micro", "brewpub", "regional", "large", "nano", "planning", "contract", "closed")
+    val countries = Seq("United States", "Ireland", "England", "Scotland", "South Korea", "Austria")
+    (0 until 8800 + rng.nextInt(200)).grouped(200).zipWithIndex.foreach { case (chunk, page) =>
+      val missing = rng.nextInt(5) == 0
+      val extra = rng.nextInt(4) == 0
+      val lines = chunk.map { i =>
+        val phone = if (rng.nextInt(100) == 0) "not-a-phone" else (2000000000L + rng.nextInt(999999999)).toString
+        val lon = if (rng.nextInt(100) == 0) "n/a" else f"${-125.0 + rng.nextDouble() * 60.0}%.8f"
+        val fields = Seq(
+          "id" -> s"$date-$i", "name" -> s"Brewery ${rng.nextInt(100000)}",
+          "brewery_type" -> types(rng.nextInt(types.length)), "city" -> s"City${rng.nextInt(900)}",
+          "state_province" -> s"State${rng.nextInt(60)}", "postal_code" -> f"${rng.nextInt(99999)}%05d",
+          "country" -> countries(rng.nextInt(countries.length)), "longitude" -> lon,
+          "latitude" -> f"${25.0 + rng.nextDouble() * 24.0}%.8f", "phone" -> phone,
+          "website_url" -> s"http://example.com/b$i", "street" -> s"${rng.nextInt(9999)} Main St") ++
+          (if (missing) Nil else Seq("address_2" -> "", "state" -> s"State${rng.nextInt(60)}")) ++
+          (if (extra) Seq("updated_at" -> s"${date}T00:00:00Z") else Nil)
+        fields.map { case (k, v) => s""""$k":"$v"""" }.mkString("{", ",", "}")
+      }
+      java.nio.file.Files.write(dir.resolve(s"node_${page % 3 + 1}_page_${page + 1}.json"),
+        lines.mkString("\n").getBytes("UTF-8"))
+    }
+  }
+
+  private def daily(days: Int, planDir: Option[String]): Unit = {
+    import graft.pipeline.{BreweryPipeline, PipelineConf}
+    val spark = graft.core.GraftSession.local("graft-profile-daily", 4)
+    spark.sparkContext.setLogLevel("ERROR")
+    val work = java.nio.file.Files.createTempDirectory("graft-daily")
+    Seq("silver", "gold").foreach { cat =>
+      spark.conf.set(s"spark.sql.catalog.$cat", classOf[graft.catalog.SnapshotCatalog].getName)
+      spark.conf.set(s"spark.sql.catalog.$cat.root", work.resolve(s"${cat}_warehouse").toUri.toString)
+    }
+    val bronze = work.resolve("bronze")
+    val conf = PipelineConf(bronzeRoot = bronze.toUri.toString)
+    val rng = new scala.util.Random(1)
+    val jobs = mutable.ArrayBuffer.empty[J]
+    val stageToJob = mutable.Map.empty[Int, J]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.synchronized {
+        val j = J(e.jobId, e.stageInfos.lastOption.map(_.name).getOrElse("?"), e.time)
+        jobs += j
+        e.stageIds.foreach(stageToJob(_) = j)
+      }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = jobs.synchronized {
+        jobs.find(_.id == e.jobId).foreach(_.t1 = e.time)
+      }
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = jobs.synchronized {
+        stageToJob.get(e.stageInfo.stageId).foreach { j =>
+          j.taskTime += e.stageInfo.taskMetrics.executorRunTime
+          j.tasks += e.stageInfo.numTasks
+        }
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val formatted = org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    def planText(qe: org.apache.spark.sql.execution.QueryExecution): String =
+      (s"== Optimized Logical Plan ==\n${qe.optimizedPlan}\n" + qe.explainString(formatted))
+        .replace(work.toUri.toString.stripSuffix("/"), "<work>").replace(work.toString, "<work>")
+    @volatile var silverWrite = ""
+    spark.listenerManager.register(new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        if (qe.optimizedPlan.toString.contains("silver_warehouse")) silverWrite = planText(qe)
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    })
+    (1 to days).foreach { d =>
+      val date = java.time.LocalDate.of(2026, 1, 1).plusDays(d)
+      landDay(bronze, date, rng)
+      jobs.synchronized { jobs.clear(); stageToJob.clear() }
+      val (c0, ms0) = (org.apache.spark.CodegenCache.compiles, org.apache.spark.CodegenCache.compileMillis)
+      val w0 = System.currentTimeMillis()
+      val (silver, gold) = BreweryPipeline.run(spark, conf, date)
+      val wall = System.currentTimeMillis() - w0
+      org.apache.spark.ListenerDrain(spark.sparkContext)
+      val compiles = org.apache.spark.CodegenCache.compiles - c0
+      val compileMs = org.apache.spark.CodegenCache.compileMillis - ms0
+      val js = jobs.synchronized { jobs.toVector }
+      println(f"DAILY run $d%2d $date wall_ms=$wall silver=$silver gold=$gold jobs=${js.size} " +
+        f"tasks=${js.map(_.tasks).sum} compiles=$compiles compile_ms=$compileMs")
+      js.foreach { j =>
+        println(f"  JOB +${j.t0 - w0}%5d ms dur=${math.max(0L, j.t1 - j.t0)}%4d ms tasks=${j.tasks}%2d ${j.site}")
+      }
+    }
+    planDir.foreach { dir =>
+      val out = java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+      val gold = BreweryPipeline.goldQuery(spark, conf, java.time.LocalDate.of(2026, 1, 1).plusDays(days))
+      Seq("silver_write.txt" -> silverWrite, "gold_query.txt" -> planText(gold.queryExecution))
+        .foreach { case (name, text) => java.nio.file.Files.write(out.resolve(name), text.getBytes("UTF-8")) }
+    }
+    spark.stop()
+  }
+
+  private def corpus(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val passes = args.find(_.startsWith("passes=")).map(_.stripPrefix("passes=").toInt).getOrElse(1)
     val names = args.drop(1).filterNot(_.startsWith("passes="))

@@ -51,6 +51,20 @@ class SnapshotManifestsSpec extends SparkSpec {
     assert(t.readPrunedIn("w", "k", Seq(777L)).inputFiles.isEmpty)
   }
 
+  test("a hidden-partitioned table keeps a stats manifest: a pruned read skips files") {
+    val t = newTables()
+    val df = spark.range(0, 4000).toDF("id").withColumn("k", $"id" / 500 cast "long")
+      .repartitionByRange(8, $"id").sortWithinPartitions($"id")
+    t.overwriteTableTransformed(df, "tab", Seq(SnapshotTables.PartitionTransform.bucket(8, "k")),
+      statsCols = Seq("id"))
+    val all = t.read("tab").inputFiles.length
+    val pruned = t.readPruned("tab", "id", 0L, 10L)
+    assert(pruned.inputFiles.length < all, s"${pruned.inputFiles.length} of $all files opened")
+    def got(df: org.apache.spark.sql.DataFrame) =
+      df.where($"id".between(0, 10)).select("id", "k").as[(Long, Long)].collect().toSeq.sorted
+    assert(got(pruned) == got(t.read("tab")) && got(pruned).length == 11)
+  }
+
   test("pruned readers plan like SQL: one job for a cold manifest, none warm") {
     val t = newTables()
     val df = spark.range(0, 4000).toDF("id").withColumn("name", $"id".cast("string"))

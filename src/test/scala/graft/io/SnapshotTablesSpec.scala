@@ -19,6 +19,18 @@ class SnapshotTablesSpec extends SparkSpec {
     assert(t.read("tab").as[(Int, String)].collect().toSet == Set((2, "b"), (3, "c")))
   }
 
+  test("table-property writes leave no temp file or checksum sidecar in metadata/") {
+    val root = java.nio.file.Files.createTempDirectory("graft-snap").toString
+    val t = new SnapshotTables(spark, root)
+    t.overwriteTable(Seq((1L, "a")).toDF("id", "v"), "props")
+    t.setStatsCols("props", Seq("id"))
+    t.setSketchCols("props", Seq("v"))
+    t.setSortOrder("props", Seq("id"))
+    val names = new java.io.File(s"$root/props/metadata").list().toSeq
+    assert(!names.exists(_.contains(".tmp-")), names)
+    assert(t.statsColsFor("props") == Seq("id") && t.sortOrder("props") == Seq("id"))
+  }
+
   test("time travel reads retained predecessors") {
     val t = newTables()
     t.overwriteTable(Seq((1, "a")).toDF("id", "v"), "tab")

@@ -70,6 +70,66 @@ class BreweryPipelineSpec extends SparkSpec {
     assert(!spark.catalog.tableExists(conf.goldTable))
   }
 
+  /** Run one day whose only file holds `lines`, on a fresh snapshot
+    * table pair: the run's result and the versions it committed. */
+  private def runDay(lines: String*): ((Long, Long), Int, Int) = {
+    val root = Files.createTempDirectory("bronze-gate").toString
+    val dir = java.nio.file.Paths.get(s"$root/sys_file_date=$date")
+    Files.createDirectories(dir)
+    Files.write(dir.resolve("node_1_page_1.json"), lines.mkString("\n").getBytes)
+    val snaps = new graft.io.SnapshotTables(spark, Files.createTempDirectory("gate-wh").toString)
+    val conf = PipelineConf(bronzeRoot = root, format = snaps, silverTable = "s", goldTable = "g")
+    (BreweryPipeline.run(spark, conf, date), snaps.currentVersion("s"), snaps.currentVersion("g"))
+  }
+
+  test("emptiness gate: a day of blank lines or of [] records commits nothing and skips gold") {
+    assert(runDay("", "  ", "") == (((0L, 0L), 0, 0)))
+    assert(runDay("[]", "[]") == (((0L, 0L), 0, 0)))
+  }
+
+  test("emptiness gate: {} records and a malformed line are rows, counted as the reference counts them") {
+    // two field-less records: two all-null silver rows, one gold group
+    assert(runDay("{}", "{}") == (((2L, 1L), 1, 1)))
+    assert(runDay("not json at all") == (((1L, 1L), 1, 1)))
+  }
+
+  test("a warm daily run on catalog tables is 6 Spark jobs, with no count and no new class for a new date") {
+    val root = Files.createTempDirectory("bronze-jobs").toString
+    val conf = PipelineConf(bronzeRoot = root,
+      silverTable = "silver.dwjobs.tab_brewery", goldTable = "gold.dwjobs.tab_brewery_summary")
+    val days = (0 until 3).map(i => date.plusDays(10 + i))
+    days.foreach(d => BreweryFixture.land(root, d, rows = 2000))
+    assert(BreweryPipeline.run(spark, conf, days(0)) == ((2000L, 30L)))
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val qel = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        plans.add(qe.optimizedPlan.treeString)
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(qel)
+    val (out, jobs) =
+      try graft.JobCount(spark)(BreweryPipeline.run(spark, conf, days(1)))
+      finally spark.listenerManager.unregister(qel)
+    assert(out == ((2000L, 30L)))
+    assert(jobs.length == 6, jobs)
+    assert(!jobs.exists(_.startsWith("count at BreweryPipeline")), jobs)
+    assert(plans.size >= 2 && !plans.toString.contains("InMemoryRelation"), plans)
+    val c0 = org.apache.spark.CodegenCache.compiles
+    assert(BreweryPipeline.run(spark, conf, days(2)) == ((2000L, 30L)))
+    assert(org.apache.spark.CodegenCache.compiles - c0 == 0L)
+  }
+
+  test("dynamic partition overwrite on catalog tables observes the day's rows on every run") {
+    val root = Files.createTempDirectory("bronze-dyn").toString
+    val conf = PipelineConf(bronzeRoot = root, parityOverwrite = false,
+      silverTable = "silver.dwdyn.tab_brewery", goldTable = "gold.dwdyn.tab_brewery_summary")
+    val days = Seq(date, date.plusDays(1))
+    days.foreach(d => BreweryFixture.land(root, d, rows = 300))
+    days.foreach(d => assert(BreweryPipeline.run(spark, conf, d) == ((300L, 30L))))
+    assert(BreweryPipeline.run(spark, conf, date) == ((300L, 30L)))
+    assert(spark.table(conf.silverTable).count() == 600L)
+  }
+
   test("re-run of same date is idempotent (parity full overwrite)") {
     val root = Files.createTempDirectory("bronze2").toString
     landFixture(root)

@@ -25,4 +25,10 @@ object CodegenCache {
   /** Janino compiles so far in this JVM. */
   def compiles: Long =
     org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  /** Milliseconds those compiles took, summed over the histogram's
+    * reservoir: exact while the JVM has compiled fewer classes than the
+    * reservoir holds (1,028). */
+  def compileMillis: Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getSnapshot.getValues.sum
 }
