@@ -197,18 +197,9 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces with StagingT
     val st = tablesFor(ident.namespace)
     if (st.tableExists(ident.name)) throw new TableAlreadyExistsException(ident)
     val (idCols, derived) = SnapshotCatalog.splitTransforms(partitions)
-    // TBLPROPERTIES ('graft.write.mode'='mor' / sort_by / retention)
-    // parse AND validate BEFORE declareTable: an invalid value must
-    // fail the CREATE with zero side effects, not leave a declared-
-    // but-half-configured table behind
-    val propSetters = SnapshotCatalog.graftPropertySetters(schema, properties)
+    val props = SnapshotCatalog.createProps(st, schema, properties, isNew = true)
     st.declareTable(ident.name, schema, idCols, derived)
-    propSetters.foreach(_(st, ident.name))
-    // the session conf is the CREATE-time layout default for NEW
-    // tables: pin it now so later default-conf writers stay on it
-    if (!properties.containsKey(SnapshotCatalog.CommitLayoutProperty))
-      st.sessionCommitLayoutDefault.foreach(m =>
-        st.setCommitLayout(ident.name, Some(m)))
+    st.setProps(ident.name, props)
     loadTable(ident)
   }
 
@@ -248,20 +239,13 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces with StagingT
       partitions: Array[Transform], properties: util.Map[String, String],
       existedBefore: Boolean): StagedTable = {
     val (idCols, derived) = SnapshotCatalog.splitTransforms(partitions)
-    // TBLPROPERTIES apply on the CTAS path too — validated BEFORE the
-    // (re-)declaration and applied before the staged data write, so
-    // the very first commit already honors them and a bad value fails
-    // the statement with no side effects
-    val propSetters = SnapshotCatalog.graftPropertySetters(schema, properties)
+    // TBLPROPERTIES apply on the CTAS path too — applied before the
+    // staged data write, so the very first commit already honors them
+    val props = SnapshotCatalog.createProps(st, schema, properties, isNew = !existedBefore)
     // re-declare schema + partitioning (REPLACE may change both; a
     // stale transform spec is cleared by declareTable)
     st.declareTable(ident.name, schema, idCols, derived)
-    propSetters.foreach(_(st, ident.name))
-    // CREATE-time layout default for NEW tables only — a REPLACE on a
-    // pinned table must not re-derive the pin from this session's conf
-    if (!existedBefore && !properties.containsKey(SnapshotCatalog.CommitLayoutProperty))
-      st.sessionCommitLayoutDefault.foreach(m =>
-        st.setCommitLayout(ident.name, Some(m)))
+    st.setProps(ident.name, props)
     val base = st.currentVersion(ident.name)
     val inner = lake match {
       case Some(lc) => new SnapshotTableV2(fullName(ident), st, ident.name, base,
@@ -295,7 +279,16 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces with StagingT
     val pcols = if (st.persistedTransforms(t).nonEmpty) Nil else st.currentPartitionCols(t)
     def refusePartition(c: String): Unit =
       require(!st.currentPartitionCols(t).contains(c), s"cannot alter partition column '$c'")
-    changes.foreach {
+    // SET/UNSET TBLPROPERTIES of graft's keys (UNSET resets to the
+    // default): every value parses, and names only real columns, before
+    // any of them is written
+    val keys = SnapshotTables.propKeys
+    val propValue: PartialFunction[TableChange, (String, Option[String])] = {
+      case set: TableChange.SetProperty if keys.contains(set.property) => set.property -> Some(set.value)
+      case rm: TableChange.RemoveProperty if keys.contains(rm.property) => rm.property -> None
+    }
+    val props = SnapshotTables.propChanges(changes.collect(propValue).toMap, st.read(t).columns.toSeq)
+    changes.filterNot(propValue.isDefinedAt).foreach {
       case add: TableChange.AddColumn =>
         require(add.fieldNames.length == 1,
           s"only top-level ADD COLUMN is supported, got ${add.fieldNames.mkString(".")}")
@@ -316,45 +309,14 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces with StagingT
         require(!cur.columns.contains(ren.newName), s"column '${ren.newName}' already exists")
         st.overwriteTable(cur.select(cur.columns.toSeq.map(c =>
           if (c == from) col(c).as(ren.newName) else col(c)): _*), t, pcols)
-      case set: TableChange.SetProperty if set.property == SnapshotCatalog.WriteModeProperty =>
-        st.setWriteMode(t, set.value)
-      case set: TableChange.SetProperty if set.property == SnapshotCatalog.SortByProperty =>
-        st.setSortOrder(t, set.value.split(',').toSeq.map(_.trim).filter(_.nonEmpty))
-      case set: TableChange.SetProperty if set.property == SnapshotCatalog.RetentionProperty =>
-        st.setRetention(t,
-          if (set.value.trim.isEmpty) None else Some(set.value.trim.toIntOption.getOrElse(
-            throw new IllegalArgumentException(
-              s"${SnapshotCatalog.RetentionProperty} must be a non-negative int, got '${set.value}'"))))
-      // UNSET TBLPROPERTIES: each graft property resets to its default
-      case rm: TableChange.RemoveProperty if rm.property == SnapshotCatalog.WriteModeProperty =>
-        st.setWriteMode(t, "cow")
-      case rm: TableChange.RemoveProperty if rm.property == SnapshotCatalog.SortByProperty =>
-        st.setSortOrder(t, Nil)
-      case rm: TableChange.RemoveProperty if rm.property == SnapshotCatalog.RetentionProperty =>
-        st.setRetention(t, None)
-      case set: TableChange.SetProperty if set.property == SnapshotCatalog.CommitLayoutProperty =>
-        st.setCommitLayout(t, Some(set.value)) // validates; raises with zero side effects
-      case rm: TableChange.RemoveProperty if rm.property == SnapshotCatalog.CommitLayoutProperty =>
-        st.setCommitLayout(t, None) // unpin: back to session-conf-governed
-      case set: TableChange.SetProperty if set.property == SnapshotCatalog.StatsColsProperty =>
-        st.setStatsCols(t, set.value.split(',').toSeq.map(_.trim).filter(_.nonEmpty))
-      case rm: TableChange.RemoveProperty if rm.property == SnapshotCatalog.StatsColsProperty =>
-        st.setStatsCols(t, Nil)
-      case set: TableChange.SetProperty if set.property == SnapshotCatalog.SketchColsProperty =>
-        st.setSketchCols(t, set.value.split(',').toSeq.map(_.trim).filter(_.nonEmpty))
-      case rm: TableChange.RemoveProperty if rm.property == SnapshotCatalog.SketchColsProperty =>
-        st.setSketchCols(t, Nil)
       case other =>
         throw new UnsupportedOperationException(
           s"unsupported ALTER TABLE change ${other.getClass.getSimpleName} — " +
             "supported: ADD/DROP/RENAME top-level columns, " +
-            s"SET TBLPROPERTIES ('${SnapshotCatalog.WriteModeProperty}', " +
-            s"'${SnapshotCatalog.SortByProperty}', " +
-            s"'${SnapshotCatalog.CommitLayoutProperty}', " +
-            s"'${SnapshotCatalog.StatsColsProperty}', " +
-            s"'${SnapshotCatalog.SketchColsProperty}'); " +
+            s"SET/UNSET TBLPROPERTIES (${keys.map(k => s"'$k'").mkString(", ")}); " +
             "type changes never coerce silently")
     }
+    st.setProps(t, props)
     // log-governed: ALTER publishes through like any other SQL write —
     // without this the evolved version would stay invisible to log
     // readers until the next published write
@@ -513,93 +475,22 @@ private final class StagedSnapshotTable(
 
 object SnapshotCatalog {
 
-  /** TBLPROPERTIES key selecting the row-level DML strategy: "cow"
-    * (default, rewrite) or "mor" (merge-on-read patch commits). */
-  val WriteModeProperty = "graft.write.mode"
-
-  /** TBLPROPERTIES key for the standing WRITE SORT ORDER (comma-
-    * separated column list): every commit sorts within write tasks on
-    * these columns so per-file stats stay tight ([[graft.io
-    * .SnapshotTables.sortOrder]]). */
-  val SortByProperty = "graft.write.sort_by"
-
-  /** TBLPROPERTIES key for the per-table RETENTION window (predecessor
-    * versions kept behind the head; overrides the store default —
-    * Iceberg keeps expiry policy as table properties too). '' clears
-    * the override. */
-  val RetentionProperty = "graft.retention.versions"
-
-  /** TBLPROPERTIES key pinning the table's COMMIT LAYOUT: "rename"
-    * (stage-then-rename) or "direct" (write-once pool files; the
-    * metadata CAS is the whole commit — what object stores need,
-    * where rename is a server-side copy). Pinned in table metadata so
-    * a default-conf writer cannot silently revert an object-store
-    * table to O(data) rename commits; unpinned tables follow the
-    * `graft.commit.layout` session conf (which also serves as the
-    * CREATE-time default for new tables). Iceberg likewise pins
-    * format behavior in table metadata, not writer configuration. */
-  val CommitLayoutProperty = "graft.commit.layout"
-
-  /** TBLPROPERTIES key for the standing STATS COLUMNS (comma-separated
-    * list): every data commit maintains a per-file [min,max,nulls,rows]
-    * manifest over them, which range predicates skip files against —
-    * both the Scala pruned reads and SQL scan planning
-    * ([[graft.plans.ScanPruneRule]]). Iceberg's column-bounds-in-
-    * manifests, as declarable table metadata. */
-  val StatsColsProperty = "graft.stats.columns"
-
-  /** TBLPROPERTIES key for the standing SKETCH COLUMNS (comma-separated
-    * list): per-file Bloom membership sketches maintained alongside
-    * the range stats — the point-lookup half of file skipping (`col =
-    * v` / `col IN (...)` probes skip files whose sketch never saw the
-    * value, where [min,max] can't). */
-  val SketchColsProperty = "graft.sketch.columns"
-
-  /** Parse AND validate the graft TBLPROPERTIES into setter closures.
-    * Validation is eager — the caller runs this BEFORE declareTable, so
-    * an invalid property value (a bad write mode, a non-numeric
-    * retention, a sort column the schema lacks) fails the statement
-    * before any on-disk side effect. The returned closures only run
-    * pre-validated values. */
-  private[graft] def graftPropertySetters(schema: StructType,
-      properties: util.Map[String, String]): Seq[(SnapshotTables, String) => Unit] = {
-    val setters = Seq.newBuilder[(SnapshotTables, String) => Unit]
-    Option(properties.get(WriteModeProperty)).foreach { m =>
-      require(m == "cow" || m == "mor",
-        s"$WriteModeProperty must be 'cow' or 'mor', got '$m'")
-      setters += ((st, t) => st.setWriteMode(t, m))
-    }
-    Option(properties.get(SortByProperty)).foreach { s =>
-      val cols = s.split(',').toSeq.map(_.trim).filter(_.nonEmpty)
-      cols.foreach(c => require(schema.fieldNames.contains(c),
-        s"$SortByProperty column '$c' is not a column of the table schema"))
-      setters += ((st, t) => st.setSortOrder(t, cols))
-    }
-    Option(properties.get(RetentionProperty)).foreach { r =>
-      val v =
-        if (r.trim.isEmpty) None
-        else Some(r.trim.toIntOption.filter(_ >= 0).getOrElse(
-          throw new IllegalArgumentException(
-            s"$RetentionProperty must be a non-negative int, got '$r'")))
-      setters += ((st, t) => st.setRetention(t, v))
-    }
-    Option(properties.get(CommitLayoutProperty)).foreach { l =>
-      require(l.trim == "rename" || l.trim == "direct",
-        s"$CommitLayoutProperty must be 'rename' or 'direct', got '$l'")
-      setters += ((st, t) => st.setCommitLayout(t, Some(l.trim)))
-    }
-    Seq(StatsColsProperty -> ((st: SnapshotTables, t: String, cols: Seq[String]) =>
-          st.setStatsCols(t, cols)),
-        SketchColsProperty -> ((st: SnapshotTables, t: String, cols: Seq[String]) =>
-          st.setSketchCols(t, cols))).foreach { case (key, set) =>
-      Option(properties.get(key)).foreach { s =>
-        val cols = s.split(',').toSeq.map(_.trim).filter(_.nonEmpty)
-        cols.foreach(c => require(schema.fieldNames.contains(c),
-          s"$key column '$c' is not a column of the table schema"))
-        setters += ((st, t) => set(st, t, cols))
-      }
-    }
-    setters.result()
+  /** CREATE / CTAS / REPLACE TBLPROPERTIES as validated property
+    * changes — taken BEFORE the table is (re-)declared, so an invalid
+    * value (a bad write mode, a non-numeric retention, a column the
+    * schema lacks) fails the statement with no on-disk side effect. The
+    * session conf is the CREATE-time layout default: a NEW table that
+    * names no layout pins the session's, so later default-conf writers
+    * stay on it; a REPLACE keeps its table's pin. */
+  private[graft] def createProps(st: SnapshotTables, schema: StructType,
+      properties: util.Map[String, String], isNew: Boolean): Seq[SnapshotTables.PropChange[_]] = {
+    import scala.jdk.CollectionConverters._
+    val declared = properties.asScala.toMap.map { case (k, v) => k -> Option(v) }
+    val layoutKey = SnapshotTables.CommitLayout.key.get
+    val sessionPin =
+      if (isNew && !declared.contains(layoutKey)) st.sessionCommitLayoutDefault.map(m => layoutKey -> Option(m))
+      else None
+    SnapshotTables.propChanges(declared ++ sessionPin, schema.fieldNames.toSeq)
   }
 
   /** V2 partition transforms → the snapshot layer's vocabulary:

@@ -95,18 +95,7 @@ final class SnapshotTableV2(
     val m = new util.HashMap[String, String]()
     m.put("provider", "graft-snapshots")
     m.put("version", version.toString)
-    m.put(SnapshotCatalog.WriteModeProperty, st.writeMode(table))
-    val so = st.sortOrder(table)
-    if (so.nonEmpty) m.put(SnapshotCatalog.SortByProperty, so.mkString(","))
-    m.put(SnapshotCatalog.RetentionProperty, st.retentionFor(table).toString)
-    // pinned layout only — an unpinned table intentionally reads the
-    // writer session's conf, which SHOW TBLPROPERTIES must not freeze
-    st.pinnedCommitLayout(table).foreach(l =>
-      m.put(SnapshotCatalog.CommitLayoutProperty, l))
-    val sc = st.statsColsFor(table)
-    if (sc.nonEmpty) m.put(SnapshotCatalog.StatsColsProperty, sc.mkString(","))
-    val kc = st.sketchColsFor(table)
-    if (kc.nonEmpty) m.put(SnapshotCatalog.SketchColsProperty, kc.mkString(","))
+    st.tableProperties(table).foreach { case (k, v) => m.put(k, v) }
     m
   }
 

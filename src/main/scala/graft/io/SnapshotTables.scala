@@ -78,7 +78,7 @@ import org.apache.spark.sql.types.StructType
 final class SnapshotTables(
     spark: SparkSession,
     root: String,
-    previousVersionsMax: Int = 10,
+    private val previousVersionsMax: Int = 10,
     orphanGraceMs: Long = 60000L,
     stagingGraceMs: Long = 3600000L,
     heartbeatMs: Long = 15000L,
@@ -96,7 +96,8 @@ final class SnapshotTables(
   require(sketchHashes >= 1 && sketchHashes <= 8,
     s"sketchHashes must be in [1, 8], got $sketchHashes")
 
-  import SnapshotTables.{RefFile, VersionMeta}
+  import SnapshotTables.{CommitLayout, Prop, PropChange, Props, RefFile, Retention, SketchCols,
+    SortOrder, StatsCols, Transforms, VersionMeta, WriteMode}
   import SnapshotReads.ChainDir.rowsOf
 
   private[io] def fs(p: Path): FileSystem =
@@ -115,15 +116,59 @@ final class SnapshotTables(
   private def dataPoolDir(table: String): Path =
     dataPoolRoot.map(new Path(_)).getOrElse(new Path(tableDir(table), "data"))
 
-  private def commitLayoutPath(table: String): Path =
-    new Path(metaDir(table), "commit_layout")
-
-  private def validatedLayout(raw: String): String = {
-    val m = raw.trim
-    require(m == "rename" || m == "direct",
-      s"graft.commit.layout must be 'rename' or 'direct', got '$raw'")
-    m
+  /** Standing property `p` of `table` as its sidecar file holds it;
+    * None when the file is absent. A file that does not parse throws an
+    * IllegalStateException naming it. */
+  private def prop[T](table: String, p: Prop[T]): Option[T] = {
+    val f = new Path(metaDir(table), p.file)
+    if (!fs(f).exists(f)) None
+    else try Some(p.parse(readSmallFile(f)))
+    catch { case e: IllegalArgumentException =>
+      throw new IllegalStateException(s"unreadable table property file $f: ${e.getMessage}", e) }
   }
+
+  /** Replace `p`'s sidecar file with `v` rendered, or delete it when `v`
+    * is None or renders empty (an empty column list is no list). */
+  private def setProp[T](table: String, p: Prop[T], v: Option[T]): Unit = {
+    val f = new Path(metaDir(table), p.file)
+    v.map(p.render).filter(_.nonEmpty) match {
+      case Some(text) => replaceSmallFile(f, text)
+      case None => if (fs(f).exists(f)) fs(f).delete(f, false)
+    }
+  }
+
+  /** `p`'s value on `table`: its file's, else the list's default. */
+  private def setting[T](table: String, p: Prop[T]): Option[T] =
+    prop(table, p).orElse(p.default(this))
+
+  /** Set (or with None clear) `p` after validating `v`: it re-parses and
+    * every column it names is a column of the table. An invalid value
+    * raises with no on-disk side effect. Properties are metadata-only:
+    * each applies from the next commit on. */
+  private def setValid[T](table: String, p: Prop[T], v: Option[T]): Unit =
+    setProp(table, p, v.map(x => p.valid(p.render(x), tableColumns(table))))
+
+  /** Write property changes already validated by
+    * [[SnapshotTables.propChanges]]. */
+  private[graft] def setProps(table: String, changes: Seq[PropChange[_]]): Unit =
+    changes.foreach { case c: PropChange[t] => setProp(table, c.p, c.value) }
+
+  /** The properties among `ps` that `table` has a file for, as changes
+    * that set them on another table (see [[setProps]]). */
+  private def propsOf(ps: Seq[Prop[_]], table: String): Seq[PropChange[_]] =
+    ps.flatMap { case p: Prop[t] => prop(table, p).map(v => PropChange(p, Some(v))) }
+
+  /** The graft TBLPROPERTIES SHOW TBLPROPERTIES lists: every keyed
+    * property whose value (the file's, else its default) renders
+    * non-empty. */
+  private[graft] def tableProperties(table: String): Seq[(String, String)] = {
+    def shown[T](p: Prop[T]) = setting(table, p).map(p.render).filter(_.nonEmpty)
+    Props.flatMap(p => p.key.flatMap(k => shown(p).map(k -> _)))
+  }
+
+  private def tableColumns(table: String): Seq[String] =
+    if (currentVersion(table) > 0) read(table).columns.toSeq
+    else declaredSchema(table).map(_.fieldNames.toSeq).getOrElse(Nil)
 
   /** The table's standing commit layout — "rename" (default: stage
     * under `.tmp-*`, rename into the version line after the CAS) or
@@ -136,36 +181,24 @@ final class SnapshotTables(
     * store vs a rename-capable FS) is a property of the TABLE, and a
     * default-conf writer touching a pinned-direct 100 TB table must
     * not silently revert it to O(data) rename commits. */
-  def commitLayoutFor(table: String): String = {
-    val p = commitLayoutPath(table)
-    if (fs(p).exists(p)) validatedLayout(readSmallFile(p))
-    else spark.conf.getOption("graft.commit.layout")
-      .map(validatedLayout).getOrElse("rename")
-  }
+  def commitLayoutFor(table: String): String =
+    pinnedCommitLayout(table).orElse(sessionCommitLayoutDefault).getOrElse("rename")
 
   /** The session conf's layout, validated, if set — what catalog
     * CREATE pins onto new tables that gave no explicit TBLPROPERTY. */
   def sessionCommitLayoutDefault: Option[String] =
-    spark.conf.getOption("graft.commit.layout").map(validatedLayout)
+    spark.conf.getOption("graft.commit.layout").map(CommitLayout.valid(_, Nil))
 
   /** The table's pinned layout, if any — None means "follow the
     * session conf" (the pre-pin behavior). */
-  def pinnedCommitLayout(table: String): Option[String] = {
-    val p = commitLayoutPath(table)
-    if (fs(p).exists(p)) Some(validatedLayout(readSmallFile(p))) else None
-  }
+  def pinnedCommitLayout(table: String): Option[String] = prop(table, CommitLayout)
 
-  /** Pin (or with None unpin) the table's commit layout. Validation is
-    * eager and the write is all-or-nothing: an invalid value raises
-    * with zero on-disk side effects. Metadata-only — existing versions
-    * keep the layout their metas record (metas are self-describing, so
-    * mixing layouts across a table's history is always safe). */
-  def setCommitLayout(table: String, mode: Option[String]): Unit = mode match {
-    case Some(m) => replaceSmallFile(commitLayoutPath(table), validatedLayout(m))
-    case None =>
-      val p = commitLayoutPath(table)
-      if (fs(p).exists(p)) fs(p).delete(p, false)
-  }
+  /** Pin (or with None unpin) the table's commit layout. Metadata-only
+    * — existing versions keep the layout their metas record (metas are
+    * self-describing, so mixing layouts across a table's history is
+    * always safe). */
+  def setCommitLayout(table: String, mode: Option[String]): Unit =
+    setValid(table, CommitLayout, mode)
 
   private def metaPath(table: String, v: Int) = new Path(metaDir(table), f"v$v%05d.json")
 
@@ -390,18 +423,8 @@ final class SnapshotTables(
     // race loser must not overwrite the table's stats columns) and
     // atomically (see below), so a concurrent reader never sees a torn
     // column list.
-    val effectiveStats =
-      if (statsCols.nonEmpty) statsCols
-      else {
-        val p = statsColsPath(table)
-        if (fs(p).exists(p)) readSmallFile(p).split(',').toSeq.filter(_.nonEmpty) else Nil
-      }
-    val effectiveSketch =
-      if (sketchCols.nonEmpty) sketchCols
-      else {
-        val p = sketchColsPath(table)
-        if (fs(p).exists(p)) readSmallFile(p).split(',').toSeq.filter(_.nonEmpty) else Nil
-      }
+    val effectiveStats = if (statsCols.nonEmpty) statsCols else statsColsFor(table)
+    val effectiveSketch = if (sketchCols.nonEmpty) sketchCols else sketchColsFor(table)
     // A hidden-partitioned table re-derives its layout on every plain
     // commit: DML rewrites (merge/delete/compact/optimize) route
     // through here with no partition columns, and without this the
@@ -422,8 +445,8 @@ final class SnapshotTables(
       commit = commit,
       expectedNext = expectedNext,
       afterWin = () => {
-        if (statsCols.nonEmpty) replaceSmallFile(statsColsPath(table), statsCols.mkString(","))
-        if (sketchCols.nonEmpty) replaceSmallFile(sketchColsPath(table), sketchCols.mkString(","))
+        if (statsCols.nonEmpty) setProp(table, StatsCols, Some(statsCols))
+        if (sketchCols.nonEmpty) setProp(table, SketchCols, Some(sketchCols))
       },
       manifestStats = effectiveStats,
       manifestSketch = effectiveSketch)
@@ -440,7 +463,7 @@ final class SnapshotTables(
     * effective partition columns). */
   private def withTableLayout(df: DataFrame, table: String,
       partitionCols: Seq[String], applySortOrder: Boolean = true): (DataFrame, Seq[String]) = {
-    val transforms = if (partitionCols.isEmpty) effectiveTransforms(table) else Nil
+    val transforms = if (partitionCols.isEmpty) persistedTransforms(table) else Nil
     val (df1, pcols) =
       if (transforms.isEmpty)
         (df, if (partitionCols.nonEmpty) partitionCols
@@ -1446,7 +1469,7 @@ final class SnapshotTables(
     // every later PLAIN commit re-derives the layout from it, so
     // merge/delete/compact/optimize keep the hidden partitioning
     // without the caller re-threading the transforms
-    replaceSmallFile(transformSpecPath(table), SnapshotTables.PartitionTransform.formatSpec(transforms))
+    setProp(table, Transforms, Some(transforms))
   }
 
   /** PARTITION-SPEC EVOLUTION (Iceberg's evolve-partitioning, a
@@ -1465,25 +1488,8 @@ final class SnapshotTables(
     * table's current columns so a typo fails here, not at the next
     * commit. */
   def evolvePartitioning(table: String,
-      transforms: Seq[SnapshotTables.PartitionTransform]): Unit = {
-    val cols: Seq[String] =
-      if (currentVersion(table) > 0) read(table).columns.toSeq
-      else declaredSchema(table).map(_.fieldNames.toSeq).getOrElse(Nil)
-    transforms.foreach { t =>
-      require(cols.isEmpty || cols.contains(t.srcCol),
-        s"transform source column '${t.srcCol}' is not a column of $table " +
-          s"(have: ${cols.mkString(", ")})")
-    }
-    require(transforms.map(_.name).distinct.length == transforms.length,
-      s"duplicate transform names in ${transforms.map(_.name).mkString(", ")}")
-    if (transforms.nonEmpty)
-      replaceSmallFile(transformSpecPath(table),
-        SnapshotTables.PartitionTransform.formatSpec(transforms))
-    else {
-      val p = transformSpecPath(table)
-      if (fs(p).exists(p)) fs(p).delete(p, false)
-    }
-  }
+      transforms: Seq[SnapshotTables.PartitionTransform]): Unit =
+    setValid(table, Transforms, Some(transforms))
 
   /** ROLLBACK: re-commit a retained version's content as the NEW
     * current version (Iceberg's rollback semantics on a forward-only
@@ -1802,22 +1808,16 @@ final class SnapshotTables(
     requireBranchName(branch)
     val base = currentVersion(table)
     require(base > 0, s"table $table has no committed version to branch from")
+    val inherited = propsOf(SnapshotTables.ForkedProps, table)
     if (!createExclusive(refPath(table, branch), RefFile.render("base", base)))
       throw new IllegalStateException(s"branch '$branch' already exists on table '$table'")
-    // Table properties cross the fork seam: seed the branch's
-    // stats/sketch columns and hidden-partition transform spec from
-    // main's, so branch commits keep maintaining the same manifests
-    // and directory layout main does (without this, a branch commit on
-    // a stats-maintained or hidden-partitioned table would silently
-    // drop the manifest and flatten the layout).
-    val bt = branchTables(table)
-    Seq(statsColsPath(table) -> bt.statsColsPath(branch),
-        sketchColsPath(table) -> bt.sketchColsPath(branch),
-        transformSpecPath(table) -> bt.transformSpecPath(branch),
-        writeModePath(table) -> bt.writeModePath(branch),
-        commitLayoutPath(table) -> bt.commitLayoutPath(branch))
-      .foreach { case (src, dst) =>
-        if (fs(src).exists(src)) replaceSmallFile(dst, readSmallFile(src)) }
+    // Table properties cross the fork seam: the branch starts with
+    // main's (SnapshotTables.ForkedProps), so branch commits keep the
+    // manifests, directory layout, sort order, DML strategy and commit
+    // layout main has (without this, a branch commit on a sorted,
+    // stats-maintained or hidden-partitioned table would silently stage
+    // unsorted files, drop the manifest and flatten the layout).
+    branchTables(table).setProps(branch, inherited)
   }
 
   /** The main version the branch forked from. */
@@ -1988,6 +1988,8 @@ final class SnapshotTables(
     val bt = branchTables(table)
     val bv0 = bt.currentVersion(branch)
     require(bv0 > 0, s"branch '$branch' has no commits to publish")
+    // read before the commit: once it lands, nothing may fail publish
+    val published = bt.propsOf(SnapshotTables.PublishedProps, branch)
     // A delta-headed branch materializes ON THE BRANCH first: publish
     // moves ONE snapshot directory into main's line, and a delta dir
     // alone is meaningless without its chain (whose base lives in the
@@ -2031,17 +2033,13 @@ final class SnapshotTables(
     }
     val bmf = bt.manifestPath(branch, bv)
     if (fs(bmf).exists(bmf)) fs(bmf).rename(bmf, manifestPath(table, next))
-    // Properties cross the publish seam too: stats/sketch columns and
-    // the transform spec the audited branch carried (seeded at fork,
-    // possibly changed by branch commits) become main's, so every
-    // later main commit keeps maintaining them — the published
-    // version's manifest and layout stay live, not a one-off.
-    Seq(bt.statsColsPath(branch) -> statsColsPath(table),
-        bt.sketchColsPath(branch) -> sketchColsPath(table),
-        bt.transformSpecPath(branch) -> transformSpecPath(table),
-        bt.writeModePath(branch) -> writeModePath(table))
-      .foreach { case (src, dst) =>
-        if (fs(src).exists(src)) replaceSmallFile(dst, readSmallFile(src)) }
+    // Properties cross the publish seam too: stats/sketch columns, the
+    // transform spec and the write mode the audited branch carried
+    // (seeded at fork, possibly changed by branch commits) become
+    // main's (SnapshotTables.PublishedProps), so every later main
+    // commit keeps maintaining them — the published version's manifest
+    // and layout stay live, not a one-off.
+    setProps(table, published)
     advancePointer(table, next)
     expire(table, next)
     dropBranch(table, branch)
@@ -2062,36 +2060,15 @@ final class SnapshotTables(
     }.toSet ++
       tags(table).map(_._2)
 
-  private def statsColsPath(table: String): Path =
-    new Path(metaDir(table), "stats_cols")
-
-  private def sketchColsPath(table: String): Path =
-    new Path(metaDir(table), "sketch_cols")
-
-  private def transformSpecPath(table: String): Path =
-    new Path(metaDir(table), "partition_transforms")
-
-  private def writeModePath(table: String): Path =
-    new Path(metaDir(table), "write_mode")
-
   /** The table's standing row-level-DML strategy — "cow" (default:
     * DELETE/UPDATE rewrite into a full snapshot) or "mor" (they commit
     * O(changed) patch versions, [[deleteWhereMor]]/[[updateMor]]). A
     * table property like stats/sketch columns: SQL DML through the
     * catalog consults it, so `ALTER`-ing a 100 TB table to "mor" flips
     * every later DELETE/UPDATE from O(table) to O(changed) writes. */
-  def writeMode(table: String): String = {
-    val p = writeModePath(table)
-    if (fs(p).exists(p)) readSmallFile(p).trim else "cow"
-  }
+  def writeMode(table: String): String = setting(table, WriteMode).get
 
-  def setWriteMode(table: String, mode: String): Unit = {
-    require(mode == "cow" || mode == "mor", s"write mode must be 'cow' or 'mor', got '$mode'")
-    replaceSmallFile(writeModePath(table), mode)
-  }
-
-  private def sortOrderPath(table: String): Path =
-    new Path(metaDir(table), "sort_order")
+  def setWriteMode(table: String, mode: String): Unit = setValid(table, WriteMode, Some(mode))
 
   /** The table's standing WRITE SORT ORDER (Iceberg's sort-order table
     * property): columns every data-staging commit sorts by WITHIN each
@@ -2103,10 +2080,7 @@ final class SnapshotTables(
     * all keep the property — the difference between a streaming
     * append chain whose files prune and one whose files all intersect
     * every probe. */
-  def sortOrder(table: String): Seq[String] = {
-    val p = sortOrderPath(table)
-    if (fs(p).exists(p)) readSmallFile(p).split(',').toSeq.map(_.trim).filter(_.nonEmpty) else Nil
-  }
+  def sortOrder(table: String): Seq[String] = prop(table, SortOrder).getOrElse(Nil)
 
   /** The table's standing STATS COLUMNS — the columns every data
     * commit writes a per-file [min,max,nulls,rows] manifest over
@@ -2114,73 +2088,27 @@ final class SnapshotTables(
     * Persisted table metadata: set once (TBLPROPERTY
     * `graft.stats.columns`, or any commit's explicit `statsCols`),
     * every later commit keeps maintaining the manifest. */
-  def statsColsFor(table: String): Seq[String] = {
-    val p = statsColsPath(table)
-    if (fs(p).exists(p)) readSmallFile(p).split(',').toSeq.map(_.trim).filter(_.nonEmpty) else Nil
-  }
+  def statsColsFor(table: String): Seq[String] = prop(table, StatsCols).getOrElse(Nil)
 
   /** Set (or with Nil clear) the standing stats columns. Validated
-    * when the schema is known; applies to every LATER commit — same
-    * metadata-only contract as [[setSortOrder]] (existing versions
-    * keep whatever manifest they committed with). */
-  def setStatsCols(table: String, cols: Seq[String]): Unit = {
-    validateTableColumns(table, cols, "stats")
-    if (cols.nonEmpty) replaceSmallFile(statsColsPath(table), cols.mkString(","))
-    else {
-      val p = statsColsPath(table)
-      if (fs(p).exists(p)) fs(p).delete(p, false)
-    }
-  }
+    * when the schema is known; applies to every LATER commit (existing
+    * versions keep whatever manifest they committed with). */
+  def setStatsCols(table: String, cols: Seq[String]): Unit = setValid(table, StatsCols, Some(cols))
 
   /** The table's standing SKETCH COLUMNS — per-file Bloom membership
     * sketches maintained alongside the range stats, the point-lookup
     * half of file skipping ([[readPrunedIn]]). */
-  def sketchColsFor(table: String): Seq[String] = {
-    val p = sketchColsPath(table)
-    if (fs(p).exists(p)) readSmallFile(p).split(',').toSeq.map(_.trim).filter(_.nonEmpty) else Nil
-  }
+  def sketchColsFor(table: String): Seq[String] = prop(table, SketchCols).getOrElse(Nil)
 
   /** Set (or with Nil clear) the standing sketch columns — same
     * contract as [[setStatsCols]]. */
-  def setSketchCols(table: String, cols: Seq[String]): Unit = {
-    validateTableColumns(table, cols, "sketch")
-    if (cols.nonEmpty) replaceSmallFile(sketchColsPath(table), cols.mkString(","))
-    else {
-      val p = sketchColsPath(table)
-      if (fs(p).exists(p)) fs(p).delete(p, false)
-    }
-  }
-
-  private def validateTableColumns(table: String, cols: Seq[String], what: String): Unit = {
-    val have: Seq[String] =
-      if (currentVersion(table) > 0) read(table).columns.toSeq
-      else declaredSchema(table).map(_.fieldNames.toSeq).getOrElse(Nil)
-    cols.foreach(c => require(have.isEmpty || have.contains(c),
-      s"$what column '$c' is not a column of $table (have: ${have.mkString(", ")})"))
-  }
+  def setSketchCols(table: String, cols: Seq[String]): Unit = setValid(table, SketchCols, Some(cols))
 
   /** Set (or with Nil clear) the standing write sort order. Columns
     * are validated when known; the sort applies to every LATER commit
     * (existing files keep their layout until rewritten — same
     * metadata-only contract as [[evolvePartitioning]]). */
-  def setSortOrder(table: String, cols: Seq[String]): Unit = {
-    val have: Seq[String] =
-      if (currentVersion(table) > 0) read(table).columns.toSeq
-      else declaredSchema(table).map(_.fieldNames.toSeq).getOrElse(Nil)
-    cols.foreach(c => require(have.isEmpty || have.contains(c),
-      s"sort column '$c' is not a column of $table (have: ${have.mkString(", ")})"))
-    if (cols.nonEmpty) replaceSmallFile(sortOrderPath(table), cols.mkString(","))
-    else {
-      val p = sortOrderPath(table)
-      if (fs(p).exists(p)) fs(p).delete(p, false)
-    }
-  }
-
-  /** The persisted transform spec, when the table is hidden-partitioned. */
-  private def effectiveTransforms(table: String): Seq[SnapshotTables.PartitionTransform] = {
-    val p = transformSpecPath(table)
-    if (fs(p).exists(p)) SnapshotTables.PartitionTransform.parseSpec(readSmallFile(p)) else Nil
-  }
+  def setSortOrder(table: String, cols: Seq[String]): Unit = setValid(table, SortOrder, Some(cols))
 
   /** (branch, forked-from main version, branch commits) for every live
     * branch — the data behind the `<table>.refs` metadata table
@@ -2334,32 +2262,18 @@ final class SnapshotTables(
       fs(d).getContentSummary(d).getLength
     }.sum
 
-  private def retentionPath(table: String): Path =
-    new Path(metaDir(table), "retention")
-
   /** Per-TABLE retention override (Iceberg keeps expiry policy as
     * table properties): the number of predecessors kept behind the
     * current version — this table's value when set, the store-wide
-    * `previousVersionsMax` otherwise. */
-  def retentionFor(table: String): Int = {
-    val p = retentionPath(table)
-    if (!fs(p).exists(p)) previousVersionsMax
-    else readSmallFile(p).trim.toIntOption match {
-      case Some(n) if n >= 0 => n
-      case _ => previousVersionsMax // unreadable override: fall back, never widen deletes
-    }
-  }
+    * `previousVersionsMax` otherwise. An override that does not parse
+    * throws naming its file: falling back to the store default could
+    * delete versions a larger override promised to keep. */
+  def retentionFor(table: String): Int = setting(table, Retention).get
 
   /** Set (or with None clear) this table's retention window. Applies
     * from the NEXT commit's retention pass — nothing is expired here. */
-  def setRetention(table: String, versions: Option[Int]): Unit = versions match {
-    case Some(n) =>
-      require(n >= 0, s"retention must be >= 0 predecessors, got $n")
-      replaceSmallFile(retentionPath(table), n.toString)
-    case None =>
-      val p = retentionPath(table)
-      if (fs(p).exists(p)) fs(p).delete(p, false)
-  }
+  def setRetention(table: String, versions: Option[Int]): Unit =
+    setValid(table, Retention, versions)
 
   /** Drop snapshots older than the retention window (keep the current
     * one plus [[retentionFor]] predecessors). */
@@ -2370,7 +2284,8 @@ final class SnapshotTables(
     // unreadable meta in the chain walk below.
     val protectedV =
       try branchProtectedVersions(table) catch { case _: IllegalStateException => return }
-    val keep = retentionFor(table)
+    // an unreadable retention override: this pass expires nothing, too
+    val keep = try retentionFor(table) catch { case _: IllegalStateException => return }
     val hist = history(table)
     // Delta-chain protection: every version a RETAINED version's chain
     // still walks through must outlive the window — expiring a chain's
@@ -2622,14 +2537,9 @@ final class SnapshotTables(
       partitionCols: Seq[String], transforms: Seq[SnapshotTables.PartitionTransform]): Unit = {
     replaceSmallFile(declaredPath(table),
       VersionMeta(0, partitionCols = partitionCols, schema = schema.json).render)
-    if (transforms.nonEmpty)
-      replaceSmallFile(transformSpecPath(table), SnapshotTables.PartitionTransform.formatSpec(transforms))
-    else {
-      // re-declaration (REPLACE TABLE) may change the partitioning:
-      // a stale transform spec would silently re-derive the OLD layout
-      val p = transformSpecPath(table)
-      if (fs(p).exists(p)) fs(p).delete(p, false)
-    }
+    // Nil deletes: re-declaration (REPLACE TABLE) may change the
+    // partitioning, and a stale spec would silently re-derive the OLD layout
+    setProp(table, Transforms, Some(transforms))
   }
 
   /** The DDL declaration, a version-0 [[SnapshotTables.VersionMeta]]. */
@@ -2644,8 +2554,9 @@ final class SnapshotTables(
   private[graft] def declaredPartitionCols(table: String): Seq[String] =
     declared(table).fold(Seq.empty[String])(_.partitionCols)
 
+  /** The persisted transform spec, when the table is hidden-partitioned. */
   private[graft] def persistedTransforms(table: String): Seq[SnapshotTables.PartitionTransform] =
-    effectiveTransforms(table)
+    prop(table, Transforms).getOrElse(Nil)
 
   private[graft] def tableExists(table: String): Boolean =
     currentVersion(table) > 0 || fs(declaredPath(table)).exists(declaredPath(table))
@@ -2898,6 +2809,103 @@ object SnapshotTables {
         throw new IllegalStateException(s"ref file has no committed version under '$field': $text"))
   }
 
+  /** One standing TABLE PROPERTY (Iceberg keeps table behaviour as
+    * table properties): a small sidecar file `metadata/<file>` holding
+    * `render`'s text. `parse` is the one strict parse of a value — of
+    * the file, of a TBLPROPERTIES value and of a setter's argument — and
+    * throws IllegalArgumentException on a value it does not accept.
+    * `key` is its TBLPROPERTIES key (None: set through `PARTITIONED
+    * BY`); `default` its value while the file is absent (None: unset —
+    * an unpinned commit layout follows the session conf); `columns` the
+    * table columns a value names, which must exist when it is set. */
+  private[graft] final class Prop[T](val file: String, val key: Option[String],
+      val parse: String => T, val render: T => String,
+      val default: SnapshotTables => Option[T] = (_: SnapshotTables) => None,
+      val columns: T => Seq[String] = (_: T) => Nil) {
+    def name: String = key.getOrElse(file)
+
+    /** `raw` as a value to set on a table whose columns are `have`
+      * (empty while no schema is known): parsed, and every column it
+      * names checked. Errors name the property. */
+    private[io] def valid(raw: String, have: => Seq[String]): T = {
+      val v = try parse(raw) catch { case e: IllegalArgumentException =>
+        throw new IllegalArgumentException(s"$name ${e.getMessage}", e) }
+      val named = columns(v)
+      if (named.nonEmpty) {
+        val cols = have
+        named.foreach(c => require(cols.isEmpty || cols.contains(c),
+          s"$name column '$c' is not a column of the table (have: ${cols.mkString(", ")})"))
+      }
+      v
+    }
+  }
+
+  /** A validated change to one property: Some sets it, None clears it. */
+  private[graft] final case class PropChange[T](p: Prop[T], value: Option[T])
+
+  private def oneOf(allowed: String*)(raw: String): String = {
+    val v = raw.trim
+    require(allowed.contains(v), s"must be ${allowed.map(a => s"'$a'").mkString(" or ")}, got '$raw'")
+    v
+  }
+
+  private def columnList(file: String, key: String): Prop[Seq[String]] =
+    new Prop[Seq[String]](file, Some(key), _.split(',').toSeq.map(_.trim).filter(_.nonEmpty),
+      _.mkString(","), columns = identity)
+
+  /** Row-level DML strategy: "cow" rewrites, "mor" commits patches. */
+  private[io] val WriteMode = new Prop[String]("write_mode", Some("graft.write.mode"),
+    oneOf("cow", "mor"), identity, _ => Some("cow"))
+  /** Write sort order: every commit range-distributes and sorts on these. */
+  private[io] val SortOrder = columnList("sort_order", "graft.write.sort_by")
+  /** Predecessor versions kept behind the head; the store's by default. */
+  private[io] val Retention = new Prop[Int]("retention", Some("graft.retention.versions"),
+    raw => raw.trim.toIntOption.filter(_ >= 0).getOrElse(
+      throw new IllegalArgumentException(s"must be a non-negative int, got '$raw'")),
+    _.toString, st => Some(st.previousVersionsMax))
+  /** Commit layout pin: "rename" (stage, then rename) or "direct"
+    * (write-once pool files; the metadata CAS is the whole commit). No
+    * default: an unpinned table follows the writer session's conf,
+    * which SHOW TBLPROPERTIES must not freeze into a table property. */
+  private[graft] val CommitLayout = new Prop[String]("commit_layout", Some("graft.commit.layout"),
+    oneOf("rename", "direct"), identity)
+  /** Columns every commit keeps a per-file [min,max,nulls,rows] manifest over. */
+  private[io] val StatsCols = columnList("stats_cols", "graft.stats.columns")
+  /** Columns every commit keeps per-file Bloom membership sketches over. */
+  private[io] val SketchCols = columnList("sketch_cols", "graft.sketch.columns")
+  /** Hidden-partition transforms every plain commit re-derives. */
+  private[io] val Transforms = new Prop[Seq[PartitionTransform]]("partition_transforms", None,
+    raw => {
+      val ts = PartitionTransform.parseSpec(raw)
+      require(ts.map(_.name).distinct.length == ts.length,
+        s"has duplicate transforms: ${ts.map(_.name).mkString(", ")}")
+      ts
+    },
+    PartitionTransform.formatSpec, columns = _.map(_.srcCol))
+
+  /** Every standing table property. */
+  private[io] val Props: Seq[Prop[_]] =
+    Seq(WriteMode, SortOrder, Retention, CommitLayout, StatsCols, SketchCols, Transforms)
+  /** What a new branch inherits from main: all but the retention window. */
+  private[io] val ForkedProps: Seq[Prop[_]] = Props.filterNot(_ == Retention)
+  /** What publish hands back to main; main keeps its own sort order and layout pin. */
+  private[io] val PublishedProps: Seq[Prop[_]] = Seq(WriteMode, StatsCols, SketchCols, Transforms)
+
+  /** TBLPROPERTIES values for the keys of [[Props]] (Some: SET, where
+    * a blank value clears like UNSET; None: UNSET) as changes, every one
+    * parsed and checked against the table's columns `have` before the
+    * caller writes any. Keys outside the list are not looked at. */
+  private[graft] def propChanges(values: Map[String, Option[String]],
+      have: => Seq[String]): Seq[PropChange[_]] = {
+    lazy val cols = have
+    def change[T](p: Prop[T], raw: Option[String]) =
+      PropChange(p, raw.filter(_.trim.nonEmpty).map(p.valid(_, cols)))
+    Props.flatMap(p => p.key.flatMap(values.get).map(change(p, _)))
+  }
+
+  /** The TBLPROPERTIES keys of [[Props]]. */
+  private[graft] def propKeys: Seq[String] = Props.flatMap(_.key)
+
   // typed reads of one top-level field: absent gives None, Nil or
   // false; present with the wrong JSON type does not parse
   private def field(o: ObjectNode, name: String)(ok: JsonNode => Boolean): Option[JsonNode] =
@@ -3002,13 +3010,12 @@ object SnapshotTables {
 
     def parseSpec(spec: String): Seq[PartitionTransform] =
       spec.split(',').toSeq.filter(_.nonEmpty).map { part =>
-        val Array(label, src) = part.split(":", 2)
-        label match {
-          case "days"        => days(src)
-          case M3BucketRe(n) => bucketMurmur3(n.toInt, src)
-          case BucketRe(n)   => bucket(n.toInt, src)
-          case TruncRe(len)  => truncate(len.toInt, src)
-          case other => throw new IllegalArgumentException(s"unknown partition transform '$other'")
+        part.split(":", 2) match {
+          case Array("days", src)        => days(src)
+          case Array(M3BucketRe(n), src) => bucketMurmur3(n.toInt, src)
+          case Array(BucketRe(n), src)   => bucket(n.toInt, src)
+          case Array(TruncRe(len), src)  => truncate(len.toInt, src)
+          case _ => throw new IllegalArgumentException(s"unknown partition transform '$part'")
         }
       }
   }
