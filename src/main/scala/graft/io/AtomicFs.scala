@@ -78,16 +78,19 @@ private[graft] object AtomicFs {
     * to a unique sibling temp, then move it over the destination. On
     * the local FS the move is POSIX-atomic (ATOMIC_MOVE), and the temp
     * is written with java.nio too: Hadoop's checksummed local FS would
-    * give it a `.crc` sidecar the move leaves behind. Elsewhere it
-    * degrades to delete+rename — a reader can then briefly see the
-    * file absent (and fall back to its documented no-file behavior)
-    * but can never see half the content. */
+    * give it a `.crc` sidecar the move leaves behind. A `.crc` sidecar
+    * an earlier checksummed write left for `p` itself is removed BEFORE
+    * the move — left in place, it would fail every checksummed read of
+    * the new content. Elsewhere it degrades to delete+rename — a
+    * reader can then briefly see the file absent (and fall back to its
+    * documented no-file behavior) but can never see half the content. */
   def replaceSmall(f: FileSystem, p: Path, content: String): Unit = {
     val tmp = new Path(p.getParent, s".${p.getName}.tmp-${java.util.UUID.randomUUID}")
     if (f.getScheme == "file") {
       val local = java.nio.file.Paths.get(tmp.toUri.getPath)
       java.nio.file.Files.createDirectories(local.getParent)
       java.nio.file.Files.write(local, content.getBytes("UTF-8"))
+      java.nio.file.Files.deleteIfExists(local.resolveSibling(s".${p.getName}.crc"))
       java.nio.file.Files.move(local, java.nio.file.Paths.get(p.toUri.getPath),
         java.nio.file.StandardCopyOption.ATOMIC_MOVE,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)

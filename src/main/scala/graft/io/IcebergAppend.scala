@@ -1,7 +1,7 @@
 package graft.io
 
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
-import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
+import org.apache.avro.generic.GenericRecord
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
@@ -31,13 +31,15 @@ import org.apache.spark.sql.types._
   *     single-value-serialized bounds from the freshly written footers
   *     (external engines can file-skip the appended data);
   *  3. a new manifest list carries the previous snapshot's manifests
-  *     (re-serialized field-by-field, so foreign writers' richer list
-  *     schemas pass through) plus the new one at the next sequence;
+  *     (decoded field-by-field, so foreign writers' list schemas carry
+  *     over) plus the new one at the next sequence;
   *  4. a new metadata version commits the snapshot (parent chain,
-  *     `last-sequence-number`, snapshot-log, `refs.main`); the
-  *     metadata file is created WITHOUT overwrite, so two racing
-  *     appends conflict loudly on the version file instead of lost-
-  *     writing (HadoopTableOperations' own optimistic pattern).
+  *     `last-sequence-number`, snapshot-log, `refs.main`) through the
+  *     commit CAS, so two racing appends conflict loudly on the
+  *     version file instead of lost-writing (HadoopTableOperations'
+  *     own optimistic pattern).
+  *
+  * Manifests, the list and the commit are encoded by [[IcebergMetadata]].
   *
   * Because appended rows take a sequence number strictly greater than
   * every existing delete file's, the table's equality deletes never
@@ -146,8 +148,8 @@ object IcebergAppend {
   /** Fold a committed txn marker into the metadata's expiry-proof
     * `graft.txn.*` properties (numeric-tailed markers range-compress;
     * anything else lands in the raw JSON list). */
-  private def recordTxnProperty(om: com.fasterxml.jackson.databind.ObjectMapper,
-      md: ObjectNode, txn: String): Unit = {
+  private def recordTxnProperty(md: ObjectNode, txn: String): Unit = {
+    val om = new com.fasterxml.jackson.databind.ObjectMapper()
     val props =
       if (md.hasNonNull("properties")) md.get("properties").asInstanceOf[ObjectNode]
       else md.putObject("properties")
@@ -173,19 +175,6 @@ object IcebergAppend {
   // one atomic metadata commit
   // ------------------------------------------------------------------
 
-  /** One freshly written manifest awaiting commit. `content`: 0 = data
-    * manifest, 1 = delete manifest (manifest_file vocabulary). */
-  private[io] case class NewManifest(path: Path, content: Int, files: Int, rows: Long)
-
-  /** A REWRITTEN carried-forward manifest: the DV supersede path
-    * (v3 one-DV-per-data-file invariant) rewrites a prior delete
-    * manifest — superseded entries marked DELETED, the rest EXISTING
-    * with explicit sequence numbers — and [[commitSnapshot]] substitutes
-    * it for the original in the new manifest list. `minSeq` = the
-    * smallest explicit entry sequence (the list's pruning floor). */
-  private[io] case class ReplacedManifest(path: Path, existingFiles: Int,
-      existingRows: Long, deletedFiles: Int, deletedRows: Long, minSeq: Long)
-
   /** The parsed write-side view of a table head: current schema fields
     * `(id, name, spark type)`, the default partition spec as
     * `(name, transform, srcCol, srcType, avro kind, field id,
@@ -198,44 +187,44 @@ object IcebergAppend {
       metaDir: Path,
       mdPath: Path,
       md: ObjectNode,
-      om: com.fasterxml.jackson.databind.ObjectMapper,
       fields: Seq[(Int, String, DataType)],
       specFields: Seq[(String, String, String, DataType, String, Int, Boolean)],
       defaultSpecId: Int,
       newSnap: Long,
       newSeq: Long,
       parent: Option[Long],
-      branch: String)
+      branch: String) {
+
+    /** Write `files` as one manifest of this commit at metadata/`name`:
+      * ADDED entries whose sequences inherit the commit's. `specId`
+      * defaults to the table's default spec, under its partition
+      * struct; any other spec here is the unpartitioned delete spec. */
+    def writeManifest(name: String, content: Int, files: Seq[IcebergMetadata.DataFile],
+        specId: Int = defaultSpecId): IcebergMetadata.ManifestListEntry = {
+      val partFields =
+        if (specId != defaultSpecId) Nil
+        else specFields.map(f => IcebergMetadata.PartField(f._1, f._5, f._6))
+      IcebergMetadata.writeManifest(fs, new Path(metaDir, name),
+        IcebergMetadata.headerOf(md, mdPath, content, specId, partFields),
+        files.map(IcebergMetadata.ManifestEntry.added(newSnap, _)), newSeq, newSnap)
+    }
+  }
 
   private[io] def load(spark: SparkSession, tableDir: String,
       branch: String = "main"): Loaded = {
-    val hconf = spark.sparkContext.hadoopConfiguration
     val metaDir = new Path(tableDir, "metadata")
-    val fs = metaDir.getFileSystem(hconf)
-    val mdPath = IcebergImport.latestMetadata(fs, metaDir)
+    val fs = metaDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (mdPath, md) = IcebergMetadata.loadHead(fs, tableDir)
     // refuse non-v<N> layouts up front — the commit could not derive
     // the next version name (A DML that writes data files first and
     // only then discovers it cannot commit would leave debris)
     IcebergImport.writableVersionOf(mdPath)
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val md = {
-      val in = fs.open(mdPath)
-      try om.readTree(in).asInstanceOf[ObjectNode] finally in.close()
-    }
     val fv = if (md.has("format-version")) md.get("format-version").asInt else 1
     require(fv == 2 || fv == 3,
       s"commit needs a v2/v3 table (sequence-number inheritance); $mdPath is format-version $fv")
 
     // ---- current schema: (id, name, spark type) in schema order ----
-    val schemaNode = {
-      val schemas = md.get("schemas")
-      if (schemas != null && schemas.size > 0) {
-        val want = if (md.has("current-schema-id")) md.get("current-schema-id").asInt else 0
-        (0 until schemas.size).map(schemas.get)
-          .find(s => s.has("schema-id") && s.get("schema-id").asInt == want)
-          .getOrElse(schemas.get(0))
-      } else md.get("schema")
-    }
+    val schemaNode = IcebergMetadata.currentSchema(md, mdPath)
     require(schemaNode != null && schemaNode.get("fields") != null,
       s"no parseable current schema in $mdPath")
     val fieldsN = schemaNode.get("fields")
@@ -319,7 +308,7 @@ object IcebergAppend {
     val newSnap = (prevIds :+ 0L).max + 1
     val newSeq = (if (md.hasNonNull("last-sequence-number"))
       md.get("last-sequence-number").asLong else 0L) + 1
-    Loaded(tableDir, fs, metaDir, mdPath, md, om, fields, specFields, defaultSpecId,
+    Loaded(tableDir, fs, metaDir, mdPath, md, fields, specFields, defaultSpecId,
       newSnap, newSeq, parent, branch)
   }
 
@@ -328,8 +317,9 @@ object IcebergAppend {
     * partitioned default spec), and write one ADDED data manifest with
     * footer stats. Nothing is committed — the returned manifest enters
     * a snapshot via [[commitSnapshot]]. */
-  private[io] def writeDataManifest(spark: SparkSession, lt: Loaded, df: DataFrame): NewManifest = {
-    import lt.{fs, fields, specFields, md, metaDir, tableDir, newSnap}
+  private[io] def writeDataManifest(spark: SparkSession, lt: Loaded,
+      df: DataFrame): IcebergMetadata.ManifestListEntry = {
+    import lt.{fs, fields, specFields, tableDir, newSnap}
     val hconf = spark.sparkContext.hadoopConfiguration
 
     // ---- conform rows to the current schema, ids in the footers -----
@@ -363,15 +353,7 @@ object IcebergAppend {
     IcebergDml.withFieldIdWrites(spark) {
       (if (dirCols.isEmpty) writer else writer.partitionBy(dirCols: _*)).parquet(dataDir.toString)
     }
-    val dataFiles: Seq[Path] = {
-      val it = fs.listFiles(dataDir, true)
-      val b = Seq.newBuilder[Path]
-      while (it.hasNext) {
-        val st = it.next()
-        if (st.getPath.getName.endsWith(".parquet")) b += st.getPath
-      }
-      b.result().sortBy(_.toString)
-    }
+    val dataFiles = parquetFilesUnder(fs, dataDir)
     require(dataFiles.nonEmpty, s"wrote no parquet files under $dataDir" +
       (if (dirCols.nonEmpty) " — a partitioned write of zero rows has nothing to commit" else ""))
 
@@ -424,141 +406,48 @@ object IcebergAppend {
       dataFiles.map(p => p.toString ->
         IcebergExport.footerStats(p.toString, hconf, wanted)).toMap
 
-    // ---- the data manifest -------------------------------------------
-    val entrySchema = new org.apache.avro.Schema.Parser().parse(
-      if (specFields.isEmpty) IcebergExport.ManifestEntryAvro
-      else IcebergExport.manifestEntryAvro(specFields.map(f => (f._1, f._5, f._6))))
-    val dfSchema = entrySchema.getField("data_file").schema()
-    val manifestPath = new Path(metaDir, s"m-append-$newSnap-$segId.avro")
-    val w = new org.apache.avro.file.DataFileWriter[GenericRecord](
-      new GenericDatumWriter[GenericRecord](entrySchema))
-    w.setMeta("content", "data")
-    w.setMeta("format-version", "2")
-    w.setMeta("partition-spec-id",
-      (if (md.has("default-spec-id")) md.get("default-spec-id").asInt else 0).toString)
-    val out = fs.create(manifestPath, false)
-    w.create(entrySchema, out)
-    var totalRows = 0L
-    def kvMap(fieldName: String, rec: GenericData.Record,
-        vals: Seq[(Int, AnyRef)]): Unit = if (vals.nonEmpty) {
-      val arrSchema = dfSchema.getField(fieldName).schema().getTypes.get(1)
-      val item = arrSchema.getElementType
-      val a = new GenericData.Array[GenericRecord](vals.size, arrSchema)
-      vals.sortBy(_._1).foreach { case (k, v) =>
-        val kv = new GenericData.Record(item)
-        kv.put("key", k); kv.put("value", v); a.add(kv)
-      }
-      rec.put(fieldName, a)
-    }
-    dataFiles.foreach { p =>
+    lt.writeManifest(s"m-append-$newSnap-$segId.avro", content = 0, dataFiles.map { p =>
       val st = stats(p.toString)
-      totalRows += st.rows
-      val dfr = new GenericData.Record(dfSchema)
-      dfr.put("content", 0)
-      dfr.put("file_path", fs.makeQualified(p).toString)
-      dfr.put("file_format", "PARQUET")
-      val pRec = new GenericData.Record(dfSchema.getField("partition").schema())
-      specFields.foreach { f =>
-        pRec.put(f._1, partValue(p, f._1, if (f._7) f._3 else f._1, f._5))
-      }
-      dfr.put("partition", pRec)
-      dfr.put("record_count", st.rows)
-      dfr.put("file_size_in_bytes", fs.getFileStatus(p).getLen)
-      val byId = st.cols.toSeq.flatMap { case (n, c) => idByName.get(n).map(_ -> c) }
-      kvMap("value_counts", dfr,
-        byId.map { case (id, c) => id -> java.lang.Long.valueOf(c.valueCount) })
-      kvMap("null_value_counts", dfr,
-        byId.flatMap { case (id, c) => c.nullCount.map(n => id -> java.lang.Long.valueOf(n)) })
-      kvMap("lower_bounds", dfr,
-        byId.flatMap { case (id, c) => c.lower.map(b => id -> java.nio.ByteBuffer.wrap(b)) })
-      kvMap("upper_bounds", dfr,
-        byId.flatMap { case (id, c) => c.upper.map(b => id -> java.nio.ByteBuffer.wrap(b)) })
-      val e = new GenericData.Record(entrySchema)
-      e.put("status", 1) // ADDED
-      e.put("snapshot_id", java.lang.Long.valueOf(newSnap))
-      // null sequence numbers: inherited from the manifest list (v2)
-      e.put("data_file", dfr)
-      w.append(e)
+      IcebergMetadata.DataFile(0, fs.makeQualified(p).toString, "PARQUET", st.rows,
+        fs.getFileStatus(p).getLen,
+        partition = specFields.map(f => f._1 -> partValue(p, f._1, if (f._7) f._3 else f._1, f._5)),
+        stats = st.cols.flatMap { case (n, c) => idByName.get(n).map(_ -> c) })
+    })
+  }
+
+  /** The parquet files written under `dir`, in path order. */
+  private[io] def parquetFilesUnder(fs: org.apache.hadoop.fs.FileSystem, dir: Path): Seq[Path] = {
+    val it = fs.listFiles(dir, true)
+    val b = Seq.newBuilder[Path]
+    while (it.hasNext) {
+      val st = it.next()
+      if (st.getPath.getName.endsWith(".parquet")) b += st.getPath
     }
-    w.close()
-    NewManifest(manifestPath, content = 0, files = dataFiles.size, rows = totalRows)
+    b.result().sortBy(_.toString)
   }
 
   /** Commit `manifests` as ONE new snapshot on `lt`'s branch: one new
-    * manifest list (the branch parent's manifests — re-serialized
-    * field-by-field so foreign richer list schemas pass through —
-    * when `carryPrevious`, plus the new ones at the next sequence),
-    * one snapshot node, ONE new metadata version created WITHOUT
-    * overwrite (racing writers conflict loudly). Non-main branches
-    * advance only their own ref — `current-snapshot-id`, `refs.main`
-    * and the snapshot-log stay untouched (Iceberg's snapshot-log
-    * records changes to the CURRENT snapshot only). */
+    * manifest list (the branch parent's manifests when `carryPrevious`,
+    * each substituted by its `replacePrev` rewrite when it has one, plus
+    * the new ones at the next sequence), one snapshot node, ONE new
+    * metadata version through [[IcebergMetadata.commit]] (racing writers
+    * conflict loudly). Non-main branches advance only their own ref —
+    * `current-snapshot-id`, `refs.main` and the snapshot-log stay
+    * untouched (Iceberg's snapshot-log records changes to the CURRENT
+    * snapshot only). */
   private[io] def commitSnapshot(spark: SparkSession, lt: Loaded,
-      manifests: Seq[NewManifest], operation: String,
+      manifests: Seq[IcebergMetadata.ManifestListEntry], operation: String,
       summaryProps: Map[String, String] = Map.empty,
       carryPrevious: Boolean = true,
-      replacePrev: Map[String, ReplacedManifest] = Map.empty): Long = {
-    import lt.{fs, md, om, metaDir, mdPath, tableDir, newSnap, newSeq, parent, branch}
+      replacePrev: Map[String, IcebergMetadata.ManifestListEntry] = Map.empty): Long = {
+    import lt.{fs, md, metaDir, mdPath, tableDir, newSnap, newSeq, parent, branch}
     require(manifests.nonEmpty, s"a snapshot commit on $tableDir needs at least one manifest")
     val now = System.currentTimeMillis()
     val snaps = md.withArray[ArrayNode]("snapshots")
 
     // ---- new manifest list: (previous manifests +) the new ones -----
-    // v3 lists carry the row-lineage assignment field (first_row_id,
-    // spec id 520): carried entries preserve theirs (null for
-    // pre-upgrade history — those rows have no lineage), new data
-    // manifests are assigned below from the table's next-row-id.
-    val fv = if (md.has("format-version")) md.get("format-version").asInt else 2
-    val listSchema = new org.apache.avro.Schema.Parser().parse(
-      if (fv == 3) IcebergExport.ManifestFileV3Avro else IcebergExport.ManifestFileAvro)
-    def putFirstRowId(r: GenericRecord, v: Option[Long]): Unit =
-      if (fv == 3) r.put("first_row_id", v.map(java.lang.Long.valueOf).orNull)
-    def listEntry(src: GenericRecord): GenericRecord = {
-      def opt[T](n: String, dflt: T): T =
-        IcebergImport.fieldOpt(src, n).map(_.asInstanceOf[T]).getOrElse(dflt)
-      val r = new GenericData.Record(listSchema)
-      r.put("manifest_path", src.get("manifest_path").toString)
-      r.put("manifest_length", opt[Long]("manifest_length", 0L))
-      r.put("partition_spec_id", opt[Int]("partition_spec_id", 0))
-      r.put("content", opt[Int]("content", 0))
-      val seq = opt[Long]("sequence_number", 0L)
-      r.put("sequence_number", seq)
-      r.put("min_sequence_number", opt[Long]("min_sequence_number", seq))
-      r.put("added_snapshot_id", opt[Long]("added_snapshot_id", 0L))
-      r.put("added_files_count", opt[Int]("added_files_count", 0))
-      r.put("existing_files_count", opt[Int]("existing_files_count", 0))
-      r.put("deleted_files_count", opt[Int]("deleted_files_count", 0))
-      r.put("added_rows_count", opt[Long]("added_rows_count", 0L))
-      r.put("existing_rows_count", opt[Long]("existing_rows_count", 0L))
-      r.put("deleted_rows_count", opt[Long]("deleted_rows_count", 0L))
-      putFirstRowId(r, IcebergImport.fieldOpt(src, "first_row_id").map(_.asInstanceOf[Long]))
-      r
-    }
-    /** The list record for a REWRITTEN carried manifest: spec id and
-      * content copy from the original; every entry carries an explicit
-      * sequence, so the list-level sequence is the new snapshot's and
-      * `min_sequence_number` is the entries' floor. */
-    def replacedEntry(src: GenericRecord, r: ReplacedManifest): GenericRecord = {
-      def opt[T](n: String, dflt: T): T =
-        IcebergImport.fieldOpt(src, n).map(_.asInstanceOf[T]).getOrElse(dflt)
-      val rec = new GenericData.Record(listSchema)
-      rec.put("manifest_path", fs.makeQualified(r.path).toString)
-      rec.put("manifest_length", fs.getFileStatus(r.path).getLen)
-      rec.put("partition_spec_id", opt[Int]("partition_spec_id", 0))
-      rec.put("content", opt[Int]("content", 0))
-      rec.put("sequence_number", newSeq)
-      rec.put("min_sequence_number", r.minSeq)
-      rec.put("added_snapshot_id", newSnap)
-      rec.put("added_files_count", 0)
-      rec.put("existing_files_count", r.existingFiles)
-      rec.put("deleted_files_count", r.deletedFiles)
-      rec.put("added_rows_count", 0L)
-      rec.put("existing_rows_count", r.existingRows)
-      rec.put("deleted_rows_count", r.deletedRows)
-      putFirstRowId(rec, IcebergImport.fieldOpt(src, "first_row_id").map(_.asInstanceOf[Long]))
-      rec
-    }
-    val prevManifests: Seq[GenericRecord] =
+    val fv = md.get("format-version").asInt
+    val carried: Seq[IcebergMetadata.ManifestListEntry] =
       if (!carryPrevious) Nil
       else parent match {
         case None => Nil
@@ -570,16 +459,10 @@ object IcebergAppend {
             s"snapshot $c of $mdPath has no manifest-list (v1 inline layout?) — cannot commit")
           val listP = IcebergImport.resolve(tableDir, snap.get("manifest-list").asText)
           IcebergImport.readAvro(_ => fs, listP)._1.map { src =>
-            replacePrev.get(src.get("manifest_path").toString)
-              .map(r => replacedEntry(src, r)).getOrElse(listEntry(src))
+            replacePrev.getOrElse(src.get("manifest_path").toString,
+              IcebergMetadata.ManifestListEntry.decode(src))
           }
       }
-    val newListPath = new Path(metaDir, s"snap-$newSnap-1-$operation.avro")
-    val lw = new org.apache.avro.file.DataFileWriter[GenericRecord](
-      new GenericDatumWriter[GenericRecord](listSchema))
-    lw.setMeta("format-version", if (fv == 3) "3" else "2")
-    lw.create(listSchema, fs.create(newListPath, false))
-    prevManifests.foreach(lw.append)
     // v3 row-id assignment for THIS commit's data manifests: the first
     // gets the table's next-row-id, subsequent ones advance by row
     // count (the spec's cumulative assignment); delete manifests carry
@@ -587,30 +470,13 @@ object IcebergAppend {
     // same base, so list and snapshot agree by construction.
     var rowIdCursor: Long =
       if (fv == 3 && md.has("next-row-id")) md.get("next-row-id").asLong else 0L
-    manifests.foreach { m =>
-      val lr = new GenericData.Record(listSchema)
-      lr.put("manifest_path", fs.makeQualified(m.path).toString)
-      lr.put("manifest_length", fs.getFileStatus(m.path).getLen)
-      lr.put("partition_spec_id",
-        if (m.content == 1) deleteSpecId(lt)
-        else if (md.has("default-spec-id")) md.get("default-spec-id").asInt else 0)
-      lr.put("content", m.content)
-      lr.put("sequence_number", newSeq)
-      lr.put("min_sequence_number", newSeq)
-      lr.put("added_snapshot_id", newSnap)
-      lr.put("added_files_count", m.files)
-      lr.put("existing_files_count", 0)
-      lr.put("deleted_files_count", 0)
-      lr.put("added_rows_count", m.rows)
-      lr.put("existing_rows_count", 0L)
-      lr.put("deleted_rows_count", 0L)
-      if (m.content == 0) {
-        putFirstRowId(lr, if (fv == 3) Some(rowIdCursor) else None)
-        rowIdCursor += m.rows
-      } else putFirstRowId(lr, None)
-      lw.append(lr)
+    val added = manifests.map { m =>
+      if (fv != 3 || m.content != 0) m
+      else { val r = m.copy(firstRowId = Some(rowIdCursor)); rowIdCursor += m.addedRows; r }
     }
-    lw.close()
+    val listPath = IcebergMetadata.writeManifestList(fs,
+      new Path(metaDir, s"snap-$newSnap-1-${java.util.UUID.randomUUID()}.avro"),
+      fv, newSnap, parent, newSeq, carried ++ added)
 
     // ---- the new metadata version -------------------------------------
     val newSnapNode = snaps.addObject()
@@ -621,22 +487,22 @@ object IcebergAppend {
     val summary = newSnapNode.putObject("summary")
     summary.put("operation", operation)
     summaryProps.foreach { case (k, v) => summary.put(k, v) }
-    newSnapNode.put("manifest-list", fs.makeQualified(newListPath).toString)
+    newSnapNode.put("manifest-list", listPath)
     if (md.has("current-schema-id"))
       newSnapNode.put("schema-id", md.get("current-schema-id").asInt)
     // v3 row lineage: the snapshot records the id range it assigns
     // (first-row-id + added-rows) and the table's next-row-id advances
     // — the spec's writer obligation; readers here null-fill lineage
-    if (md.has("format-version") && md.get("format-version").asInt == 3) {
+    if (fv == 3) {
       val nextRowId = if (md.has("next-row-id")) md.get("next-row-id").asLong else 0L
-      val added = manifests.filter(_.content == 0).map(_.rows).sum
+      val addedRows = manifests.filter(_.content == 0).map(_.addedRows).sum
       newSnapNode.put("first-row-id", nextRowId)
-      newSnapNode.put("added-rows", added)
-      md.put("next-row-id", nextRowId + added)
+      newSnapNode.put("added-rows", addedRows)
+      md.put("next-row-id", nextRowId + addedRows)
     }
     md.put("last-sequence-number", newSeq)
     md.put("last-updated-ms", now)
-    summaryProps.get(TxnKey).foreach(txn => recordTxnProperty(om, md, txn))
+    summaryProps.get(TxnKey).foreach(txn => recordTxnProperty(md, txn))
     val refs =
       if (md.hasNonNull("refs")) md.get("refs").asInstanceOf[ObjectNode]
       else md.putObject("refs")
@@ -651,35 +517,8 @@ object IcebergAppend {
       val sl = slog.addObject()
       sl.put("timestamp-ms", now); sl.put("snapshot-id", newSnap)
     }
-
-    val hint = IcebergImport.writableVersionOf(mdPath)
-    val newMdPath = new Path(metaDir, s"v${hint + 1}.metadata.json")
-    // overwrite=false: a racing commit fails HERE, loudly — optimistic
-    // concurrency on the version file, never a lost write
-    val os = fs.create(newMdPath, false)
-    try os.write(om.writeValueAsString(md).getBytes("UTF-8")) finally os.close()
-    val hs = fs.create(new Path(metaDir, "version-hint.text"), true)
-    try hs.write((hint + 1).toString.getBytes("UTF-8")) finally hs.close()
+    IcebergMetadata.commit(fs, mdPath, md)
     newSnap
-  }
-
-  /** The spec id DELETE manifests enter under: the first spec with NO
-    * fields (global deletes live in an unpartitioned spec per the
-    * public spec). [[IcebergDml]] registers one via [[ensureUnpartitionedSpec]]
-    * before writing delete manifests; an unpartitioned table's default
-    * spec qualifies directly. */
-  private[io] def deleteSpecId(lt: Loaded): Int = {
-    val specs = lt.md.get("partition-specs")
-    val hit =
-      if (specs != null && specs.size > 0)
-        (0 until specs.size).map(specs.get).find { s =>
-          val f = s.get("fields"); f == null || f.size == 0
-        }.map(s => if (s.has("spec-id")) s.get("spec-id").asInt else 0)
-      else if (lt.specFields.isEmpty) Some(0)
-      else None
-    hit.getOrElse(throw new IllegalStateException(
-      s"no unpartitioned spec on ${lt.tableDir} — call ensureUnpartitionedSpec before " +
-        "writing delete manifests"))
   }
 
   /** Make sure the metadata carries an unpartitioned spec for global
@@ -797,10 +636,6 @@ object IcebergAppend {
         } finally s.close()
       case "ORC" => IcebergOrcData.rows(spark, p.toString)
     }
-    val entrySchema = new org.apache.avro.Schema.Parser().parse(
-      if (lt.specFields.isEmpty) IcebergExport.ManifestEntryAvro
-      else IcebergExport.manifestEntryAvro(lt.specFields.map(f => (f._1, f._5, f._6))))
-    val dfSchema = entrySchema.getField("data_file").schema()
     /** The file's `name=value` path components (Hive layout), keys and
       * values path-unescaped. Scans the WHOLE parent chain: an adopted
       * tree lives wherever it lives, not under this table's root. */
@@ -849,40 +684,14 @@ object IcebergAppend {
       }
     }
     val segId = java.util.UUID.randomUUID().toString.take(18)
-    val manifestPath = new Path(lt.metaDir, s"m-addfiles-${lt.newSnap}-$segId.avro")
-    val w = new org.apache.avro.file.DataFileWriter[GenericRecord](
-      new GenericDatumWriter[GenericRecord](entrySchema))
-    w.setMeta("content", "data")
-    w.setMeta("format-version", "2")
-    w.setMeta("partition-spec-id",
-      (if (lt.md.has("default-spec-id")) lt.md.get("default-spec-id").asInt else 0).toString)
-    w.create(entrySchema, lt.fs.create(manifestPath, false))
-    var totalRows = 0L
-    files.sorted.foreach { f =>
-      val p = new Path(f)
-      val rows = rowsOf(p)
-      totalRows += rows
-      val dfr = new GenericData.Record(dfSchema)
-      dfr.put("content", 0)
-      dfr.put("file_path", lt.fs.makeQualified(p).toString)
-      dfr.put("file_format", fmt)
-      val pRec = new GenericData.Record(dfSchema.getField("partition").schema())
-      if (lt.specFields.nonEmpty) {
-        val parts = pathParts(p)
-        lt.specFields.foreach(sf => pRec.put(sf._1, partValue(p, parts, sf)))
-      }
-      dfr.put("partition", pRec)
-      dfr.put("record_count", rows)
-      dfr.put("file_size_in_bytes", lt.fs.getFileStatus(p).getLen)
-      val e = new GenericData.Record(entrySchema)
-      e.put("status", 1) // ADDED
-      e.put("snapshot_id", java.lang.Long.valueOf(lt.newSnap))
-      e.put("data_file", dfr)
-      w.append(e)
-    }
-    w.close()
-    commitSnapshot(spark, lt,
-      Seq(NewManifest(manifestPath, content = 0, files = files.size, rows = totalRows)),
-      operation = "append")
+    val m = lt.writeManifest(s"m-addfiles-${lt.newSnap}-$segId.avro", content = 0,
+      files.sorted.map { f =>
+        val p = new Path(f)
+        val parts = if (lt.specFields.isEmpty) Map.empty[String, String] else pathParts(p)
+        IcebergMetadata.DataFile(0, lt.fs.makeQualified(p).toString, fmt, rowsOf(p),
+          lt.fs.getFileStatus(p).getLen,
+          partition = lt.specFields.map(sf => sf._1 -> partValue(p, parts, sf)))
+      })
+    commitSnapshot(spark, lt, Seq(m), operation = "append")
   }
 }

@@ -1,6 +1,5 @@
 package graft.io
 
-import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr}
@@ -223,7 +222,7 @@ object IcebergDml {
     val allTuples = source.select(keyCols.map(qcol): _*).distinct()
     val keyTuples =
       if (matchNullKeys) allTuples else allTuples.na.drop("any", keyCols)
-    val manifests = Seq.newBuilder[IcebergAppend.NewManifest]
+    val manifests = Seq.newBuilder[IcebergMetadata.ManifestListEntry]
     if (!keyTuples.isEmpty) {
       val specId = IcebergAppend.ensureUnpartitionedSpec(lt)
       manifests += writeEqualityDeleteManifest(spark, lt, keyTuples, keyCols, specId)
@@ -302,15 +301,12 @@ object IcebergDml {
     case _ => false
   }
 
-  /** Write `positions` ((file_path, pos) of each matched copy) as
-    * spec-shaped POSITION delete parquet — the reserved field ids
-    * 2147483546/2147483545, rows sorted by (file_path, pos) per the
-    * spec — plus one delete manifest (entries content=1, empty
-    * partition struct: global, unpartitioned spec). */
+  /** Write `positions` ((file_path, pos) of each matched copy) as a
+    * spec-shaped POSITION delete (entries content=1) — the reserved
+    * field ids 2147483546/2147483545, rows sorted by (file_path, pos)
+    * per the spec. */
   private def writePositionDeleteManifest(spark: SparkSession, lt: IcebergAppend.Loaded,
-      positions: DataFrame, specId: Int): IcebergAppend.NewManifest = {
-    import lt.{fs, metaDir, tableDir, newSnap}
-    val hconf = spark.sparkContext.hadoopConfiguration
+      positions: DataFrame, specId: Int): IcebergMetadata.ManifestListEntry = {
     val shaped = positions
       .select(
         col(IcebergImport.LineageFileCol).cast(StringType).as("file_path",
@@ -318,62 +314,15 @@ object IcebergDml {
         col(IcebergImport.LineagePosCol).cast(LongType).as("pos",
           new MetadataBuilder().putLong("parquet.field.id", 2147483545L).build()))
       .sortWithinPartitions(col("file_path"), col("pos"))
-    val segId = java.util.UUID.randomUUID().toString.take(18)
-    val delDir = new Path(tableDir, s"data/posdelete-$segId")
-    withFieldIdWrites(spark) { shaped.write.parquet(delDir.toString) }
-    val delFiles: Seq[Path] = {
-      val it = fs.listFiles(delDir, true)
-      val b = Seq.newBuilder[Path]
-      while (it.hasNext) {
-        val st = it.next()
-        if (st.getPath.getName.endsWith(".parquet")) b += st.getPath
-      }
-      b.result().sortBy(_.toString)
-    }
-    require(delFiles.nonEmpty, s"wrote no position-delete parquet under $delDir")
-    val entrySchema = new org.apache.avro.Schema.Parser().parse(IcebergExport.ManifestEntryAvro)
-    val dfSchema = entrySchema.getField("data_file").schema()
-    val manifestPath = new Path(metaDir, s"md-posdelete-$newSnap-$segId.avro")
-    val w = new org.apache.avro.file.DataFileWriter[GenericRecord](
-      new GenericDatumWriter[GenericRecord](entrySchema))
-    w.setMeta("content", "deletes")
-    w.setMeta("format-version", "2")
-    w.setMeta("partition-spec-id", specId.toString)
-    w.create(entrySchema, fs.create(manifestPath, false))
-    var totalRows = 0L
-    delFiles.foreach { p =>
-      val st = IcebergExport.footerStats(p.toString, hconf, Map.empty)
-      totalRows += st.rows
-      val dfr = new GenericData.Record(dfSchema)
-      dfr.put("content", 1) // POSITION_DELETES
-      dfr.put("file_path", fs.makeQualified(p).toString)
-      dfr.put("file_format", "PARQUET")
-      dfr.put("partition", new GenericData.Record(dfSchema.getField("partition").schema()))
-      dfr.put("record_count", st.rows)
-      dfr.put("file_size_in_bytes", fs.getFileStatus(p).getLen)
-      val e = new GenericData.Record(entrySchema)
-      e.put("status", 1) // ADDED
-      e.put("snapshot_id", java.lang.Long.valueOf(newSnap))
-      e.put("data_file", dfr)
-      w.append(e)
-    }
-    w.close()
-    IcebergAppend.NewManifest(manifestPath, content = 1, files = delFiles.size, rows = totalRows)
+    writeDeleteManifest(spark, lt, shaped, "posdelete", content = 1, specId)
   }
 
-  /** Write `keys` as field-id-carrying parquet under `data/` plus one
-    * delete manifest (entries content=2, `equality_ids` = the key
-    * columns' field ids, empty partition struct — a GLOBAL delete in
-    * the unpartitioned spec). Sequence numbers stay null and inherit
-    * the manifest list's (the v2 ADDED-entry rule), exactly like the
-    * data side. */
+  /** Write `keys` as an EQUALITY delete (entries content=2,
+    * `equality_ids` = the key columns' field ids). */
   private def writeEqualityDeleteManifest(spark: SparkSession, lt: IcebergAppend.Loaded,
-      keys: DataFrame, keyCols: Seq[String], specId: Int): IcebergAppend.NewManifest = {
-    import lt.{fs, metaDir, tableDir, newSnap}
-    val hconf = spark.sparkContext.hadoopConfiguration
+      keys: DataFrame, keyCols: Seq[String], specId: Int): IcebergMetadata.ManifestListEntry = {
     val idByName = lt.fields.map { case (id, n, _) => n -> id }.toMap
     val typeByName = lt.fields.map { case (_, n, dt) => n -> dt }.toMap
-    val eqIds = keyCols.map(idByName)
 
     // the delete file physically contains its equality columns with
     // field ids in the footer — readers (incl. graft's own importer)
@@ -382,51 +331,30 @@ object IcebergDml {
       qcol(n).cast(typeByName(n)).as(n,
         new MetadataBuilder().putLong("parquet.field.id", idByName(n).toLong).build())
     }: _*)
-    val segId = java.util.UUID.randomUUID().toString.take(18)
-    val delDir = new Path(tableDir, s"data/delete-$segId")
-    withFieldIdWrites(spark) { withIds.write.parquet(delDir.toString) }
-    val delFiles: Seq[Path] = {
-      val it = fs.listFiles(delDir, true)
-      val b = Seq.newBuilder[Path]
-      while (it.hasNext) {
-        val st = it.next()
-        if (st.getPath.getName.endsWith(".parquet")) b += st.getPath
-      }
-      b.result().sortBy(_.toString)
-    }
-    require(delFiles.nonEmpty, s"wrote no delete parquet under $delDir")
+    writeDeleteManifest(spark, lt, withIds, "delete", content = 2, specId,
+      keyCols.map(idByName))
+  }
 
-    val entrySchema = new org.apache.avro.Schema.Parser().parse(IcebergExport.ManifestEntryAvro)
-    val dfSchema = entrySchema.getField("data_file").schema()
-    val manifestPath = new Path(metaDir, s"md-delete-$newSnap-$segId.avro")
-    val w = new org.apache.avro.file.DataFileWriter[GenericRecord](
-      new GenericDatumWriter[GenericRecord](entrySchema))
-    w.setMeta("content", "deletes")
-    w.setMeta("format-version", "2")
-    w.setMeta("partition-spec-id", specId.toString)
-    w.create(entrySchema, fs.create(manifestPath, false))
-    var totalRows = 0L
-    delFiles.foreach { p =>
-      val st = IcebergExport.footerStats(p.toString, hconf, Map.empty)
-      totalRows += st.rows
-      val dfr = new GenericData.Record(dfSchema)
-      dfr.put("content", 2) // EQUALITY_DELETES
-      dfr.put("file_path", fs.makeQualified(p).toString)
-      dfr.put("file_format", "PARQUET")
-      dfr.put("partition", new GenericData.Record(dfSchema.getField("partition").schema()))
-      dfr.put("record_count", st.rows)
-      dfr.put("file_size_in_bytes", fs.getFileStatus(p).getLen)
-      val arrSchema = dfSchema.getField("equality_ids").schema().getTypes.get(1)
-      val a = new GenericData.Array[Integer](eqIds.size, arrSchema)
-      eqIds.foreach(i => a.add(Integer.valueOf(i)))
-      dfr.put("equality_ids", a)
-      val e = new GenericData.Record(entrySchema)
-      e.put("status", 1) // ADDED
-      e.put("snapshot_id", java.lang.Long.valueOf(newSnap))
-      e.put("data_file", dfr)
-      w.append(e)
-    }
-    w.close()
-    IcebergAppend.NewManifest(manifestPath, content = 1, files = delFiles.size, rows = totalRows)
+  /** Write `rows` as field-id-carrying delete parquet under
+    * `data/<kind>-<id>` plus one delete manifest of ADDED entries
+    * (`content` 1 position / 2 equality deletes, empty partition
+    * struct — a GLOBAL delete in the unpartitioned spec `specId`).
+    * Sequence numbers stay null and inherit the manifest list's (the
+    * v2 ADDED-entry rule), exactly like the data side. */
+  private def writeDeleteManifest(spark: SparkSession, lt: IcebergAppend.Loaded,
+      rows: DataFrame, kind: String, content: Int, specId: Int,
+      equalityIds: Seq[Int] = Nil): IcebergMetadata.ManifestListEntry = {
+    import lt.fs
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val segId = java.util.UUID.randomUUID().toString.take(18)
+    val delDir = new Path(lt.tableDir, s"data/$kind-$segId")
+    withFieldIdWrites(spark) { rows.write.parquet(delDir.toString) }
+    val delFiles = IcebergAppend.parquetFilesUnder(fs, delDir)
+    require(delFiles.nonEmpty, s"wrote no $kind parquet under $delDir")
+    lt.writeManifest(s"md-$kind-${lt.newSnap}-$segId.avro", content = 1, delFiles.map { p =>
+      IcebergMetadata.DataFile(content, fs.makeQualified(p).toString, "PARQUET",
+        IcebergExport.footerStats(p.toString, hconf, Map.empty).rows,
+        fs.getFileStatus(p).getLen, equalityIds = equalityIds)
+    }, specId)
   }
 }

@@ -124,7 +124,7 @@ object IcebergEvolve {
     * .expireSnapshots]] RETAINS every ref-pointed snapshot. */
   def createTag(spark: SparkSession, tableDir: String, name: String,
       snapshotId: Option[Long] = None): Unit =
-    commitRaw(spark, tableDir) { md =>
+    commitRaw(spark, tableDir) { (md, _) =>
       val refs =
         if (md.hasNonNull("refs")) md.get("refs").asInstanceOf[ObjectNode]
         else md.putObject("refs")
@@ -147,7 +147,7 @@ object IcebergEvolve {
     * publishes it. */
   def createBranch(spark: SparkSession, tableDir: String, name: String,
       snapshotId: Option[Long] = None): Unit =
-    commitRaw(spark, tableDir) { md =>
+    commitRaw(spark, tableDir) { (md, _) =>
       val refs =
         if (md.hasNonNull("refs")) md.get("refs").asInstanceOf[ObjectNode]
         else md.putObject("refs")
@@ -167,7 +167,7 @@ object IcebergEvolve {
     * would silently drop main-side commits). The branch ref survives
     * (drop it separately once done). */
   def fastForward(spark: SparkSession, tableDir: String, branch: String): Unit =
-    commitRaw(spark, tableDir) { md =>
+    commitRaw(spark, tableDir) { (md, _) =>
       val refs = if (md.hasNonNull("refs")) md.get("refs").asInstanceOf[ObjectNode] else null
       require(refs != null && refs.hasNonNull(branch), s"no ref '$branch' on $tableDir")
       val r = refs.get(branch)
@@ -204,7 +204,7 @@ object IcebergEvolve {
 
   /** Drop a named ref; `main` refuses (it is the table head). */
   def dropRef(spark: SparkSession, tableDir: String, name: String): Unit =
-    commitRaw(spark, tableDir) { md =>
+    commitRaw(spark, tableDir) { (md, _) =>
       require(name != "main", s"cannot drop the main branch of $tableDir")
       val refs = if (md.hasNonNull("refs")) md.get("refs").asInstanceOf[ObjectNode] else null
       require(refs != null && refs.hasNonNull(name), s"no ref '$name' on $tableDir")
@@ -244,21 +244,13 @@ object IcebergEvolve {
     * commit v<hint+1>.metadata.json + hint. */
   private def commit(spark: SparkSession, tableDir: String)
       (edit: (ObjectNode, ObjectNode) => Unit): Unit =
-    commitRaw(spark, tableDir) { md =>
+    commitRaw(spark, tableDir) { (md, mdPath) =>
       // the current schema node, per the v2 (schemas + current-schema-id)
       // and v1 (single schema) shapes
-      val (cur: ObjectNode, schemasArr: Option[ArrayNode]) = {
-        val schemas = md.get("schemas")
-        if (schemas != null && schemas.size > 0) {
-          val want = if (md.has("current-schema-id")) md.get("current-schema-id").asInt else 0
-          val node = (0 until schemas.size).map(schemas.get)
-            .find(s => s.has("schema-id") && s.get("schema-id").asInt == want)
-            .getOrElse(schemas.get(0))
-          (node.asInstanceOf[ObjectNode], Some(schemas.asInstanceOf[ArrayNode]))
-        } else (md.get("schema").asInstanceOf[ObjectNode], None)
-      }
-      schemasArr match {
-        case Some(arr) =>
+      val cur = IcebergMetadata.currentSchema(md, mdPath).asInstanceOf[ObjectNode]
+      Option(md.get("schemas")).filter(_.size > 0) match {
+        case Some(schemas) =>
+          val arr = schemas.asInstanceOf[ArrayNode]
           // spec evolution: append a NEW schema under a fresh id
           val newId = (0 until arr.size).map(arr.get(_).get("schema-id").asInt).max + 1
           val evolved = cur.deepCopy().asInstanceOf[ObjectNode]
@@ -277,28 +269,14 @@ object IcebergEvolve {
     }
 
   /** One metadata-only commit with NO schema machinery (ref edits):
-    * load latest, `edit` the root, write v<hint+1> + hint. */
+    * load latest, `edit` the root (given its file), commit v<hint+1> +
+    * hint through [[IcebergMetadata.commit]] — a schema/ref commit
+    * racing an append conflicts loudly instead of overwriting it. */
   private def commitRaw(spark: SparkSession, tableDir: String)
-      (edit: ObjectNode => Unit): Unit = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val metaDir = new Path(tableDir, "metadata")
-    val fs = metaDir.getFileSystem(hconf)
-    val mdPath = IcebergImport.latestMetadata(fs, metaDir)
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val md = {
-      val in = fs.open(mdPath)
-      try om.readTree(in).asInstanceOf[ObjectNode] finally in.close()
-    }
-    edit(md)
-    val hint = graft.io.IcebergImport.writableVersionOf(mdPath)
-    val out = new Path(metaDir, s"v${hint + 1}.metadata.json")
-    // overwrite=false: a schema/ref commit racing an append fails
-    // loudly on the version file instead of silently overwriting the
-    // other writer's committed version — the same optimistic pattern
-    // as IcebergAppend/IcebergMaintenance
-    val os = fs.create(out, false)
-    try os.write(om.writeValueAsString(md).getBytes("UTF-8")) finally os.close()
-    val hs = fs.create(new Path(metaDir, "version-hint.text"), true)
-    try hs.write((hint + 1).toString.getBytes("UTF-8")) finally hs.close()
+      (edit: (ObjectNode, Path) => Unit): Unit = {
+    val fs = new Path(tableDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (mdPath, md) = IcebergMetadata.loadHead(fs, tableDir)
+    edit(md, mdPath)
+    IcebergMetadata.commit(fs, mdPath, md)
   }
 }

@@ -1,7 +1,5 @@
 package graft.io
 
-import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
-import org.apache.avro.file.DataFileWriter
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.types._
 
@@ -487,19 +485,16 @@ object IcebergExport {
     // for MOR segments, a delete manifest — all shared by every
     // snapshot list whose chain contains the segment)
     val now = System.currentTimeMillis
-    val manifestSchemaBySpec: Map[Int, org.apache.avro.Schema] = specsById.map { case (id, fields) =>
-      id -> new org.apache.avro.Schema.Parser().parse(
-        manifestEntryAvro(fields.map(f => (f.name, f.kind, f.fid))))
-    }
-    /** content: 0 = data manifest, 1 = delete manifest (manifest_file
-      * vocabulary; ENTRIES inside a delete manifest carry content=2,
-      * equality deletes). */
-    case class ManifestRef(content: Int, specId: Int, path: String, len: Long, rows: Long, files: Int)
+    /** The manifest header of spec `specId`; `content`: 0 data, 1
+      * deletes (manifest_file vocabulary). */
+    def header(specId: Int, content: Int) = IcebergMetadata.ManifestHeader(formatVersion,
+      content, schemaJson, 0, specId, specFieldsJson(specsById(specId)),
+      specsById(specId).map(f => IcebergMetadata.PartField(f.name, f.kind, f.fid)))
+    /** One segment manifest; `entryContent` 0 data, 1 position / 2
+      * equality deletes, every entry ADDED at the segment's sequence. */
     def writeManifest(m: SnapshotTables.VersionMeta, specId: Int,
-        files: Seq[(String, Long, Seq[(String, AnyRef)])], entryContent: Int): ManifestRef = {
-      val manifestSchema = manifestSchemaBySpec(specId)
-      val dataFileSchema = manifestSchema.getField("data_file").schema()
-      val partSchema = dataFileSchema.getField("partition").schema()
+        files: Seq[(String, Long, Seq[(String, AnyRef)])],
+        entryContent: Int): IcebergMetadata.ManifestListEntry = {
       val eqIds: Seq[Int] =
         if (entryContent != 2) Nil
         else m.keyCols.map(k => topIds.getOrElse(k, throw new IllegalArgumentException(
@@ -507,75 +502,17 @@ object IcebergExport {
             "equality deletes")))
       val tag = if (entryContent == 0) "" else "d"
       val p = new Path(metaDir, f"m$tag-${m.v}%05d-${java.util.UUID.randomUUID()}.avro")
-      val w = new DataFileWriter[GenericRecord](new GenericDatumWriter[GenericRecord](manifestSchema))
-      w.setMeta("schema", schemaJson)
-      w.setMeta("schema-id", "0")
-      w.setMeta("partition-spec", specFieldsJson(specsById(specId)))
-      w.setMeta("partition-spec-id", specId.toString)
-      w.setMeta("format-version", "2")
-      w.setMeta("content", if (entryContent == 0) "data" else "deletes")
-      val os = fs(p).create(p, true)
-      w.create(manifestSchema, os)
-      var rows = 0L
-      files.foreach { case (path, len, partVals) =>
-        val df = new GenericData.Record(dataFileSchema)
-        df.put("content", entryContent)
-        df.put("file_path", path)
-        df.put("file_format", "PARQUET")
-        if (eqIds.nonEmpty) {
-          val arrSchema = dataFileSchema.getField("equality_ids").schema().getTypes.get(1)
-          val a = new GenericData.Array[Integer](eqIds.size, arrSchema)
-          eqIds.foreach(i => a.add(Integer.valueOf(i)))
-          df.put("equality_ids", a)
-        }
-        val pRec = new GenericData.Record(partSchema)
-        partVals.foreach { case (name, v) => pRec.put(name, v) }
-        df.put("partition", pRec)
-        val fst = statsByFile.getOrElse(path, IcebergExport.FileStats(0L, Map.empty))
-        rows += fst.rows
-        df.put("record_count", fst.rows)
-        df.put("file_size_in_bytes", len)
-        // per-column stats as Iceberg k/v "logical map" arrays, keyed
-        // by field id; any column a footer can't vouch for is absent —
-        // bounds may only narrow, never lie
-        def kvLongs(field: String, vals: Seq[(Int, Long)]): Unit = if (vals.nonEmpty) {
-          val arrSchema = dataFileSchema.getField(field).schema().getTypes.get(1)
-          val a = new GenericData.Array[GenericRecord](vals.size, arrSchema)
-          vals.foreach { case (k, v) =>
-            val r = new GenericData.Record(arrSchema.getElementType)
-            r.put("key", k); r.put("value", v); a.add(r)
-          }
-          df.put(field, a)
-        }
-        def kvBytes(field: String, vals: Seq[(Int, Array[Byte])]): Unit = if (vals.nonEmpty) {
-          val arrSchema = dataFileSchema.getField(field).schema().getTypes.get(1)
-          val a = new GenericData.Array[GenericRecord](vals.size, arrSchema)
-          vals.foreach { case (k, v) =>
-            val r = new GenericData.Record(arrSchema.getElementType)
-            r.put("key", k); r.put("value", java.nio.ByteBuffer.wrap(v)); a.add(r)
-          }
-          df.put(field, a)
-        }
-        val byId = fst.cols.toSeq.flatMap { case (name, cs) =>
-          statCols.get(name).map { case (id, _) => (id, cs) }
-        }.sortBy(_._1)
-        kvLongs("value_counts", byId.map { case (id, cs) => (id, cs.valueCount) })
-        kvLongs("null_value_counts", byId.flatMap { case (id, cs) => cs.nullCount.map((id, _)) })
-        kvBytes("lower_bounds", byId.flatMap { case (id, cs) => cs.lower.map((id, _)) })
-        kvBytes("upper_bounds", byId.flatMap { case (id, cs) => cs.upper.map((id, _)) })
-        val e = new GenericData.Record(manifestSchema)
-        e.put("status", 1) // ADDED by this segment's snapshot
-        e.put("snapshot_id", m.v.toLong)
-        e.put("sequence_number", m.v.toLong)
-        e.put("file_sequence_number", m.v.toLong)
-        e.put("data_file", df)
-        w.append(e)
-      }
-      w.close()
-      ManifestRef(if (entryContent == 0) 0 else 1, specId,
-        fs(p).makeQualified(p).toString, fs(p).getFileStatus(p).getLen, rows, files.size)
+      val seq = m.v.toLong
+      IcebergMetadata.writeManifest(fs(p), p, header(specId, if (entryContent == 0) 0 else 1),
+        files.map { case (path, len, partVals) =>
+          val fst = statsByFile.getOrElse(path, IcebergExport.FileStats(0L, Map.empty))
+          IcebergMetadata.ManifestEntry.added(seq, IcebergMetadata.DataFile(entryContent, path,
+            "PARQUET", fst.rows, len, partVals,
+            fst.cols.flatMap { case (name, cs) => statCols.get(name).map { case (id, _) => id -> cs } },
+            eqIds), Some(seq))
+        }, seq, seq)
     }
-    val manifestMeta: Map[Int, Seq[ManifestRef]] = allSegs.map { m =>
+    val manifestMeta: Map[Int, Seq[IcebergMetadata.ManifestListEntry]] = allSegs.map { m =>
       val fsOfSeg = segFiles(m.v)
       // data files split by spec: directory-bearing files under the
       // layout spec 0 (typed partition struct), bare files under the
@@ -591,7 +528,7 @@ object IcebergExport {
       // the patch removed nothing)
       val posDel = pdFiles.get(m.v)
         .map { case (pth, ln) => (pth, ln, Seq.empty[(String, AnyRef)]) }.toSeq
-      val refs = Seq.newBuilder[ManifestRef]
+      val refs = Seq.newBuilder[IcebergMetadata.ManifestListEntry]
       if (dataLaid.nonEmpty) refs += writeManifest(m, 0, dataLaid, entryContent = 0)
       // an empty DATA manifest still anchors empty full/append segments
       // (their snapshot must exist); empty delete manifests are skipped
@@ -610,7 +547,7 @@ object IcebergExport {
     // holds per manifest list by construction)
     val sigByVersion: Map[Int, Seq[Int]] =
       versions.map(v => v -> chains(v).map(_.v).filter(dvSrcDir.contains).sorted).toMap
-    val dvManifestBySig: Map[Seq[Int], ManifestRef] =
+    val dvManifestBySig: Map[Seq[Int], IcebergMetadata.ManifestListEntry] =
       if (!v3) Map.empty
       else sigByVersion.values.filter(_.nonEmpty).toSet.toSeq
         .sortBy((s: Seq[Int]) => s.mkString(",")).flatMap { sig: Seq[Int] =>
@@ -651,43 +588,15 @@ object IcebergExport {
           }.collect().toSeq // one address row per referenced file — never positions
           if (written.isEmpty) None
           else {
-            val entrySchema = new org.apache.avro.Schema.Parser()
-              .parse(PuffinDeletionVectors.ManifestEntryV3Avro)
-            val dfSchema = entrySchema.getField("data_file").schema()
             val p = new Path(metaDir, s"mdv-sig$sigTag-${java.util.UUID.randomUUID()}.avro")
-            val w = new DataFileWriter[GenericRecord](
-              new GenericDatumWriter[GenericRecord](entrySchema))
-            w.setMeta("content", "deletes")
-            w.setMeta("format-version", "3")
-            w.setMeta("partition-spec-id", unpartSpecId.toString)
-            w.create(entrySchema, fs(p).create(p, true))
-            var total = 0L
             val puffinLen = scala.collection.mutable.Map.empty[String, Long]
-            written.sortBy(w0 => (w0._1, w0._3)).foreach { case (puffin, refFile, off, len, card) =>
-              val dfr = new GenericData.Record(dfSchema)
-              dfr.put("content", 1)
-              dfr.put("file_path", puffin)
-              dfr.put("file_format", "PUFFIN")
-              dfr.put("partition", new GenericData.Record(dfSchema.getField("partition").schema()))
-              dfr.put("record_count", card)
-              dfr.put("file_size_in_bytes", puffinLen.getOrElseUpdate(puffin, {
-                val pp = new Path(puffin); fs(pp).getFileStatus(pp).getLen
-              }))
-              dfr.put("referenced_data_file", refFile)
-              dfr.put("content_offset", off)
-              dfr.put("content_size_in_bytes", len)
-              val e = new GenericData.Record(entrySchema)
-              e.put("status", 1)
-              e.put("snapshot_id", java.lang.Long.valueOf(sig.max.toLong))
-              e.put("sequence_number", seqN)
-              e.put("file_sequence_number", seqN)
-              e.put("data_file", dfr)
-              w.append(e)
-              total += card
-            }
-            w.close()
-            Some(sig -> ManifestRef(1, unpartSpecId,
-              fs(p).makeQualified(p).toString, fs(p).getFileStatus(p).getLen, total, written.size))
+            Some(sig -> IcebergMetadata.writeManifest(fs(p), p, header(unpartSpecId, 1),
+              written.sortBy(w0 => (w0._1, w0._3)).map { case (puffin, refFile, off, len, card) =>
+                IcebergMetadata.ManifestEntry.added(seqN, IcebergMetadata.DataFile(1, puffin,
+                  "PUFFIN", card, puffinLen.getOrElseUpdate(puffin, {
+                    val pp = new Path(puffin); fs(pp).getFileStatus(pp).getLen
+                  }), dv = Some(PuffinDeletionVectors.DvRef(refFile, off, len, card))), Some(seqN))
+              }, seqN, seqN))
           }
       }.toMap
 
@@ -709,8 +618,8 @@ object IcebergExport {
           var added = 0L
           manifestMeta(m.v).filter(_.content == 0).foreach { ref =>
             byPath += ref.path -> cum
-            cum += ref.rows
-            added += ref.rows
+            cum += ref.addedRows
+            added += ref.addedRows
           }
           segAdded += m.v -> added
         }
@@ -718,47 +627,15 @@ object IcebergExport {
       }
 
     // ---- Avro manifest list per retained version
-    val listSchema = new org.apache.avro.Schema.Parser().parse(
-      if (v3) ManifestFileV3Avro else ManifestFileAvro)
-    val listPaths: Map[Int, String] = versions.map { v =>
+    val listPaths: Map[Int, String] = versions.zipWithIndex.map { case (v, i) =>
       val p = new Path(metaDir, s"snap-$v-1-${java.util.UUID.randomUUID()}.avro")
-      val w = new DataFileWriter[GenericRecord](new GenericDatumWriter[GenericRecord](listSchema))
-      w.setMeta("format-version", if (v3) "3" else "2")
-      w.setMeta("snapshot-id", v.toString)
-      w.setMeta("sequence-number", v.toString)
-      val os = fs(p).create(p, true)
-      w.create(listSchema, os)
-      def listRecord(ref: ManifestRef, seq: Long): GenericRecord = {
-        val r = new GenericData.Record(listSchema)
-        r.put("manifest_path", ref.path)
-        r.put("manifest_length", ref.len)
-        r.put("partition_spec_id", ref.specId)
-        r.put("content", ref.content)
-        r.put("sequence_number", seq)
-        r.put("min_sequence_number", seq)
-        r.put("added_snapshot_id", seq)
-        r.put("added_files_count", ref.files)
-        r.put("existing_files_count", 0)
-        r.put("deleted_files_count", 0)
-        r.put("added_rows_count", ref.rows)
-        r.put("existing_rows_count", 0L)
-        r.put("deleted_rows_count", 0L)
-        if (v3)
-          r.put("first_row_id",
-            if (ref.content == 0) firstRowIdOf.get(ref.path).map(java.lang.Long.valueOf).orNull
-            else null)
-        r
-      }
-      chains(v).sortBy(_.v).foreach { m =>
-        manifestMeta(m.v).foreach(ref => w.append(listRecord(ref, m.v.toLong)))
-      }
-      // the version's contributing-delete-set DV manifest (v3)
-      if (v3) {
-        val sig = sigByVersion(v)
-        dvManifestBySig.get(sig).foreach(ref => w.append(listRecord(ref, sig.max.toLong)))
-      }
-      w.close()
-      v -> fs(p).makeQualified(p).toString
+      // the version's segments, then its contributing-delete-set DV
+      // manifest (v3); data manifests carry their row-id assignment
+      val entries = chains(v).sortBy(_.v).flatMap(m => manifestMeta(m.v)) ++
+        (if (v3) dvManifestBySig.get(sigByVersion(v)).toSeq else Nil)
+      v -> IcebergMetadata.writeManifestList(fs(p), p, formatVersion, v,
+        if (i == 0) None else Some(versions(i - 1).toLong), v.toLong,
+        entries.map(e => if (e.content == 0) e.copy(firstRowId = firstRowIdOf.get(e.path)) else e))
     }.toMap
 
     // ---- table metadata JSON
@@ -803,8 +680,8 @@ object IcebergExport {
     // version-hint.text to exactly this spelling — a padded name loads
     // in graft's importer but not in external HadoopCatalog readers
     val mdPath = new Path(metaDir, s"v$cur.metadata.json")
-    writeText(fs(mdPath), mdPath, json)
-    writeText(fs(mdPath), new Path(metaDir, "version-hint.text"), cur.toString)
+    AtomicFs.replaceSmall(fs(mdPath), mdPath, json)
+    AtomicFs.replaceSmall(fs(mdPath), new Path(metaDir, "version-hint.text"), cur.toString)
     fs(mdPath).makeQualified(mdPath).toString
   }
 
@@ -1050,82 +927,4 @@ object IcebergExport {
       case "string" => v.asInstanceOf[org.apache.parquet.io.api.Binary].getBytes
     }
   }
-
-  private def writeText(f: org.apache.hadoop.fs.FileSystem, p: Path, s: String): Unit = {
-    val os = f.create(p, true)
-    try os.write(s.getBytes("UTF-8")) finally os.close()
-  }
-
-  /** Iceberg v2 `manifest_file` Avro schema (spec "Manifest Lists":
-    * field-ids 500-517; optional v1-only fields omitted). */
-  private[io] val ManifestFileAvro: String =
-    """{"type":"record","name":"manifest_file","fields":[
-      |{"name":"manifest_path","type":"string","field-id":500},
-      |{"name":"manifest_length","type":"long","field-id":501},
-      |{"name":"partition_spec_id","type":"int","field-id":502},
-      |{"name":"content","type":"int","field-id":517},
-      |{"name":"sequence_number","type":"long","field-id":515},
-      |{"name":"min_sequence_number","type":"long","field-id":516},
-      |{"name":"added_snapshot_id","type":"long","field-id":503},
-      |{"name":"added_files_count","type":"int","field-id":504},
-      |{"name":"existing_files_count","type":"int","field-id":505},
-      |{"name":"deleted_files_count","type":"int","field-id":506},
-      |{"name":"added_rows_count","type":"long","field-id":512},
-      |{"name":"existing_rows_count","type":"long","field-id":513},
-      |{"name":"deleted_rows_count","type":"long","field-id":514}
-      |]}""".stripMargin
-
-  /** [[ManifestFileAvro]] + the v3 row-lineage assignment field
-    * (spec "Manifest Lists" v3: `first_row_id`, field-id 520) —
-    * manifest lists of format-version-3 commits carry it so readers
-    * can inherit per-row ids. */
-  private[io] val ManifestFileV3Avro: String =
-    ManifestFileAvro.replace(
-      """{"name":"deleted_rows_count","type":"long","field-id":514}""",
-      """{"name":"deleted_rows_count","type":"long","field-id":514},
-        |{"name":"first_row_id","type":["null","long"],"default":null,"field-id":520}""".stripMargin)
-
-  /** Iceberg v2 `manifest_entry` Avro schema for a given partition
-    * struct (spec "Manifests": field-ids 0-4, data_file struct
-    * 100-134, partition struct fields 1000+). */
-  private[io] def manifestEntryAvro(partFields: Seq[(String, String, Int)]): String = {
-    val pf = partFields.map { case (name, kind, fid) =>
-      val t = kind match {
-        case "int" => "\"int\""
-        case "long" => "\"long\""
-        case "string" => "\"string\""
-        case "date" => """{"type":"int","logicalType":"date"}"""
-      }
-      s"""{"name":"$name","type":["null",$t],"default":null,"field-id":$fid}"""
-    }.mkString(",")
-    ManifestEntryAvro.replace(
-      """{"name":"partition","type":{"type":"record","name":"r102","fields":[]},"field-id":102}""",
-      s"""{"name":"partition","type":{"type":"record","name":"r102","fields":[$pf]},"field-id":102}""")
-  }
-
-  /** The unpartitioned-spec base schema (empty partition struct). */
-  private[io] val ManifestEntryAvro: String =
-    """{"type":"record","name":"manifest_entry","fields":[
-      |{"name":"status","type":"int","field-id":0},
-      |{"name":"snapshot_id","type":["null","long"],"default":null,"field-id":1},
-      |{"name":"sequence_number","type":["null","long"],"default":null,"field-id":3},
-      |{"name":"file_sequence_number","type":["null","long"],"default":null,"field-id":4},
-      |{"name":"data_file","type":{"type":"record","name":"r2","fields":[
-      |{"name":"content","type":"int","field-id":134},
-      |{"name":"file_path","type":"string","field-id":100},
-      |{"name":"file_format","type":"string","field-id":101},
-      |{"name":"partition","type":{"type":"record","name":"r102","fields":[]},"field-id":102},
-      |{"name":"record_count","type":"long","field-id":103},
-      |{"name":"file_size_in_bytes","type":"long","field-id":104},
-      |{"name":"value_counts","type":["null",{"type":"array","items":{"type":"record","name":"k119_v120","fields":[
-      |{"name":"key","type":"int","field-id":119},{"name":"value","type":"long","field-id":120}]},"logicalType":"map"}],"default":null,"field-id":109},
-      |{"name":"null_value_counts","type":["null",{"type":"array","items":{"type":"record","name":"k121_v122","fields":[
-      |{"name":"key","type":"int","field-id":121},{"name":"value","type":"long","field-id":122}]},"logicalType":"map"}],"default":null,"field-id":110},
-      |{"name":"lower_bounds","type":["null",{"type":"array","items":{"type":"record","name":"k126_v127","fields":[
-      |{"name":"key","type":"int","field-id":126},{"name":"value","type":"bytes","field-id":127}]},"logicalType":"map"}],"default":null,"field-id":125},
-      |{"name":"upper_bounds","type":["null",{"type":"array","items":{"type":"record","name":"k129_v130","fields":[
-      |{"name":"key","type":"int","field-id":129},{"name":"value","type":"bytes","field-id":130}]},"logicalType":"map"}],"default":null,"field-id":128},
-      |{"name":"equality_ids","type":["null",{"type":"array","items":"int"}],"default":null,"field-id":135}
-      |]},"field-id":2}
-      |]}""".stripMargin
 }

@@ -350,15 +350,7 @@ object IcebergImport {
 
     // field id → name from the current schema (v2 "schemas" +
     // "current-schema-id"; v1 single "schema") — resolves equality_ids
-    val schemaNode = {
-      val schemas = md.get("schemas")
-      if (schemas != null && schemas.size > 0) {
-        val want = if (md.has("current-schema-id")) md.get("current-schema-id").asInt else 0
-        (0 until schemas.size).map(schemas.get)
-          .find(s => s.has("schema-id") && s.get("schema-id").asInt == want)
-          .getOrElse(schemas.get(0))
-      } else md.get("schema")
-    }
+    val schemaNode = IcebergMetadata.currentSchema(md, mdPath)
     if (fv == 3 && schemaNode != null && schemaNode.get("fields") != null) {
       val fields = schemaNode.get("fields")
       (0 until fields.size).map(fields.get).foreach { f =>
@@ -518,24 +510,8 @@ object IcebergImport {
         try Some(f.get("id").asInt -> icebergToSpark(f.get("type")))
         catch { case _: Exception => None }
       }.toMap
-    // `schema.name-mapping.default` (spec: "Column Projection") — the
-    // fallback mapping for data files with NO parquet field ids: each
-    // entry lists the historical column names for a field id. Only
-    // top-level entries are consulted (nested renames need ids).
-    val nameMapping: Map[Int, Seq[String]] = {
-      val props = md.get("properties")
-      if (props == null || !props.hasNonNull("schema.name-mapping.default")) Map.empty
-      else try {
-        val arr = om.readTree(props.get("schema.name-mapping.default").asText)
-        (0 until arr.size).map(arr.get).flatMap { e =>
-          if (!e.hasNonNull("field-id") || !e.hasNonNull("names")) None
-          else {
-            val names = e.get("names")
-            Some(e.get("field-id").asInt -> (0 until names.size).map(names.get(_).asText).toSeq)
-          }
-        }.toMap
-      } catch { case _: Exception => Map.empty[Int, Seq[String]] }
-    }
+    // the fallback mapping for data files with NO parquet field ids
+    val nameMapping = IcebergMetadata.nameMapping(md, mdPath)
     ScanPlan(dataB.result(), delB.result(), fieldNames,
       fs(mdPath).makeQualified(new Path(tableDir)).toString, sparkSchemaOf(schemaNode),
       fieldTypes, snapshotId, nameMapping, fv)
@@ -1173,15 +1149,7 @@ object IcebergImport {
     val mdPath = latestMetadata(f, metaDir)
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
     val md = { val in = f.open(mdPath); try om.readTree(in) finally in.close() }
-    val schemaNode = {
-      val schemas = md.get("schemas")
-      if (schemas != null && schemas.size > 0) {
-        val want = if (md.has("current-schema-id")) md.get("current-schema-id").asInt else 0
-        (0 until schemas.size).map(schemas.get)
-          .find(s => s.has("schema-id") && s.get("schema-id").asInt == want)
-          .getOrElse(schemas.get(0))
-      } else md.get("schema")
-    }
+    val schemaNode = IcebergMetadata.currentSchema(md, mdPath)
     sparkSchemaOf(schemaNode).getOrElse(read(spark, tableDir).schema)
   }
 
@@ -1640,16 +1608,7 @@ object IcebergImport {
   private def schemaContext(spark: SparkSession, tableDir: String)
       : (Map[Int, String], Option[StructType], Map[Int, Seq[String]], String) = {
     val (fs, mdPath, md) = readMeta(spark, tableDir)
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val schemaNode = {
-      val schemas = md.get("schemas")
-      if (schemas != null && schemas.size > 0) {
-        val want = if (md.has("current-schema-id")) md.get("current-schema-id").asInt else 0
-        (0 until schemas.size).map(schemas.get)
-          .find(s => s.has("schema-id") && s.get("schema-id").asInt == want)
-          .getOrElse(schemas.get(0))
-      } else md.get("schema")
-    }
+    val schemaNode = IcebergMetadata.currentSchema(md, mdPath)
     val fieldNames: Map[Int, String] =
       if (schemaNode == null || schemaNode.get("fields") == null) Map.empty
       else {
@@ -1657,20 +1616,7 @@ object IcebergImport {
         (0 until fields.size).map(fields.get)
           .map(f => f.get("id").asInt -> f.get("name").asText).toMap
       }
-    val nameMapping: Map[Int, Seq[String]] = {
-      val props = md.get("properties")
-      if (props == null || !props.hasNonNull("schema.name-mapping.default")) Map.empty
-      else try {
-        val arr = om.readTree(props.get("schema.name-mapping.default").asText)
-        (0 until arr.size).map(arr.get).flatMap { e =>
-          if (!e.hasNonNull("field-id") || !e.hasNonNull("names")) None
-          else {
-            val names = e.get("names")
-            Some(e.get("field-id").asInt -> (0 until names.size).map(names.get(_).asText).toSeq)
-          }
-        }.toMap
-      } catch { case _: Exception => Map.empty[Int, Seq[String]] }
-    }
+    val nameMapping = IcebergMetadata.nameMapping(md, mdPath)
     (fieldNames, sparkSchemaOf(schemaNode),
       nameMapping, fs.makeQualified(new Path(tableDir)).toString)
   }

@@ -17,7 +17,7 @@ import org.apache.spark.sql.SparkSession
   *    from this snapshot on, while every prior snapshot stays
   *    time-travelable. The replace-shaped manifest list is built
   *    BEFORE the commit and published as ONE metadata version
-  *    (`create(overwrite=false)`): no reader polling version-hint can
+  *    ([[IcebergMetadata.commit]]): no reader polling version-hint can
   *    ever observe an intermediate append-shaped head (doubled rows),
   *    and a crash mid-compact leaves the table exactly at its prior
   *    version plus unreferenced debris — never a doubled head.
@@ -33,7 +33,7 @@ import org.apache.spark.sql.SparkSession
   *    .resolve]]) — a foreign table whose manifests carry relative
   *    paths keeps its live files out of the orphan list.
   *
-  * Both commit through the same optimistic version-file pattern as
+  * Both commit through [[IcebergMetadata.commit]] like
   * [[IcebergAppend]] — racing writers conflict loudly, never
   * lost-write.
   */
@@ -66,15 +66,9 @@ object IcebergMaintenance {
   def expireSnapshots(spark: SparkSession, tableDir: String, keepLast: Int,
       removeOrphans: Boolean = false): Seq[String] = {
     require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val metaDir = new Path(tableDir, "metadata")
-    val fs = metaDir.getFileSystem(hconf)
-    val mdPath = IcebergImport.latestMetadata(fs, metaDir)
+    val fs = new Path(tableDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (mdPath, md) = IcebergMetadata.loadHead(fs, tableDir)
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val md = {
-      val in = fs.open(mdPath)
-      try om.readTree(in).asInstanceOf[ObjectNode] finally in.close()
-    }
     val fvx = md.get("format-version").asInt
     require(fvx == 2 || fvx == 3, s"expireSnapshots needs a v2/v3 table, got $fvx")
     val snaps = md.get("snapshots").asInstanceOf[ArrayNode]
@@ -140,14 +134,9 @@ object IcebergMaintenance {
         .foreach(filtered.add)
       md.set("snapshot-log", filtered)
     }
-    val hint = IcebergImport.writableVersionOf(mdPath)
-    val newMdPath = new Path(metaDir, s"v${hint + 1}.metadata.json")
-    val os = fs.create(newMdPath, false)
-    try os.write(om.writeValueAsString(md).getBytes("UTF-8")) finally os.close()
-    val hs = fs.create(new Path(metaDir, "version-hint.text"), true)
-    try hs.write((hint + 1).toString.getBytes("UTF-8")) finally hs.close()
+    val newMdPath = IcebergMetadata.commit(fs, mdPath, md)
     referenced ++= norm(newMdPath.toString)
-    referenced ++= norm(new Path(metaDir, "version-hint.text").toString)
+    referenced ++= norm(new Path(newMdPath.getParent, "version-hint.text").toString)
 
     // ---- orphan inventory under the table root -----------------------
     // metadata versions: the new one survives; older ones are part of

@@ -261,12 +261,7 @@ object PuffinDeletionVectors {
     require(lt.md.get("format-version").asInt <= 3, "already past v3")
     lt.md.put("format-version", 3)
     if (!lt.md.has("next-row-id")) lt.md.put("next-row-id", 0L)
-    val hint = IcebergImport.writableVersionOf(lt.mdPath)
-    val newMdPath = new Path(lt.metaDir, s"v${hint + 1}.metadata.json")
-    val os = lt.fs.create(newMdPath, false)
-    try os.write(lt.om.writeValueAsString(lt.md).getBytes("UTF-8")) finally os.close()
-    val hs = lt.fs.create(new Path(lt.metaDir, "version-hint.text"), true)
-    try hs.write((hint + 1).toString.getBytes("UTF-8")) finally hs.close()
+    IcebergMetadata.commit(lt.fs, lt.mdPath, lt.md)
   }
 
   /** Delete rows matching `predicate` by DELETION VECTOR — the v3 DML
@@ -319,7 +314,7 @@ object PuffinDeletionVectors {
     * [[IcebergAppend.commitSnapshot]]'s `replacePrev`. */
   private[io] def writeDvDelete(spark: SparkSession, lt: IcebergAppend.Loaded,
       positions: org.apache.spark.sql.DataFrame)
-      : (IcebergAppend.NewManifest, Map[String, IcebergAppend.ReplacedManifest]) = {
+      : (IcebergMetadata.ManifestListEntry, Map[String, IcebergMetadata.ManifestListEntry]) = {
     import org.apache.spark.sql.functions.col
     import spark.implicits._
     // ---- prior delete inventory at the commit parent (metadata-sized)
@@ -415,43 +410,16 @@ object PuffinDeletionVectors {
       "check positions.isEmpty first")
 
     // ---- 3: the delete manifest over the collected addresses ---------
-    val entrySchema = new org.apache.avro.Schema.Parser().parse(ManifestEntryV3Avro)
-    val dfSchema = entrySchema.getField("data_file").schema()
-    val manifestPath = new Path(lt.metaDir,
-      s"m-dv-$snap-${java.util.UUID.randomUUID().toString.take(8)}.avro")
-    val w = new org.apache.avro.file.DataFileWriter[org.apache.avro.generic.GenericRecord](
-      new org.apache.avro.generic.GenericDatumWriter[org.apache.avro.generic.GenericRecord](
-        entrySchema))
-    w.setMeta("content", "deletes")
-    w.setMeta("format-version", "3")
-    val specId = IcebergAppend.ensureUnpartitionedSpec(lt)
-    w.setMeta("partition-spec-id", specId.toString)
-    w.create(entrySchema, lt.fs.create(manifestPath, false))
-    var total = 0L
     val puffinLen = scala.collection.mutable.Map.empty[String, Long]
-    written.sortBy(w0 => (w0._1, w0._3)).foreach { case (puffin, refFile, off, len, card) =>
-      val dfr = new org.apache.avro.generic.GenericData.Record(dfSchema)
-      dfr.put("content", 1) // position deletes — a DV is their v3 carrier
-      dfr.put("file_path", puffin)
-      dfr.put("file_format", "PUFFIN")
-      dfr.put("partition",
-        new org.apache.avro.generic.GenericData.Record(dfSchema.getField("partition").schema()))
-      dfr.put("record_count", card)
-      dfr.put("file_size_in_bytes",
-        puffinLen.getOrElseUpdate(puffin, lt.fs.getFileStatus(new Path(puffin)).getLen))
-      dfr.put("referenced_data_file", refFile)
-      dfr.put("content_offset", off)
-      dfr.put("content_size_in_bytes", len)
-      val e = new org.apache.avro.generic.GenericData.Record(entrySchema)
-      e.put("status", 1)
-      e.put("snapshot_id", java.lang.Long.valueOf(snap))
-      e.put("data_file", dfr)
-      w.append(e)
-      total += card
-    }
-    w.close()
-    val m = IcebergAppend.NewManifest(manifestPath, content = 1,
-      files = written.size, rows = total)
+    val m = lt.writeManifest(s"m-dv-$snap-${java.util.UUID.randomUUID().toString.take(8)}.avro",
+      content = 1,
+      written.sortBy(w0 => (w0._1, w0._3)).map { case (puffin, refFile, off, len, card) =>
+        // position deletes — a DV is their v3 carrier
+        IcebergMetadata.DataFile(1, puffin, "PUFFIN", card,
+          puffinLen.getOrElseUpdate(puffin, lt.fs.getFileStatus(new Path(puffin)).getLen),
+          dv = Some(DvRef(refFile, off, len, card)))
+      },
+      IcebergAppend.ensureUnpartitionedSpec(lt))
 
     // ---- 4: supersede prior DV entries for re-vectored files ---------
     val touched: Set[String] = written.flatMap(w0 => IcebergImport.spellings(w0._2)).toSet
@@ -466,7 +434,7 @@ object PuffinDeletionVectors {
     * writer schema (deep copies), so foreign richer manifests pass
     * through field-for-field. Returns original-list-path → replacement. */
   private def supersedePriorDvs(lt: IcebergAppend.Loaded,
-      touched: Set[String]): Map[String, IcebergAppend.ReplacedManifest] = {
+      touched: Set[String]): Map[String, IcebergMetadata.ManifestListEntry] = {
     import IcebergImport.fieldOpt
     val parent = lt.parent.getOrElse(return Map.empty)
     val snaps = lt.md.get("snapshots")
@@ -474,7 +442,7 @@ object PuffinDeletionVectors {
       .find(_.get("snapshot-id").asLong == parent).getOrElse(return Map.empty)
     if (!snapNode.hasNonNull("manifest-list")) return Map.empty
     val listP = IcebergImport.resolve(lt.tableDir, snapNode.get("manifest-list").asText)
-    val out = Map.newBuilder[String, IcebergAppend.ReplacedManifest]
+    val out = Map.newBuilder[String, IcebergMetadata.ManifestListEntry]
     IcebergImport.readAvro(_ => lt.fs, listP)._1.foreach { lrec =>
       val content = fieldOpt(lrec, "content").map(_.asInstanceOf[Int]).getOrElse(0)
       if (content == 1) {
@@ -497,15 +465,10 @@ object PuffinDeletionVectors {
           val schema = entries.head.getSchema
           val newPath = new Path(lt.metaDir, s"m-dvsupersede-${lt.newSnap}-" +
             s"${java.util.UUID.randomUUID().toString.take(8)}.avro")
-          val w = new org.apache.avro.file.DataFileWriter[org.apache.avro.generic.GenericRecord](
-            new org.apache.avro.generic.GenericDatumWriter[org.apache.avro.generic.GenericRecord](
-              schema))
-          meta.foreach { case (k, v) => w.setMeta(k, v) }
-          w.create(schema, lt.fs.create(newPath, false))
           var (nEx, nDel) = (0, 0)
           var (rEx, rDel) = (0L, 0L)
           var minSeq = Long.MaxValue
-          entries.foreach { e =>
+          val rewritten = entries.map { e =>
             val copy = org.apache.avro.generic.GenericData.get()
               .deepCopy(schema, e).asInstanceOf[org.apache.avro.generic.GenericRecord]
             val st = statusOf(e)
@@ -535,24 +498,22 @@ object PuffinDeletionVectors {
               nEx += 1; rEx += rows
               minSeq = math.min(minSeq, effSeq)
             } else { nDel += 1; rDel += rows }
-            w.append(copy)
+            copy
           }
-          w.close()
-          out += mPathRaw -> IcebergAppend.ReplacedManifest(newPath, nEx, rEx, nDel, rDel,
-            if (minSeq == Long.MaxValue) listSeq else minSeq)
+          val length = IcebergMetadata.writeContainer(lt.fs, newPath, schema, meta,
+            rewritten.iterator)
+          // the list entry of a rewritten manifest: spec id, content and
+          // row-id assignment carry over; every entry's sequence is now
+          // explicit, so it enters at the NEW sequence with the entries'
+          // floor as its minimum
+          out += mPathRaw -> IcebergMetadata.ManifestListEntry.decode(lrec).copy(
+            path = lt.fs.makeQualified(newPath).toString, length = length,
+            sequence = lt.newSeq, minSequence = if (minSeq == Long.MaxValue) listSeq else minSeq,
+            addedSnapshotId = lt.newSnap, addedFiles = 0, existingFiles = nEx,
+            deletedFiles = nDel, addedRows = 0L, existingRows = rEx, deletedRows = rDel)
         }
       }
     }
     out.result()
   }
-
-  /** [[IcebergExport.ManifestEntryAvro]] + the v3 DV addressing triple
-    * (spec field ids 143/144/145). */
-  private[io] val ManifestEntryV3Avro: String =
-    IcebergExport.ManifestEntryAvro.replace(
-      """{"name":"equality_ids","type":["null",{"type":"array","items":"int"}],"default":null,"field-id":135}""",
-      """{"name":"equality_ids","type":["null",{"type":"array","items":"int"}],"default":null,"field-id":135},
-        |{"name":"referenced_data_file","type":["null","string"],"default":null,"field-id":143},
-        |{"name":"content_offset","type":["null","long"],"default":null,"field-id":144},
-        |{"name":"content_size_in_bytes","type":["null","long"],"default":null,"field-id":145}""".stripMargin)
 }

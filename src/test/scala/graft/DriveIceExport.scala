@@ -2,13 +2,16 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Builds the five export fixtures `tools/ice_independent_read.py`
+/** Builds the nineteen export fixtures `tools/ice_independent_read.py`
   * verifies (append-only, MOR equality deletes, murmur3 bucket
-  * layout, patch position deletes, metadata-only schema evolution)
-  * and prints graft's own expected aggregates — the
+  * layout, patch position deletes, metadata-only schema evolution,
+  * and the foreign-write shapes numbered below) and prints graft's
+  * own expected aggregates — the
   * independent-witness harness recorded in SURVEY §7.
-  * Run: sbt "Test/runMain graft.DriveIceExport", then the python tool
-  * over /tmp/ind_export_* with the same aggregate SQL. */
+  * Run: sbt "Test/runMain graft.DriveIceExport", then
+  * `tools/witness_all.sh`, which runs the python tool over
+  * /tmp/ind_export_* with the same aggregate SQL and checks every
+  * result against these EXPECT lines. */
 object DriveIceExport {
   def main(args: Array[String]): Unit = {
     val spark = graft.core.GraftSession.local("drive", 8)
@@ -26,6 +29,10 @@ object DriveIceExport {
         val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
         fs.delete(p, true)
       }
+    // every EXPECT line also lands in /tmp/ind_export_expect.txt, the
+    // file tools/witness_all.sh checks the witness against
+    val expected = Seq.newBuilder[String]
+    def expect(line: String): Unit = { println(s"EXPECT $line"); expected += s"EXPECT $line" }
     val ord = spark.read.parquet(s"$dir/orders.parquet")
       .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"), col("o_totalprice"))
 
@@ -70,12 +77,12 @@ object DriveIceExport {
 
     Seq("plain" -> t1, "mor" -> t2, "bucket" -> t3, "posdel" -> t4).foreach { case (n, t) =>
       val r = t.read("ord").agg(count(lit(1)), sum(col("o_totalprice").cast("decimal(18,2)")).cast("string")).collect()(0)
-      println(s"EXPECT $n count=${r.getLong(0)} sum=${r.getString(1)}")
+      expect(s"$n count=${r.getLong(0)} sum=${r.getString(1)}")
     }
     val r5r = graft.io.IcebergImport.read(spark, "/tmp/ind_export_evolved")
       .agg(count(lit(1)), sum(col("price").cast("decimal(18,2)")).cast("string"),
         count(col("note"))).collect()(0)
-    println(s"EXPECT evolved count=${r5r.getLong(0)} sum=${r5r.getString(1)} notes=${r5r.getLong(2)}")
+    expect(s"evolved count=${r5r.getLong(0)} sum=${r5r.getString(1)} notes=${r5r.getLong(2)}")
 
     // 6: foreign append — half the rows land via IcebergAppend's
     // spec-shaped snapshot commit (id-carrying footers, inherited
@@ -88,7 +95,7 @@ object DriveIceExport {
       ord.filter(col("o_orderkey") % 2 =!= 0))
     val r6r = graft.io.IcebergImport.read(spark, "/tmp/ind_export_appended")
       .agg(count(lit(1)), sum(col("o_totalprice").cast("decimal(18,2)")).cast("string")).collect()(0)
-    println(s"EXPECT appended count=${r6r.getLong(0)} sum=${r6r.getString(1)}")
+    expect(s"appended count=${r6r.getLong(0)} sum=${r6r.getString(1)}")
 
     // 7: identity-PARTITIONED foreign append (the reference's flagship
     // PARTITIONED BY shape) — the witness must apply the spec's
@@ -104,7 +111,7 @@ object DriveIceExport {
     val r7r = graft.io.IcebergImport.read(spark, "/tmp/ind_export_partitioned")
       .agg(count(lit(1)), sum(col("o_totalprice").cast("decimal(18,2)")).cast("string"),
         count(when(col("o_orderstatus") === "O", 1))).collect()(0)
-    println(s"EXPECT partitioned count=${r7r.getLong(0)} sum=${r7r.getString(1)} o=${r7r.getLong(2)}")
+    expect(s"partitioned count=${r7r.getLong(0)} sum=${r7r.getString(1)} o=${r7r.getLong(2)}")
 
     // 8: identity-SCOPED equality delete — applies only within its
     // partition; the witness must express the scope, not over-delete
@@ -124,7 +131,7 @@ object DriveIceExport {
     val r8r = graft.io.IcebergImport.read(spark, "/tmp/ind_export_scoped")
       .agg(count(lit(1)), sum(col("o_totalprice").cast("decimal(18,2)")).cast("string"),
         count(when(col("o_orderstatus") === "O", 1))).collect()(0)
-    println(s"EXPECT scoped count=${r8r.getLong(0)} sum=${r8r.getString(1)} o=${r8r.getLong(2)}")
+    expect(s"scoped count=${r8r.getLong(0)} sum=${r8r.getString(1)} o=${r8r.getLong(2)}")
 
     // 9: row-level DML through IcebergDml — a full-column equality
     // DELETE snapshot plus an UPDATE (pre-image equality delete +
@@ -141,7 +148,7 @@ object DriveIceExport {
       Map("o_totalprice" -> "0.5"))
     val r9r = graft.io.IcebergImport.read(spark, "/tmp/ind_export_dml")
       .agg(count(lit(1)), sum(col("o_totalprice").cast("decimal(18,2)")).cast("string")).collect()(0)
-    println(s"EXPECT dml count=${r9r.getLong(0)} sum=${r9r.getString(1)}")
+    expect(s"dml count=${r9r.getLong(0)} sum=${r9r.getString(1)}")
 
     // 10: write-audit-publish — branch fork, append + delete ON the
     // branch, fast-forward; the witness reads the published head
@@ -157,7 +164,7 @@ object DriveIceExport {
     graft.io.IcebergEvolve.fastForward(spark, "/tmp/ind_export_branch", "load")
     val r10r = graft.io.IcebergImport.read(spark, "/tmp/ind_export_branch")
       .agg(count(lit(1)), sum(col("o_totalprice").cast("decimal(18,2)")).cast("string")).collect()(0)
-    println(s"EXPECT branch count=${r10r.getLong(0)} sum=${r10r.getString(1)}")
+    expect(s"branch count=${r10r.getLong(0)} sum=${r10r.getString(1)}")
 
     // 11: DML-written POSITION deletes (strategy="position") stacked
     // under an equality delete — the witness must apply both shapes
@@ -171,7 +178,7 @@ object DriveIceExport {
       "o_totalprice > 200000.0", strategy = "position")
     val r11r = graft.io.IcebergImport.read(spark, "/tmp/ind_export_posdml")
       .agg(count(lit(1)), sum(col("o_totalprice").cast("decimal(18,2)")).cast("string")).collect()(0)
-    println(s"EXPECT posdml count=${r11r.getLong(0)} sum=${r11r.getString(1)}")
+    expect(s"posdml count=${r11r.getLong(0)} sum=${r11r.getString(1)}")
 
     // 12: MERGE/upsert (X132's one-snapshot shape — equality delete on
     // the source keys + the source as a data manifest in ONE overwrite
@@ -187,7 +194,7 @@ object DriveIceExport {
       Seq("o_orderkey"))
     val r12r = graft.io.IcebergImport.read(spark, "/tmp/ind_export_merge")
       .agg(count(lit(1)), sum(col("o_totalprice").cast("decimal(18,2)")).cast("string")).collect()(0)
-    println(s"EXPECT merge count=${r12r.getLong(0)} sum=${r12r.getString(1)}")
+    expect(s"merge count=${r12r.getLong(0)} sum=${r12r.getString(1)}")
 
     // 13: CATALOG-CONVENTION metadata names (<NNNNN>-<uuid>.metadata
     // .json, NO version-hint — REST/Hive-catalog layouts; read-only on
@@ -212,7 +219,7 @@ object DriveIceExport {
     }
     val r13r = graft.io.IcebergImport.read(spark, "/tmp/ind_export_catname")
       .agg(count(lit(1)), sum(col("o_totalprice").cast("decimal(18,2)")).cast("string")).collect()(0)
-    println(s"EXPECT catname count=${r13r.getLong(0)} sum=${r13r.getString(1)}")
+    expect(s"catname count=${r13r.getLong(0)} sum=${r13r.getString(1)}")
 
     // 14: AVRO DATA FILES (X135 — spec file_format=AVRO, adopted by
     // reference via addFiles) mixed with parquet, plus an equality
@@ -231,7 +238,7 @@ object DriveIceExport {
     graft.io.IcebergDml.deleteWhere(spark, "/tmp/ind_export_avrodata", "o_orderkey % 7 = 0")
     val r14r = graft.io.IcebergImport.read(spark, "/tmp/ind_export_avrodata")
       .agg(count(lit(1)), sum(col("o_totalprice").cast("decimal(18,2)")).cast("string")).collect()(0)
-    println(s"EXPECT avrodata count=${r14r.getLong(0)} sum=${r14r.getString(1)}")
+    expect(s"avrodata count=${r14r.getLong(0)} sum=${r14r.getString(1)}")
 
     // 15: FORMAT-VERSION 3 + DELETION VECTORS (X140/X143): a v2 export
     // upgraded to v3, the %3 keys deleted by DV (Puffin/roaring64
@@ -258,7 +265,7 @@ object DriveIceExport {
       Map("o_totalprice" -> "o_totalprice + 1000"))
     val r15r = graft.io.IcebergImport.read(spark, "/tmp/ind_export_dv")
       .agg(count(lit(1)), sum(col("o_totalprice").cast("decimal(18,2)")).cast("string")).collect()(0)
-    println(s"EXPECT dv count=${r15r.getLong(0)} sum=${r15r.getString(1)}")
+    expect(s"dv count=${r15r.getLong(0)} sum=${r15r.getString(1)}")
 
     // 16: PARTITIONED ADOPTION (X141): a date-partitioned table plus a
     // Hive-layout parquet tree adopted BY REFERENCE, partition tuples
@@ -293,7 +300,7 @@ object DriveIceExport {
     val r16r = graft.io.IcebergImport.read(spark, "/tmp/ind_export_adopted")
       .agg(count(lit(1)), sum(col("o_totalprice").cast("decimal(18,2)")).cast("string"),
         countDistinct(col("sys_file_date"))).collect()(0)
-    println(s"EXPECT adopted count=${r16r.getLong(0)} sum=${r16r.getString(1)} d=${r16r.getLong(2)}")
+    expect(s"adopted count=${r16r.getLong(0)} sum=${r16r.getString(1)} d=${r16r.getLong(2)}")
 
     // 17: CHANGELOG RANGE (X138 witness — the r18 verdict's #6: the
     // q171 oracle replays per-snapshot diffs in DuckDB, but the
@@ -320,7 +327,7 @@ object DriveIceExport {
       .orderBy(col("_change_type"))
       .collect().toSeq
     r17r.foreach(r =>
-      println(s"EXPECT changes type=${r.getString(0)} count=${r.getLong(1)} sum=${r.getString(2)}"))
+      expect(s"changes type=${r.getString(0)} count=${r.getLong(1)} sum=${r.getString(2)}"))
 
     // 18: V3 ROW LINEAGE (r20 — X146): v2 export (NO lineage) →
     // upgrade → two deterministic sorted single-file appends (ids
@@ -347,7 +354,7 @@ object DriveIceExport {
       .agg(count(lit(1)), sum("_row_id"), min("_row_id"), max("_row_id"))
       .orderBy("seq").collect().toSeq
     r18r.foreach(r =>
-      println(s"EXPECT rowlineage seq=${r.getLong(0)} count=${r.getLong(1)} " +
+      expect(s"rowlineage seq=${r.getLong(0)} count=${r.getLong(1)} " +
         s"sum=${if (r.isNullAt(2)) "None" else r.getLong(2)} " +
         s"min=${if (r.isNullAt(3)) "None" else r.getLong(3)} " +
         s"max=${if (r.isNullAt(4)) "None" else r.getLong(4)}"))
@@ -369,7 +376,9 @@ object DriveIceExport {
     graft.io.IcebergExport.export(t19, "ord", "/tmp/ind_export_dvexport", formatVersion = 3)
     val r19r = graft.io.IcebergImport.read(spark, "/tmp/ind_export_dvexport")
       .agg(count(lit(1)), sum(col("o_totalprice").cast("decimal(18,2)")).cast("string")).collect()(0)
-    println(s"EXPECT dvexport count=${r19r.getLong(0)} sum=${r19r.getString(1)}")
+    expect(s"dvexport count=${r19r.getLong(0)} sum=${r19r.getString(1)}")
+    java.nio.file.Files.writeString(java.nio.file.Paths.get("/tmp/ind_export_expect.txt"),
+      expected.result().mkString("", "\n", "\n"))
     spark.stop()
   }
 }

@@ -45,6 +45,19 @@ class IcebergImportSpec extends SparkSpec {
     (t, dest)
   }
 
+  /** Rewrite `dest`'s head metadata file in place through `edit`. */
+  private def editHead(dest: String)(
+      edit: com.fasterxml.jackson.databind.node.ObjectNode => Unit): Unit = {
+    val om = new com.fasterxml.jackson.databind.ObjectMapper()
+    val metaDir = java.nio.file.Paths.get(dest, "metadata")
+    val hint = java.nio.file.Files.readString(metaDir.resolve("version-hint.text")).trim.toInt
+    val mdFile = IcebergTestSplice.mdFile(metaDir, hint)
+    val md = om.readTree(java.nio.file.Files.readString(mdFile))
+      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    edit(md)
+    java.nio.file.Files.writeString(mdFile, om.writeValueAsString(md))
+  }
+
   test("round-trip: export then import reproduces the table at head and at every snapshot") {
     val (t, dest) = exported()
     val back = IcebergImport.read(spark, dest)
@@ -231,7 +244,7 @@ class IcebergImportSpec extends SparkSpec {
   test("a delete manifest addressing a missing delete file fails loudly, never resurrects rows") {
     val (_, dest) = exported()
     // hand-write a manifest whose data_file has content=1 (position deletes)
-    val schema = new org.apache.avro.Schema.Parser().parse(IcebergExport.ManifestEntryAvro)
+    val schema = new org.apache.avro.Schema.Parser().parse(IcebergMetadata.ManifestEntryAvro)
     val dfSchema = schema.getField("data_file").schema()
     val pSchema = dfSchema.getField("partition").schema()
     val delManifest = java.nio.file.Paths.get(dest, "metadata", "m-del.avro")
@@ -276,5 +289,32 @@ class IcebergImportSpec extends SparkSpec {
     val err = intercept[Exception](IcebergImport.read(spark, badDir).count())
     assert(err.getMessage.contains("nowhere") || err.getMessage.contains("PATH_NOT_FOUND")
       || err.getMessage.contains("does not exist"))
+  }
+
+  test("a schema.name-mapping.default that is not JSON fails the read, naming the metadata file") {
+    val (_, dest) = exported()
+    editHead(dest) { md =>
+      md.get("properties").asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+        .put("schema.name-mapping.default", "not json")
+    }
+    // read as "no mapping", id-less files would silently lose renamed columns
+    val e = intercept[IllegalArgumentException](IcebergImport.read(spark, dest).collect())
+    assert(e.getMessage.contains("schema.name-mapping.default") &&
+      e.getMessage.contains(".metadata.json"), e.getMessage)
+  }
+
+  test("a current-schema-id no schema carries fails every face, naming the metadata file") {
+    val (_, dest) = exported()
+    editHead(dest)(_.put("current-schema-id", 99))
+    val faces: Seq[(String, () => Any)] = Seq(
+      "read" -> (() => IcebergImport.read(spark, dest).collect()),
+      "tableSchema" -> (() => IcebergImport.tableSchema(spark, dest)),
+      "append" -> (() => IcebergAppend.append(spark, dest, Seq((1L, "x")).toDF("id", "v"))),
+      "addColumn" -> (() => IcebergEvolve.addColumn(spark, dest, "c", "string")))
+    faces.foreach { case (face, run) =>
+      val e = intercept[IllegalArgumentException](run())
+      assert(e.getMessage.contains("current-schema-id 99") &&
+        e.getMessage.contains(".metadata.json"), s"$face: ${e.getMessage}")
+    }
   }
 }

@@ -21,25 +21,6 @@ object IcebergTestSplice {
     if (java.nio.file.Files.exists(plain)) plain else metaDir.resolve(f"v$v%05d.metadata.json")
   }
 
-  /** Minimal v2 manifest_entry schema for DELETE manifests — only the
-    * fields the import consults, plus equality_ids (field 135). */
-  val DeleteEntryAvro: String =
-    """{"type":"record","name":"manifest_entry","fields":[
-      |{"name":"status","type":"int"},
-      |{"name":"snapshot_id","type":["null","long"],"default":null},
-      |{"name":"sequence_number","type":["null","long"],"default":null},
-      |{"name":"file_sequence_number","type":["null","long"],"default":null},
-      |{"name":"data_file","type":{"type":"record","name":"r2","fields":[
-      |{"name":"content","type":"int"},
-      |{"name":"file_path","type":"string"},
-      |{"name":"file_format","type":"string"},
-      |{"name":"partition","type":{"type":"record","name":"r102","fields":[]}},
-      |{"name":"record_count","type":"long"},
-      |{"name":"file_size_in_bytes","type":"long"},
-      |{"name":"equality_ids","type":["null",{"type":"array","items":"int"}],"default":null}
-      |]}}
-      |]}""".stripMargin
-
   final case class Del(path: String, content: Int, seq: Long,
       eqIds: Seq[Int] = Nil, format: String = "PARQUET",
       partVals: Seq[(String, AnyRef)] = Nil)
@@ -58,98 +39,38 @@ object IcebergTestSplice {
 
   /** Splice a new current snapshot onto `dest` whose manifest list is
     * the previous snapshot's manifests plus ONE delete manifest holding
-    * an entry per `dels` element. */
+    * an entry per `dels` element — written and committed through
+    * [[IcebergMetadata]], like every writer of the bridge. */
   def addDeleteSnapshot(dest: String, dels: Seq[Del], specId: Int = 0,
       partFields: Seq[(String, String)] = Nil): Unit = {
-    import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val metaDir = java.nio.file.Paths.get(dest, "metadata")
-    val hint = java.nio.file.Files.readString(metaDir.resolve("version-hint.text")).trim.toInt
-    val mdFile = IcebergTestSplice.mdFile(metaDir, hint)
-    val md = om.readTree(java.nio.file.Files.readString(mdFile))
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    import org.apache.hadoop.fs.Path
+    val fs = new Path(dest).getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val (mdPath, md) = IcebergMetadata.loadHead(fs, dest)
+    val metaDir = mdPath.getParent
+    val fv = md.get("format-version").asInt
     val cur = md.get("current-snapshot-id").asLong
     val snaps = md.get("snapshots").asInstanceOf[com.fasterxml.jackson.databind.node.ArrayNode]
     val curSnap = (0 until snaps.size).map(snaps.get).find(_.get("snapshot-id").asLong == cur).get
+    val newSnapId = cur + 1
+    val maxSeq = dels.map(_.seq).max
 
     // the delete manifest, under the requested partition struct
-    val entryAvro =
-      if (partFields.isEmpty) DeleteEntryAvro
-      else {
-        val pf = partFields.map { case (name, kind) =>
-          val t = kind match {
-            case "date" => """{"type":"int","logicalType":"date"}"""
-            case k => "\"" + k + "\""
-          }
-          s"""{"name":"$name","type":["null",$t],"default":null}"""
-        }.mkString(",")
-        DeleteEntryAvro.replace(
-          """{"name":"partition","type":{"type":"record","name":"r102","fields":[]}}""",
-          s"""{"name":"partition","type":{"type":"record","name":"r102","fields":[$pf]}}""")
-      }
-    val delSchema = new org.apache.avro.Schema.Parser().parse(entryAvro)
-    val dfSchema = delSchema.getField("data_file").schema()
-    val pSchema = dfSchema.getField("partition").schema()
-    val newSnapId = cur + 1
-    val delManifest = metaDir.resolve(s"m-del-$newSnapId.avro")
-    val w = new org.apache.avro.file.DataFileWriter[GenericRecord](
-      new GenericDatumWriter[GenericRecord](delSchema))
-    w.setMeta("content", "deletes")
-    w.setMeta("format-version", "2")
-    w.setMeta("partition-spec-id", specId.toString)
-    w.create(delSchema, delManifest.toFile)
-    dels.foreach { d =>
-      val df = new GenericData.Record(dfSchema)
-      df.put("content", d.content)
-      df.put("file_path", d.path)
-      df.put("file_format", d.format)
-      val pRec = new GenericData.Record(pSchema)
-      d.partVals.foreach { case (n, v) => pRec.put(n, v) }
-      df.put("partition", pRec)
-      df.put("record_count", 1L)
-      df.put("file_size_in_bytes", 10L)
-      if (d.eqIds.nonEmpty) {
-        val arrSchema = dfSchema.getField("equality_ids").schema().getTypes.get(1)
-        val a = new GenericData.Array[Integer](d.eqIds.size, arrSchema)
-        d.eqIds.foreach(i => a.add(Integer.valueOf(i)))
-        df.put("equality_ids", a)
-      }
-      val e = new GenericData.Record(delSchema)
-      e.put("status", 1)
-      e.put("snapshot_id", java.lang.Long.valueOf(newSnapId))
-      e.put("sequence_number", java.lang.Long.valueOf(d.seq))
-      e.put("file_sequence_number", java.lang.Long.valueOf(d.seq))
-      e.put("data_file", df)
-      w.append(e)
-    }
-    w.close()
+    val header = IcebergMetadata.headerOf(md, mdPath, content = 1, specId,
+      partFields.zipWithIndex.map { case ((name, kind), i) =>
+        IcebergMetadata.PartField(name, kind, 1000 + i) })
+    val delManifest = IcebergMetadata.writeManifest(fs, new Path(metaDir, s"m-del-$newSnapId.avro"),
+      header, dels.map { d =>
+        IcebergMetadata.ManifestEntry.added(newSnapId, IcebergMetadata.DataFile(d.content, d.path,
+          d.format, recordCount = 1L, sizeBytes = 10L, partition = d.partVals,
+          equalityIds = d.eqIds), Some(d.seq))
+      }, maxSeq, newSnapId)
 
     // the new manifest list: previous data manifests + the delete one
-    val listSchema = new org.apache.avro.Schema.Parser().parse(IcebergExport.ManifestFileAvro)
     val prevList = readAvroRecords(curSnap.get("manifest-list").asText)
-    val newList = metaDir.resolve(s"snap-$newSnapId-1-del.avro")
-    val lw = new org.apache.avro.file.DataFileWriter[GenericRecord](
-      new GenericDatumWriter[GenericRecord](listSchema))
-    lw.setMeta("format-version", "2")
-    lw.create(listSchema, newList.toFile)
-    prevList.foreach(lw.append)
-    val maxSeq = dels.map(_.seq).max
-    val lr = new GenericData.Record(listSchema)
-    lr.put("manifest_path", delManifest.toString)
-    lr.put("manifest_length", java.nio.file.Files.size(delManifest))
-    lr.put("partition_spec_id", specId)
-    lr.put("content", 1)
-    lr.put("sequence_number", maxSeq)
-    lr.put("min_sequence_number", dels.map(_.seq).min)
-    lr.put("added_snapshot_id", newSnapId)
-    lr.put("added_files_count", dels.size)
-    lr.put("existing_files_count", 0)
-    lr.put("deleted_files_count", 0)
-    lr.put("added_rows_count", dels.size.toLong)
-    lr.put("existing_rows_count", 0L)
-    lr.put("deleted_rows_count", 0L)
-    lw.append(lr)
-    lw.close()
+      .map(IcebergMetadata.ManifestListEntry.decode)
+    val newList = IcebergMetadata.writeManifestList(fs,
+      new Path(metaDir, s"snap-$newSnapId-1-del.avro"), fv, newSnapId, Some(cur), maxSeq,
+      prevList :+ delManifest)
 
     // the new metadata version
     val newSnap = snaps.addObject()
@@ -158,15 +79,10 @@ object IcebergTestSplice {
     newSnap.put("sequence-number", maxSeq)
     newSnap.put("timestamp-ms", 1L)
     newSnap.putObject("summary").put("operation", "delete")
-    newSnap.put("manifest-list", newList.toString)
+    newSnap.put("manifest-list", newList)
     newSnap.put("schema-id", 0)
     md.put("current-snapshot-id", newSnapId)
     md.put("last-sequence-number", maxSeq)
-    java.nio.file.Files.writeString(
-      metaDir.resolve(s"v${hint + 1}.metadata.json"), om.writeValueAsString(md))
-    java.nio.file.Files.writeString(metaDir.resolve("version-hint.text"), (hint + 1).toString)
-    // the exporter wrote through Hadoop's checksummed local FS; rewriting
-    // version-hint.text via nio leaves its .crc sidecar stale — drop it
-    java.nio.file.Files.deleteIfExists(metaDir.resolve(".version-hint.text.crc"))
+    IcebergMetadata.commit(fs, mdPath, md)
   }
 }

@@ -27,7 +27,10 @@ Usage:
       changelog-range replay: per-step MULTISET STATE DIFFS between
       consecutive pinned snapshots after <fromSnapshot>; view `t` = the
       change rows with _change_type/_commit_snapshot_id prepended.
-Prints the result rows; exits non-zero on any spec violation.
+Prints the result rows; exits non-zero on any spec violation, including
+a manifest list without `format-version` or a manifest without one of the
+spec-required header keys (schema, partition-spec, partition-spec-id,
+format-version, content).
 """
 import io
 import json
@@ -218,6 +221,18 @@ def read_dv_blob(path, offset, size):
 
 
 # ------------------------------------------------------------- iceberg
+# the key-value metadata the table spec requires of every v2+ manifest
+# ("Manifests") and of every manifest list ("Manifest Lists")
+MANIFEST_KEYS = ("schema", "partition-spec", "partition-spec-id", "format-version", "content")
+LIST_KEYS = ("format-version",)
+
+
+def check_header(path, meta, required):
+    missing = [k for k in required if k not in meta]
+    if missing:
+        raise SystemExit(f"{path}: missing spec-required header key(s) {missing}")
+
+
 def resolve(table_dir, p):
     if p.startswith("file:"):
         p = p[len("file:"):]
@@ -289,7 +304,9 @@ def plan_scan(table_dir, snapshot_id=None):
     for s in md.get("partition-specs") or []:
         specs[s.get("spec-id", 0)] = s.get("fields") or []
 
-    mlist, _ = read_avro_file(resolve(table_dir, snap["manifest-list"]))
+    list_path = resolve(table_dir, snap["manifest-list"])
+    mlist, lmeta = read_avro_file(list_path)
+    check_header(list_path, lmeta, LIST_KEYS)
     data, deletes = [], []
     for m in mlist:
         seq0 = m.get("sequence_number", 0)
@@ -301,7 +318,9 @@ def plan_scan(table_dir, snapshot_id=None):
         # lineage for those rows.
         m_first = m.get("first_row_id")
         rowid_run = 0
-        entries, mmeta = read_avro_file(resolve(table_dir, m["manifest_path"]))
+        m_path = resolve(table_dir, m["manifest_path"])
+        entries, mmeta = read_avro_file(m_path)
+        check_header(m_path, mmeta, MANIFEST_KEYS)
         for e in entries:
             if e.get("status", 1) == 2:
                 continue
