@@ -85,35 +85,17 @@ object IcebergAppend {
     * to skip a replayed micro-batch (Iceberg's own streaming sinks use
     * the same summary-marker idempotence pattern). */
   def committedTxnIds(spark: SparkSession, tableDir: String): Set[String] = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val metaDir = new Path(tableDir, "metadata")
-    val fs = metaDir.getFileSystem(hconf)
-    val mdPath = IcebergImport.latestMetadata(fs, metaDir)
+    val tm = IcebergImport.meta(spark, tableDir)
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val md = { val in = fs.open(mdPath); try om.readTree(in) finally in.close() }
-    val snaps = md.get("snapshots")
-    val fromSummaries: Set[String] =
-      if (snaps == null) Set.empty
-      else (0 until snaps.size).map(snaps.get).flatMap { s =>
-        val sm = s.get("summary")
-        if (sm != null && sm.hasNonNull(TxnKey)) Some(sm.get(TxnKey).asText) else None
-      }.toSet
-    val props = md.get("properties")
-    val fromProps: Set[String] =
-      if (props == null) Set.empty
-      else {
-        import scala.jdk.CollectionConverters._
-        props.fieldNames().asScala.flatMap {
-          case TxnRawKey =>
-            val arr = om.readTree(props.get(TxnRawKey).asText)
-            (0 until arr.size).map(arr.get(_).asText)
-          case k if k.startsWith(TxnRangesPrefix) =>
-            val ns = k.stripPrefix(TxnRangesPrefix)
-            decodeRanges(props.get(k).asText).map(n => s"$ns.$n")
-          case _ => Nil
-        }.toSet
-      }
-    fromSummaries ++ fromProps
+    tm.snapshots.flatMap(_.summary.get(TxnKey)).toSet ++ tm.properties.flatMap {
+      case (TxnRawKey, raw) =>
+        val arr = om.readTree(raw)
+        (0 until arr.size).map(arr.get(_).asText)
+      case (k, v) if k.startsWith(TxnRangesPrefix) =>
+        val ns = k.stripPrefix(TxnRangesPrefix)
+        decodeRanges(v).map(n => s"$ns.$n")
+      case _ => Nil
+    }
   }
 
   // ------------------------------------------------------------------
@@ -175,88 +157,71 @@ object IcebergAppend {
   // one atomic metadata commit
   // ------------------------------------------------------------------
 
-  /** The parsed write-side view of a table head: current schema fields
-    * `(id, name, spark type)`, the default partition spec as
-    * `(name, transform, srcCol, srcType, avro kind, field id,
+  /** The parsed write-side view of a table head: its metadata, current
+    * schema fields `(id, name, spark type)`, the default partition spec
+    * as `(name, transform, srcCol, srcType, avro kind, field id,
     * identity?)` tuples, and the next snapshot/sequence coordinates.
     * `parent` is the head of the TARGET BRANCH (`main` = the table
     * head). */
   private[io] case class Loaded(
-      tableDir: String,
-      fs: org.apache.hadoop.fs.FileSystem,
-      metaDir: Path,
-      mdPath: Path,
-      md: ObjectNode,
+      meta: IcebergMetadata.TableMetadata,
       fields: Seq[(Int, String, DataType)],
       specFields: Seq[(String, String, String, DataType, String, Int, Boolean)],
-      defaultSpecId: Int,
       newSnap: Long,
       newSeq: Long,
       parent: Option[Long],
       branch: String) {
+    def tableDir: String = meta.tableDir
+    def fs: org.apache.hadoop.fs.FileSystem = meta.fs
+    def metaDir: Path = meta.path.getParent
+    def mdPath: Path = meta.path
+    /** The metadata JSON this commit edits. */
+    def md: ObjectNode = meta.json
 
     /** Write `files` as one manifest of this commit at metadata/`name`:
       * ADDED entries whose sequences inherit the commit's. `specId`
       * defaults to the table's default spec, under its partition
       * struct; any other spec here is the unpartitioned delete spec. */
     def writeManifest(name: String, content: Int, files: Seq[IcebergMetadata.DataFile],
-        specId: Int = defaultSpecId): IcebergMetadata.ManifestListEntry = {
+        specId: Int = meta.defaultSpecId): IcebergMetadata.ManifestListEntry = {
       val partFields =
-        if (specId != defaultSpecId) Nil
+        if (specId != meta.defaultSpecId) Nil
         else specFields.map(f => IcebergMetadata.PartField(f._1, f._5, f._6))
       IcebergMetadata.writeManifest(fs, new Path(metaDir, name),
-        IcebergMetadata.headerOf(md, mdPath, content, specId, partFields),
+        IcebergMetadata.headerOf(meta, content, specId, partFields),
         files.map(IcebergMetadata.ManifestEntry.added(newSnap, _)), newSeq, newSnap)
     }
   }
 
   private[io] def load(spark: SparkSession, tableDir: String,
       branch: String = "main"): Loaded = {
-    val metaDir = new Path(tableDir, "metadata")
-    val fs = metaDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (mdPath, md) = IcebergMetadata.loadHead(fs, tableDir)
+    val tm = IcebergImport.meta(spark, tableDir)
     // refuse non-v<N> layouts up front — the commit could not derive
     // the next version name (A DML that writes data files first and
     // only then discovers it cannot commit would leave debris)
-    IcebergImport.writableVersionOf(mdPath)
-    val fv = if (md.has("format-version")) md.get("format-version").asInt else 1
-    require(fv == 2 || fv == 3,
-      s"commit needs a v2/v3 table (sequence-number inheritance); $mdPath is format-version $fv")
+    IcebergImport.writableVersionOf(tm.path)
+    require(tm.formatVersion == 2 || tm.formatVersion == 3,
+      s"commit needs a v2/v3 table (sequence-number inheritance); ${tm.path} is " +
+        s"format-version ${tm.formatVersion}")
 
     // ---- current schema: (id, name, spark type) in schema order ----
-    val schemaNode = IcebergMetadata.currentSchema(md, mdPath)
-    require(schemaNode != null && schemaNode.get("fields") != null,
-      s"no parseable current schema in $mdPath")
-    val fieldsN = schemaNode.get("fields")
-    val fields: Seq[(Int, String, DataType)] = (0 until fieldsN.size).map { i =>
-      val f = fieldsN.get(i)
-      (f.get("id").asInt, f.get("name").asText, IcebergImport.icebergToSpark(f.get("type")))
+    require(tm.schema.nonEmpty, s"no parseable current schema in ${tm.path}")
+    val fields: Seq[(Int, String, DataType)] = tm.schema.map { f =>
+      (f.id, f.name, f.field.getOrElse(throw new IllegalArgumentException(
+        s"unmapped Iceberg type ${f.json.get("type")} of column '${f.name}' in ${tm.path}")).dataType)
     }
 
     // ---- the default partition spec: rows must land IN their
     // partitions (scoped-delete semantics), so every spec transform
     // must be computable here — identity, day/month/year/hour,
     // bucket[N] (murmur3), truncate[W]; anything else refuses
-    val defaultSpecId = if (md.has("default-spec-id")) md.get("default-spec-id").asInt else 0
-    val specNode = {
-      val specs = md.get("partition-specs")
-      if (specs != null && specs.size > 0)
-        (0 until specs.size).map(specs.get)
-          .find(s => (if (s.has("spec-id")) s.get("spec-id").asInt else 0) == defaultSpecId)
-          .map(_.get("fields")).orNull
-      else md.get("partition-spec")
-    }
     val specFields: Seq[(String, String, String, DataType, String, Int, Boolean)] =
-      if (specNode == null) Nil
-      else (0 until specNode.size).map(specNode.get).map { f =>
-        val transform = f.get("transform").asText
-        val srcId = if (f.has("source-id")) f.get("source-id").asInt else -1
-        val src = fields.find(_._1 == srcId).getOrElse(throw new IllegalArgumentException(
-          s"partition field '${f.get("name").asText}' sources field id $srcId, " +
+      tm.specs.get(tm.defaultSpecId).toSeq.flatMap(_.fields).map { f =>
+        val name = f.name
+        val src = fields.find(_._1 == f.sourceId).getOrElse(throw new IllegalArgumentException(
+          s"partition field '$name' sources field id ${f.sourceId}, " +
             s"not in the current schema of $tableDir"))
-        val fid = if (f.has("field-id")) f.get("field-id").asInt else 1000
-        val name = f.get("name").asText
-        val kind = transform match {
+        val kind = f.transform match {
           case "identity" => src._3 match {
             case ByteType | ShortType | IntegerType => "int"
             case LongType => "long"
@@ -280,7 +245,7 @@ object IcebergAppend {
             s"append cannot compute partition transform '$other' (field '$name' of " +
               s"$tableDir) — rows must land in their partitions; compact or evolve the spec first")
         }
-        (name, transform, src._2, src._3, kind, fid, transform == "identity")
+        (name, f.transform, src._2, src._3, kind, f.fieldId, f.transform == "identity")
       }
     specFields.filterNot(_._7).foreach { f =>
       require(!fields.exists(_._2 == f._1),
@@ -288,28 +253,17 @@ object IcebergAppend {
     }
 
     // ---- new snapshot / sequence coordinates; parent = branch head --
-    val snaps = md.withArray[ArrayNode]("snapshots")
-    val prevIds = (0 until snaps.size).map(snaps.get(_).get("snapshot-id").asLong)
     val parent: Option[Long] =
-      if (branch == "main") {
-        if (md.hasNonNull("current-snapshot-id") && md.get("current-snapshot-id").asLong != -1L)
-          Some(md.get("current-snapshot-id").asLong)
-        else None
-      } else {
-        val refs = md.get("refs")
-        require(refs != null && refs.hasNonNull(branch),
-          s"no branch '$branch' on $tableDir — create it with IcebergEvolve.createBranch")
-        val r = refs.get(branch)
-        val tpe = if (r.hasNonNull("type")) r.get("type").asText else "branch"
-        require(tpe == "branch",
-          s"ref '$branch' on $tableDir is a $tpe — tags are immutable, only branches take commits")
-        Some(r.get("snapshot-id").asLong)
+      if (branch == "main") tm.current
+      else {
+        val r = tm.refs.getOrElse(branch, throw new IllegalArgumentException(
+          s"no branch '$branch' on $tableDir — create it with IcebergEvolve.createBranch"))
+        require(r.kind == "branch",
+          s"ref '$branch' on $tableDir is a ${r.kind} — tags are immutable, only branches take commits")
+        Some(r.snapshotId)
       }
-    val newSnap = (prevIds :+ 0L).max + 1
-    val newSeq = (if (md.hasNonNull("last-sequence-number"))
-      md.get("last-sequence-number").asLong else 0L) + 1
-    Loaded(tableDir, fs, metaDir, mdPath, md, fields, specFields, defaultSpecId,
-      newSnap, newSeq, parent, branch)
+    Loaded(tm, fields, specFields,
+      (tm.snapshots.map(_.id) :+ 0L).max + 1, tm.lastSequence + 1, parent, branch)
   }
 
   /** Conform `df` to the table's current schema, write it as
@@ -440,36 +394,26 @@ object IcebergAppend {
       summaryProps: Map[String, String] = Map.empty,
       carryPrevious: Boolean = true,
       replacePrev: Map[String, IcebergMetadata.ManifestListEntry] = Map.empty): Long = {
-    import lt.{fs, md, metaDir, mdPath, tableDir, newSnap, newSeq, parent, branch}
+    import lt.{meta, fs, md, metaDir, mdPath, tableDir, newSnap, newSeq, parent, branch}
     require(manifests.nonEmpty, s"a snapshot commit on $tableDir needs at least one manifest")
     val now = System.currentTimeMillis()
-    val snaps = md.withArray[ArrayNode]("snapshots")
 
     // ---- new manifest list: (previous manifests +) the new ones -----
-    val fv = md.get("format-version").asInt
+    val fv = meta.formatVersion
     val carried: Seq[IcebergMetadata.ManifestListEntry] =
       if (!carryPrevious) Nil
-      else parent match {
-        case None => Nil
-        case Some(c) =>
-          val snap = (0 until snaps.size).map(snaps.get).find(_.get("snapshot-id").asLong == c)
-            .getOrElse(throw new IllegalArgumentException(
-              s"parent snapshot $c not in the snapshot list of $mdPath"))
-          require(snap.hasNonNull("manifest-list"),
-            s"snapshot $c of $mdPath has no manifest-list (v1 inline layout?) — cannot commit")
-          val listP = IcebergImport.resolve(tableDir, snap.get("manifest-list").asText)
-          IcebergImport.readAvro(_ => fs, listP)._1.map { src =>
-            replacePrev.getOrElse(src.get("manifest_path").toString,
-              IcebergMetadata.ManifestListEntry.decode(src))
-          }
+      else parent.toSeq.flatMap { c =>
+        val snap = meta.snapshot(c)
+        require(snap.manifestList.isDefined,
+          s"snapshot $c of $mdPath has no manifest-list (v1 inline layout?) — cannot commit")
+        meta.manifests(snap).map(m => replacePrev.getOrElse(m.path, m))
       }
     // v3 row-id assignment for THIS commit's data manifests: the first
     // gets the table's next-row-id, subsequent ones advance by row
     // count (the spec's cumulative assignment); delete manifests carry
     // no row ids. The snapshot-level first-row-id stamp below uses the
     // same base, so list and snapshot agree by construction.
-    var rowIdCursor: Long =
-      if (fv == 3 && md.has("next-row-id")) md.get("next-row-id").asLong else 0L
+    var rowIdCursor: Long = if (fv == 3) meta.nextRowId else 0L
     val added = manifests.map { m =>
       if (fv != 3 || m.content != 0) m
       else { val r = m.copy(firstRowId = Some(rowIdCursor)); rowIdCursor += m.addedRows; r }
@@ -479,7 +423,7 @@ object IcebergAppend {
       fv, newSnap, parent, newSeq, carried ++ added)
 
     // ---- the new metadata version -------------------------------------
-    val newSnapNode = snaps.addObject()
+    val newSnapNode = md.withArray[ArrayNode]("snapshots").addObject()
     newSnapNode.put("snapshot-id", newSnap)
     parent.foreach(c => newSnapNode.put("parent-snapshot-id", c))
     newSnapNode.put("sequence-number", newSeq)
@@ -494,7 +438,7 @@ object IcebergAppend {
     // (first-row-id + added-rows) and the table's next-row-id advances
     // — the spec's writer obligation; readers here null-fill lineage
     if (fv == 3) {
-      val nextRowId = if (md.has("next-row-id")) md.get("next-row-id").asLong else 0L
+      val nextRowId = meta.nextRowId
       val addedRows = manifests.filter(_.content == 0).map(_.addedRows).sum
       newSnapNode.put("first-row-id", nextRowId)
       newSnapNode.put("added-rows", addedRows)
@@ -525,23 +469,14 @@ object IcebergAppend {
     * delete manifests, registering a fresh spec id when absent (spec
     * evolution is append-only; `default-spec-id` is untouched). The
     * edit rides the SAME metadata commit as the delete snapshot. */
-  private[io] def ensureUnpartitionedSpec(lt: Loaded): Int = {
-    val md = lt.md
-    val specs = md.withArray[ArrayNode]("partition-specs")
-    val existing = (0 until specs.size).map(specs.get).find { s =>
-      val f = s.get("fields"); f == null || f.size == 0
+  private[io] def ensureUnpartitionedSpec(lt: Loaded): Int =
+    lt.meta.specs.values.filter(_.fields.isEmpty).map(_.id).minOption.getOrElse {
+      val newId = (lt.meta.specs.keys.toSeq :+ 0).max + 1
+      val node = lt.md.withArray[ArrayNode]("partition-specs").addObject()
+      node.put("spec-id", newId)
+      node.putArray("fields")
+      newId
     }
-    existing match {
-      case Some(s) => if (s.has("spec-id")) s.get("spec-id").asInt else 0
-      case None =>
-        val newId = ((0 until specs.size).map(s =>
-          if (specs.get(s).has("spec-id")) specs.get(s).get("spec-id").asInt else 0) :+ 0).max + 1
-        val node = specs.addObject()
-        node.put("spec-id", newId)
-        node.putArray("fields")
-        newId
-    }
-  }
 
   /** Append `df` as a new snapshot on `branch` (default: the table
     * head); returns the new snapshot id. `summaryProps` land in the

@@ -67,60 +67,17 @@ object IcebergChanges {
   private[graft] final case class ChangeStep(snapshotId: Long, timestampMs: Long,
       operation: String, parent: Option[Long], sequence: Option[Long])
 
-  /** Walk `to`'s parent chain back to (exclusive) `from` — like
-    * [[IcebergImport.appendSteps]] but op-agnostic: every operation is
-    * legal here, classification happens at emit time. Oldest first. */
+  /** `to`'s ancestors back to (exclusive) `from`, oldest first — the
+    * range [[IcebergImport.appendsBetween]] walks, but op-agnostic:
+    * every operation is legal here, classification happens at emit
+    * time. A snapshot without a `sequence-number` (v1 tables, the
+    * pre-upgrade history of v1→v2 tables) gets None, not 0: a 0 default
+    * would collapse every such snapshot to the same ordinal downstream
+    * (the streaming changelog dedups by it). */
   private[graft] def changeSteps(spark: SparkSession, tableDir: String,
-      fromSnapshot: Option[Long], toSnapshot: Option[Long]): Seq[ChangeStep] = {
-    val (_, mdPath, md) = IcebergImport.readMeta(spark, tableDir)
-    val snaps = md.get("snapshots")
-    require(snaps != null && snaps.size > 0, s"no snapshots in $mdPath")
-    val byId = (0 until snaps.size).map(snaps.get)
-      .map(s => s.get("snapshot-id").asLong -> s).toMap
-    val to = toSnapshot.getOrElse {
-      require(md.hasNonNull("current-snapshot-id") && md.get("current-snapshot-id").asLong != -1L,
-        s"no current snapshot in $mdPath")
-      md.get("current-snapshot-id").asLong
-    }
-    require(byId.contains(to), s"snapshot $to not found in $mdPath — " +
-      s"have ${byId.keys.toSeq.sorted.mkString(", ")}")
-    fromSnapshot.foreach(f => require(byId.contains(f),
-      s"snapshot $f not found in $mdPath — have ${byId.keys.toSeq.sorted.mkString(", ")}"))
-    if (fromSnapshot.contains(to)) return Nil
-    val chain = scala.collection.mutable.ArrayBuffer
-      .empty[com.fasterxml.jackson.databind.JsonNode]
-    var cur: Option[Long] = Some(to)
-    while (cur.isDefined && cur != fromSnapshot) {
-      val node = byId.getOrElse(cur.get, throw new IllegalArgumentException(
-        s"snapshot ${cur.get} (an ancestor of $to) is missing from $mdPath — expired by " +
-          "retention? start the range at a retained snapshot"))
-      chain += node
-      cur =
-        if (node.hasNonNull("parent-snapshot-id")) Some(node.get("parent-snapshot-id").asLong)
-        else None
-    }
-    require(fromSnapshot.isEmpty || cur == fromSnapshot,
-      s"snapshot ${fromSnapshot.get} is not an ancestor of $to in $tableDir — a changelog " +
-        "range must follow one lineage (branches diverge; pick bounds on the same branch)")
-    chain.reverse.map { s =>
-      val id = s.get("snapshot-id").asLong
-      val ts = if (s.hasNonNull("timestamp-ms")) s.get("timestamp-ms").asLong else 0L
-      val op =
-        if (s.hasNonNull("summary") && s.get("summary").hasNonNull("operation"))
-          s.get("summary").get("operation").asText
-        else "unknown"
-      val parent =
-        if (s.hasNonNull("parent-snapshot-id")) Some(s.get("parent-snapshot-id").asLong)
-        else None
-      // None (not 0) when the field is absent — v1 tables and the
-      // pre-upgrade history of v1→v2 tables carry no sequence numbers,
-      // and a 0 default would collapse every such snapshot to the same
-      // ordinal downstream (the streaming changelog dedups by it)
-      val seq =
-        if (s.hasNonNull("sequence-number")) Some(s.get("sequence-number").asLong) else None
-      ChangeStep(id, ts, op, parent, seq)
-    }.toSeq
-  }
+      fromSnapshot: Option[Long], toSnapshot: Option[Long]): Seq[ChangeStep] =
+    IcebergImport.meta(spark, tableDir).range(fromSnapshot, toSnapshot).map(s =>
+      ChangeStep(s.id, s.timestampMs, s.operation.getOrElse("unknown"), s.parent, s.sequence))
 
   /** The table's current columns with field-id metadata STRIPPED (the
     * emitted rows are engine rows, not Iceberg data files — see the

@@ -106,7 +106,7 @@ object IcebergDml {
       // v3: position deletes must be DELETION VECTORS (the spec retires
       // position-delete files in format-version 3) — encoded and
       // written inside executor tasks, prior DVs unioned + superseded
-      if (formatVersion(lt) >= 3) {
+      if (lt.meta.formatVersion >= 3) {
         val (m, replaced) = PuffinDeletionVectors.writeDvDelete(spark, lt, positions)
         return Some(IcebergAppend.commitSnapshot(spark, lt, Seq(m),
           operation = "delete", replacePrev = replaced))
@@ -147,7 +147,7 @@ object IcebergDml {
     val current = readHead(spark, tableDir, lt)
     assignments.keys.foreach(c => require(current.columns.contains(c),
       s"assignment targets column '$c', not in the schema of $tableDir"))
-    if (current.schema.fields.exists(f => hasMap(f.dataType)) || formatVersion(lt) >= 3) {
+    if (current.schema.fields.exists(f => hasMap(f.dataType)) || lt.meta.formatVersion >= 3) {
       // position-addressed pre-images, two reasons to be here:
       //  - map-typed tables: the full-column pre-image equality delete
       //    is impossible (nothing can join on maps);
@@ -167,7 +167,7 @@ object IcebergDml {
       // v3: the pre-image delete half rides as DELETION VECTORS (same
       // one-snapshot overwrite; DVs reference only the OLD files, so
       // the post-image manifest is never touched by its own delete)
-      if (formatVersion(lt) >= 3) {
+      if (lt.meta.formatVersion >= 3) {
         val (del3, replaced) = PuffinDeletionVectors.writeDvDelete(spark, lt, positions)
         val data3 = IcebergAppend.writeDataManifest(spark, lt, updated)
         return Some(IcebergAppend.commitSnapshot(spark, lt, Seq(del3, data3),
@@ -272,8 +272,6 @@ object IcebergDml {
     keyCols
   }
 
-  private def formatVersion(lt: IcebergAppend.Loaded): Int =
-    if (lt.md.has("format-version")) lt.md.get("format-version").asInt else 1
 
   /** Exact-name column reference: backtick-quoted so a name containing
     * a dot is never parsed as a nested-field path. */

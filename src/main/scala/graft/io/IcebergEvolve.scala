@@ -1,7 +1,6 @@
 package graft.io
 
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 /** METADATA-ONLY schema evolution on a FOREIGN Iceberg table — the
@@ -31,7 +30,7 @@ object IcebergEvolve {
     * Old data files keep resolving: id-carrying ones by field id,
     * id-less ones through the name-mapping entry this commit appends. */
   def renameColumn(spark: SparkSession, tableDir: String, from: String, to: String): Unit =
-    commit(spark, tableDir) { (md, schema) =>
+    commit(spark, tableDir) { (tm, schema) =>
       val fields = schema.get("fields").asInstanceOf[ArrayNode]
       val hit = (0 until fields.size).map(fields.get)
         .find(_.get("name").asText == from)
@@ -40,7 +39,7 @@ object IcebergEvolve {
       require(!(0 until fields.size).map(fields.get).exists(_.get("name").asText == to),
         s"column '$to' already exists in $tableDir")
       hit.asInstanceOf[ObjectNode].put("name", to)
-      addMappingName(md, hit.get("id").asInt, currentNames = Seq(to), historical = from)
+      addMappingName(tm.json, hit.get("id").asInt, currentNames = Seq(to), historical = from)
     }
 
   /** Add a top-level optional column of the given Iceberg type name
@@ -48,7 +47,8 @@ object IcebergEvolve {
     * primitive spellings). The new field takes `last-column-id + 1`;
     * files that predate it read as typed NULLs. */
   def addColumn(spark: SparkSession, tableDir: String, name: String, icebergType: String): Unit =
-    commit(spark, tableDir) { (md, schema) =>
+    commit(spark, tableDir) { (tm, schema) =>
+      val md = tm.json
       val fields = schema.get("fields").asInstanceOf[ArrayNode]
       require(!(0 until fields.size).map(fields.get).exists(_.get("name").asText == name),
         s"column '$name' already exists in $tableDir")
@@ -67,7 +67,7 @@ object IcebergEvolve {
     * Refused when any partition spec sources the field (layout
     * identity must stay resolvable). */
   def dropColumn(spark: SparkSession, tableDir: String, name: String): Unit =
-    commit(spark, tableDir) { (md, schema) =>
+    commit(spark, tableDir) { (tm, schema) =>
       val fields = schema.get("fields").asInstanceOf[ArrayNode]
       val idx = (0 until fields.size)
         .find(i => fields.get(i).get("name").asText == name)
@@ -75,19 +75,7 @@ object IcebergEvolve {
           s"no top-level column '$name' in the current schema of $tableDir"))
       require(fields.size > 1, s"cannot drop the only column of $tableDir")
       val fid = fields.get(idx).get("id").asInt
-      def specNodes: Seq[com.fasterxml.jackson.databind.JsonNode] = {
-        val v2 = md.get("partition-specs")
-        if (v2 != null && v2.size > 0)
-          (0 until v2.size).flatMap { i =>
-            val fs = v2.get(i).get("fields")
-            if (fs == null) Nil else (0 until fs.size).map(fs.get)
-          }
-        else {
-          val v1 = md.get("partition-spec")
-          if (v1 == null) Nil else (0 until v1.size).map(v1.get)
-        }
-      }
-      require(!specNodes.exists(f => f.hasNonNull("source-id") && f.get("source-id").asInt == fid),
+      require(!tm.specs.values.exists(_.fields.exists(_.sourceId == fid)),
         s"column '$name' (field id $fid) is a partition source in $tableDir — cannot drop")
       fields.remove(idx)
     }
@@ -124,19 +112,7 @@ object IcebergEvolve {
     * .expireSnapshots]] RETAINS every ref-pointed snapshot. */
   def createTag(spark: SparkSession, tableDir: String, name: String,
       snapshotId: Option[Long] = None): Unit =
-    commitRaw(spark, tableDir) { (md, _) =>
-      val refs =
-        if (md.hasNonNull("refs")) md.get("refs").asInstanceOf[ObjectNode]
-        else md.putObject("refs")
-      require(!refs.hasNonNull(name), s"ref '$name' already exists on $tableDir")
-      val snaps = md.get("snapshots")
-      val ids = (0 until snaps.size).map(snaps.get(_).get("snapshot-id").asLong).toSet
-      val target = snapshotId.getOrElse(md.get("current-snapshot-id").asLong)
-      require(ids.contains(target),
-        s"snapshot $target not in $tableDir — have ${ids.toSeq.sorted.mkString(", ")}")
-      val r = refs.putObject(name)
-      r.put("snapshot-id", target); r.put("type", "tag")
-    }
+    createRef(spark, tableDir, name, snapshotId, "tag")
 
   /** Create a writable BRANCH ref forked at a snapshot (the current
     * one when `snapshotId` is empty) — Iceberg's write-audit-publish
@@ -147,18 +123,18 @@ object IcebergEvolve {
     * publishes it. */
   def createBranch(spark: SparkSession, tableDir: String, name: String,
       snapshotId: Option[Long] = None): Unit =
-    commitRaw(spark, tableDir) { (md, _) =>
-      val refs =
-        if (md.hasNonNull("refs")) md.get("refs").asInstanceOf[ObjectNode]
-        else md.putObject("refs")
-      require(!refs.hasNonNull(name), s"ref '$name' already exists on $tableDir")
-      val snaps = md.get("snapshots")
-      val ids = (0 until snaps.size).map(snaps.get(_).get("snapshot-id").asLong).toSet
-      val target = snapshotId.getOrElse(md.get("current-snapshot-id").asLong)
+    createRef(spark, tableDir, name, snapshotId, "branch")
+
+  private def createRef(spark: SparkSession, tableDir: String, name: String,
+      snapshotId: Option[Long], kind: String): Unit =
+    commitRaw(spark, tableDir) { tm =>
+      require(!tm.refs.contains(name), s"ref '$name' already exists on $tableDir")
+      val target = snapshotId.getOrElse(tm.head)
+      val ids = tm.snapshots.map(_.id)
       require(ids.contains(target),
-        s"snapshot $target not in $tableDir — have ${ids.toSeq.sorted.mkString(", ")}")
-      val r = refs.putObject(name)
-      r.put("snapshot-id", target); r.put("type", "branch")
+        s"snapshot $target not in $tableDir — have ${ids.sorted.mkString(", ")}")
+      val r = refsNode(tm).putObject(name)
+      r.put("snapshot-id", target); r.put("type", kind)
     }
 
   /** Fast-forward `main` to a branch's head — the PUBLISH step of
@@ -167,29 +143,17 @@ object IcebergEvolve {
     * would silently drop main-side commits). The branch ref survives
     * (drop it separately once done). */
   def fastForward(spark: SparkSession, tableDir: String, branch: String): Unit =
-    commitRaw(spark, tableDir) { (md, _) =>
-      val refs = if (md.hasNonNull("refs")) md.get("refs").asInstanceOf[ObjectNode] else null
-      require(refs != null && refs.hasNonNull(branch), s"no ref '$branch' on $tableDir")
-      val r = refs.get(branch)
-      val tpe = if (r.hasNonNull("type")) r.get("type").asText else "branch"
-      require(tpe == "branch", s"ref '$branch' on $tableDir is a $tpe — cannot fast-forward to a tag")
-      val target = r.get("snapshot-id").asLong
-      val mainHead = md.get("current-snapshot-id").asLong
-      // ancestry walk: parent chain from the branch head must reach main
-      val snaps = md.get("snapshots")
-      val parentOf: Map[Long, Option[Long]] = (0 until snaps.size).map(snaps.get).map { s =>
-        s.get("snapshot-id").asLong ->
-          (if (s.hasNonNull("parent-snapshot-id")) Some(s.get("parent-snapshot-id").asLong) else None)
-      }.toMap
-      var cursor: Option[Long] = Some(target)
-      var isAncestor = false
-      while (cursor.isDefined && !isAncestor) {
-        if (cursor.get == mainHead) isAncestor = true
-        else cursor = parentOf.getOrElse(cursor.get, None)
-      }
-      require(isAncestor,
-        s"main ($mainHead) is not an ancestor of branch '$branch' ($target) on $tableDir — " +
-          "not a fast-forward; rebase the branch or cherry-pick instead")
+    commitRaw(spark, tableDir) { tm =>
+      val r = tm.refs.getOrElse(branch,
+        throw new IllegalArgumentException(s"no ref '$branch' on $tableDir"))
+      require(r.kind == "branch",
+        s"ref '$branch' on $tableDir is a ${r.kind} — cannot fast-forward to a tag")
+      val target = r.snapshotId
+      require(tm.current.exists(main => tm.ancestors(target).exists(_.id == main)),
+        s"main (${tm.current.getOrElse("none")}) is not an ancestor of branch '$branch' " +
+          s"($target) on $tableDir — not a fast-forward; rebase the branch or cherry-pick instead")
+      val md = tm.json
+      val refs = refsNode(tm)
       val mainRef =
         if (refs.hasNonNull("main")) refs.get("main").asInstanceOf[ObjectNode]
         else refs.putObject("main")
@@ -197,19 +161,22 @@ object IcebergEvolve {
       if (!mainRef.has("type")) mainRef.put("type", "branch")
       md.put("current-snapshot-id", target)
       md.put("last-updated-ms", System.currentTimeMillis())
-      val slog = md.withArray[com.fasterxml.jackson.databind.node.ArrayNode]("snapshot-log")
-      val sl = slog.addObject()
+      val sl = md.withArray[ArrayNode]("snapshot-log").addObject()
       sl.put("timestamp-ms", System.currentTimeMillis()); sl.put("snapshot-id", target)
     }
 
   /** Drop a named ref; `main` refuses (it is the table head). */
   def dropRef(spark: SparkSession, tableDir: String, name: String): Unit =
-    commitRaw(spark, tableDir) { (md, _) =>
+    commitRaw(spark, tableDir) { tm =>
       require(name != "main", s"cannot drop the main branch of $tableDir")
-      val refs = if (md.hasNonNull("refs")) md.get("refs").asInstanceOf[ObjectNode] else null
-      require(refs != null && refs.hasNonNull(name), s"no ref '$name' on $tableDir")
-      refs.remove(name)
+      require(tm.refs.contains(name), s"no ref '$name' on $tableDir")
+      refsNode(tm).remove(name)
     }
+
+  /** The metadata JSON's `refs` object, created when absent. */
+  private def refsNode(tm: IcebergMetadata.TableMetadata): ObjectNode =
+    if (tm.json.hasNonNull("refs")) tm.json.get("refs").asInstanceOf[ObjectNode]
+    else tm.json.putObject("refs")
 
   /** Merge `historical` into the field's `schema.name-mapping.default`
     * entry, creating the property/entry when absent. Unrenamed fields
@@ -239,15 +206,16 @@ object IcebergEvolve {
     props.put("schema.name-mapping.default", om.writeValueAsString(arr))
   }
 
-  /** Load the latest metadata, hand (metadata root, a MUTABLE copy of
-    * the current schema appended as a new schema-id) to `edit`, then
+  /** Load the latest metadata, hand (the table, a MUTABLE copy of the
+    * current schema appended as a new schema-id) to `edit`, then
     * commit v<hint+1>.metadata.json + hint. */
   private def commit(spark: SparkSession, tableDir: String)
-      (edit: (ObjectNode, ObjectNode) => Unit): Unit =
-    commitRaw(spark, tableDir) { (md, mdPath) =>
+      (edit: (IcebergMetadata.TableMetadata, ObjectNode) => Unit): Unit =
+    commitRaw(spark, tableDir) { tm =>
+      val md = tm.json
       // the current schema node, per the v2 (schemas + current-schema-id)
       // and v1 (single schema) shapes
-      val cur = IcebergMetadata.currentSchema(md, mdPath).asInstanceOf[ObjectNode]
+      val cur = tm.schemaNode.asInstanceOf[ObjectNode]
       Option(md.get("schemas")).filter(_.size > 0) match {
         case Some(schemas) =>
           val arr = schemas.asInstanceOf[ArrayNode]
@@ -255,7 +223,7 @@ object IcebergEvolve {
           val newId = (0 until arr.size).map(arr.get(_).get("schema-id").asInt).max + 1
           val evolved = cur.deepCopy().asInstanceOf[ObjectNode]
           evolved.put("schema-id", newId)
-          edit(md, evolved)
+          edit(tm, evolved)
           arr.add(evolved)
           md.put("current-schema-id", newId)
           // migration-era metadata may carry the legacy single "schema"
@@ -264,19 +232,18 @@ object IcebergEvolve {
           if (md.has("schema")) md.set("schema", evolved.deepCopy())
         case None =>
           // v1 single-schema metadata evolves in place
-          edit(md, cur)
+          edit(tm, cur)
       }
     }
 
   /** One metadata-only commit with NO schema machinery (ref edits):
-    * load latest, `edit` the root (given its file), commit v<hint+1> +
-    * hint through [[IcebergMetadata.commit]] — a schema/ref commit
-    * racing an append conflicts loudly instead of overwriting it. */
+    * load latest, `edit` its JSON, commit v<hint+1> + hint through
+    * [[IcebergMetadata.commit]] — a schema/ref commit racing an append
+    * conflicts loudly instead of overwriting it. */
   private def commitRaw(spark: SparkSession, tableDir: String)
-      (edit: (ObjectNode, Path) => Unit): Unit = {
-    val fs = new Path(tableDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (mdPath, md) = IcebergMetadata.loadHead(fs, tableDir)
-    edit(md, mdPath)
-    IcebergMetadata.commit(fs, mdPath, md)
+      (edit: IcebergMetadata.TableMetadata => Unit): Unit = {
+    val tm = IcebergImport.meta(spark, tableDir)
+    edit(tm)
+    IcebergMetadata.commit(tm.fs, tm.path, tm.json)
   }
 }

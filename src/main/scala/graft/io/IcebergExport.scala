@@ -836,12 +836,13 @@ object IcebergExport {
     }.toMap
   }
 
-  /** Per-file, per-column footer stats bound for a manifest entry.
+  /** Per-file, per-column stats of a manifest entry (footer stats when
+    * written; any may be absent when read from a foreign manifest).
     * `nullCount`/bounds are absent whenever a footer can't vouch for
     * them — Iceberg treats absent stats as "no information", so the
     * export can only ever narrow pruning, never corrupt it. */
   private[io] final case class ColFileStats(
-      valueCount: Long, nullCount: Option[Long],
+      valueCount: Option[Long], nullCount: Option[Long],
       lower: Option[Array[Byte]], upper: Option[Array[Byte]])
   private[io] final case class FileStats(rows: Long, cols: Map[String, ColFileStats])
 
@@ -876,7 +877,7 @@ object IcebergExport {
                   stats.map(_.genericGetMin.asInstanceOf[AnyRef]).reduce(boundMin(kind)), kind)),
                 Some(serializeBound(
                   stats.map(_.genericGetMax.asInstanceOf[AnyRef]).reduce(boundMax(kind)), kind)))
-            Some(name -> ColFileStats(vc, nc, lo, hi))
+            Some(name -> ColFileStats(Some(vc), nc, lo, hi))
           }
         }.toOption.flatten
       }

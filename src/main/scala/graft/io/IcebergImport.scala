@@ -12,8 +12,9 @@ import org.apache.spark.sql.types._
   * `/root/reference/spark/jobs/job_silver.py:66-88`) first needs to
   * READ their existing tables. No Iceberg runtime ships here, so this
   * walks the PUBLIC spec's layout directly: resolve the current (or a
-  * named) snapshot from the table metadata JSON, stream its Avro
-  * manifest list and manifests, apply entry statuses, and hand the
+  * named) snapshot from the table metadata JSON, read its Avro
+  * manifest list and manifests (all decoded by [[IcebergMetadata]]),
+  * apply entry statuses, and hand the
   * surviving data-file set to Spark's own parquet reader — planning is
   * O(metadata), the scan is a stock distributed parquet read
   * (predicate pushdown, column pruning and codegen all intact).
@@ -119,22 +120,10 @@ object IcebergImport {
   private final case class DeleteEntry(path: String, raw: String, seq: Long,
       content: Int, equalityIds: Seq[Int], scope: Seq[ScopeCond], recordCount: Long = -1L,
       dv: Option[(String, Long, Long)] = None)
-  private final case class SpecField(name: String, transform: String, sourceId: Int)
-  /** `loc`: the table root — partition-component detection must only
-    * look at directory components BELOW it. `schema`: the metadata
-    * JSON's current schema as a Spark type, when parseable — an empty
-    * snapshot still reads with the table's columns; its fields carry
-    * `parquet.field.id` metadata so id-carrying data files resolve
-    * columns BY FIELD ID (Iceberg's projection rule — renames and
-    * added columns come out right). `nameMapping`: the table's
-    * `schema.name-mapping.default` property (field id → historical
-    * names), the spec's fallback for data files written WITHOUT
-    * parquet field ids. */
+  /** A planned read: the live data and delete entries of snapshot
+    * `snap` (None = the head) of the table whose metadata is `meta`. */
   private final case class ScanPlan(data: Seq[DataEntry], deletes: Seq[DeleteEntry],
-      fieldNames: Map[Int, String], loc: String, schema: Option[StructType],
-      fieldTypes: Map[Int, DataType] = Map.empty, snap: Option[Long] = None,
-      nameMapping: Map[Int, Seq[String]] = Map.empty,
-      formatVersion: Int = 2)
+      meta: IcebergMetadata.TableMetadata, snap: Option[Long])
 
   // helper-column names used while delete application is in flight;
   // chosen to never collide with user schemas (and guarded anyway)
@@ -160,12 +149,9 @@ object IcebergImport {
       // zero data files still reads as the TABLE's shape: an empty
       // frame with the metadata schema, so downstream column
       // references analyze instead of failing on a column-less frame
-      return plan.schema
-        .map(s => spark.createDataFrame(java.util.Collections.emptyList[Row](), s))
-        .getOrElse(spark.emptyDataFrame)
-    if (plan.deletes.isEmpty)
-      mixedFrame(spark, plan.data.map(_.ref), plan.fieldNames,
-        plan.schema, plan.nameMapping, plan.loc, plan.snap, withMeta = false)
+      emptyFrame(spark, plan.meta)
+    else if (plan.deletes.isEmpty)
+      mixedFrame(spark, plan.data.map(_.ref), plan.meta, plan.snap, withMeta = false)
     else applyDeletes(spark, plan)
   }
 
@@ -177,35 +163,42 @@ object IcebergImport {
     * lineage helper columns when `withMeta` — but ORC rows have NO row
     * position (`_metadata.row_index` is parquet-only), so a caller
     * that needs REAL positions sets `posRequired` and ORC refuses
-    * loudly instead of mis-addressing rows. */
+    * loudly instead of mis-addressing rows. Columns come from `tm`'s
+    * current schema: id-carrying files resolve BY FIELD ID (Iceberg's
+    * projection rule — renames and added columns come out right),
+    * id-less ones through `schema.name-mapping.default`. */
   private def mixedFrame(spark: SparkSession, refs: Seq[FileRef],
-      fieldNames: Map[Int, String], schema: Option[StructType],
-      nameMapping: Map[Int, Seq[String]], loc: String, snap: Option[Long],
+      tm: IcebergMetadata.TableMetadata, snap: Option[Long],
       withMeta: Boolean, posRequired: Boolean = false): DataFrame = {
     val (parq, rest) = refs.partition(_.fmt == "PARQUET")
     val (avro, orc) = rest.partition(_.fmt == "AVRO")
-    def typedSchema(what: String): StructType = schema.getOrElse(
+    def typedSchema(what: String): StructType = tm.sparkSchema.getOrElse(
       throw new IllegalArgumentException(
-        s"$what data files under $loc need a parseable table schema, and the " +
+        s"$what data files under ${tm.root} need a parseable table schema, and the " +
           "metadata JSON's schema could not be mapped"))
     val frames = Seq.newBuilder[DataFrame]
     if (parq.nonEmpty)
-      frames += baseFrame(spark, parq, fieldNames.values.toSet,
-        withMeta = withMeta, tableLoc = loc, snap = snap,
-        idSchema = schema, nameMapping = nameMapping)
+      frames += baseFrame(spark, parq, tm, withMeta = withMeta, snap = snap)
     if (avro.nonEmpty)
       frames += IcebergAvroData.read(spark, avro.map(_.path), typedSchema("Avro"),
         withPos = withMeta)
     if (orc.nonEmpty) {
       require(!posRequired,
-        s"rows in ORC data files under $loc cannot be addressed BY POSITION " +
+        s"rows in ORC data files under ${tm.root} cannot be addressed BY POSITION " +
           "(Spark's _metadata.row_index is parquet-only) — position deletes and " +
           "position-delete DML need parquet; compact the table to parquet first")
       frames += IcebergOrcData.read(spark, orc.map(_.path), typedSchema("ORC"),
-        nameMapping, withFile = withMeta)
+        tm.nameMapping, withFile = withMeta)
     }
     frames.result().reduce(_ unionByName _)
   }
+
+  /** An empty frame in `tm`'s current schema (`extra` columns after). */
+  private def emptyFrame(spark: SparkSession, tm: IcebergMetadata.TableMetadata,
+      extra: Seq[StructField] = Nil): DataFrame =
+    tm.sparkSchema
+      .map(s => spark.createDataFrame(java.util.Collections.emptyList[Row](), StructType(s ++ extra)))
+      .getOrElse(spark.emptyDataFrame)
 
   /** [[read]] plus per-row lineage: two extra columns `__graft_ice_file`
     * (the data file's path as `_metadata.file_path` spells it) and
@@ -222,13 +215,9 @@ object IcebergImport {
     val plan = keepFiles.map(f => plan0.copy(data = plan0.data.filter(d => f(d.path))))
       .getOrElse(plan0)
     if (plan.data.isEmpty)
-      return plan.schema
-        .map(s => spark.createDataFrame(java.util.Collections.emptyList[Row](),
-          s.add(FileCol, StringType).add(PosCol, LongType)))
-        .getOrElse(spark.emptyDataFrame)
-    if (plan.deletes.isEmpty)
-      mixedFrame(spark, plan.data.map(_.ref), plan.fieldNames,
-        plan.schema, plan.nameMapping, plan.loc, plan.snap, withMeta = true,
+      emptyFrame(spark, plan.meta, Seq(StructField(FileCol, StringType), StructField(PosCol, LongType)))
+    else if (plan.deletes.isEmpty)
+      mixedFrame(spark, plan.data.map(_.ref), plan.meta, plan.snap, withMeta = true,
         posRequired = true)
     else applyDeletes(spark, plan, keepLineage = true)
   }
@@ -262,8 +251,8 @@ object IcebergImport {
       snapshotId: Option[Long] = None): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, col, lit, when}
     val plan = planScan(spark, tableDir, snapshotId)
-    require(plan.formatVersion == 3,
-      s"$tableDir is format-version ${plan.formatVersion} — row lineage is a v3 feature; " +
+    require(plan.meta.formatVersion == 3,
+      s"$tableDir is format-version ${plan.meta.formatVersion} — row lineage is a v3 feature; " +
         "upgrade the table (PuffinDeletionVectors.upgradeToV3) first")
     require(plan.data.forall(_.fmt == "PARQUET"),
       s"row lineage needs parquet data files (row positions are _metadata.row_index); " +
@@ -328,388 +317,137 @@ object IcebergImport {
   // planning: metadata JSON → manifests → (data entries, delete entries)
   // ------------------------------------------------------------------
 
+  /** The head metadata of the table at `tableDir`. */
+  private[io] def meta(spark: SparkSession, tableDir: String): IcebergMetadata.TableMetadata =
+    IcebergMetadata.load(new Path(tableDir).getFileSystem(spark.sparkContext.hadoopConfiguration),
+      tableDir)
+
   private def planScan(spark: SparkSession, tableDir: String, snapshotId: Option[Long]): ScanPlan = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    def fs(p: Path) = p.getFileSystem(hconf)
-
-    val metaDir = new Path(tableDir, "metadata")
-    val mdPath = latestMetadata(fs(metaDir), metaDir)
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val md = {
-      val in = fs(mdPath).open(mdPath)
-      try om.readTree(in) finally in.close()
+    val tm = meta(spark, tableDir)
+    // v3 feature triage: deletion vectors READ (the Puffin branch of
+    // applyDeletes); row lineage is OPT-IN via [[readWithRowLineage]]
+    // (r20 — the default read stays lineage-free: CDC alignment and
+    // plain reads pay nothing); NON-NULL COLUMN DEFAULTS have no read
+    // semantics here and refuse loudly.
+    if (tm.formatVersion == 3) tm.schema.foreach { f =>
+      require(!f.json.hasNonNull("initial-default"),
+        s"v3 column '${f.name}' of ${tm.path} carries initial-default " +
+          s"${f.json.get("initial-default")} — non-null column defaults have no read " +
+          "semantics here; materialize the default (rewrite the files) before migrating")
     }
-    val fv = if (md.has("format-version")) md.get("format-version").asInt else 1
-    require(fv >= 1 && fv <= 3, s"unsupported Iceberg format-version $fv at $mdPath")
-    // v3 feature triage, checked below once the schema node is in
-    // hand: deletion vectors READ (the Puffin branch of applyDeletes);
-    // row lineage is OPT-IN via [[readWithRowLineage]] (r20 — the
-    // default read stays lineage-free: CDC alignment and plain reads
-    // pay nothing); NON-NULL COLUMN DEFAULTS have no read semantics
-    // here and refuse loudly.
-
-    // field id → name from the current schema (v2 "schemas" +
-    // "current-schema-id"; v1 single "schema") — resolves equality_ids
-    val schemaNode = IcebergMetadata.currentSchema(md, mdPath)
-    if (fv == 3 && schemaNode != null && schemaNode.get("fields") != null) {
-      val fields = schemaNode.get("fields")
-      (0 until fields.size).map(fields.get).foreach { f =>
-        require(!f.hasNonNull("initial-default"),
-          s"v3 column '${f.get("name").asText}' of $mdPath carries initial-default " +
-            s"${f.get("initial-default")} — non-null column defaults have no read " +
-            "semantics here; materialize the default (rewrite the files) before migrating")
-      }
-    }
-    val fieldNames: Map[Int, String] =
-      if (schemaNode == null || schemaNode.get("fields") == null) Map.empty
-      else {
-        val fields = schemaNode.get("fields")
-        (0 until fields.size).map(fields.get)
-          .map(f => f.get("id").asInt -> f.get("name").asText).toMap
-      }
-
-    // every partition spec, by id (v2 "partition-specs"; v1 single
-    // "partition-spec" = spec 0) — delete-file scoping resolves the
-    // DELETE MANIFEST's own spec, not the table default
-    def specFieldsOf(node: com.fasterxml.jackson.databind.JsonNode): Seq[SpecField] =
-      if (node == null) Nil
-      else (0 until node.size).map(node.get).map { f =>
-        SpecField(f.get("name").asText, f.get("transform").asText,
-          if (f.has("source-id")) f.get("source-id").asInt else -1)
-      }
-    val specsById: Map[Int, Seq[SpecField]] = {
-      val specs = md.get("partition-specs")
-      if (specs != null && specs.size > 0)
-        (0 until specs.size).map(specs.get)
-          .map(s => (if (s.has("spec-id")) s.get("spec-id").asInt else 0) ->
-            specFieldsOf(s.get("fields"))).toMap
-      else Map(0 -> specFieldsOf(md.get("partition-spec")))
-    }
-
-    val wantSnap = snapshotId.getOrElse {
-      require(md.hasNonNull("current-snapshot-id") && md.get("current-snapshot-id").asLong != -1L,
-        s"no current snapshot in $mdPath")
-      md.get("current-snapshot-id").asLong
-    }
-    val snaps = md.get("snapshots")
-    require(snaps != null && snaps.size > 0, s"no snapshots in $mdPath")
-    val snap = (0 until snaps.size).map(snaps.get)
-      .find(_.get("snapshot-id").asLong == wantSnap)
-      .getOrElse(throw new IllegalArgumentException(
-        s"snapshot $wantSnap not found in $mdPath — have " +
-          (0 until snaps.size).map(snaps.get(_).get("snapshot-id").asLong).mkString(", ")))
-
-    // v1 snapshots may carry an inline "manifests" array instead of a
-    // list file; (path, manifest sequence number for inheritance,
-    // manifest's partition spec id)
-    val manifests: Seq[(String, Long, Int, Option[Long])] =
-      if (snap.hasNonNull("manifest-list")) {
-        readAvro(fs _, resolve(tableDir, snap.get("manifest-list").asText))._1.map { r =>
-          val seq = fieldOpt(r, "sequence_number").map(_.asInstanceOf[Long]).getOrElse(0L)
-          val specId = fieldOpt(r, "partition_spec_id").map(_.asInstanceOf[Int]).getOrElse(0)
-          // v3 row lineage: the manifest's assigned first_row_id (spec
-          // id 520); None on pre-v3 lists = those rows have no lineage
-          val firstRowId = fieldOpt(r, "first_row_id").map(_.asInstanceOf[Long])
-          (r.get("manifest_path").toString, seq, specId, firstRowId)
-        }
-      } else if (snap.hasNonNull("manifests")) {
-        val a = snap.get("manifests")
-        (0 until a.size).map(i => (a.get(i).asText, 0L, 0, Option.empty[Long]))
-      } else throw new IllegalArgumentException(s"snapshot $wantSnap has no manifest list in $mdPath")
+    val snap = tm.snapshot(snapshotId.getOrElse(tm.head))
 
     val dataB = Seq.newBuilder[DataEntry]
     val delB = Seq.newBuilder[DeleteEntry]
-    manifests.foreach { case (mPathRaw, listSeq, specId, mFirstRowId) =>
-      val mPath = resolve(tableDir, mPathRaw)
-      val entries = readAvro(fs _, mPath)._1
-      val specFields = specsById.getOrElse(specId, throw new IllegalArgumentException(
-        s"manifest $mPathRaw references partition spec $specId, absent from $mdPath"))
+    tm.manifests(snap).foreach { m =>
+      val mf = tm.entries(m)
+      // delete-file scoping resolves the DELETE MANIFEST's own spec,
+      // not the table default
+      val specFields = tm.specs.getOrElse(m.specId, throw new IllegalArgumentException(
+        s"manifest ${m.path} references partition spec ${m.specId}, absent from ${tm.path}")).fields
       // v3 row-id inheritance within one manifest (spec "Row Lineage"):
       // a data-file entry's explicit first_row_id wins; a null one is
       // assigned manifest.first_row_id + the record counts of the
       // null-first_row_id data entries before it, in manifest order.
       var rowIdRun = 0L
-      entries.foreach { e =>
-        val status = fieldOpt(e, "status").map(_.asInstanceOf[Int]).getOrElse(1)
-        if (status != 2) { // DELETED entry: the spec requires skipping it
-          val df = e.get("data_file").asInstanceOf[GenericRecord]
-          val content = fieldOpt(df, "content").map(_.asInstanceOf[Int]).getOrElse(0)
-          val fmt = df.get("file_format").toString.toUpperCase
-          // DATA files: parquet (the scan path), ORC (Spark's native
-          // columnar reader + by-id rename projection), or Avro
-          // (decoded by [[IcebergAvroData]]). DELETE files: parquet
-          // only — their application plan reads them columnar.
-          // v3 deletion vector: a content=1 entry addressing a Puffin
-          // blob via (referenced_data_file, content_offset, size)
-          val dvTriple: Option[(String, Long, Long)] =
-            for {
-              off <- fieldOpt(df, "content_offset").map(_.asInstanceOf[Long])
-              size <- fieldOpt(df, "content_size_in_bytes").map(_.asInstanceOf[Long])
-              refFile <- fieldOpt(df, "referenced_data_file").map(_.toString)
-            } yield (refFile, off, size)
-          if (content == 0)
-            require(fmt == "PARQUET" || fmt == "AVRO" || fmt == "ORC",
-              s"data file format $fmt in $mPath is not supported — parquet, orc and avro only")
-          else if (content == 1 && dvTriple.isDefined)
-            require(fmt == "PUFFIN",
-              s"deletion-vector entry in $mPath names format $fmt — the v3 spec stores DVs in PUFFIN")
-          else
-            require(fmt == "PARQUET",
-              s"non-parquet delete file ($fmt) in $mPath — only parquet delete files " +
-                "(and v3 Puffin deletion vectors) are supported")
-          // v2 sequence inheritance: a null sequence on an ADDED entry
-          // takes the manifest's; null on EXISTING/other must be
-          // explicit. v1 manifests have no sequence_number field at all
-          // and the spec assigns every v1 entry sequence 0 — EXISTING
-          // entries (routine after v1 manifest rewrites) included.
-          val seq = fieldOpt(e, "sequence_number").map(_.asInstanceOf[Long]).getOrElse {
-            if (fv == 1) 0L
-            else {
-              require(status == 1,
-                s"manifest entry with status=$status and no sequence_number in $mPath — cannot inherit")
-              listSeq
-            }
-          }
-          val raw = df.get("file_path").toString
-          val abs = resolve(tableDir, raw).toString
-          val rc = fieldOpt(df, "record_count").map(_.asInstanceOf[Long]).getOrElse(-1L)
-          val size = fieldOpt(df, "file_size_in_bytes").map(_.asInstanceOf[Long]).getOrElse(-1L)
-          content match {
-            case 0 =>
-              val explicitFirst = fieldOpt(df, "first_row_id").map(_.asInstanceOf[Long])
-              val assignedFirst = explicitFirst.orElse(mFirstRowId.map { mf =>
-                val v = mf + rowIdRun
-                rowIdRun += math.max(0L, rc)
-                v
-              })
-              dataB += DataEntry(abs, raw, seq,
-                kvBytesOf(df, "lower_bounds"), kvBytesOf(df, "upper_bounds"), rc,
-                dataScope(specFields, df, fieldNames), fmt,
-                partitionDisplay(specFields, df), assignedFirst, size)
-            case 1 => delB += DeleteEntry(abs, raw, seq, 1, Nil, Nil, rc, dvTriple)
-            case 2 =>
-              val idsNode = fieldOpt(df, "equality_ids").orNull
-              require(idsNode != null,
-                s"equality delete file $raw in $mPath carries no equality_ids")
-              import scala.jdk.CollectionConverters._
-              val ids = idsNode.asInstanceOf[java.util.List[_]].asScala
-                .map(_.asInstanceOf[Int]).toSeq
-              require(ids.nonEmpty, s"equality delete file $raw in $mPath has empty equality_ids")
-              delB += DeleteEntry(abs, raw, seq, 2, ids,
-                deleteScope(specFields, df, fieldNames, raw, mPath.toString), rc)
-            case other => throw new IllegalArgumentException(
-              s"data_file with unknown content=$other in $mPath")
-          }
+      // DELETED entries: the spec requires skipping them
+      mf.entries.filter(_.status != 2).foreach { e =>
+        val f = e.file
+        val fmt = f.format.toUpperCase
+        // DATA files: parquet (the scan path), ORC (Spark's native
+        // columnar reader + by-id rename projection), or Avro (decoded
+        // by [[IcebergAvroData]]). DELETE files: parquet only — their
+        // application plan reads them columnar — or a v3 deletion
+        // vector: a content=1 entry addressing a Puffin blob
+        if (f.content == 0)
+          require(fmt == "PARQUET" || fmt == "AVRO" || fmt == "ORC",
+            s"data file format $fmt in ${mf.path} is not supported — parquet, orc and avro only")
+        else if (f.content == 1 && f.dv.isDefined)
+          require(fmt == "PUFFIN",
+            s"deletion-vector entry in ${mf.path} names format $fmt — the v3 spec stores DVs in PUFFIN")
+        else
+          require(fmt == "PARQUET",
+            s"non-parquet delete file ($fmt) in ${mf.path} — only parquet delete files " +
+              "(and v3 Puffin deletion vectors) are supported")
+        val seq = tm.dataSequence(e, m, mf.path)
+        val abs = resolve(tableDir, f.path).toString
+        f.content match {
+          case 0 =>
+            val assignedFirst = f.firstRowId.orElse(m.firstRowId.map { mf0 =>
+              val v = mf0 + rowIdRun
+              rowIdRun += math.max(0L, f.recordCount)
+              v
+            })
+            def bounds(b: IcebergExport.ColFileStats => Option[Array[Byte]]) =
+              f.stats.flatMap { case (id, c) => b(c).map(id -> _) }
+            dataB += DataEntry(abs, f.path, seq, bounds(_.lower), bounds(_.upper), f.recordCount,
+              dataScope(specFields, mf, f, tm.fieldNames), fmt,
+              specFields.map(s => s.name -> partValue(mf, f, s.name).fold("null")(v => s"$v")),
+              assignedFirst, f.sizeBytes)
+          case 1 => delB += DeleteEntry(abs, f.path, seq, 1, Nil, Nil, f.recordCount,
+            f.dv.map(d => (d.referencedDataFile, d.offset, d.length)))
+          case 2 =>
+            require(f.equalityIds.nonEmpty,
+              s"equality delete file ${f.path} in ${mf.path} carries no equality_ids")
+            delB += DeleteEntry(abs, f.path, seq, 2, f.equalityIds,
+              deleteScope(specFields, mf, f, tm.fieldNames), f.recordCount)
+          case other => throw new IllegalArgumentException(
+            s"data_file with unknown content=$other in ${mf.path}")
         }
       }
     }
-    val fieldTypes: Map[Int, DataType] =
-      if (schemaNode == null || schemaNode.get("fields") == null) Map.empty
-      else (0 until schemaNode.get("fields").size()).flatMap { i =>
-        val f = schemaNode.get("fields").get(i)
-        try Some(f.get("id").asInt -> icebergToSpark(f.get("type")))
-        catch { case _: Exception => None }
-      }.toMap
-    // the fallback mapping for data files with NO parquet field ids
-    val nameMapping = IcebergMetadata.nameMapping(md, mdPath)
-    ScanPlan(dataB.result(), delB.result(), fieldNames,
-      fs(mdPath).makeQualified(new Path(tableDir)).toString, sparkSchemaOf(schemaNode),
-      fieldTypes, snapshotId, nameMapping, fv)
+    ScanPlan(dataB.result(), delB.result(), tm, snapshotId)
   }
 
-  /** Decode a logical-map-of-bytes manifest field (lower/upper bounds)
-    * to (field id → raw bytes); empty when absent. */
-  private def kvBytesOf(df: GenericRecord, field: String): Map[Int, Array[Byte]] =
-    fieldOpt(df, field).map { v =>
-      import scala.jdk.CollectionConverters._
-      v.asInstanceOf[java.util.List[_]].asScala.map { e =>
-        val r = e.asInstanceOf[GenericRecord]
-        val bb = r.get("value").asInstanceOf[java.nio.ByteBuffer]
-        val b = new Array[Byte](bb.remaining()); bb.duplicate().get(b)
-        r.get("key").asInstanceOf[Int] -> b
-      }.toMap
-    }.getOrElse(Map.empty)
-
-  /** The metadata JSON's schema as a Spark StructType — None when the
-    * schema is absent or carries a shape this mapping doesn't cover.
-    * Type names per the public spec's primitive list; `uuid` surfaces
-    * as string, `fixed[N]` as binary (what Spark's parquet reader
-    * yields for those physical types anyway). */
-  private def sparkSchemaOf(schemaNode: com.fasterxml.jackson.databind.JsonNode): Option[StructType] =
-    try {
-      if (schemaNode == null || schemaNode.get("fields") == null) None
-      else Some(StructType((0 until schemaNode.get("fields").size()).map { i =>
-        structFieldOf(schemaNode.get("fields").get(i))
-      }))
-    } catch { case _: Exception => None }
-
-  /** One Iceberg schema field as a Spark StructField, carrying the
-    * Iceberg field id as `parquet.field.id` metadata — the key Spark's
-    * parquet reader consults (`spark.sql.parquet.fieldId.read.enabled`)
-    * to resolve columns BY ID instead of by name, which is Iceberg's
-    * projection rule for id-carrying data files. */
-  private def structFieldOf(f: com.fasterxml.jackson.databind.JsonNode): StructField = {
-    val meta =
-      if (f.hasNonNull("id"))
-        new MetadataBuilder().putLong("parquet.field.id", f.get("id").asLong).build()
-      else Metadata.empty
-    StructField(f.get("name").asText, icebergToSpark(f.get("type")),
-      nullable = !(f.has("required") && f.get("required").asBoolean), meta)
-  }
-
-  private[io] def icebergToSpark(t: com.fasterxml.jackson.databind.JsonNode): DataType =
-    if (t.isTextual) t.asText match {
-      case "boolean"     => BooleanType
-      case "int"         => IntegerType
-      case "long"        => LongType
-      case "float"       => FloatType
-      case "double"      => DoubleType
-      case "date"        => DateType
-      case "timestamp"   => TimestampNTZType
-      case "timestamptz" => TimestampType
-      case "string"      => StringType
-      case "uuid"        => StringType
-      case "binary"      => BinaryType
-      case s if s.startsWith("decimal(") =>
-        val Array(p, sc) = s.stripPrefix("decimal(").stripSuffix(")").split(',').map(_.trim.toInt)
-        DecimalType(p, sc)
-      case s if s.startsWith("fixed") => BinaryType
-      case other => throw new IllegalArgumentException(s"unmapped Iceberg type $other")
-    } else t.get("type").asText match {
-      case "struct" =>
-        StructType((0 until t.get("fields").size()).map { i =>
-          structFieldOf(t.get("fields").get(i))
-        })
-      case "list" =>
-        ArrayType(icebergToSpark(t.get("element")),
-          containsNull = !(t.has("element-required") && t.get("element-required").asBoolean))
-      case "map" =>
-        MapType(icebergToSpark(t.get("key")), icebergToSpark(t.get("value")),
-          valueContainsNull = !(t.has("value-required") && t.get("value-required").asBoolean))
-      case other => throw new IllegalArgumentException(s"unmapped Iceberg nested type $other")
+  /** File `f`'s value for partition field `name` of its manifest `mf`:
+    * None when the manifest's partition struct lacks the field; a
+    * date-logical value as a LocalDate. */
+  private def partValue(mf: IcebergMetadata.Manifest, f: IcebergMetadata.DataFile,
+      name: String): Option[Any] =
+    mf.partFields.find(_.name == name).map { pf =>
+      f.partition.collectFirst { case (`name`, v) => v }.orNull match {
+        case i: java.lang.Integer if pf.kind == "date" => java.time.LocalDate.ofEpochDay(i.longValue())
+        case v => v
+      }
     }
 
   /** BEST-EFFORT partition scope of a DATA file — the pruning-side
     * twin of [[deleteScope]]: unknown transforms, a missing partition
-    * struct, or an unresolvable source simply contribute nothing (the
+    * field, or an unresolvable source simply contribute nothing (the
     * file just doesn't prune), never a refusal — data-file scoping is
     * an optimization, delete scoping is correctness. */
-  private def dataScope(specFields: Seq[SpecField], df: GenericRecord,
-      fieldNames: Map[Int, String]): Seq[ScopeCond] = {
-    if (specFields.isEmpty) return Nil
-    val pRec = df.get("partition") match {
-      case r: GenericRecord => r
-      case _ => return Nil
-    }
-    specFields.flatMap { f =>
+  private def dataScope(specFields: Seq[IcebergMetadata.SpecField], mf: IcebergMetadata.Manifest,
+      f: IcebergMetadata.DataFile, fieldNames: Map[Int, String]): Seq[ScopeCond] =
+    specFields.flatMap { s =>
       for {
-        colName <- fieldNames.get(f.sourceId)
-        avroField <- Option(pRec.getSchema.getField(f.name))
-      } yield {
-        val rawV = pRec.get(f.name)
-        val isDate = {
-          val sc0 = avroField.schema()
-          val concrete =
-            if (sc0.getType == org.apache.avro.Schema.Type.UNION) {
-              import scala.jdk.CollectionConverters._
-              sc0.getTypes.asScala.find(_.getType != org.apache.avro.Schema.Type.NULL)
-                .getOrElse(sc0)
-            } else sc0
-          concrete.getLogicalType != null && concrete.getLogicalType.getName == "date"
-        }
-        val v: Any = rawV match {
-          case null => null
-          case u: org.apache.avro.util.Utf8 => u.toString
-          case i: java.lang.Integer if isDate => java.time.LocalDate.ofEpochDay(i.longValue())
-          case other => other
-        }
-        ScopeCond(colName, f.transform, v)
-      }
+        colName <- fieldNames.get(s.sourceId)
+        v <- partValue(mf, f, s.name)
+      } yield ScopeCond(colName, s.transform, v)
     }
-  }
-
-  /** The file's FULL partition struct rendered as (spec field name,
-    * value string) — every spec field, every transform (bucket/
-    * truncate images render as their stored integers/prefixes), date
-    * logicals as ISO dates, null as "null". The `.partitions` display
-    * surface; exact by construction (the struct IS the file's
-    * partition). */
-  private def partitionDisplay(specFields: Seq[SpecField],
-      df: GenericRecord): Seq[(String, String)] = {
-    if (specFields.isEmpty) return Nil
-    val pRec = df.get("partition") match {
-      case r: GenericRecord => r
-      case _ => return specFields.map(f => (f.name, "null"))
-    }
-    specFields.map { f =>
-      Option(pRec.getSchema.getField(f.name)) match {
-        case None => (f.name, "null")
-        case Some(avroField) =>
-          val isDate = {
-            val s0 = avroField.schema()
-            val concrete =
-              if (s0.getType == org.apache.avro.Schema.Type.UNION) {
-                import scala.jdk.CollectionConverters._
-                s0.getTypes.asScala.find(_.getType != org.apache.avro.Schema.Type.NULL)
-                  .getOrElse(s0)
-              } else s0
-            concrete.getLogicalType != null && concrete.getLogicalType.getName == "date"
-          }
-          val v = pRec.get(f.name) match {
-            case null => "null"
-            case i: java.lang.Integer if isDate =>
-              java.time.LocalDate.ofEpochDay(i.longValue()).toString
-            case other => other.toString
-          }
-          (f.name, v)
-      }
-    }
-  }
 
   /** Partition scope of one equality-delete entry: Nil under an
     * unpartitioned spec (global delete); (source column, transform,
     * partition value) conditions under an identity or bucket[N] spec
     * (graft computes the spec's murmur3 bucket function itself);
     * refusal for transforms it cannot evaluate. */
-  private def deleteScope(specFields: Seq[SpecField], df: GenericRecord,
-      fieldNames: Map[Int, String], raw: String, mPath: String): Seq[ScopeCond] = {
+  private def deleteScope(specFields: Seq[IcebergMetadata.SpecField], mf: IcebergMetadata.Manifest,
+      f: IcebergMetadata.DataFile, fieldNames: Map[Int, String]): Seq[ScopeCond] = {
     if (specFields.isEmpty) return Nil
+    val raw = f.path
     val known = Set("identity", "day", "month", "year", "hour")
-    val unsupported = specFields.filterNot(f => known(f.transform) ||
-      f.transform.matches("bucket\\[\\d+\\]") || f.transform.matches("truncate\\[\\d+\\]"))
+    val unsupported = specFields.filterNot(s => known(s.transform) ||
+      s.transform.matches("bucket\\[\\d+\\]") || s.transform.matches("truncate\\[\\d+\\]"))
     require(unsupported.isEmpty,
       s"equality delete file $raw is scoped by unsupported partition transform(s) " +
-        s"${unsupported.map(f => s"${f.transform}(${f.name})").mkString(", ")} — applying them " +
+        s"${unsupported.map(s => s"${s.transform}(${s.name})").mkString(", ")} — applying them " +
         "needs Iceberg's own transform functions; compact the source table first")
-    val pRec = df.get("partition") match {
-      case r: GenericRecord => r
-      case _ => throw new IllegalArgumentException(
-        s"equality delete file $raw under a partitioned spec carries no partition struct ($mPath)")
-    }
-    specFields.map { f =>
-      val col = fieldNames.getOrElse(f.sourceId, throw new IllegalArgumentException(
-        s"partition field '${f.name}' of delete file $raw references source id ${f.sourceId}, " +
+    specFields.map { s =>
+      val col = fieldNames.getOrElse(s.sourceId, throw new IllegalArgumentException(
+        s"partition field '${s.name}' of delete file $raw references source id ${s.sourceId}, " +
           "not in the table schema"))
-      val avroField = pRec.getSchema.getField(f.name)
-      require(avroField != null,
-        s"equality delete file $raw's partition struct lacks field '${f.name}' — cannot scope it")
-      val rawV = pRec.get(f.name)
-      val isDate = {
-        val s = avroField.schema()
-        val concrete =
-          if (s.getType == org.apache.avro.Schema.Type.UNION) {
-            import scala.jdk.CollectionConverters._
-            s.getTypes.asScala.find(_.getType != org.apache.avro.Schema.Type.NULL).getOrElse(s)
-          } else s
-        concrete.getLogicalType != null && concrete.getLogicalType.getName == "date"
-      }
-      val v: Any = rawV match {
-        case null => null
-        case u: org.apache.avro.util.Utf8 => u.toString
-        case i: java.lang.Integer if isDate => java.time.LocalDate.ofEpochDay(i.longValue())
-        case other => other
-      }
-      ScopeCond(col, f.transform, v)
+      val v = partValue(mf, f, s.name).getOrElse(throw new IllegalArgumentException(
+        s"equality delete file $raw's partition struct lacks field '${s.name}' — cannot scope it"))
+      ScopeCond(col, s.transform, v)
     }
   }
 
@@ -717,9 +455,6 @@ object IcebergImport {
   // scan construction
   // ------------------------------------------------------------------
 
-  /** `schemaCols`: the table schema's column names — directory-derived
-    * partition columns outside it (e.g. a hidden-transform layout's
-    * derived values) are dropped after discovery, never surfaced. */
   /** Reader options stamped onto every scan this importer builds —
     * the [[graft.plans.IcebergScanPruneRule]] recognizes relations by
     * them and re-plans the file set against the manifest bounds. */
@@ -731,10 +466,17 @@ object IcebergImport {
     * [[baseFrame]]); past it a stride sample decides per class. */
   private[graft] val ProbeBudgetConf = "graft.iceberg.footerProbeBudget"
 
-  private def baseFrame(spark: SparkSession, refs: Seq[FileRef], schemaCols: Set[String],
-      withMeta: Boolean, tableLoc: String, snap: Option[Long] = None,
-      idSchema: Option[StructType] = None,
-      nameMapping: Map[Int, Seq[String]] = Map.empty): DataFrame = {
+  /** The parquet scan of `refs` in `tm`'s current schema. Directory-
+    * derived partition columns outside the schema (e.g. a hidden-
+    * transform layout's derived values) are dropped after discovery,
+    * never surfaced; partition-component detection only looks at
+    * directory components BELOW the table root. */
+  private def baseFrame(spark: SparkSession, refs: Seq[FileRef], tm: IcebergMetadata.TableMetadata,
+      withMeta: Boolean, snap: Option[Long]): DataFrame = {
+    val schemaCols = tm.fieldNames.values.toSet
+    val tableLoc = tm.root
+    val idSchema = tm.sparkSchema
+    val nameMapping = tm.nameMapping
     val hconf = spark.sparkContext.hadoopConfiguration
     val files = refs.map(_.path)
     val sizeOf = refs.map(r => r.path -> r.size).toMap
@@ -971,15 +713,14 @@ object IcebergImport {
 
     val eqDeletes = plan.deletes.filter(_.content == 2)
     eqDeletes.foreach { d =>
-      d.equalityIds.foreach(id => require(plan.fieldNames.contains(id),
+      d.equalityIds.foreach(id => require(plan.meta.fieldNames.contains(id),
         s"equality_ids of ${d.path} references field id $id, not in the table schema"))
     }
 
     // ORC rows cannot take REAL positions: refuse when this plan needs
     // them (position deletes present, or the caller wants lineage for
     // a position-delete write); equality-only MOR over ORC is fine
-    val base = mixedFrame(spark, plan.data.map(_.ref), plan.fieldNames,
-      plan.schema, plan.nameMapping, plan.loc, plan.snap, withMeta = true,
+    val base = mixedFrame(spark, plan.data.map(_.ref), plan.meta, plan.snap, withMeta = true,
       posRequired = keepLineage || plan.deletes.exists(_.content == 1))
     val userCols = base.columns.filterNot(Set(FileCol, PosCol)).toSeq
     val helperNames = Set("__spelling", "__dspelling", "__dseq", "__self", "__target")
@@ -1058,7 +799,7 @@ object IcebergImport {
     eqDeletes.groupBy(d => (d.equalityIds.sorted, d.scope)).toSeq
       .sortBy { case ((ids, scope), _) => ids.mkString(",") + "|" + scope.mkString(",") }
       .foreach { case ((ids, scope), group) =>
-        val names = ids.map(plan.fieldNames)
+        val names = ids.map(plan.meta.fieldNames)
         // delete files follow the same projection rule as data files:
         // an id-carrying footer resolves the equality columns BY FIELD
         // ID (current names, even across renames); an id-less one
@@ -1073,21 +814,21 @@ object IcebergImport {
             r.getFooter.getFileMetaData.getSchema.getFields.asScala.exists(_.getId != null)
           } finally r.close()
         }
-        val idTyped = ids.flatMap(id => plan.fieldTypes.get(id).map(t => (id, t)))
+        val idTyped = ids.flatMap(id => plan.meta.fieldTypes.get(id).map(t => (id, t)))
         val edRaw =
           if (headHasIds && idTyped.size == ids.size) {
             spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
             val s = StructType(idTyped.map { case (id, t) =>
-              StructField(plan.fieldNames(id), t, nullable = true,
+              StructField(plan.meta.fieldNames(id), t, nullable = true,
                 new MetadataBuilder().putLong("parquet.field.id", id.toLong).build())
             })
             spark.read.schema(s).parquet(paths: _*)
           } else {
             val plainDf = spark.read.parquet(paths: _*)
             ids.foldLeft(plainDf) { (acc, id) =>
-              val n = plan.fieldNames(id)
+              val n = plan.meta.fieldNames(id)
               if (acc.columns.contains(n)) acc
-              else plan.nameMapping.getOrElse(id, Nil).find(acc.columns.contains) match {
+              else plan.meta.nameMapping.getOrElse(id, Nil).find(acc.columns.contains) match {
                 case Some(old) => acc.withColumnRenamed(old, n)
                 case None      => acc
               }
@@ -1142,54 +883,18 @@ object IcebergImport {
     * analysis-time face for catalog mounts ([[graft.catalog
     * .IcebergWarehouseCatalog]]); falls back to the full read's schema
     * only for metadata shapes the direct mapping doesn't cover. */
-  def tableSchema(spark: SparkSession, tableDir: String): StructType = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val metaDir = new Path(tableDir, "metadata")
-    val f = metaDir.getFileSystem(hconf)
-    val mdPath = latestMetadata(f, metaDir)
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val md = { val in = f.open(mdPath); try om.readTree(in) finally in.close() }
-    val schemaNode = IcebergMetadata.currentSchema(md, mdPath)
-    sparkSchemaOf(schemaNode).getOrElse(read(spark, tableDir).schema)
-  }
+  def tableSchema(spark: SparkSession, tableDir: String): StructType =
+    meta(spark, tableDir).sparkSchema.getOrElse(read(spark, tableDir).schema)
 
-  /** The newest snapshot committed at or before `millis` — the
-    * `TIMESTAMP AS OF` resolution for foreign tables. */
-  def snapshotAtTimestamp(spark: SparkSession, tableDir: String, millis: Long): Option[Long] = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val metaDir = new Path(tableDir, "metadata")
-    val f = metaDir.getFileSystem(hconf)
-    val mdPath = latestMetadata(f, metaDir)
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val md = { val in = f.open(mdPath); try om.readTree(in) finally in.close() }
-    val snaps = md.get("snapshots")
-    if (snaps == null) None
-    else (0 until snaps.size).map(snaps.get)
-      .map(s => (s.get("timestamp-ms").asLong, s.get("snapshot-id").asLong))
-      .filter(_._1 <= millis)
-      .sortBy(identity).lastOption.map(_._2)
-  }
+  /** The snapshot `TIMESTAMP AS OF millis` reads — main's history only
+    * ([[IcebergMetadata.TableMetadata.snapshotAt]]). */
+  def snapshotAtTimestamp(spark: SparkSession, tableDir: String, millis: Long): Option[Long] =
+    meta(spark, tableDir).snapshotAt(millis)
 
   /** The table's named refs (branches and tags): name → (snapshot id,
     * ref type). The `main` branch is included when declared. */
-  def refs(spark: SparkSession, tableDir: String): Map[String, (Long, String)] = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val metaDir = new Path(tableDir, "metadata")
-    val f = metaDir.getFileSystem(hconf)
-    val mdPath = latestMetadata(f, metaDir)
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val md = { val in = f.open(mdPath); try om.readTree(in) finally in.close() }
-    val r = md.get("refs")
-    if (r == null) Map.empty
-    else {
-      import scala.jdk.CollectionConverters._
-      r.fieldNames().asScala.map { n =>
-        val v = r.get(n)
-        n -> (v.get("snapshot-id").asLong,
-          if (v.hasNonNull("type")) v.get("type").asText else "branch")
-      }.toMap
-    }
-  }
+  def refs(spark: SparkSession, tableDir: String): Map[String, (Long, String)] =
+    meta(spark, tableDir).refs.map { case (n, r) => n -> (r.snapshotId, r.kind) }
 
   /** Read the snapshot a named ref (tag or branch) points at — the
     * `VERSION AS OF 'name'` face for foreign tables. */
@@ -1202,26 +907,13 @@ object IcebergImport {
 
   /** The table's CURRENT head snapshot id, None when the table has
     * never committed one. */
-  def currentSnapshot(spark: SparkSession, tableDir: String): Option[Long] = {
-    val (_, _, md) = readMeta(spark, tableDir)
-    if (md.hasNonNull("current-snapshot-id") && md.get("current-snapshot-id").asLong != -1L)
-      Some(md.get("current-snapshot-id").asLong)
-    else None
-  }
+  def currentSnapshot(spark: SparkSession, tableDir: String): Option[Long] =
+    meta(spark, tableDir).current
 
   /** Snapshot ids available in the table's metadata, newest metadata
     * file wins — the time-travel surface. */
-  def snapshots(spark: SparkSession, tableDir: String): Seq[Long] = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val metaDir = new Path(tableDir, "metadata")
-    val f = metaDir.getFileSystem(hconf)
-    val mdPath = latestMetadata(f, metaDir)
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val md = { val in = f.open(mdPath); try om.readTree(in) finally in.close() }
-    val snaps = md.get("snapshots")
-    if (snaps == null) Nil
-    else (0 until snaps.size).map(snaps.get(_).get("snapshot-id").asLong)
-  }
+  def snapshots(spark: SparkSession, tableDir: String): Seq[Long] =
+    meta(spark, tableDir).snapshots.map(_.id)
 
   /** version-hint.text when present (HadoopCatalog convention), else
     * the highest-versioned metadata file under EITHER naming found in
@@ -1268,7 +960,7 @@ object IcebergImport {
       snapshotId: Option[Long] = None): DataFrame = {
     import java.nio.{ByteBuffer, ByteOrder}
     val plan = planScan(spark, tableDir, snapshotId)
-    def render(b: Array[Byte], id: Int): String = plan.fieldTypes.get(id).flatMap {
+    def render(b: Array[Byte], id: Int): String = plan.meta.fieldTypes.get(id).flatMap {
       case IntegerType if b.length == 4 =>
         Some(ByteBuffer.wrap(b).order(ByteOrder.LITTLE_ENDIAN).getInt.toString)
       case DateType if b.length == 4 =>
@@ -1287,7 +979,7 @@ object IcebergImport {
       case _ => None
     }.getOrElse("0x" + b.map("%02x".format(_)).mkString)
     def boundsMap(m: Map[Int, Array[Byte]]): Map[String, String] =
-      m.flatMap { case (id, b) => plan.fieldNames.get(id).map(_ -> render(b, id)) }
+      m.flatMap { case (id, b) => plan.meta.fieldNames.get(id).map(_ -> render(b, id)) }
     val rows =
       plan.data.map(d => (0, d.path, d.seq, d.recordCount,
         boundsMap(d.lower), boundsMap(d.upper), Seq.empty[Int])) ++
@@ -1302,27 +994,11 @@ object IcebergImport {
     * face `graft_iceberg_snapshots('/dir')`): snapshot id, parent,
     * sequence number, commit timestamp, operation, manifest list. */
   def snapshotsRelation(spark: SparkSession, tableDir: String): DataFrame = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val metaDir = new Path(tableDir, "metadata")
-    val f = metaDir.getFileSystem(hconf)
-    val mdPath = latestMetadata(f, metaDir)
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val md = { val in = f.open(mdPath); try om.readTree(in) finally in.close() }
-    val snaps = md.get("snapshots")
-    val rows =
-      if (snaps == null) Nil
-      else (0 until snaps.size).map(snaps.get).map { s =>
-        (s.get("snapshot-id").asLong,
-          if (s.hasNonNull("parent-snapshot-id")) Some(s.get("parent-snapshot-id").asLong) else None,
-          if (s.hasNonNull("sequence-number")) s.get("sequence-number").asLong else 0L,
-          if (s.hasNonNull("timestamp-ms")) s.get("timestamp-ms").asLong else 0L,
-          if (s.hasNonNull("summary") && s.get("summary").hasNonNull("operation"))
-            s.get("summary").get("operation").asText else null,
-          if (s.hasNonNull("manifest-list")) s.get("manifest-list").asText else null)
-      }
     import spark.implicits._
-    rows.toDF("snapshot_id", "parent_id", "sequence_number", "timestamp_ms",
-      "operation", "manifest_list")
+    meta(spark, tableDir).snapshots.map(s => (s.id, s.parent, s.sequence.getOrElse(0L),
+      s.timestampMs, s.operation.orNull, s.manifestList.orNull))
+      .toDF("snapshot_id", "parent_id", "sequence_number", "timestamp_ms",
+        "operation", "manifest_list")
   }
 
   /** `.partitions` metadata-table twin for a FOREIGN Iceberg table
@@ -1409,15 +1085,10 @@ object IcebergImport {
     * schema. */
   def appendsBetween(spark: SparkSession, tableDir: String,
       fromSnapshot: Option[Long], toSnapshot: Option[Long] = None): DataFrame = {
-    val steps = appendSteps(spark, tableDir, fromSnapshot, toSnapshot)
-    val (fieldNames, schema, nameMapping, loc) = schemaContext(spark, tableDir)
-    val files = steps.flatMap(_.files)
-    if (files.isEmpty)
-      schema.map(s => spark.createDataFrame(java.util.Collections.emptyList[Row](), s))
-        .getOrElse(spark.emptyDataFrame)
-    else
-      mixedFrame(spark, files, fieldNames, schema, nameMapping, loc, toSnapshot,
-        withMeta = false)
+    val tm = meta(spark, tableDir)
+    val files = appendSteps(tm, fromSnapshot, toSnapshot).flatMap(_.files)
+    if (files.isEmpty) emptyFrame(spark, tm)
+    else mixedFrame(spark, files, tm, toSnapshot, withMeta = false)
   }
 
   /** Rows appended strictly AFTER `millis` (wall-clock commit time, the
@@ -1437,16 +1108,11 @@ object IcebergImport {
     * included so a `replace` still advances offsets. */
   private[graft] def appendStepFrames(spark: SparkSession, tableDir: String,
       fromSnapshot: Option[Long], toSnapshot: Option[Long]): Seq[(AppendStep, DataFrame)] = {
-    val steps = appendSteps(spark, tableDir, fromSnapshot, toSnapshot)
-    val (fieldNames, schema, nameMapping, loc) = schemaContext(spark, tableDir)
-    def empty: DataFrame =
-      schema.map(s => spark.createDataFrame(java.util.Collections.emptyList[Row](), s))
-        .getOrElse(spark.emptyDataFrame)
-    steps.map { st =>
+    val tm = meta(spark, tableDir)
+    appendSteps(tm, fromSnapshot, toSnapshot).map { st =>
       val df =
-        if (st.files.isEmpty) empty
-        else mixedFrame(spark, st.files, fieldNames, schema, nameMapping, loc,
-          Some(st.snapshotId), withMeta = false)
+        if (st.files.isEmpty) emptyFrame(spark, tm)
+        else mixedFrame(spark, st.files, tm, Some(st.snapshotId), withMeta = false)
       (st, df)
     }
   }
@@ -1455,170 +1121,64 @@ object IcebergImport {
     * the streaming source's offset domain (an offset is an ordinal in
     * this chain; appends only ever extend its tail). */
   private[graft] def lineage(spark: SparkSession, tableDir: String): Seq[Long] = {
-    val (_, mdPath, md) = readMeta(spark, tableDir)
-    val snaps = md.get("snapshots")
-    if (snaps == null || snaps.size == 0) return Nil
-    if (!md.hasNonNull("current-snapshot-id") || md.get("current-snapshot-id").asLong == -1L)
-      return Nil
-    val byId = (0 until snaps.size).map(snaps.get)
-      .map(s => s.get("snapshot-id").asLong -> s).toMap
-    val chain = Seq.newBuilder[Long]
-    var cur: Option[Long] = Some(md.get("current-snapshot-id").asLong)
-    var guard = byId.size + 1
-    while (cur.isDefined && guard > 0) {
-      guard -= 1
-      val node = byId.getOrElse(cur.get, throw new IllegalStateException(
-        s"snapshot ${cur.get} referenced as an ancestor is missing from $mdPath — " +
-          "expired by retention?"))
-      chain += cur.get
-      cur =
-        if (node.hasNonNull("parent-snapshot-id")) Some(node.get("parent-snapshot-id").asLong)
-        else None
-    }
-    require(guard > 0, s"snapshot parent chain of $mdPath does not terminate (cycle?)")
-    chain.result().reverse
+    val tm = meta(spark, tableDir)
+    tm.current.fold(Seq.empty[Long])(c => tm.ancestors(c).map(_.id).toSeq.reverse)
   }
 
-  /** Resolve and validate an incremental range: walk `to`'s parent
-    * chain back to (exclusive) `from`, classify each snapshot's
-    * operation, and gather each append's ADDED data files from the
-    * snapshot's own manifest list. Oldest step first. */
-  private[graft] def appendSteps(spark: SparkSession, tableDir: String,
-      fromSnapshot: Option[Long], toSnapshot: Option[Long]): Seq[AppendStep] = {
-    val (fs, mdPath, md) = readMeta(spark, tableDir)
-    val snaps = md.get("snapshots")
-    require(snaps != null && snaps.size > 0, s"no snapshots in $mdPath")
-    val byId = (0 until snaps.size).map(snaps.get)
-      .map(s => s.get("snapshot-id").asLong -> s).toMap
-    val to = toSnapshot.getOrElse {
-      require(md.hasNonNull("current-snapshot-id") && md.get("current-snapshot-id").asLong != -1L,
-        s"no current snapshot in $mdPath")
-      md.get("current-snapshot-id").asLong
-    }
-    require(byId.contains(to), s"snapshot $to not found in $mdPath — " +
-      s"have ${byId.keys.toSeq.sorted.mkString(", ")}")
-    fromSnapshot.foreach(f => require(byId.contains(f),
-      s"snapshot $f not found in $mdPath — have ${byId.keys.toSeq.sorted.mkString(", ")}"))
-    if (fromSnapshot.contains(to)) return Nil
-    val chain = scala.collection.mutable.ArrayBuffer
-      .empty[com.fasterxml.jackson.databind.JsonNode]
-    var cur: Option[Long] = Some(to)
-    while (cur.isDefined && cur != fromSnapshot) {
-      val node = byId.getOrElse(cur.get, throw new IllegalArgumentException(
-        s"snapshot ${cur.get} (an ancestor of $to) is missing from $mdPath — expired by " +
-          "retention? start the range at a retained snapshot"))
-      chain += node
-      cur =
-        if (node.hasNonNull("parent-snapshot-id")) Some(node.get("parent-snapshot-id").asLong)
-        else None
-    }
-    require(fromSnapshot.isEmpty || cur == fromSnapshot,
-      s"snapshot ${fromSnapshot.get} is not an ancestor of $to in $tableDir — an incremental " +
-        "range must follow one lineage (branches diverge; pick bounds on the same branch)")
-    chain.reverse.map { s =>
-      val id = s.get("snapshot-id").asLong
-      val ts = if (s.hasNonNull("timestamp-ms")) s.get("timestamp-ms").asLong else 0L
-      val op =
-        if (s.hasNonNull("summary") && s.get("summary").hasNonNull("operation"))
-          s.get("summary").get("operation").asText
-        else "unknown"
+  /** Resolve and validate an incremental range: `to`'s ancestors back
+    * to (exclusive) `from`, each snapshot's operation classified and
+    * each append's ADDED data files gathered from the snapshot's own
+    * manifest list. Oldest step first. */
+  private def appendSteps(tm: IcebergMetadata.TableMetadata,
+      fromSnapshot: Option[Long], toSnapshot: Option[Long]): Seq[AppendStep] =
+    tm.range(fromSnapshot, toSnapshot).map { s =>
+      val op = s.operation.getOrElse("unknown")
       op match {
-        case "append"  => AppendStep(id, ts, op, addedDataFiles(fs, tableDir, s, mdPath))
-        case "replace" => AppendStep(id, ts, op, Nil) // compaction adds no rows — skipped
+        case "append"  => AppendStep(s.id, s.timestampMs, op, addedDataFiles(tm, s))
+        case "replace" => AppendStep(s.id, s.timestampMs, op, Nil) // compaction adds no rows — skipped
         // a PARENTLESS overwrite is the lineage root: it rewrote
         // nothing (there was no prior content), so it is exactly an
         // initial append — the shape every exported table starts with
-        case "overwrite" if !s.hasNonNull("parent-snapshot-id") =>
-          AppendStep(id, ts, op, addedDataFiles(fs, tableDir, s, mdPath))
+        case "overwrite" if s.parent.isEmpty =>
+          AppendStep(s.id, s.timestampMs, op, addedDataFiles(tm, s))
         case other => throw new IllegalArgumentException(
-          s"incremental append scan over $tableDir cannot represent snapshot $id " +
+          s"incremental append scan over ${tm.tableDir} cannot represent snapshot ${s.id} " +
             s"(operation=$other): the range removes or rewrites rows, which an append-only " +
             "view cannot express. Read the full snapshot (graft_iceberg_scan), or start " +
-            s"the range after snapshot $id.")
-      }
-    }.toSeq
-  }
-
-  /** Data files ADDED by one snapshot, from the snapshot's OWN
-    * manifest list: manifests recorded as added by this snapshot,
-    * entries with status ADDED whose (possibly inherited) snapshot id
-    * is this snapshot's. An append snapshot adding a DELETE file is a
-    * contradiction and refuses. */
-  private def addedDataFiles(fs: org.apache.hadoop.fs.FileSystem, tableDir: String,
-      snap: com.fasterxml.jackson.databind.JsonNode, mdPath: Path): Seq[FileRef] = {
-    val sid = snap.get("snapshot-id").asLong
-    // (manifest path, the manifest-list entry's added_snapshot_id)
-    val manifests: Seq[(String, Option[Long])] =
-      if (snap.hasNonNull("manifest-list")) {
-        readAvro(_ => fs, resolve(tableDir, snap.get("manifest-list").asText))._1.map { r =>
-          (r.get("manifest_path").toString,
-            fieldOpt(r, "added_snapshot_id").map(_.asInstanceOf[Long]))
-        }
-      } else if (snap.hasNonNull("manifests")) {
-        val a = snap.get("manifests")
-        (0 until a.size).map(i => (a.get(i).asText, None))
-      } else throw new IllegalArgumentException(
-        s"snapshot $sid has no manifest list in $mdPath")
-    val out = Seq.newBuilder[FileRef]
-    manifests.foreach { case (mPathRaw, listAdded) =>
-      // a manifest carried forward from an earlier snapshot cannot
-      // contain THIS snapshot's adds — entries inheriting a snapshot
-      // id inherit the carried manifest's original adder
-      if (listAdded.forall(_ == sid)) {
-        val mPath = resolve(tableDir, mPathRaw)
-        readAvro(_ => fs, mPath)._1.foreach { e =>
-          val status = fieldOpt(e, "status").map(_.asInstanceOf[Int]).getOrElse(1)
-          val eff = fieldOpt(e, "snapshot_id").map(_.asInstanceOf[Long])
-            .orElse(listAdded).getOrElse(-1L)
-          if (status == 1 && eff == sid) {
-            val df = e.get("data_file").asInstanceOf[GenericRecord]
-            val content = fieldOpt(df, "content").map(_.asInstanceOf[Int]).getOrElse(0)
-            require(content == 0,
-              s"snapshot $sid of $tableDir added a delete file (content=$content) in " +
-                s"$mPath — an append-range snapshot must add only data files")
-            val fmt = df.get("file_format").toString.toUpperCase
-            require(fmt == "PARQUET" || fmt == "AVRO" || fmt == "ORC",
-              s"data file format $fmt added by snapshot $sid in $mPath is not supported — " +
-                "parquet, orc and avro only")
-            out += FileRef(resolve(tableDir, df.get("file_path").toString).toString, fmt,
-              fieldOpt(df, "file_size_in_bytes").map(_.asInstanceOf[Long]).getOrElse(-1L))
-          }
-        }
+            s"the range after snapshot ${s.id}.")
       }
     }
-    out.result()
-  }
 
-  /** (fs, metadata path, parsed metadata JSON) of the table head —
-    * shared parse for the metadata-only faces. */
+  /** Data files ADDED by snapshot `s`, from its OWN manifest list:
+    * manifests recorded as added by it (or whose adder is unknown),
+    * entries with status ADDED whose (possibly inherited) snapshot id
+    * is `s`'s. An append snapshot adding a DELETE file is a
+    * contradiction and refuses. */
+  private def addedDataFiles(tm: IcebergMetadata.TableMetadata,
+      s: IcebergMetadata.Snapshot): Seq[FileRef] =
+    // a manifest carried forward from an earlier snapshot cannot
+    // contain THIS snapshot's adds — entries inheriting a snapshot id
+    // inherit the carried manifest's original adder
+    tm.manifests(s).filter(_.addedSnapshotId.forall(_ == s.id)).flatMap { m =>
+      val mf = tm.entries(m)
+      mf.entries.filter(e => e.status == 1 && e.snapshotId.orElse(m.addedSnapshotId).contains(s.id))
+        .map { e =>
+          require(e.file.content == 0,
+            s"snapshot ${s.id} of ${tm.tableDir} added a delete file (content=${e.file.content}) " +
+              s"in ${mf.path} — an append-range snapshot must add only data files")
+          val fmt = e.file.format.toUpperCase
+          require(fmt == "PARQUET" || fmt == "AVRO" || fmt == "ORC",
+            s"data file format $fmt added by snapshot ${s.id} in ${mf.path} is not supported — " +
+              "parquet, orc and avro only")
+          FileRef(resolve(tm.tableDir, e.file.path).toString, fmt, e.file.sizeBytes)
+        }
+    }
+
+  /** (fs, metadata path, parsed metadata JSON) of the table head. */
   private[io] def readMeta(spark: SparkSession, tableDir: String)
       : (org.apache.hadoop.fs.FileSystem, Path, com.fasterxml.jackson.databind.JsonNode) = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val metaDir = new Path(tableDir, "metadata")
-    val fs = metaDir.getFileSystem(hconf)
-    val mdPath = latestMetadata(fs, metaDir)
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val md = { val in = fs.open(mdPath); try om.readTree(in) finally in.close() }
-    (fs, mdPath, md)
-  }
-
-  /** The read-construction context from the metadata JSON alone —
-    * (field id → name, current schema, name mapping, qualified table
-    * root); what [[baseFrame]] needs without a manifest walk. */
-  private def schemaContext(spark: SparkSession, tableDir: String)
-      : (Map[Int, String], Option[StructType], Map[Int, Seq[String]], String) = {
-    val (fs, mdPath, md) = readMeta(spark, tableDir)
-    val schemaNode = IcebergMetadata.currentSchema(md, mdPath)
-    val fieldNames: Map[Int, String] =
-      if (schemaNode == null || schemaNode.get("fields") == null) Map.empty
-      else {
-        val fields = schemaNode.get("fields")
-        (0 until fields.size).map(fields.get)
-          .map(f => f.get("id").asInt -> f.get("name").asText).toMap
-      }
-    val nameMapping = IcebergMetadata.nameMapping(md, mdPath)
-    (fieldNames, sparkSchemaOf(schemaNode),
-      nameMapping, fs.makeQualified(new Path(tableDir)).toString)
+    val tm = meta(spark, tableDir)
+    (tm.fs, tm.path, tm.json)
   }
 
   /** Spellings of data files whose manifest bounds PROVE no row can
@@ -1635,7 +1195,7 @@ object IcebergImport {
       probes: Seq[(String, Seq[Any])]): Set[String] = {
     import java.nio.{ByteBuffer, ByteOrder}
     val plan = planScan(spark, tableDir, snapshotId)
-    val idByName = plan.fieldNames.map(_.swap)
+    val idByName = plan.meta.fieldNames.map(_.swap)
     def decode(b: Array[Byte], dt: DataType): Option[Any] = dt match {
       case IntegerType | DateType if b.length == 4 =>
         Some(ByteBuffer.wrap(b).order(ByteOrder.LITTLE_ENDIAN).getInt)
@@ -1660,7 +1220,7 @@ object IcebergImport {
     }
     plan.data.iterator.filter { d =>
       def boundsOf(colName: String): Option[(Option[Any], Option[Any])] =
-        idByName.get(colName).flatMap(id => plan.fieldTypes.get(id).map(dt =>
+        idByName.get(colName).flatMap(id => plan.meta.fieldTypes.get(id).map(dt =>
           (d.lower.get(id).flatMap(decode(_, dt)), d.upper.get(id).flatMap(decode(_, dt)))))
       val rangeSkip = ranges.exists { case (c, lo, hi) =>
         boundsOf(c).exists { case (lb, ub) =>

@@ -66,28 +66,17 @@ object IcebergMaintenance {
   def expireSnapshots(spark: SparkSession, tableDir: String, keepLast: Int,
       removeOrphans: Boolean = false): Seq[String] = {
     require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
-    val fs = new Path(tableDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (mdPath, md) = IcebergMetadata.loadHead(fs, tableDir)
+    val tm = IcebergImport.meta(spark, tableDir)
+    val (fs, md) = (tm.fs, tm.json)
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val fvx = md.get("format-version").asInt
-    require(fvx == 2 || fvx == 3, s"expireSnapshots needs a v2/v3 table, got $fvx")
-    val snaps = md.get("snapshots").asInstanceOf[ArrayNode]
-    val byTime = (0 until snaps.size).map(snaps.get)
-      .sortBy(s => (s.get("timestamp-ms").asLong, s.get("snapshot-id").asLong))
-    val cur = md.get("current-snapshot-id").asLong
+    require(tm.formatVersion == 2 || tm.formatVersion == 3,
+      s"expireSnapshots needs a v2/v3 table, got ${tm.formatVersion}")
+    val byTime = tm.snapshots.sortBy(s => (s.timestampMs, s.id))
     // every ref-pointed snapshot survives expiry (a tag is a promise)
-    val refIds: Set[Long] = {
-      val r = md.get("refs")
-      if (r == null) Set.empty
-      else {
-        import scala.jdk.CollectionConverters._
-        r.fieldNames().asScala.map(n => r.get(n).get("snapshot-id").asLong).toSet
-      }
-    }
-    val keepNodes = (byTime.takeRight(keepLast) ++
-      byTime.filter(s => s.get("snapshot-id").asLong == cur ||
-        refIds.contains(s.get("snapshot-id").asLong))).distinct
-    val keepIds = keepNodes.map(_.get("snapshot-id").asLong).toSet
+    val refIds = tm.refs.values.map(_.snapshotId).toSet
+    val keep = (byTime.takeRight(keepLast) ++
+      byTime.filter(s => tm.current.contains(s.id) || refIds.contains(s.id))).distinct
+    val keepIds = keep.map(_.id).toSet
 
     // ---- the retained reference set ---------------------------------
     // every path resolves table-relative FIRST (IcebergImport.resolve —
@@ -101,28 +90,20 @@ object IcebergMaintenance {
       Set(p, r.toString, q, q.stripPrefix("file:"))
     }
     val referenced = scala.collection.mutable.Set.empty[String]
-    keepNodes.foreach { s =>
-      val listP = IcebergImport.resolve(tableDir, s.get("manifest-list").asText)
-      referenced ++= norm(listP.toString)
-      IcebergImport.readAvro(_ => fs, listP)._1.foreach { m =>
-        val mPathRaw = m.get("manifest_path").toString
-        referenced ++= norm(mPathRaw)
-        val mPath = IcebergImport.resolve(tableDir, mPathRaw)
-        IcebergImport.readAvro(_ => fs, mPath)._1.foreach { e =>
-          val df = e.get("data_file").asInstanceOf[org.apache.avro.generic.GenericRecord]
-          referenced ++= norm(df.get("file_path").toString)
-        }
+    keep.foreach { s =>
+      s.manifestList.foreach(referenced ++= norm(_))
+      tm.manifests(s).foreach { m =>
+        referenced ++= norm(m.path)
+        tm.entries(m).entries.foreach(e => referenced ++= norm(e.file.path))
       }
     }
 
     // ---- the expired metadata version --------------------------------
     val newSnaps = om.createArrayNode()
-    keepNodes.sortBy(_.get("snapshot-id").asLong).foreach { s =>
-      val c = s.deepCopy().asInstanceOf[ObjectNode]
+    keep.sortBy(_.id).foreach { s =>
+      val c = s.json.deepCopy[ObjectNode]()
       // a parent that did not survive expiry must not dangle
-      if (c.hasNonNull("parent-snapshot-id") &&
-          !keepIds.contains(c.get("parent-snapshot-id").asLong))
-        c.remove("parent-snapshot-id")
+      if (s.parent.exists(p => !keepIds.contains(p))) c.remove("parent-snapshot-id")
       newSnaps.add(c)
     }
     md.set("snapshots", newSnaps)
@@ -134,7 +115,7 @@ object IcebergMaintenance {
         .foreach(filtered.add)
       md.set("snapshot-log", filtered)
     }
-    val newMdPath = IcebergMetadata.commit(fs, mdPath, md)
+    val newMdPath = IcebergMetadata.commit(fs, tm.path, md)
     referenced ++= norm(newMdPath.toString)
     referenced ++= norm(new Path(newMdPath.getParent, "version-hint.text").toString)
 

@@ -112,8 +112,8 @@ final class IcebergRestHttpServer(spark: SparkSession, warehouse: String, port: 
     * head on first load — from then on the PIN is the catalog truth. */
   private def pinOf(ns: String, t: String): Path =
     pins.getOrElseUpdate(s"$ns/$t", {
-      val md = new Path(resolveDir(ns, t), "metadata")
-      IcebergImport.latestMetadata(fsOf(md), md)
+      val dir = resolveDir(ns, t)
+      IcebergMetadata.load(fsOf(dir), dir.toString).path
     })
 
   private def readDoc(p: Path): ObjectNode = {
@@ -144,9 +144,7 @@ final class IcebergRestHttpServer(spark: SparkSession, warehouse: String, port: 
           val have: Option[Long] = {
             val refs = doc.get("refs")
             if (refs != null && refs.hasNonNull(ref)) Some(refs.get(ref).get("snapshot-id").asLong)
-            else if (ref == "main" && doc.hasNonNull("current-snapshot-id") &&
-              doc.get("current-snapshot-id").asLong != -1L)
-              Some(doc.get("current-snapshot-id").asLong)
+            else if (ref == "main") IcebergMetadata.currentOf(doc)
             else None
           }
           if (want != have)
@@ -703,11 +701,7 @@ final class RemoteIcebergRest(baseUrl: String) {
 
   /** The snapshot id the catalog currently pins for the table. */
   def pinnedSnapshot(ns: String, table: String): Option[Long] =
-    loadTable(ns, table).flatMap { case (_, md) =>
-      if (md.hasNonNull("current-snapshot-id") && md.get("current-snapshot-id").asLong != -1L)
-        Some(md.get("current-snapshot-id").asLong)
-      else None
-    }
+    loadTable(ns, table).flatMap { case (_, md) => IcebergMetadata.currentOf(md) }
 
   /** CreateTableRequest — bootstrap a fresh table through the catalog
     * (the protocol's table-creation face): `schemaJson` is the Iceberg
@@ -749,7 +743,8 @@ final class RemoteIcebergRest(baseUrl: String) {
 
   /** Publish the table DIRECTORY's staged head through the catalog:
     * every snapshot on the directory's main lineage that the pinned
-    * metadata lacks becomes an `add-snapshot` update, capped by a
+    * metadata lacks becomes an `add-snapshot` update (oldest first;
+    * side-branch snapshots stay unpublished), capped by a
     * `set-snapshot-ref` on main, guarded by `assert-ref-snapshot-id`
     * against the PINNED main head. Returns the new metadata-location;
     * throws with the server's CommitFailedException message on 409
@@ -757,29 +752,17 @@ final class RemoteIcebergRest(baseUrl: String) {
   def publishHead(spark: SparkSession, ns: String, table: String, tableDir: String): String = {
     val (_, pinnedMd) = loadTable(ns, table).getOrElse(
       throw new IllegalArgumentException(s"catalog does not serve $ns.$table"))
-    val pinnedIds: Set[Long] = {
-      val snaps = pinnedMd.get("snapshots")
-      if (snaps == null) Set.empty
-      else (0 until snaps.size).map(snaps.get(_).get("snapshot-id").asLong).toSet
-    }
-    val expected: Option[Long] =
-      if (pinnedMd.hasNonNull("current-snapshot-id") &&
-        pinnedMd.get("current-snapshot-id").asLong != -1L)
-        Some(pinnedMd.get("current-snapshot-id").asLong)
-      else None
+    val pinnedIds = IcebergMetadata.snapshotsOf(pinnedMd).map(_.id).toSet
+    val expected = IcebergMetadata.currentOf(pinnedMd)
     // the directory's own head document (the staged truth)
-    val (_, _, dirMd) = IcebergImport.readMeta(spark, tableDir)
-    val dirSnaps = dirMd.get("snapshots")
-    require(dirSnaps != null && dirSnaps.size > 0, s"no snapshots on $tableDir")
-    val dirHead = dirMd.get("current-snapshot-id").asLong
-    val newSnaps = (0 until dirSnaps.size).map(dirSnaps.get)
-      .filterNot(s => pinnedIds.contains(s.get("snapshot-id").asLong))
-      .sortBy(s => if (s.hasNonNull("sequence-number")) s.get("sequence-number").asLong else 0L)
+    val dir = IcebergImport.meta(spark, tableDir)
+    val dirHead = dir.head
+    val newSnaps = dir.ancestors(dirHead).takeWhile(s => !pinnedIds.contains(s.id)).toSeq.reverse
     val req = expected match {
       case Some(id) => s"""{"type":"assert-ref-snapshot-id","ref":"main","snapshot-id":$id}"""
       case None => s"""{"type":"assert-ref-snapshot-id","ref":"main"}"""
     }
-    val updates = (newSnaps.map(s => s"""{"action":"add-snapshot","snapshot":${om.writeValueAsString(s)}}""") :+
+    val updates = (newSnaps.map(s => s"""{"action":"add-snapshot","snapshot":${om.writeValueAsString(s.json)}}""") :+
       s"""{"action":"set-snapshot-ref","ref-name":"main","type":"branch","snapshot-id":$dirHead}""")
       .mkString(",")
     val (code, body) = commit(ns, table, req, updates)

@@ -258,7 +258,6 @@ object PuffinDeletionVectors {
     * import's scaladoc); everything else of v2 is already v3-legal. */
   def upgradeToV3(spark: SparkSession, tableDir: String): Unit = {
     val lt = IcebergAppend.load(spark, tableDir)
-    require(lt.md.get("format-version").asInt <= 3, "already past v3")
     lt.md.put("format-version", 3)
     if (!lt.md.has("next-row-id")) lt.md.put("next-row-id", 0L)
     IcebergMetadata.commit(lt.fs, lt.mdPath, lt.md)
@@ -273,9 +272,9 @@ object PuffinDeletionVectors {
     * matched. */
   def writeDVDelete(spark: SparkSession, tableDir: String, predicate: String): Option[Long] = {
     val lt = IcebergAppend.load(spark, tableDir)
-    require(lt.md.get("format-version").asInt == 3,
+    require(lt.meta.formatVersion == 3,
       s"deletion vectors are a format-version 3 feature; $tableDir is " +
-        s"format-version ${lt.md.get("format-version").asInt} — upgradeToV3 first")
+        s"format-version ${lt.meta.formatVersion} — upgradeToV3 first")
     val positions = IcebergImport.readWithLineage(spark, tableDir)
       .filter(predicate)
       .select(col(IcebergImport.LineageFileCol), col(IcebergImport.LineagePosCol))
@@ -435,85 +434,56 @@ object PuffinDeletionVectors {
     * through field-for-field. Returns original-list-path → replacement. */
   private def supersedePriorDvs(lt: IcebergAppend.Loaded,
       touched: Set[String]): Map[String, IcebergMetadata.ManifestListEntry] = {
-    import IcebergImport.fieldOpt
     val parent = lt.parent.getOrElse(return Map.empty)
-    val snaps = lt.md.get("snapshots")
-    val snapNode = (0 until snaps.size).map(snaps.get)
-      .find(_.get("snapshot-id").asLong == parent).getOrElse(return Map.empty)
-    if (!snapNode.hasNonNull("manifest-list")) return Map.empty
-    val listP = IcebergImport.resolve(lt.tableDir, snapNode.get("manifest-list").asText)
-    val out = Map.newBuilder[String, IcebergMetadata.ManifestListEntry]
-    IcebergImport.readAvro(_ => lt.fs, listP)._1.foreach { lrec =>
-      val content = fieldOpt(lrec, "content").map(_.asInstanceOf[Int]).getOrElse(0)
-      if (content == 1) {
-        val mPathRaw = lrec.get("manifest_path").toString
-        val mPath = IcebergImport.resolve(lt.tableDir, mPathRaw)
-        val listSeq = fieldOpt(lrec, "sequence_number").map(_.asInstanceOf[Long]).getOrElse(0L)
-        val (entries, meta) = IcebergImport.readAvro(_ => lt.fs, mPath)
-        def refOf(e: org.apache.avro.generic.GenericRecord): Option[String] = {
-          val df = e.get("data_file").asInstanceOf[org.apache.avro.generic.GenericRecord]
-          for {
-            _ <- fieldOpt(df, "content_offset")
-            ref <- fieldOpt(df, "referenced_data_file").map(_.toString)
-          } yield ref
+    def supersedes(e: IcebergMetadata.ManifestEntry): Boolean = e.status != 2 &&
+      e.file.dv.exists(d => IcebergImport.spellings(d.referencedDataFile).exists(touched.contains))
+    lt.meta.manifests(lt.meta.snapshot(parent)).filter(_.content == 1).flatMap { m =>
+      val mf = lt.meta.entries(m)
+      if (!mf.entries.exists(supersedes)) None
+      else {
+        val schema = mf.records.head.getSchema
+        val newPath = new Path(lt.metaDir, s"m-dvsupersede-${lt.newSnap}-" +
+          s"${java.util.UUID.randomUUID().toString.take(8)}.avro")
+        var (nEx, nDel) = (0, 0)
+        var (rEx, rDel) = (0L, 0L)
+        var minSeq = Long.MaxValue
+        val rewritten = mf.entries.zip(mf.records).map { case (e, rec) =>
+          val copy = org.apache.avro.generic.GenericData.get()
+            .deepCopy(schema, rec).asInstanceOf[org.apache.avro.generic.GenericRecord]
+          val effSeq = lt.meta.dataSequence(e, m, mf.path)
+          val rows = math.max(0L, e.file.recordCount)
+          // a rewritten manifest enters the list at the NEW sequence:
+          // every entry's effective sequence must be explicit or the
+          // v2 inheritance rule would re-stamp it wrongly — and the
+          // spec scopes inheritance to ADDED entries only, so carried
+          // EXISTING/DELETED rows need the FILE sequence explicit too
+          // (field-id 4; null would read as undefined to strict readers)
+          copy.put("sequence_number", java.lang.Long.valueOf(effSeq))
+          copy.put("file_sequence_number",
+            java.lang.Long.valueOf(e.fileSequence.getOrElse(m.sequence)))
+          if (supersedes(e)) {
+            copy.put("status", 2) // DELETED: superseded by the new DV
+            copy.put("snapshot_id", java.lang.Long.valueOf(lt.newSnap))
+            nDel += 1; rDel += rows
+          } else if (e.status != 2) {
+            copy.put("status", 0) // EXISTING
+            nEx += 1; rEx += rows
+            minSeq = math.min(minSeq, effSeq)
+          } else { nDel += 1; rDel += rows }
+          copy
         }
-        def statusOf(e: org.apache.avro.generic.GenericRecord): Int =
-          fieldOpt(e, "status").map(_.asInstanceOf[Int]).getOrElse(1)
-        val hit = entries.exists(e => statusOf(e) != 2 &&
-          refOf(e).exists(r => IcebergImport.spellings(r).exists(touched.contains)))
-        if (hit) {
-          val schema = entries.head.getSchema
-          val newPath = new Path(lt.metaDir, s"m-dvsupersede-${lt.newSnap}-" +
-            s"${java.util.UUID.randomUUID().toString.take(8)}.avro")
-          var (nEx, nDel) = (0, 0)
-          var (rEx, rDel) = (0L, 0L)
-          var minSeq = Long.MaxValue
-          val rewritten = entries.map { e =>
-            val copy = org.apache.avro.generic.GenericData.get()
-              .deepCopy(schema, e).asInstanceOf[org.apache.avro.generic.GenericRecord]
-            val st = statusOf(e)
-            val effSeq = fieldOpt(e, "sequence_number").map(_.asInstanceOf[Long])
-              .getOrElse(listSeq)
-            val rows = fieldOpt(e.get("data_file")
-              .asInstanceOf[org.apache.avro.generic.GenericRecord], "record_count")
-              .map(_.asInstanceOf[Long]).getOrElse(0L)
-            val supersede = st != 2 &&
-              refOf(e).exists(r => IcebergImport.spellings(r).exists(touched.contains))
-            // a rewritten manifest enters the list at the NEW sequence:
-            // every entry's effective sequence must be explicit or the
-            // v2 inheritance rule would re-stamp it wrongly — and the
-            // spec scopes inheritance to ADDED entries only, so carried
-            // EXISTING/DELETED rows need the FILE sequence explicit too
-            // (field-id 4; null would read as undefined to strict readers)
-            val effFileSeq = fieldOpt(e, "file_sequence_number")
-              .map(_.asInstanceOf[Long]).getOrElse(listSeq)
-            copy.put("sequence_number", java.lang.Long.valueOf(effSeq))
-            copy.put("file_sequence_number", java.lang.Long.valueOf(effFileSeq))
-            if (supersede) {
-              copy.put("status", 2) // DELETED: superseded by the new DV
-              copy.put("snapshot_id", java.lang.Long.valueOf(lt.newSnap))
-              nDel += 1; rDel += rows
-            } else if (st != 2) {
-              copy.put("status", 0) // EXISTING
-              nEx += 1; rEx += rows
-              minSeq = math.min(minSeq, effSeq)
-            } else { nDel += 1; rDel += rows }
-            copy
-          }
-          val length = IcebergMetadata.writeContainer(lt.fs, newPath, schema, meta,
-            rewritten.iterator)
-          // the list entry of a rewritten manifest: spec id, content and
-          // row-id assignment carry over; every entry's sequence is now
-          // explicit, so it enters at the NEW sequence with the entries'
-          // floor as its minimum
-          out += mPathRaw -> IcebergMetadata.ManifestListEntry.decode(lrec).copy(
-            path = lt.fs.makeQualified(newPath).toString, length = length,
-            sequence = lt.newSeq, minSequence = if (minSeq == Long.MaxValue) listSeq else minSeq,
-            addedSnapshotId = lt.newSnap, addedFiles = 0, existingFiles = nEx,
-            deletedFiles = nDel, addedRows = 0L, existingRows = rEx, deletedRows = rDel)
-        }
+        val length = IcebergMetadata.writeContainer(lt.fs, newPath, schema, mf.meta,
+          rewritten.iterator)
+        // the list entry of a rewritten manifest: spec id, content and
+        // row-id assignment carry over; every entry's sequence is now
+        // explicit, so it enters at the NEW sequence with the entries'
+        // floor as its minimum
+        Some(m.path -> m.copy(
+          path = lt.fs.makeQualified(newPath).toString, length = length,
+          sequence = lt.newSeq, minSequence = if (minSeq == Long.MaxValue) m.sequence else minSeq,
+          addedSnapshotId = Some(lt.newSnap), addedFiles = 0, existingFiles = nEx,
+          deletedFiles = nDel, addedRows = 0L, existingRows = rEx, deletedRows = rDel))
       }
-    }
-    out.result()
+    }.toMap
   }
 }

@@ -45,7 +45,8 @@ object IcebergTestSplice {
       partFields: Seq[(String, String)] = Nil): Unit = {
     import org.apache.hadoop.fs.Path
     val fs = new Path(dest).getFileSystem(new org.apache.hadoop.conf.Configuration())
-    val (mdPath, md) = IcebergMetadata.loadHead(fs, dest)
+    val tm = IcebergMetadata.load(fs, dest)
+    val (mdPath, md) = (tm.path, tm.json)
     val metaDir = mdPath.getParent
     val fv = md.get("format-version").asInt
     val cur = md.get("current-snapshot-id").asLong
@@ -55,7 +56,7 @@ object IcebergTestSplice {
     val maxSeq = dels.map(_.seq).max
 
     // the delete manifest, under the requested partition struct
-    val header = IcebergMetadata.headerOf(md, mdPath, content = 1, specId,
+    val header = IcebergMetadata.headerOf(tm, content = 1, specId,
       partFields.zipWithIndex.map { case ((name, kind), i) =>
         IcebergMetadata.PartField(name, kind, 1000 + i) })
     val delManifest = IcebergMetadata.writeManifest(fs, new Path(metaDir, s"m-del-$newSnapId.avro"),
