@@ -66,6 +66,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(_ => graft.plans.ScanPruneRule)
     // import-side twin: manifest file skipping for graft_iceberg_scan
     ext.injectOptimizerRule(_ => graft.plans.IcebergScanPruneRule)
+    // AQE runtime: a small materialized ORDER BY input sorts in one
+    // task — no range-bounds sampling job, no range shuffle
+    ext.injectRuntimeOptimizerRule(_ => graft.plans.SmallSortRule)
     // merge-on-read delta chains -> resolved scan plans (before the
     // DML rule so a MERGE source over a chained table resolves first)
     ext.injectResolutionRule(_ => graft.plans.DeltaResolveRule)

@@ -8,36 +8,34 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * both lines of commits have IDENTICAL semantics.
   *
   * See the concurrency notes on [[SnapshotTables]] for why local-FS
-  * exclusive create must go through POSIX O_EXCL rather than Hadoop's
+  * exclusive create must go through POSIX link(2) rather than Hadoop's
   * check-then-create, and what the S3A caveat is.
   */
 private[graft] object AtomicFs {
 
   /** Exclusive create — the commit CAS. Returns false ONLY when `p`
-    * already exists (another writer won). Any other I/O failure after
-    * a successful exclusive create is a genuine error: this writer's
-    * partial file is removed (so it cannot wedge the slot for
-    * everyone) and the exception propagates — it must not be
-    * misreported as a lost race. */
+    * already exists (another writer won). Any other I/O failure is a
+    * genuine error and propagates — it must not be misreported as a
+    * lost race — and leaves no partial file that could wedge the slot
+    * for everyone. */
   def createExclusive(f: FileSystem, p: Path, content: String): Boolean =
     if (f.getScheme == "file") {
-      // POSIX O_EXCL (CREATE_NEW) — a truly atomic local CAS. Hadoop's
-      // local create(overwrite=false) is check-THEN-create: two racing
-      // writers can both pass the check and both "win".
+      // The content goes to a hidden sibling first, which link(2) then
+      // claims `p` with: POSIX-atomic and failing when `p` exists, so
+      // `p` appears with its full content — a reader listing the dir
+      // never parses it empty or half written. (Hadoop's local
+      // create(overwrite=false) is check-THEN-create: two racing
+      // writers can both pass the check and both "win".)
       val local = java.nio.file.Paths.get(p.toUri.getPath)
+      val tmp = java.nio.file.Paths.get(tempOf(p).toUri.getPath)
       java.nio.file.Files.createDirectories(local.getParent)
       try {
-        java.nio.file.Files.write(local, content.getBytes("UTF-8"),
-          java.nio.file.StandardOpenOption.CREATE_NEW,
-          java.nio.file.StandardOpenOption.WRITE)
+        java.nio.file.Files.write(tmp, content.getBytes("UTF-8"))
+        java.nio.file.Files.createLink(local, tmp)
         true
       } catch {
         case _: java.nio.file.FileAlreadyExistsException => false
-        case e: java.io.IOException =>
-          try java.nio.file.Files.deleteIfExists(local)
-          catch { case _: java.io.IOException => () }
-          throw e
-      }
+      } finally java.nio.file.Files.deleteIfExists(tmp)
     } else {
       val out =
         try f.create(p, false)
@@ -85,7 +83,7 @@ private[graft] object AtomicFs {
     * reader can then briefly see the file absent (and fall back to its
     * documented no-file behavior) but can never see half the content. */
   def replaceSmall(f: FileSystem, p: Path, content: String): Unit = {
-    val tmp = new Path(p.getParent, s".${p.getName}.tmp-${java.util.UUID.randomUUID}")
+    val tmp = tempOf(p)
     if (f.getScheme == "file") {
       val local = java.nio.file.Paths.get(tmp.toUri.getPath)
       java.nio.file.Files.createDirectories(local.getParent)
@@ -105,4 +103,9 @@ private[graft] object AtomicFs {
       }
     }
   }
+
+  /** A unique hidden sibling of `p` — its leading dot keeps it out of
+    * every listing regex and every dot-filtering listing. */
+  private def tempOf(p: Path): Path =
+    new Path(p.getParent, s".${p.getName}.tmp-${java.util.UUID.randomUUID}")
 }

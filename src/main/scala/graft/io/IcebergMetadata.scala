@@ -34,7 +34,7 @@ import org.apache.spark.sql.types._
   *    list's `snapshot-id`/`parent-snapshot-id`/`sequence-number`/
   *    `format-version` keys;
   *  - [[commit]]: claims `v<hint+1>.metadata.json` through the commit
-  *    CAS ([[AtomicFs.createExclusive]] — O_EXCL on the local FS, so
+  *    CAS ([[AtomicFs.createExclusive]] — link(2) on the local FS, so
   *    two racing writers can never both win) and moves
   *    `version-hint.text` with [[AtomicFs.replaceSmall]]. A lost claim
   *    throws [[CommitConflictException]] naming the version file.

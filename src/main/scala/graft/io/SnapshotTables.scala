@@ -43,8 +43,8 @@ import org.apache.spark.sql.types.StructType
   * data rename leaves an orphan metadata file; later writers reclaim
   * it after `orphanGraceMs` (see [[casWithOrphanReclaim]]) so a crash
   * cannot wedge the table. The exclusive create is atomic on HDFS
-  * (namenode-side) and on local filesystems (POSIX O_EXCL via
-  * CREATE_NEW — Hadoop's local `create(overwrite=false)` is only
+  * (namenode-side) and on local filesystems (a full temp file claimed
+  * with POSIX link(2) — Hadoop's local `create(overwrite=false)` is only
   * check-then-create, which two racing writers can both pass).
   * Caveat: on S3A, exclusive create remains check-then-create; real
   * S3 multi-writer needs a conditional-PUT or DynamoDB-style log
@@ -247,7 +247,7 @@ final class SnapshotTables(
     AtomicFs.replaceSmall(fs(p), p, content)
 
   /** Exclusive create — the commit CAS ([[AtomicFs.createExclusive]]:
-    * POSIX O_EXCL locally, create(overwrite=false) on cluster
+    * POSIX link(2) locally, create(overwrite=false) on cluster
     * filesystems). Returns false ONLY when `p` already exists (another
     * writer won the version); other I/O failures propagate. */
   private def createExclusive(p: Path, content: String): Boolean =

@@ -20,8 +20,10 @@ import scala.collection.mutable
   * Spark job (start offset, duration, tasks, call site) and the Janino
   * compiles and compile milliseconds of that run.
   * With an out dir it also writes the last run's silver write plan
-  * (`silver_write.txt`) and gold query plan (`gold_query.txt`), its
-  * work-dir paths spelled `<work>`.
+  * (`silver_write.txt`), gold write plan (`gold_write.txt`, with AQE's
+  * final plan) and unexecuted gold query plan (`gold_query.txt`), their
+  * work-dir paths spelled `<work>`. Each job prints as its SQL
+  * execution (`sql#<id> <description>`) when it has one.
   * {{{ sbt "Test/runMain graft.DriveProfile daily 12 plans/out" }}}
   */
 object DriveProfile {
@@ -29,6 +31,25 @@ object DriveProfile {
     @volatile var t1: Long = 0L
     @volatile var taskTime: Long = 0L // executorRunTime ms summed over stages
     @volatile var tasks: Int = 0
+  }
+
+  /** SQL execution id → description (the action's call site, e.g.
+    * `parquet at SnapshotTables.scala:…`). Every job an execution starts
+    * carries its id, so AQE's stage jobs — whose last stage Spark names
+    * after the pool thread that submits them (`$anonfun$… at
+    * CompletableFuture.java:…`) — print as their query. */
+  private val executions = new java.util.concurrent.ConcurrentHashMap[Long, String]()
+
+  private def jobLabel(e: SparkListenerJobStart): String = {
+    val stage = e.stageInfos.lastOption.map(_.name).getOrElse("?")
+    Option(e.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+      .fold(stage)(id => s"sql#$id ${Option(executions.get(id.toLong)).getOrElse(stage)}")
+  }
+
+  private def recordExecution(e: SparkListenerEvent): Unit = e match {
+    case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+      executions.put(s.executionId, s.description)
+    case _ =>
   }
 
   def main(args: Array[String]): Unit =
@@ -80,8 +101,9 @@ object DriveProfile {
     val jobs = mutable.ArrayBuffer.empty[J]
     val stageToJob = mutable.Map.empty[Int, J]
     val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = recordExecution(e)
       override def onJobStart(e: SparkListenerJobStart): Unit = jobs.synchronized {
-        val j = J(e.jobId, e.stageInfos.lastOption.map(_.name).getOrElse("?"), e.time)
+        val j = J(e.jobId, jobLabel(e), e.time)
         jobs += j
         e.stageIds.foreach(stageToJob(_) = j)
       }
@@ -101,9 +123,13 @@ object DriveProfile {
       (s"== Optimized Logical Plan ==\n${qe.optimizedPlan}\n" + qe.explainString(formatted))
         .replace(work.toUri.toString.stripSuffix("/"), "<work>").replace(work.toString, "<work>")
     @volatile var silverWrite = ""
+    @volatile var goldWrite = ""
     spark.listenerManager.register(new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
-        if (qe.optimizedPlan.toString.contains("silver_warehouse")) silverWrite = planText(qe)
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit = {
+        val optimized = qe.optimizedPlan.toString
+        if (optimized.contains("silver_warehouse")) silverWrite = planText(qe)
+        else if (optimized.contains("gold_warehouse")) goldWrite = planText(qe)
+      }
       override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
     })
     (1 to days).foreach { d =>
@@ -127,7 +153,8 @@ object DriveProfile {
     planDir.foreach { dir =>
       val out = java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
       val gold = BreweryPipeline.goldQuery(spark, conf, java.time.LocalDate.of(2026, 1, 1).plusDays(days))
-      Seq("silver_write.txt" -> silverWrite, "gold_query.txt" -> planText(gold.queryExecution))
+      Seq("silver_write.txt" -> silverWrite, "gold_write.txt" -> goldWrite,
+        "gold_query.txt" -> planText(gold.queryExecution))
         .foreach { case (name, text) => java.nio.file.Files.write(out.resolve(name), text.getBytes("UTF-8")) }
     }
     spark.stop()
@@ -145,9 +172,9 @@ object DriveProfile {
     val live = mutable.Map.empty[Int, J]
     val stageToJob = mutable.Map.empty[Int, J]
     val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = recordExecution(e)
       override def onJobStart(e: SparkListenerJobStart): Unit = jobs.synchronized {
-        val site = e.stageInfos.lastOption.map(_.name).getOrElse("?")
-        val j = J(e.jobId, site, e.time)
+        val j = J(e.jobId, jobLabel(e), e.time)
         live(e.jobId) = j
         jobs += j
         e.stageIds.foreach(sid => stageToJob(sid) = j)
@@ -250,7 +277,7 @@ object DriveProfile {
           }
         }
         // aggregate by call site
-        val bySite = js.groupBy(_.site).map { case (s, g) =>
+        val bySite = js.groupBy(_.site.replaceFirst("^sql#\\d+ ", "")).map { case (s, g) =>
           (s, g.size, g.map(j => math.max(0L, j.t1 - j.t0)).sum / 1e3,
             g.map(_.taskTime).sum / 1e3, g.map(_.tasks).sum)
         }.toSeq.sortBy(-_._3)

@@ -3,7 +3,8 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-/** Dump `.explain("formatted")` of named corpus queries to files —
+/** Dump `.explain("formatted")` of named corpus queries, each executed
+  * first so the dump shows AQE's final plan beside the initial one —
   * the r20 optimization round's plan evidence
   * (`plans/r20/<query>_{before,after}.txt`).
   *
@@ -23,6 +24,7 @@ object ExplainDump {
       val q = byName.getOrElse(n, sys.error(s"unknown query $n"))
       try {
         val df = q.run(spark, sfDir)
+        df.collect() // executed first: the dump carries AQE's final plan
         val plan = df.queryExecution.explainString(
           org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
         Files.write(Paths.get(outDir, s"${n}_$tag.txt"), plan.getBytes(StandardCharsets.UTF_8))

@@ -10,7 +10,7 @@ import org.apache.hadoop.fs.Path
   * releases both right before the `v<hint+1>.metadata.json` claim, and
   * in every round exactly one commit may land while the other throws
   * the conflict. Runs on the `file` scheme — the one where the claim
-  * is POSIX O_EXCL; Hadoop's check-then-create lets two racing local
+  * is POSIX link(2); Hadoop's check-then-create lets two racing local
   * writers both "win", the later silently overwriting the earlier.
   * The hint starts with a Hadoop-written `.crc` sidecar (what a table
   * written through Hadoop's checksummed local FS carries), so every

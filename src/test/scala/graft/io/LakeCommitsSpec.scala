@@ -122,6 +122,48 @@ class LakeCommitsSpec extends SparkSpec {
     } finally pool.shutdown()
   }
 
+  test("a reader looping state() while two publishers race never reads a half-written commit") {
+    val lake = new LakeCommits(spark,
+      java.nio.file.Files.createTempDirectory("graft-lake-torn").resolve("_log").toString)
+    // wide commits (each carries every key) widen any torn-write window
+    val keys = (1 to 2000).map(i => s"ns.table_$i")
+    val rounds = 60
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
+    try {
+      val start = new java.util.concurrent.CyclicBarrier(3)
+      val reader = pool.submit(new java.util.concurrent.Callable[Int] {
+        override def call(): Int = {
+          start.await()
+          var reads = 0
+          while (!done.get || reads == 0) {
+            val s = lake.state()
+            assert(s.isEmpty || s.size == keys.size, s"a commit read with ${s.size} keys")
+            reads += 1
+          }
+          reads
+        }
+      })
+      // each round both publishers race for one slot; the loser rebases
+      val round = new java.util.concurrent.CyclicBarrier(2)
+      val publishers = Seq(0, 1).map { w =>
+        pool.submit(new java.util.concurrent.Callable[Unit] {
+          override def call(): Unit = {
+            start.await()
+            (1 to rounds).foreach { r =>
+              round.await()
+              lake.advance(keys.map(_ -> (2 * r + w)).toMap)
+            }
+          }
+        })
+      }
+      try publishers.foreach(_.get(120, java.util.concurrent.TimeUnit.SECONDS))
+      finally done.set(true)
+      assert(reader.get(120, java.util.concurrent.TimeUnit.SECONDS) > 0)
+      assert(lake.log == (1 to 2 * rounds))
+    } finally pool.shutdownNow()
+  }
+
   test("expireLog keeps head resolution intact; only deep time travel is retired") {
     val (lake, silver, _) = newLake()
     (1 to 5).foreach { i =>

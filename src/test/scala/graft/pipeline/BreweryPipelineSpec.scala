@@ -93,7 +93,7 @@ class BreweryPipelineSpec extends SparkSpec {
     assert(runDay("not json at all") == (((1L, 1L), 1, 1)))
   }
 
-  test("a warm daily run on catalog tables is 6 Spark jobs, with no count and no new class for a new date") {
+  test("a warm daily run on catalog tables is 4 Spark jobs, with no count and no new class for a new date") {
     val root = Files.createTempDirectory("bronze-jobs").toString
     val conf = PipelineConf(bronzeRoot = root,
       silverTable = "silver.dwjobs.tab_brewery", goldTable = "gold.dwjobs.tab_brewery_summary")
@@ -111,12 +111,27 @@ class BreweryPipelineSpec extends SparkSpec {
       try graft.JobCount(spark)(BreweryPipeline.run(spark, conf, days(1)))
       finally spark.listenerManager.unregister(qel)
     assert(out == ((2000L, 30L)))
-    assert(jobs.length == 6, jobs)
+    assert(jobs.length == 4, jobs)
     assert(!jobs.exists(_.startsWith("count at BreweryPipeline")), jobs)
     assert(plans.size >= 2 && !plans.toString.contains("InMemoryRelation"), plans)
     val c0 = org.apache.spark.CodegenCache.compiles
     assert(BreweryPipeline.run(spark, conf, days(2)) == ((2000L, 30L)))
     assert(org.apache.spark.CodegenCache.compiles - c0 == 0L)
+    // gold's version holds ONE data file, its rows in ORDER BY 1, 2, 3
+    // order, NULLS FIRST (FIXTURES.md A.3), read straight from the file
+    val st = org.apache.spark.sql.GraftSqlBridge.catalogPlugin(spark, "gold") match {
+      case c: graft.catalog.SnapshotCatalog => c.tablesFor(Array("dwjobs"))
+      case other => fail(s"gold is ${other.getClass.getName}")
+    }
+    val dataDir = java.nio.file.Paths.get(new org.apache.hadoop.fs.Path(
+      st.snapshotDirString("tab_brewery_summary", st.currentVersion("tab_brewery_summary"))).toUri.getPath)
+    val files = Files.walk(dataDir).toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
+    assert(files.length == 1 && files.head.toString.contains(s"sys_file_date=${days(2)}"), files)
+    val keys = spark.read.parquet(files.head.toString).select("brewery_type", "country").collect()
+      .map(r => (Option(r.getString(0)), Option(r.getString(1)))).toSeq
+    assert(keys.length == 30 && keys.distinct == keys)
+    assert(keys.head == ((None, None)) && keys == keys.sorted, keys) // None (NULL) sorts first
   }
 
   test("dynamic partition overwrite on catalog tables observes the day's rows on every run") {
