@@ -197,7 +197,7 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces with StagingT
     val st = tablesFor(ident.namespace)
     if (st.tableExists(ident.name)) throw new TableAlreadyExistsException(ident)
     val (idCols, derived) = SnapshotCatalog.splitTransforms(partitions)
-    val props = SnapshotCatalog.createProps(st, schema, properties, isNew = true)
+    val props = SnapshotCatalog.createProps(schema, properties)
     st.declareTable(ident.name, schema, idCols, derived)
     st.setProps(ident.name, props)
     loadTable(ident)
@@ -241,7 +241,7 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces with StagingT
     val (idCols, derived) = SnapshotCatalog.splitTransforms(partitions)
     // TBLPROPERTIES apply on the CTAS path too — applied before the
     // staged data write, so the very first commit already honors them
-    val props = SnapshotCatalog.createProps(st, schema, properties, isNew = !existedBefore)
+    val props = SnapshotCatalog.createProps(schema, properties)
     // re-declare schema + partitioning (REPLACE may change both; a
     // stale transform spec is cleared by declareTable)
     st.declareTable(ident.name, schema, idCols, derived)
@@ -478,19 +478,12 @@ object SnapshotCatalog {
   /** CREATE / CTAS / REPLACE TBLPROPERTIES as validated property
     * changes — taken BEFORE the table is (re-)declared, so an invalid
     * value (a bad write mode, a non-numeric retention, a column the
-    * schema lacks) fails the statement with no on-disk side effect. The
-    * session conf is the CREATE-time layout default: a NEW table that
-    * names no layout pins the session's, so later default-conf writers
-    * stay on it; a REPLACE keeps its table's pin. */
-  private[graft] def createProps(st: SnapshotTables, schema: StructType,
-      properties: util.Map[String, String], isNew: Boolean): Seq[SnapshotTables.PropChange[_]] = {
+    * schema lacks) fails the statement with no on-disk side effect. */
+  private[graft] def createProps(schema: StructType,
+      properties: util.Map[String, String]): Seq[SnapshotTables.PropChange[_]] = {
     import scala.jdk.CollectionConverters._
-    val declared = properties.asScala.toMap.map { case (k, v) => k -> Option(v) }
-    val layoutKey = SnapshotTables.CommitLayout.key.get
-    val sessionPin =
-      if (isNew && !declared.contains(layoutKey)) st.sessionCommitLayoutDefault.map(m => layoutKey -> Option(m))
-      else None
-    SnapshotTables.propChanges(declared ++ sessionPin, schema.fieldNames.toSeq)
+    SnapshotTables.propChanges(properties.asScala.toMap.map { case (k, v) => k -> Option(v) },
+      schema.fieldNames.toSeq)
   }
 
   /** V2 partition transforms → the snapshot layer's vocabulary:

@@ -91,7 +91,8 @@ abstract class CommitLog[P](spark: SparkSession, logRoot: String, private[io] va
     else try Some(state(c)) catch { case _: java.io.FileNotFoundException => None }
 
   /** CAS-advance the log with `updates` merged over the head state,
-    * retrying on lost races (rebase-and-retry, bounded). With
+    * retrying on lost races (rebase-and-retry, bounded, each retry after
+    * a random pause of up to `BackoffMaxMs`). With
     * `expectedParent` the commit is ANCHORED: it lands as child of
     * exactly that commit or throws [[CommitLog.StaleParentCommit]] —
     * the wire's expectedHash contract, safe against direct file-CAS
@@ -106,8 +107,15 @@ abstract class CommitLog[P](spark: SparkSession, logRoot: String, private[io] va
       case Some(p) =>
         if (landsOn(p)) p + 1 else throw StaleParentCommit(p, headCommit)
       case None =>
-        // a lost slot re-reads the winner's head and rebases onto it
-        Iterator.fill(MaxAttempts)(headCommit).find(landsOn).map(_ + 1).getOrElse(
+        // a lost slot re-reads the winner's head and rebases onto it,
+        // after a random pause: a winner committing back to back starts
+        // its next attempt at once, while the loser learns of its loss
+        // only at the CAS, so without one the loser can lose every slot
+        Iterator.range(0, MaxAttempts).map { attempt =>
+          if (attempt > 0)
+            Thread.sleep(java.util.concurrent.ThreadLocalRandom.current.nextLong(BackoffMaxMs + 1))
+          headCommit
+        }.find(landsOn).map(_ + 1).getOrElse(
           throw new IllegalStateException(
             s"lake commit lost $MaxAttempts consecutive CAS races — livelock or stuck publisher"))
     }
@@ -147,6 +155,8 @@ object CommitLog {
         s"(head now c$actual) — stale expectedHash")
 
   private val MaxAttempts = 20
+  /** Upper bound of the random pause before a rebased CAS attempt. */
+  private val BackoffMaxMs = 25L
   private val CommitFile = """c(\d+)\.json""".r
 }
 

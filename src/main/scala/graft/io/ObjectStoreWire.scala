@@ -52,8 +52,8 @@ import org.apache.hadoop.util.Progressable
   *     [[AtomicFs.createExclusive]] treats as a lost CAS (the loser's
   *     object never landed; its parts abort);
   *   - `rename` = per-key server-side COPY + DELETE (there is no
-  *     rename on S3) — O(data), which is WHY the direct commit layout
-  *     exists; the meter proves the difference;
+  *     rename on S3) — O(data), which is WHY snapshot commits write
+  *     their files once and never rename data; the meter proves it;
   *   - reads are ranged; listings are prefix queries; `mkdirs` is a
   *     no-op (prefixes are implicit).
   *

@@ -36,9 +36,9 @@ private[io] trait SnapshotManifests { self: SnapshotTables =>
     while (it.hasNext) {
       val s = it.next()
       // hidden-ness applies to EVERY path component under the snapshot
-      // root, not just the file name: a `.tmp-*` staging dir nested by
-      // a racing rename must not leak its files into the manifest
-      // (readPruned would then return rows a plain read does not see)
+      // root, not just the file name: files under a hidden dir must not
+      // leak into the manifest (readPruned would then return rows a
+      // plain read does not see)
       val rel = s.getPath.toString.stripPrefix(baseStr)
       if (s.isFile && rel.endsWith(".parquet") && !SnapshotManifests.hidden(rel))
         files += s.getPath.toString
@@ -666,7 +666,7 @@ private[io] object SnapshotManifests {
 
   /** Whether a data file's path under its segment root is hidden from
     * a read, by Spark's listing rule for every component: a `.` name
-    * (a `.tmp-*` staging dir nested by a racing rename), or a `_` name
+    * (a heartbeat marker, a writer's temp file), or a `_` name
     * that is not a partition directory. Hidden transforms spell their
     * dirs `__p_<name>=value`, and Spark reads them despite the
     * underscore. */

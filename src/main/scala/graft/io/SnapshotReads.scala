@@ -71,7 +71,7 @@ private[io] trait SnapshotReads { self: SnapshotTables =>
     }
     if (found.isEmpty && !fs(d).exists(d))
       throw new java.io.FileNotFoundException(
-        s"data dir $d of $table v${m.v} is missing — the version cannot be read")
+        f"data dir $d of $table v${m.v}%05d is missing — the version cannot be read")
     found
   }
 

@@ -14,78 +14,67 @@ import org.apache.spark.sql.types.StructType
   *
   * Layout per table:
   * {{{
-  *   <root>/<table>/snapshots/v<NNNNN>/   parquet data (partitioned dirs)
-  *   <root>/<table>/metadata/v<NNNNN>.json  schema + partition spec
+  *   <root>/<table>/data/<writerUUID>/      parquet data of one commit
+  *   <root>/<table>/metadata/v<NNNNN>.json  version meta (records data_dir)
   *   <root>/<table>/metadata/current        pointer file (version number)
   * }}}
   *
-  * Commits are write-new-snapshot-then-flip-pointer: readers resolving
-  * the pointer before the flip keep reading the old snapshot (snapshot
-  * isolation). Retention deletes snapshots older than
-  * `previousVersionsMax` behind the current one AFTER the flip, so no
-  * reader holding the old pointer within the retention window ever
-  * loses its files — the same contract Iceberg's metadata retention
-  * gives the reference.
+  * ONE COMMIT LAYOUT, Iceberg's write-once-files design on this format:
+  * a commit writes its data files ONCE, into their final location in
+  * the table's pool (`<table>/data/<writerUUID>/`), and then claims the
+  * version by an EXCLUSIVE create of its metadata file, which records
+  * that dir (`"data_dir"`, its name in the pool — see
+  * [[SnapshotTables.VersionMeta]]). The won create **is the entire
+  * commit**: no data byte ever moves, which matters on S3-family
+  * object stores, where a rename is a server-side copy. Data precedes
+  * the claim, so a complete meta is a complete commit. Readers that
+  * resolved the pointer before a commit keep reading the old version
+  * (snapshot isolation). Retention deletes versions older than
+  * `previousVersionsMax` behind the current one after the commit, so
+  * no reader holding the old pointer within the retention window ever
+  * loses its files — the contract Iceberg's metadata retention gives
+  * the reference. publish, fold and rollback never move a data byte
+  * either: publish adopts the branch commit's pool dir by reference
+  * (branch commits write into the MAIN table's pool precisely so the
+  * reference survives `dropBranch`).
   *
-  * Concurrency (multi-writer safe): the commit point is an EXCLUSIVE
-  * create (`overwrite=false`) of the version's metadata file — atomic
-  * on HDFS and the jar-free CAS primitive log-store implementations
-  * use. Two writers racing for v+1 cannot both win: the loser gets a
-  * [[SnapshotTables.ConcurrentCommitException]] with its temp data
-  * cleaned up, and retries on top of the winner's commit. Data is
-  * staged in a unique `.tmp-*` directory and renamed into place only
-  * after winning the CAS, so `history`/readers never see a
-  * half-written snapshot. The pointer file is a monotonic-advance
-  * cache of max(history) — it only moves forward, and
-  * [[currentVersion]] always takes max(pointer, newest snapshot dir),
-  * so a stale, regressed, or missing pointer can never mask a
-  * committed snapshot. A winner that crashes between the CAS and the
-  * data rename leaves an orphan metadata file; later writers reclaim
-  * it after `orphanGraceMs` (see [[casWithOrphanReclaim]]) so a crash
-  * cannot wedge the table. The exclusive create is atomic on HDFS
-  * (namenode-side) and on local filesystems (a full temp file claimed
-  * with POSIX link(2) — Hadoop's local `create(overwrite=false)` is only
-  * check-then-create, which two racing writers can both pass).
+  * Concurrency (multi-writer safe): the exclusive create is atomic on
+  * HDFS (namenode-side) and on local filesystems (a full temp file
+  * claimed with POSIX link(2), see [[AtomicFs.createExclusive]]). Two
+  * writers racing for v+1 cannot both win: the loser deletes its pool
+  * dir and gets a [[SnapshotTables.ConcurrentCommitException]]; it
+  * retries on top of the winner's commit. The pointer file is a
+  * monotonic-advance cache of the newest commit; [[currentVersion]]
+  * takes max(pointer, newest committed meta), so a stale or missing
+  * pointer never masks a commit. A create-then-write filesystem can
+  * leave a crashed claim's meta empty or torn: that is not a commit,
+  * and later writers reclaim it after `orphanGraceMs` (see
+  * [[casWithOrphanReclaim]]) so a crash cannot wedge the table.
   * Caveat: on S3A, exclusive create remains check-then-create; real
   * S3 multi-writer needs a conditional-PUT or DynamoDB-style log
   * store, the Iceberg/Delta swap-in seam of SURVEY §7.
   *
-  * COMMIT LAYOUTS (`graft.commit.layout`, default "rename" — pinnable
-  * per table as a TBLPROPERTY, [[setCommitLayout]], with the session
-  * conf governing unpinned tables and serving as the catalog's
-  * CREATE-time default): the stage-then-rename protocol above is atomic and
-  * cheap on HDFS and local filesystems, but on S3-family object
-  * stores RENAME IS A SERVER-SIDE COPY — publishing a staged snapshot
-  * is O(data), the exact cliff Iceberg's write-once-files +
-  * file-listing-manifests design exists to avoid. The "direct" layout
-  * is that design on this format: data files are written ONCE into
-  * their final location under the table's shared pool
-  * (`<table>/data/<writerUUID>/`), the version metadata records that
-  * location (`"data_dir"`, an absolute URI — see
-  * [[SnapshotTables.VersionMeta]]), and the metadata CAS **is the entire
-  * commit** — no rename, no orphan window (data precedes the CAS, so
-  * a won CAS is instantly complete), and publish/WAP/fold/rollback
-  * never move a data byte: publish adopts the branch commit's pool
-  * dir by reference (branch commits write into the MAIN table's pool
-  * precisely so the reference survives `dropBranch`). Every version
-  * meta is self-describing, so a table may freely mix layouts across
-  * versions. Garbage collection is REACHABILITY-based, as in Iceberg:
-  * a pool dir referenced by no retained meta (main or branch) is
-  * debris — CAS losers delete their own dirs eagerly; hard-crashed
-  * writers' dirs wait for [[removeOrphans]], Iceberg's own
-  * `remove_orphan_files` contract.
+  * Tables written before the pool layout keep their data in
+  * `snapshots/v<NNNNN>/` and metas without `data_dir`: such a version
+  * resolves to that dir for reads, time travel, chains and expiry, so
+  * they read unchanged and take new commits on top.
+  *
+  * Garbage collection is REACHABILITY-based, as in Iceberg: a pool dir
+  * referenced by no retained meta (main or branch) is debris — CAS
+  * losers delete their own dirs eagerly; hard-crashed writers' dirs
+  * wait for [[removeOrphans]], Iceberg's own `remove_orphan_files`
+  * contract.
   */
 final class SnapshotTables(
     spark: SparkSession,
     root: String,
     private val previousVersionsMax: Int = 10,
     orphanGraceMs: Long = 60000L,
-    stagingGraceMs: Long = 3600000L,
     heartbeatMs: Long = 15000L,
     private[io] val sketchBits: Int = 1 << 17,
     private[io] val sketchHashes: Int = 4,
-    // branch instances write direct-layout data into the PARENT
-    // table's pool (see the class doc's publish-by-reference design)
+    // branch instances write their data into the PARENT table's pool
+    // (see the class doc's publish-by-reference design)
     dataPoolRoot: Option[String] = None
 ) extends TableFormat with SnapshotReads with SnapshotManifests {
 
@@ -96,7 +85,7 @@ final class SnapshotTables(
   require(sketchHashes >= 1 && sketchHashes <= 8,
     s"sketchHashes must be in [1, 8], got $sketchHashes")
 
-  import SnapshotTables.{CommitLayout, Prop, PropChange, Props, RefFile, Retention, SketchCols,
+  import SnapshotTables.{Prop, PropChange, Props, RefFile, Retention, SketchCols,
     SortOrder, StatsCols, Transforms, VersionMeta, WriteMode}
   import SnapshotReads.ChainDir.rowsOf
 
@@ -109,8 +98,8 @@ final class SnapshotTables(
     new Path(tableDir(table), f"snapshots/v$v%05d")
   private def pointer(table: String) = new Path(metaDir(table), "current")
 
-  /** Write-once data pool of the direct layout: `<table>/data/`, one
-    * subdir per commit attempt. Branch instances override it with the
+  /** Write-once data pool: `<table>/data/`, one subdir per commit
+    * attempt. Branch instances override it with the
     * PARENT table's pool so a published branch commit's dir survives
     * `dropBranch` (see the class doc). */
   private def dataPoolDir(table: String): Path =
@@ -170,36 +159,6 @@ final class SnapshotTables(
     if (currentVersion(table) > 0) read(table).columns.toSeq
     else declaredSchema(table).map(_.fieldNames.toSeq).getOrElse(Nil)
 
-  /** The table's standing commit layout — "rename" (default: stage
-    * under `.tmp-*`, rename into the version line after the CAS) or
-    * "direct" (write-once files in the pool; the metadata CAS is the
-    * entire commit — the shape object stores need, where rename is a
-    * copy). Resolution: the per-table pin (TBLPROPERTY
-    * `graft.commit.layout`, [[setCommitLayout]]) wins; tables without
-    * a pin follow the `graft.commit.layout` SESSION conf, then
-    * "rename". The pin is the point: where a table lives (an object
-    * store vs a rename-capable FS) is a property of the TABLE, and a
-    * default-conf writer touching a pinned-direct 100 TB table must
-    * not silently revert it to O(data) rename commits. */
-  def commitLayoutFor(table: String): String =
-    pinnedCommitLayout(table).orElse(sessionCommitLayoutDefault).getOrElse("rename")
-
-  /** The session conf's layout, validated, if set — what catalog
-    * CREATE pins onto new tables that gave no explicit TBLPROPERTY. */
-  def sessionCommitLayoutDefault: Option[String] =
-    spark.conf.getOption("graft.commit.layout").map(CommitLayout.valid(_, Nil))
-
-  /** The table's pinned layout, if any — None means "follow the
-    * session conf" (the pre-pin behavior). */
-  def pinnedCommitLayout(table: String): Option[String] = prop(table, CommitLayout)
-
-  /** Pin (or with None unpin) the table's commit layout. Metadata-only
-    * — existing versions keep the layout their metas record (metas are
-    * self-describing, so mixing layouts across a table's history is
-    * always safe). */
-  def setCommitLayout(table: String, mode: Option[String]): Unit =
-    setValid(table, CommitLayout, mode)
-
   private def metaPath(table: String, v: Int) = new Path(metaDir(table), f"v$v%05d.json")
 
   /** Version `v`'s commit metadata ([[SnapshotTables.VersionMeta]]);
@@ -220,15 +179,15 @@ final class SnapshotTables(
     }
 
   /** A version's data directory: the commit metadata's recorded
-    * write-once pool location (direct layout) or the version-line dir
-    * the rename layout moved data into. EVERY data read, byte count
-    * and delete resolves through here — the version meta is
+    * write-once pool dir, or `snapshots/v<NNNNN>` for a meta without
+    * one (a table written before the pool layout). EVERY data read,
+    * byte count and delete resolves through here — the version meta is
     * authoritative, never the directory convention. */
   private def dataDirOf(table: String, v: Int): Path =
     readMeta(table, v).fold(snapDir(table, v))(dataDirOfMeta(table, _))
 
   private[io] def dataDirOfMeta(table: String, m: SnapshotTables.VersionMeta): Path =
-    m.dataDir.map(new Path(_)).getOrElse(snapDir(table, m.v))
+    m.dataDir.fold(snapDir(table, m.v))(SnapshotTables.inPool(dataPoolDir(table), _))
 
   private def writeSmallFile(p: Path, content: String): Unit = {
     val f = fs(p)
@@ -253,117 +212,100 @@ final class SnapshotTables(
   private def createExclusive(p: Path, content: String): Boolean =
     AtomicFs.createExclusive(fs(p), p, content)
 
-  /** The commit CAS with FENCED crash-orphan recovery. A writer that
-    * won the CAS for `next` but crashed before renaming its staged
-    * data leaves a metadata file with no snapshot directory — without
-    * recovery, every future commit targets the same `next`, loses the
-    * CAS, and the table wedges permanently. When the lost CAS turns
-    * out to be against such an orphan (meta present, snapshot dir
-    * absent) that is older than `orphanGraceMs` (a live winner may
-    * still be mid-rename — renames of a staged directory are fast, so
-    * the grace period only needs to cover scheduling jitter), the
-    * orphan meta is deleted and the CAS retried once.
+  /** The commit CAS with FENCED recovery of crashed claims. A writer
+    * that crashed between the exclusive create of `next`'s meta and its
+    * write (possible on create-then-write filesystems such as HDFS)
+    * leaves an empty or torn meta — without recovery, every future
+    * commit targets the same `next`, loses the CAS, and the table
+    * wedges permanently. When the lost CAS turns out to be against a
+    * meta that is not a commit ([[isCommit]]) and is older than
+    * `orphanGraceMs` (its writer may still be writing it), the meta is
+    * deleted and the CAS retried once.
     *
-    * Fencing: every meta carries its writer's attempt UUID, and a
-    * reclaimer re-reads the meta IMMEDIATELY before deleting it — if
-    * the content no longer matches what was statted as orphaned
-    * (another reclaimer already swept it and re-won with its own
-    * meta), the reclaim is abandoned instead of deleting the new
-    * winner's commit record. The original winner, if merely paused
-    * rather than crashed, discovers the theft when it re-reads the
-    * meta around its data rename (see [[overwriteTable]]) and backs
-    * off — the reclaim grace is a lease, the UUID is the fence token.
-    * An empty or torn meta (a crash between the CAS create and its
-    * write) is never a commit, so it is reclaimed the same way, in
-    * either layout. */
+    * Fencing: a reclaimer re-reads the meta IMMEDIATELY before deleting
+    * it — if the content no longer matches what was statted as orphaned
+    * (another reclaimer already swept it and re-won with its own meta),
+    * the reclaim is abandoned instead of deleting the new winner's
+    * commit record. A commit is never reclaimed: its meta is complete
+    * the moment it is claimed. */
   private def casWithOrphanReclaim(table: String, next: Int, meta: Path, metaJson: String): Boolean =
     createExclusive(meta, metaJson) || {
       val f = fs(meta)
       val orphanContent =
-        if (!f.exists(snapDir(table, next)) && f.exists(meta) &&
+        if (f.exists(meta) &&
           (System.currentTimeMillis - f.getFileStatus(meta).getModificationTime) >= orphanGraceMs)
           try Some(readSmallFile(meta)) catch { case _: java.io.IOException => None }
         else None
       orphanContent.exists { statted =>
-        // a DIRECT-layout meta is NEVER an orphan: its data was staged
-        // before the CAS, so a complete meta is a complete commit — it
-        // has no snapshot dir by design, and reclaiming it would
-        // delete a live commit record. A meta that does not parse is a
-        // CAS create whose write never finished: never a commit.
-        val isDirect =
-          try VersionMeta.parse(next, statted).dataDir.isDefined
-          catch { case _: com.fasterxml.jackson.core.JsonProcessingException => false }
         // re-read right before the delete: if the meta changed hands
         // since we statted it, another reclaimer re-won — back off.
-        val still = try f.exists(meta) && readSmallFile(meta) == statted
+        def still = try f.exists(meta) && readSmallFile(meta) == statted
                     catch { case _: java.io.IOException => false }
-        !isDirect && still && !f.exists(snapDir(table, next)) &&
+        !isCommit(table, next, statted) && still &&
           { f.delete(meta, false); createExclusive(meta, metaJson) }
       }
     }
 
-  /** Whether version `v`'s meta carries `writerId`'s fence token — the
-    * ownership re-check around a commit's data placement. An absent or
-    * unparseable meta (a reclaimer mid-write) is not ours. */
-  private def metaOwnedBy(table: String, v: Int, writerId: String): Boolean =
-    try readMeta(table, v).exists(_.writer == writerId)
-    catch { case _: java.io.IOException => false }
+  /** Whether `text`, the meta of version `v` above the pointer, is a
+    * commit: it parses, and the data it names exists — a `data_dir`
+    * (written before the meta was claimed), or for a meta without one
+    * (a table written before the pool layout) its `snapshots/v<NNNNN>`
+    * dir. An empty or torn meta is a claim whose write never finished.
+    * [[history]] and the reclaim in [[casWithOrphanReclaim]] share this
+    * one rule. */
+  private def isCommit(table: String, v: Int, text: String): Boolean =
+    try {
+      val m = VersionMeta.parse(v, text)
+      m.dataDir.isDefined || fs(snapDir(table, v)).exists(snapDir(table, v))
+    } catch { case _: com.fasterxml.jackson.core.JsonProcessingException => false }
 
   private def readSmallFile(p: Path): String = AtomicFs.readSmall(fs(p), p)
 
-  /** Current committed version, 0 when the table does not exist yet.
-    * Always the max of the pointer cache and the newest committed
-    * snapshot directory: a stale pointer (crash between the data
-    * rename and the pointer flip, or interleaved multi-writer pointer
-    * writes) can therefore never mask a committed snapshot — the
-    * pointer is a fast-path hint, never load-bearing for correctness. */
-  def currentVersion(table: String): Int = {
+  /** The pointer cache's version, 0 when it is absent or unreadable. */
+  private def pointerVersion(table: String): Int = {
     val p = pointer(table)
-    val viaPointer =
-      if (fs(p).exists(p))
-        try readSmallFile(p).toInt
-        catch { case _: NumberFormatException => 0 }
-      else 0
-    math.max(viaPointer, history(table).lastOption.getOrElse(0))
+    if (fs(p).exists(p))
+      try readSmallFile(p).toInt
+      catch { case _: NumberFormatException => 0 }
+    else 0
   }
 
-  /** All retained versions, ascending: version-line dirs (rename
-    * layout) plus direct-layout commits, whose ONLY on-disk footprint
-    * under the version line is the metadata file — for those, a
-    * version is committed iff its meta exists AND records a
-    * `data_dir` (data is staged before the CAS, so a complete meta is
-    * completion). A meta with neither dir nor data_dir is a
-    * rename-layout commit inside its CAS→rename window, or a crash
-    * orphan — not history. Nor is a meta that does not parse: the CAS
-    * creates the file before writing it, so a crash in between leaves
-    * it empty or torn. */
-  def history(table: String): Seq[Int] = {
-    val d = new Path(tableDir(table), "snapshots")
-    val f = fs(d)
-    val viaDirs: Seq[Int] =
-      if (!f.exists(d)) Nil
-      else
-        f.listStatus(d).toSeq
-          .map(_.getPath.getName)
-          .collect { case n if n.startsWith("v") => n.drop(1).toInt }
-    val dirSet = viaDirs.toSet
+  /** Current committed version, 0 when the table does not exist yet:
+    * the max of the pointer cache and the newest committed meta, so a
+    * stale pointer (a crash between the claim and the pointer advance,
+    * or interleaved multi-writer pointer writes) never masks a commit. */
+  def currentVersion(table: String): Int = {
+    val ptr = pointerVersion(table)
+    math.max(ptr, committedVersions(table, ptr).lastOption.getOrElse(0))
+  }
+
+  /** All retained versions, ascending. */
+  def history(table: String): Seq[Int] = committedVersions(table, pointerVersion(table))
+
+  /** The versions whose metas are listed under `metadata/` and are
+    * commits. A version at or below the pointer `ptr` is one without
+    * parsing its meta: the pointer only ever names a won commit, and no
+    * writer can claim version N+1 while N is not a commit (every writer
+    * targets current + 1, which stays N until N is a commit or is
+    * reclaimed), so every version below a commit is one too. Only the
+    * metas above the pointer — commits whose pointer advance has not
+    * landed yet, or claims torn by a crash — are parsed ([[isCommit]]). */
+  private def committedVersions(table: String, ptr: Int): Seq[Int] = {
     val md = metaDir(table)
     val mf = fs(md)
-    val viaMeta: Seq[Int] =
-      if (!mf.exists(md)) Nil
-      else
-        mf.listStatus(md).toSeq
-          .map(_.getPath.getName)
-          .collect {
-            case n if n.startsWith("v") && n.endsWith(".json") &&
-                n.stripPrefix("v").stripSuffix(".json").forall(_.isDigit) =>
-              n.stripPrefix("v").stripSuffix(".json").toInt
-          }
-          .filterNot(dirSet)
-          .filter(v =>
-            try readMeta(table, v).exists(_.dataDir.isDefined)
-            catch { case _: java.io.IOException => false })
-    (viaDirs ++ viaMeta).sorted
+    if (!mf.exists(md)) Nil
+    else
+      mf.listStatus(md).toSeq
+        .map(_.getPath.getName)
+        .collect {
+          case n if n.startsWith("v") && n.endsWith(".json") &&
+              n.stripPrefix("v").stripSuffix(".json").forall(_.isDigit) =>
+            n.stripPrefix("v").stripSuffix(".json").toInt
+        }
+        .filter(v => v <= ptr ||
+          (try isCommit(table, v, readSmallFile(metaPath(table, v)))
+           catch { case _: java.io.FileNotFoundException => false }))
+        .sorted
   }
 
   /** Commit `df` as the next version of `table`.
@@ -379,14 +321,14 @@ final class SnapshotTables(
     overwriteTable(df, table, partitionCols, statsCols, Nil)
 
   /** Commit with a per-file stats manifest over `statsCols` (numeric or
-    * string columns): after the data rename, parquet FOOTERS of the
-    * staged files are read on executors (metadata-only — no data pages
+    * string columns): after the commit, parquet FOOTERS of the
+    * committed files are read on executors (metadata-only — no data pages
     * touched, distributed, never collected to the driver) and written
     * as a small manifest parquet beside the version metadata.
     * [[readPruned]] then answers range predicates on a stats column by
     * scanning only the files whose [min,max] intersects — Iceberg's
     * manifest pruning, on nothing but parquet + a directory. A crash
-    * between data rename and manifest write degrades cleanly: no
+    * between the commit and the manifest write degrades cleanly: no
     * manifest → readPruned falls back to the full snapshot. */
   /** Commit with a stats manifest over `statsCols` AND per-file Bloom
     * membership sketches over `sketchCols` — the point-lookup sibling
@@ -570,24 +512,22 @@ final class SnapshotTables(
     }
   }
 
-  /** The fenced commit machinery every commit shape shares — full
-    * snapshots ([[overwriteTable]]) and delta commits ([[append]],
-    * [[upsertMor]], [[deleteKeysMor]] and the patch-style MOR DML):
-    * stage via `stage(tmpDir)` under a unique heartbeated temp dir, win
-    * the version CAS, rename into the version line with the full
-    * ownership re-check dance, then run post-commit bookkeeping
-    * (stats/sketch property persistence via `afterWin`, manifest,
-    * pointer advance, retention). `commit` carries the kind-specific
-    * version metadata — a bare `VersionMeta(0)` for a full snapshot;
-    * delta commits set kind, base and key columns there — and this
-    * fills in the version, writer, layout, data dir and schema.
-    * `expectedNext` fences
-    * content races for delta producers whose staged rows were computed
-    * AGAINST a specific base version: if another writer committed since
-    * the producer read that base, the commit fails with
-    * [[SnapshotTables.ConcurrentCommitException]] instead of recording
-    * a delta whose base no longer matches. Returns the committed
-    * version. */
+  /** The commit every commit shape shares — full snapshots
+    * ([[overwriteTable]]) and delta commits ([[append]], [[upsertMor]],
+    * [[deleteKeysMor]] and the patch-style MOR DML): write the data via
+    * `stage(dir)` into a fresh heartbeated pool dir, claim the version
+    * meta (the CAS — the whole commit), then run post-commit
+    * bookkeeping (stats/sketch property persistence via `afterWin`,
+    * manifest, pointer advance, retention). `commit` carries the
+    * kind-specific version metadata — a bare `VersionMeta(0)` for a
+    * full snapshot; delta commits set kind, base and key columns there
+    * — and this fills in the version, writer, layout, data dir and
+    * schema. `expectedNext` fences content races for delta producers
+    * whose staged rows were computed AGAINST a specific base version:
+    * if another writer committed since the producer read that base, the
+    * commit fails with [[SnapshotTables.ConcurrentCommitException]]
+    * instead of recording a delta whose base no longer matches. Returns
+    * the committed version. */
   private def commitVersion(
       table: String,
       stage: Path => Unit,
@@ -602,74 +542,21 @@ final class SnapshotTables(
     expectedNext.foreach { e =>
       if (e != next) throw new SnapshotTables.ConcurrentCommitException(table, next)
     }
-    // Stage the data under a unique writer-owned dir: a `.tmp-*`
-    // sibling of the version line (rename layout — invisible to
-    // history()/readers until the post-CAS rename) or the FINAL pool
-    // location (direct layout — write-once, never moved; invisible
-    // because no meta references it yet). A heartbeat marker inside
-    // the dir is refreshed for as long as the write job runs, so
-    // debris sweeps can tell a LIVE long write from abandonment
+    // The data goes straight to its final, write-once pool dir,
+    // invisible because no meta references it yet. A heartbeat marker
+    // inside the dir is refreshed for as long as the write job runs, so
+    // the orphan sweep can tell a LIVE long write from abandonment
     // (task-output activity under _temporary/ does not refresh the
-    // staging dir's own mtime).
-    val direct = commitLayoutFor(table) == "direct"
+    // dir's own mtime).
     val writerId = java.util.UUID.randomUUID.toString
-    val tmp =
-      if (direct) new Path(dataPoolDir(table), writerId)
-      else new Path(tableDir(table), s"snapshots/.tmp-$writerId")
-    withHeartbeat(tmp) { stage(tmp) }
-    val meta = metaPath(table, next)
-    // writer UUID = the fence token for orphan reclaim: ownership of
-    // version `next` is decided by which attempt's content sits in the
-    // meta file, not merely by the file existing.
+    val dir = new Path(dataPoolDir(table), writerId)
+    withHeartbeat(dir) { stage(dir) }
     val metaJson = commit.copy(v = next, writer = writerId, partitionCols = partitionCols1,
-      dataDir = Option.when(direct)(fs(tmp).makeQualified(tmp).toString), schema = schemaJson).render
-    def metaIsOurs: Boolean = metaOwnedBy(table, next, writerId)
-    // The CAS: exclusive-create of the version metadata file decides
-    // the winner of version `next`.
-    if (!casWithOrphanReclaim(table, next, meta, metaJson)) {
-      fs(tmp).delete(tmp, true)
+      dataDir = Some(writerId), schema = schemaJson).render
+    if (!casWithOrphanReclaim(table, next, metaPath(table, next), metaJson)) {
+      fs(dir).delete(dir, true)
       throw new SnapshotTables.ConcurrentCommitException(table, next)
     }
-    if (!direct) {
-      val dest = snapDir(table, next)
-      // A winner paused (GC, suspension) past orphanGraceMs between the
-      // CAS and this rename may have been reclaimed: its meta now
-      // belongs to another writer and the version may already hold that
-      // writer's data. Re-check ownership IMMEDIATELY before renaming —
-      // a stale winner backs off instead of nesting its staged dir
-      // inside the other winner's committed snapshot (HDFS rename onto
-      // an existing dir nests the source).
-      if (!metaIsOurs) {
-        fs(tmp).delete(tmp, true)
-        throw new SnapshotTables.ConcurrentCommitException(table, next)
-      }
-      if (!fs(tmp).rename(tmp, dest)) {
-        // We own `next` but could not place its data: remove the staged
-        // data and — only if it is still OURS (the rename may have
-        // failed precisely because a reclaimer stole the version and
-        // committed its own data) — our metadata file, so this failed
-        // attempt neither wedges the version nor deletes the other
-        // winner's commit record.
-        fs(tmp).delete(tmp, true)
-        if (metaIsOurs) fs(meta).delete(meta, false)
-        throw new SnapshotTables.ConcurrentCommitException(table, next)
-      }
-      // Post-rename ownership audit: if the meta changed hands while the
-      // rename was in flight, our data may have nested inside the other
-      // winner's snapshot dir. Undo the nesting (delete only OUR staged
-      // subtree, identified by the writer UUID in its name) and report
-      // the lost race.
-      if (!metaIsOurs) {
-        val nested = new Path(dest, tmp.getName)
-        if (fs(nested).exists(nested)) fs(nested).delete(nested, true)
-        throw new SnapshotTables.ConcurrentCommitException(table, next)
-      }
-    }
-    // Direct layout: the won CAS IS the commit — the data already sits
-    // in its final write-once location and the meta records it. There
-    // is no rename, no ownership re-check (direct metas are never
-    // orphan-reclaimed — see casWithOrphanReclaim) and no orphan
-    // window; everything below is post-commit bookkeeping.
     afterWin()
     if (manifestStats.nonEmpty || manifestSketch.nonEmpty)
       writeManifest(table, next, manifestStats, manifestSketch)
@@ -680,11 +567,10 @@ final class SnapshotTables(
 
   /** Run `body` (the staged write job) with a live-writer heartbeat: a
     * daemon thread re-writes a hidden marker file inside `dir` every
-    * `heartbeatMs`, keeping its mtime fresh for vacuumStaging's age
-    * check. The marker is removed once the write completes (the
-    * staging dir is about to be renamed into a committed snapshot;
-    * hidden files are invisible to readers anyway, but there is no
-    * reason to carry it). */
+    * `heartbeatMs`, keeping its mtime fresh for [[removeOrphans]]' age
+    * check. The marker is removed once the write completes (the dir is
+    * about to be claimed by a commit; hidden files are invisible to
+    * readers anyway, but there is no reason to carry it). */
   private def withHeartbeat(dir: Path)(body: => Unit): Unit = {
     val marker = new Path(dir, SnapshotTables.HeartbeatName)
     val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
@@ -699,8 +585,8 @@ final class SnapshotTables(
           // job failure (observed live). An existing dir is never
           // cleared mid-write by the job again, so beating after
           // creation is race-free; a write that finishes before the
-          // first beat simply never needed liveness marking (vacuum
-          // falls back to dir mtime).
+          // first beat simply never needed liveness marking (the
+          // sweep falls back to dir mtime).
           try { if (fs(dir).exists(dir)) writeSmallFile(marker, System.currentTimeMillis.toString) }
           catch { case _: java.io.IOException => () } // transient: next beat retries
           val deadline = System.currentTimeMillis + heartbeatMs
@@ -725,14 +611,8 @@ final class SnapshotTables(
   /** Advance the pointer cache, never regress it: a slower writer
     * finishing an older version after a newer one flipped must not
     * move readers backwards. */
-  private def advancePointer(table: String, next: Int): Unit = {
-    val p = pointer(table)
-    val cur =
-      if (fs(p).exists(p))
-        try readSmallFile(p).toInt catch { case _: NumberFormatException => 0 }
-      else 0
-    if (next > cur) writeSmallFile(p, next.toString)
-  }
+  private def advancePointer(table: String, next: Int): Unit =
+    if (next > pointerVersion(table)) writeSmallFile(pointer(table), next.toString)
 
   /** Snapshot model has no partial commit: partition-level overwrite
     * still commits a full new version built from current ∖ incoming
@@ -928,10 +808,14 @@ final class SnapshotTables(
     // fuzz) — last-writer-wins is correct for a user overwrite, never
     // for maintenance. A lost race throws ConcurrentCommitException;
     // callers retry, re-reading the winner's chain.
-    if (chainOf(table, cur).length > 1)
-      overwriteImpl(readVersion(table, cur), table, Nil, Nil, Nil,
-        applySortOrder = true, expectedNext = Some(cur + 1))
+    if (chainOf(table, cur).length > 1) rewriteHead(table, cur)
   }
+
+  /** Commit version `cur`'s content again as one full version in a
+    * fresh pool dir, slotted right after `cur`. */
+  private def rewriteHead(table: String, cur: Int): Unit =
+    overwriteImpl(readVersion(table, cur), table, Nil, Nil, Nil,
+      applySortOrder = true, expectedNext = Some(cur + 1))
 
   /** MINOR COMPACTION (LSM-style): fold the current chain's DELTA
     * segments into ONE equivalent delta against the chain's base, at
@@ -1773,22 +1657,21 @@ final class SnapshotTables(
   // snapshots, so the max(pointer, history) current-version invariant
   // holds untouched. Forking is zero-copy (the ref records main's
   // current version as its base; an uncommitted branch reads that
-  // version), and publish is a fenced CAS on main plus an O(1) rename
-  // of the branch's current snapshot into main's line (a copy on
-  // object stores, like every rename here).
+  // version), and publish is one fenced CAS on main that adopts the
+  // branch head's pool dir by reference: no data byte moves.
   // ------------------------------------------------------------------
 
   private def refsDir(table: String) = new Path(metaDir(table), "refs")
   private def refPath(table: String, branch: String) = new Path(refsDir(table), branch)
 
   /** Branch commits live in a nested table rooted at
-    * <table>/branches/, named after the branch. Direct-layout branch
-    * commits write their data into the PARENT table's pool, so a
+    * <table>/branches/, named after the branch. Branch commits write
+    * their data into the PARENT table's pool, so a
     * published (adopted-by-reference) dir survives dropBranch and
     * unpublished dirs fall to the reachability sweep. */
   private def branchTables(table: String): SnapshotTables =
     new SnapshotTables(spark, new Path(tableDir(table), "branches").toString,
-      previousVersionsMax, orphanGraceMs, stagingGraceMs, heartbeatMs, sketchBits, sketchHashes,
+      previousVersionsMax, orphanGraceMs, heartbeatMs, sketchBits, sketchHashes,
       dataPoolRoot = Some(dataPoolDir(table).toString))
 
   /** The nested branch store — the V2 catalog's seam for SQL branch
@@ -1813,8 +1696,8 @@ final class SnapshotTables(
       throw new IllegalStateException(s"branch '$branch' already exists on table '$table'")
     // Table properties cross the fork seam: the branch starts with
     // main's (SnapshotTables.ForkedProps), so branch commits keep the
-    // manifests, directory layout, sort order, DML strategy and commit
-    // layout main has (without this, a branch commit on a sorted,
+    // manifests, directory layout, sort order and DML strategy main
+    // has (without this, a branch commit on a sorted,
     // stats-maintained or hidden-partitioned table would silently stage
     // unsorted files, drop the manifest and flatten the layout).
     branchTables(table).setProps(branch, inherited)
@@ -1928,9 +1811,9 @@ final class SnapshotTables(
     * WAP flow (a multi-load audit session appends each load without
     * rewriting the branch). The branch's FIRST commit materializes the
     * base version plus the delta (the branch version line cannot
-    * delta-chain into MAIN's line — publish moves one snapshot dir);
+    * delta-chain into MAIN's line — publish adopts one pool dir);
     * later appends are true delta commits on the branch, and
-    * [[publish]] materializes a delta-headed branch before the move. */
+    * [[publish]] materializes a delta-headed branch first. */
   def appendToBranch(table: String, branch: String, df: DataFrame): Unit = {
     val bt = branchTables(table)
     if (bt.currentVersion(branch) == 0)
@@ -1978,11 +1861,15 @@ final class SnapshotTables(
     * (the audited state is exactly what main becomes); a main commit
     * since the fork raises [[SnapshotTables.ConcurrentCommitException]]
     * — re-audit on a fresh branch rather than silently dropping the
-    * concurrent change. The branch's current snapshot (data AND its
-    * stats/sketch manifest) moves into main's version line with the
-    * same fenced CAS + ownership re-checks as a normal commit; data is
-    * never rewritten. Publishing retires the branch. Returns main's
-    * new version. */
+    * concurrent change. Main's new meta is the branch head's, carrying
+    * its `data_dir` — a dir in THIS table's pool (branch commits write
+    * into main's pool), so publish
+    * is adoption by reference: zero data bytes move, the fenced CAS is
+    * the entire commit, and the head's stats/sketch manifest moves
+    * beside it. Publishing retires the branch; the adopted dir is then
+    * reachable from main's meta, and the reachability guard
+    * (dropVersion / removeOrphans) protects it for main's retention
+    * lifetime. Returns main's new version. */
   def publish(table: String, branch: String): Int = {
     val base = branchBase(table, branch)
     val bt = branchTables(table)
@@ -1990,47 +1877,21 @@ final class SnapshotTables(
     require(bv0 > 0, s"branch '$branch' has no commits to publish")
     // read before the commit: once it lands, nothing may fail publish
     val published = bt.propsOf(SnapshotTables.PublishedProps, branch)
-    // A delta-headed branch materializes ON THE BRANCH first: publish
-    // moves ONE snapshot directory into main's line, and a delta dir
-    // alone is meaningless without its chain (whose base lives in the
-    // branch's version line and would be dropped with the branch).
-    if (bt.chainOf(branch, bv0).length > 1) bt.materialize(branch)
+    // A head that is not one pool dir is rewritten ON THE BRANCH first:
+    // a delta dir alone is meaningless without its chain (whose base
+    // lives in the branch's version line and would be dropped with the
+    // branch), and a head written before the pool layout lives under
+    // the branch's own `snapshots/`, which dropBranch deletes.
+    val chain = bt.chainOf(branch, bv0)
+    if (chain.length > 1 || chain.head.dataDir.isEmpty) bt.rewriteHead(branch, bv0)
     val bv = bt.currentVersion(branch)
     val cur = currentVersion(table)
     if (cur != base) throw new SnapshotTables.ConcurrentCommitException(table, cur + 1)
     val next = cur + 1
-    val writerId = java.util.UUID.randomUUID.toString
-    // main's meta = branch's meta with version renumbered and this
-    // publisher's fence token
     val bMeta = bt.versionMeta(branch, bv)
-    val meta = metaPath(table, next)
-    def metaIsOurs: Boolean = metaOwnedBy(table, next, writerId)
-    if (!casWithOrphanReclaim(table, next, meta, bMeta.copy(v = next, writer = writerId).render))
+    val writerId = java.util.UUID.randomUUID.toString
+    if (!casWithOrphanReclaim(table, next, metaPath(table, next), bMeta.copy(v = next, writer = writerId).render))
       throw new SnapshotTables.ConcurrentCommitException(table, next)
-    if (!metaIsOurs) throw new SnapshotTables.ConcurrentCommitException(table, next)
-    if (bMeta.dataDir.isDefined) {
-      // DIRECT-layout branch head: main's meta (built from the
-      // branch's meta above) carries the branch commit's `data_dir`
-      // verbatim — an absolute pool path under THIS table's shared
-      // pool, so publish is adoption by reference: ZERO data bytes
-      // move, the CAS above was the entire commit. dropBranch below
-      // only removes branch metadata; the adopted dir is now reachable
-      // from main's meta and the reachability guard (dropVersion /
-      // removeOrphans) protects it for main's retention lifetime.
-    } else {
-      val src = bt.snapDir(branch, bv)
-      val dest = snapDir(table, next)
-      if (!fs(src).rename(src, dest)) {
-        if (metaIsOurs) fs(meta).delete(meta, false)
-        throw new SnapshotTables.ConcurrentCommitException(table, next)
-      }
-      if (!metaIsOurs) {
-        // reclaimed mid-rename: undo the nesting as overwriteTable does
-        val nested = new Path(dest, src.getName)
-        if (fs(nested).exists(nested)) fs(nested).delete(nested, true)
-        throw new SnapshotTables.ConcurrentCommitException(table, next)
-      }
-    }
     val bmf = bt.manifestPath(branch, bv)
     if (fs(bmf).exists(bmf)) fs(bmf).rename(bmf, manifestPath(table, next))
     // Properties cross the publish seam too: stats/sketch columns, the
@@ -2300,22 +2161,20 @@ final class SnapshotTables(
         }.toSet
     hist.filter(v => v < current - keep && !protectedV.contains(v) &&
         !chainProtected.contains(v)).foreach(dropVersion(table, _))
-    vacuumStaging(table)
   }
 
   /** Physically remove one version: data dir, metadata, manifest. The
     * data dir resolves through the version meta BEFORE the meta is
-    * deleted; a write-once pool dir (direct layout) can be MULTIPLY
-    * referenced — publish adopts a branch commit's dir into main by
+    * deleted; a write-once pool dir can be MULTIPLY referenced — publish adopts a branch commit's dir into main by
     * reference — so it is deleted only when no other retained meta,
     * main's or any branch's, still points at it (reachability, the
     * Iceberg GC model). */
   private def dropVersion(table: String, v: Int): Unit = {
     val vm = readMeta(table, v)
     val d = vm.fold(snapDir(table, v))(dataDirOfMeta(table, _))
-    val m = metaPath(table, v)
-    if (!vm.exists(_.dataDir.isDefined) || !poolDirReferenced(d, excludeMeta = Some(m)))
+    if (!vm.exists(_.dataDir.isDefined) || !poolDirReferenced(d, otherThan = Some(metaDir(table))))
       fs(d).delete(d, true)
+    val m = metaPath(table, v)
     fs(m).delete(m, false)
     val mf = manifestPath(table, v)
     fs(mf).delete(mf, true)
@@ -2325,17 +2184,21 @@ final class SnapshotTables(
     * its branches' — records `d` as its data dir. The owning table dir
     * is the pool's parent (`<table>/data/<uuid>`), which holds for
     * main AND branch instances alike (branches write into the parent
-    * table's pool). O(retained metas) small reads, and only ever run
-    * for direct-layout versions on their way out. Unreadable metas
-    * count as references (never widen a delete on bad reads). */
-  private def poolDirReferenced(d: Path, excludeMeta: Option[Path]): Boolean = {
+    * table's pool). `otherThan` skips one version line's metadata dir:
+    * within a line every commit writes a fresh pool dir, so only
+    * another line can share a dir — main after a publish adopted it, or
+    * the branch it was adopted from. O(metas of the other lines) small
+    * reads, and only ever run for pool versions on their way out.
+    * Unreadable metas count as references (never widen a delete on bad
+    * reads). */
+  private def poolDirReferenced(d: Path, otherThan: Option[Path]): Boolean = {
     val f = fs(d)
     val qualified = f.makeQualified(d).toString
-    val self = excludeMeta.map(p => f.makeQualified(p).toString)
+    val skipped = otherThan.map(p => f.makeQualified(p).toString)
     val owner = d.getParent.getParent
     def metasUnder(md: Path): Seq[Path] =
       try {
-        if (!f.exists(md)) Nil
+        if (skipped.contains(f.makeQualified(md).toString) || !f.exists(md)) Nil
         else f.listStatus(md).toSeq.map(_.getPath)
           .filter(_.getName.matches("v\\d+\\.json"))
       } catch { case _: java.io.IOException => Nil }
@@ -2347,38 +2210,32 @@ final class SnapshotTables(
           .flatMap(b => metasUnder(new Path(b.getPath, "metadata")))
       } catch { case _: java.io.IOException => Nil }
     }
-    (metasUnder(new Path(owner, "metadata")) ++ branchMetas)
-      .filterNot(p => self.contains(f.makeQualified(p).toString))
-      .exists { p =>
-        try parseMetaAt(p, p.getName.stripPrefix("v").stripSuffix(".json").toInt)
-          .dataDir.contains(qualified)
-        catch { case _: java.io.IOException => true }
-      }
+    val pool = new Path(owner, "data")
+    (metasUnder(new Path(owner, "metadata")) ++ branchMetas).exists { p =>
+      try parseMetaAt(p, p.getName.stripPrefix("v").stripSuffix(".json").toInt)
+        .dataDir.exists(dd => f.makeQualified(SnapshotTables.inPool(pool, dd)).toString == qualified)
+      catch { case _: java.io.IOException => true }
+    }
   }
 
   /** ORPHAN-FILE removal (Iceberg's `remove_orphan_files`): delete
     * debris no commit references —
-    *  - stale `.tmp-*` staging dirs (same liveness rules as the
-    *    per-commit [[vacuumStaging]] pass, run eagerly here);
-    *  - version DIRS with no metadata file, older than `graceMs`. A
-    *    live commit always creates its metadata (the CAS) BEFORE the
-    *    data rename, so a meta-less version dir can only be crash /
-    *    lost-race debris — and it is actively harmful, not just waste:
-    *    [[history]] lists dirs, so an orphan dir above the pointer
-    *    inflates [[currentVersion]] and breaks reads;
+    *  - write-once POOL dirs referenced by no retained meta — main's or
+    *    any branch's — older than `graceMs` and with no live heartbeat
+    *    (a beating writer is stale only once 4 beats were missed):
+    *    hard-crashed writers (a CAS loser deletes its own dir eagerly)
+    *    and dropped branches' unpublished commits. This is
+    *    reachability GC, exactly Iceberg's `remove_orphan_files`
+    *    contract: debris waits for the procedure, never threatens a
+    *    referenced file;
+    *  - `snapshots/v<NNNNN>` dirs with no metadata file, older than
+    *    `graceMs`: crash debris of tables written before the pool
+    *    layout;
     *  - per-version stats manifests whose version metadata is gone
     *    (a crash inside the retention pass can drop the meta but not
-    *    the manifest);
-    *  - write-once POOL dirs (direct layout) referenced by no retained
-    *    meta — main's or any branch's — older than `graceMs` and with
-    *    no live heartbeat: hard-crashed direct writers (a CAS loser
-    *    deletes its own dir eagerly) and dropped branches' unpublished
-    *    commits. This is reachability GC, exactly Iceberg's
-    *    `remove_orphan_files` contract: debris waits for the
-    *    procedure, never threatens a referenced file.
+    *    the manifest).
     * Returns (orphan dirs removed, orphan manifests removed). */
   def removeOrphans(table: String, graceMs: Long = 3600 * 1000L): (Int, Int) = {
-    vacuumStaging(table)
     var dirsSwept = 0
     val pool = dataPoolDir(table)
     val pf = fs(pool)
@@ -2386,9 +2243,8 @@ final class SnapshotTables(
     if (pf.exists(pool))
       pf.listStatus(pool).foreach { s =>
         if (s.isDirectory) {
-          // same liveness rules as vacuumStaging: a fresh heartbeat
-          // marks a live pre-CAS staging write; no marker falls back
-          // to dir mtime vs the grace window
+          // a fresh heartbeat marks a live pre-CAS write; no marker
+          // falls back to dir mtime vs the grace window
           val hb = new Path(s.getPath, SnapshotTables.HeartbeatName)
           val hbMtime =
             try if (pf.exists(hb)) Some(pf.getFileStatus(hb).getModificationTime) else None
@@ -2397,7 +2253,7 @@ final class SnapshotTables(
             case Some(m) => now - m >= 4 * heartbeatMs
             case None => now - s.getModificationTime >= graceMs
           }
-          if (stale && !poolDirReferenced(s.getPath, excludeMeta = None)) {
+          if (stale && !poolDirReferenced(s.getPath, otherThan = None)) {
             pf.delete(s.getPath, true)
             dirsSwept += 1
           }
@@ -2469,45 +2325,7 @@ final class SnapshotTables(
     }
     val doomed = hist.filterNot(v => keep.contains(v) || chainProtected.contains(v))
     doomed.foreach(dropVersion(table, _))
-    vacuumStaging(table)
     doomed.length
-  }
-
-  /** Sweep `.tmp-*` staging directories abandoned by crashed or killed
-    * writers. Staged data is invisible to readers, but at streaming /
-    * multi-writer cadence the debris is a real storage leak (each
-    * abandoned attempt holds a full table copy). Liveness is judged by
-    * the writer's HEARTBEAT marker when present (a live write job
-    * refreshes it every `heartbeatMs`, while task output lands under
-    * `_temporary/` and does NOT refresh the staging dir's own mtime —
-    * so dir mtime alone would misread any write longer than the grace
-    * window as abandoned); a dir with no marker (writer died before
-    * its first beat, or pre-heartbeat debris) falls back to the dir
-    * mtime against the much coarser `stagingGraceMs` (default 1 h).
-    * Runs piggybacked on every successful commit's retention pass, so
-    * no separate maintenance job is needed. */
-  private[io] def vacuumStaging(table: String): Unit = {
-    val snaps = new Path(tableDir(table), "snapshots")
-    val f = fs(snaps)
-    val now = System.currentTimeMillis
-    if (f.exists(snaps))
-      f.listStatus(snaps)
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith(".tmp-"))
-        .filter { s =>
-          val hb = new Path(s.getPath, SnapshotTables.HeartbeatName)
-          val hbMtime =
-            try if (f.exists(hb)) Some(f.getFileStatus(hb).getModificationTime) else None
-            catch { case _: java.io.IOException => None }
-          hbMtime match {
-            // beating writer: stale only once several beats were missed
-            // (a crashed writer stops beating; 4 missed beats ≈ dead)
-            case Some(m) => now - m >= 4 * heartbeatMs
-            // no marker: pre-heartbeat debris or a writer that died
-            // before its first beat — only the coarse grace applies
-            case None => now - s.getModificationTime >= stagingGraceMs
-          }
-        }
-        .foreach(s => f.delete(s.getPath, true))
   }
 
   // ------------------------------------------------------------------
@@ -2622,8 +2440,15 @@ object SnapshotTables {
   import com.fasterxml.jackson.databind.node.ObjectNode
   import com.fasterxml.jackson.databind.util.RawValue
 
-  /** Live-writer heartbeat marker inside a `.tmp-*` staging dir (name
+  /** Live-writer heartbeat marker inside a pool dir being written (name
     * starts with '.', so it is hidden from every reader). */
+
+  /** A meta's `data_dir` as a path: a name resolves in `pool`, an
+    * absolute URI stands for itself. */
+  private[io] def inPool(pool: Path, dataDir: String): Path = {
+    val p = new Path(dataDir)
+    if (p.isAbsolute) p else new Path(pool, p)
+  }
   private[io] val HeartbeatName = "._graft_heartbeat"
 
   /** One column's provably-exact manifest aggregates for
@@ -2676,10 +2501,10 @@ object SnapshotTables {
     * guide §1/§6: the driver gap, not the data plane, dominated the
     * lifecycle queries; q133 sampled ~40 % of wall inside
     * `spark.read.parquet` re-listing + re-footer-reading the same
-    * immutable segment dirs). Version data dirs (rename layout: the
-    * renamed-into-place snapshot dir; direct layout: the staged-then-
-    * adopted pool dir) and stats manifests are created by the commit
-    * CAS and never mutated afterwards — expiry/rollback/orphan-sweep
+    * immutable segment dirs). Version data dirs (write-once pool dirs,
+    * or a `snapshots/` dir of a table written before the pool layout)
+    * and stats manifests are created before or by the commit CAS and
+    * never mutated afterwards — expiry/rollback/orphan-sweep
     * only DELETE them — so a `(modTime, len)`-guarded entry can never
     * serve a stale relation: deletion fails the exists probe, and any
     * same-path re-creation (a re-created table line) lands a new
@@ -2721,12 +2546,17 @@ object SnapshotTables {
     * commits that write it:
     *  - `version` — the file name's number — every commit. A parse
     *    takes `v` from the file name.
-    *  - `writer` — "" — every commit: the attempt's UUID, the fence
-    *    token of orphan reclaim.
+    *  - `writer` — "" — every commit: the attempt's UUID (a commit's
+    *    own pool dir is named after it).
     *  - `partition_cols` — [] — every commit: the identity layout,
     *    derived `__p_*` transform columns included.
-    *  - `data_dir` — none — direct-layout commits: the absolute URI of
-    *    the write-once pool dir holding the version's data.
+    *  - `data_dir` — none — every commit: the write-once pool dir
+    *    holding the version's data, by its name in the table's pool
+    *    `<table>/data/` (so a table dir can move, as ALTER TABLE RENAME
+    *    moves it; [[SnapshotTables.inPool]]). An absolute URI (the
+    *    earlier direct layout wrote one) names the dir itself. A meta
+    *    without one (written before the pool layout) reads
+    *    `snapshots/v<NNNNN>`.
     *  - `kind` — "full" — delta commits: "append", "mor_upsert",
     *    "mor_delete", "mor_patch", "mor_revise".
     *  - `key_cols` — [] — "mor_upsert", "mor_delete", "mor_revise".
@@ -2815,8 +2645,8 @@ object SnapshotTables {
     * the file, of a TBLPROPERTIES value and of a setter's argument — and
     * throws IllegalArgumentException on a value it does not accept.
     * `key` is its TBLPROPERTIES key (None: set through `PARTITIONED
-    * BY`); `default` its value while the file is absent (None: unset —
-    * an unpinned commit layout follows the session conf); `columns` the
+    * BY`); `default` its value while the file is absent (None: unset);
+    * `columns` the
     * table columns a value names, which must exist when it is set. */
   private[graft] final class Prop[T](val file: String, val key: Option[String],
       val parse: String => T, val render: T => String,
@@ -2863,12 +2693,6 @@ object SnapshotTables {
     raw => raw.trim.toIntOption.filter(_ >= 0).getOrElse(
       throw new IllegalArgumentException(s"must be a non-negative int, got '$raw'")),
     _.toString, st => Some(st.previousVersionsMax))
-  /** Commit layout pin: "rename" (stage, then rename) or "direct"
-    * (write-once pool files; the metadata CAS is the whole commit). No
-    * default: an unpinned table follows the writer session's conf,
-    * which SHOW TBLPROPERTIES must not freeze into a table property. */
-  private[graft] val CommitLayout = new Prop[String]("commit_layout", Some("graft.commit.layout"),
-    oneOf("rename", "direct"), identity)
   /** Columns every commit keeps a per-file [min,max,nulls,rows] manifest over. */
   private[io] val StatsCols = columnList("stats_cols", "graft.stats.columns")
   /** Columns every commit keeps per-file Bloom membership sketches over. */
@@ -2885,10 +2709,10 @@ object SnapshotTables {
 
   /** Every standing table property. */
   private[io] val Props: Seq[Prop[_]] =
-    Seq(WriteMode, SortOrder, Retention, CommitLayout, StatsCols, SketchCols, Transforms)
+    Seq(WriteMode, SortOrder, Retention, StatsCols, SketchCols, Transforms)
   /** What a new branch inherits from main: all but the retention window. */
   private[io] val ForkedProps: Seq[Prop[_]] = Props.filterNot(_ == Retention)
-  /** What publish hands back to main; main keeps its own sort order and layout pin. */
+  /** What publish hands back to main; main keeps its own sort order. */
   private[io] val PublishedProps: Seq[Prop[_]] = Seq(WriteMode, StatsCols, SketchCols, Transforms)
 
   /** TBLPROPERTIES values for the keys of [[Props]] (Some: SET, where

@@ -188,16 +188,16 @@ object BreweryPipeline {
 
   /** The data prefix the report's object/byte stats scan. 3-part names
     * resolve through the registered [[graft.catalog.SnapshotCatalog]]
-    * to the table's `snapshots/` dir — all retained versions' data
-    * files, the analog of the `<table>/data` prefix the reference
-    * counts (Iceberg's data dir also holds every retained snapshot's
-    * files); 2-part names are session-catalog table locations. */
+    * to the table's write-once pool `data/` — all retained versions'
+    * data files, like the `<table>/data` prefix the reference counts
+    * (Iceberg's data dir also holds every retained snapshot's files);
+    * 2-part names are session-catalog table locations. */
   private def tableDataLocation(spark: SparkSession, table: String): String = {
     val parts = table.split('.')
     if (parts.length >= 3)
       org.apache.spark.sql.GraftSqlBridge.catalogPlugin(spark, parts.head) match {
         case sc: graft.catalog.SnapshotCatalog =>
-          sc.tablesFor(parts.slice(1, parts.length - 1)).rootPath + s"/${parts.last}/snapshots"
+          sc.tablesFor(parts.slice(1, parts.length - 1)).rootPath + s"/${parts.last}/data"
         case other => throw new IllegalArgumentException(
           s"catalog '${parts.head}' is ${other.getClass.getName}, not a graft SnapshotCatalog")
       }

@@ -2475,12 +2475,11 @@ object ExtensionCorpus {
   )
 
   /** The OBJECT-STORE-SAFE commit layout end-to-end through SQL,
-    * oracle-pinned: with `graft.commit.layout = direct` every commit
-    * writes its data files ONCE into the table's pool and the
-    * metadata CAS is the entire commit — no rename anywhere (on
-    * S3-family stores rename is a server-side copy, so the default
-    * stage-then-rename publish is O(data) there; this is Iceberg's
-    * write-once + manifest design on the native format). CTAS, a fast
+    * oracle-pinned: every commit writes its data files ONCE into the
+    * table's pool and the metadata CAS is the entire commit — no
+    * rename anywhere (on S3-family stores rename is a server-side
+    * copy, so a stage-then-rename publish would be O(data) there; this
+    * is Iceberg's write-once + manifest design on the native format). CTAS, a fast
     * append and a COW delete all land as pool commits; the final
     * SELECT hash-matches the resolved content against DuckDB's replay
     * and pins the layout's engine facts: zero version-line data dirs
@@ -2493,16 +2492,13 @@ object ExtensionCorpus {
       val cat = tempCatalog(s)
       val root = s.conf.get(s"spark.sql.catalog.$cat.root")
       fixture(s, dir, "orders").createOrReplaceTempView("q137_orders")
-      s.conf.set("graft.commit.layout", "direct")
-      try {
-        s.sql(s"""CREATE TABLE $cat.dw.d
-                  AS SELECT o_orderkey, o_orderstatus, o_totalprice
-                  FROM q137_orders WHERE o_orderkey <= 8000""") // v1 direct full
-        s.sql(s"""INSERT INTO $cat.dw.d
-                  SELECT o_orderkey, o_orderstatus, o_totalprice FROM q137_orders
-                  WHERE o_orderkey > 8000 AND o_orderkey <= 10000""") // v2 direct append
-        s.sql(s"DELETE FROM $cat.dw.d WHERE o_orderkey % 10 = 3") // v3 direct full (COW)
-      } finally s.conf.unset("graft.commit.layout")
+      s.sql(s"""CREATE TABLE $cat.dw.d
+                AS SELECT o_orderkey, o_orderstatus, o_totalprice
+                FROM q137_orders WHERE o_orderkey <= 8000""") // v1 full
+      s.sql(s"""INSERT INTO $cat.dw.d
+                SELECT o_orderkey, o_orderstatus, o_totalprice FROM q137_orders
+                WHERE o_orderkey > 8000 AND o_orderkey <= 10000""") // v2 append
+      s.sql(s"DELETE FROM $cat.dw.d WHERE o_orderkey % 10 = 3") // v3 full (COW)
       val snapshotsEverCreated = new java.io.File(s"$root/dw/d/snapshots").exists()
       val poolDirs = Option(new java.io.File(s"$root/dw/d/data").listFiles())
         .map(_.count(_.isDirectory)).getOrElse(0)
@@ -3849,7 +3845,6 @@ object ExtensionCorpus {
             col("o_totalprice").cast("double").as("o_totalprice"))
           .repartition(2)
         val st = new graft.io.SnapshotTables(s, s"s3g://lake/q175")
-        st.setCommitLayout("ord", Some("direct"))
         st.overwriteTable(ord.filter(col("o_orderkey") % 2 === 0), "ord")
         st.append(ord.filter(col("o_orderkey") % 2 =!= 0), "ord")
         st.deleteKeysMor("ord",

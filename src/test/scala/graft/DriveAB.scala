@@ -7,7 +7,7 @@ package graft
   * {{{
   *   sbt "Test/runMain graft.DriveAB <sfDir> q74_decontamination,q89_decontamination_bloom"
   *   sbt "Test/runMain graft.DriveAB <sfDir> q135_minor_compaction_sql \
-  *     graft.commit.layout=rename graft.commit.layout=direct"
+  *     graft.delta.minorCompaction=true graft.delta.minorCompaction=false"
   * }}}
   *
   * Without conf sides the named queries are the sides. With two conf

@@ -6,7 +6,8 @@ import scala.collection.mutable
 /** Dev profiler (round-20 optimization): per-query Spark job timeline.
   *
   * For each named corpus query: one untimed warm pass, then a profiled
-  * pass that records every Spark job (start offset, wall duration, call
+  * pass (each collects and hashes the result, as perfbench does) that
+  * records every Spark job (start offset, wall duration, call
   * site, executor task time) plus the driver-side gap between jobs —
   * the number that separates "executor-bound" from "driver/commit-bound"
   * queries before touching any code.
@@ -160,6 +161,17 @@ object DriveProfile {
     spark.stop()
   }
 
+  /** Collect a query's result and hash it in order, as perfbench's
+    * `analytics_mix` consumes it: a `count()` would let the optimizer
+    * drop the final ORDER BY and profile a different plan. Returns the
+    * row count and an MD5 prefix of the rows' text. */
+  private def consume(df: org.apache.spark.sql.DataFrame): String = {
+    val rows = df.collect()
+    val md = java.security.MessageDigest.getInstance("MD5")
+    rows.foreach(r => md.update(r.toString.getBytes("UTF-8")))
+    s"${rows.length}/${md.digest().take(6).map("%02x".format(_)).mkString}"
+  }
+
   private def corpus(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val passes = args.find(_.startsWith("passes=")).map(_.stripPrefix("passes=").toInt).getOrElse(1)
@@ -247,7 +259,7 @@ object DriveProfile {
     val byName = graft.queries.Corpus.all.map(q => q.name -> q).toMap
     names.foreach { n =>
       val q = byName.getOrElse(n, sys.error(s"unknown query $n"))
-      q.run(spark, sfDir).count() // warm (plan-compile + JIT out of the profile)
+      consume(q.run(spark, sfDir)) // warm (plan-compile + JIT out of the profile)
       (1 to passes).foreach { p =>
         jobs.synchronized { jobs.clear(); live.clear(); stageToJob.clear() }
         phaseTotals.synchronized { phaseTotals.clear(); nExec = 0 }
@@ -256,7 +268,7 @@ object DriveProfile {
         spark.listenerManager.register(qel)
         sampling = true
         val w0 = System.nanoTime()
-        q.run(spark, sfDir).count()
+        val hash = consume(q.run(spark, sfDir))
         val wall = (System.nanoTime() - w0) / 1e9
         sampling = false
         spark.sparkContext.removeSparkListener(listener)
@@ -265,7 +277,7 @@ object DriveProfile {
         val js = jobs.synchronized { jobs.toVector }
         val base = js.headOption.map(_.t0).getOrElse(0L)
         val jobWall = js.map(j => math.max(0L, j.t1 - j.t0)).sum / 1e3
-        println(f"PROFILE $n pass$p wall=$wall%.3f njobs=${js.size} jobwall=$jobWall%.3f gap=${wall - jobWall}%.3f")
+        println(f"PROFILE $n pass$p wall=$wall%.3f njobs=${js.size} jobwall=$jobWall%.3f gap=${wall - jobWall}%.3f hash=$hash")
         phaseTotals.synchronized {
           val ph = phaseTotals.toSeq.sortBy(-_._2).map { case (k, v) => f"$k=${v / 1e3}%.3f" }.mkString(" ")
           println(f"  PHASES nexec=$nExec $ph")

@@ -351,7 +351,8 @@ class SnapshotCatalogSpec extends SparkSpec {
     assert(st.currentPartitionCols("m") == Seq("region"))
     assert(st.persistedTransforms("m").map(_.srcCol) == Seq("ts"))
     // both levels present in the physical layout of the current version
-    val snap = new java.io.File(st.snapshotDirString("m", st.currentVersion("m")))
+    val snap = new java.io.File(new org.apache.hadoop.fs.Path(
+      st.snapshotDirString("m", st.currentVersion("m"))).toUri.getPath)
     val lvl1 = snap.listFiles().filter(_.isDirectory).map(_.getName)
     assert(lvl1.forall(_.startsWith("region=")), lvl1.toSeq)
     val lvl2 = snap.listFiles().filter(_.isDirectory).head.listFiles().filter(_.isDirectory).map(_.getName)
@@ -876,101 +877,6 @@ class SnapshotCatalogSpec extends SparkSpec {
     spark.conf.set(s"spark.sql.catalog.$cat", classOf[SnapshotCatalog].getName)
     spark.conf.set(s"spark.sql.catalog.$cat.root", root)
     (cat, root)
-  }
-
-  /** (path, length, mtime) of every parquet data file under `dir` —
-    * write-once identity, same proof as DirectLayoutSpec. */
-  private def dataFiles(dir: String): Set[(String, Long, Long)] = {
-    val base = java.nio.file.Paths.get(dir)
-    if (!java.nio.file.Files.exists(base)) return Set.empty
-    val out = scala.collection.mutable.Set.empty[(String, Long, Long)]
-    java.nio.file.Files.walk(base).forEach { p =>
-      if (p.getFileName.toString.endsWith(".parquet") &&
-          java.nio.file.Files.isRegularFile(p) && !p.toString.contains("/metadata/"))
-        out += ((p.toString, java.nio.file.Files.size(p),
-          java.nio.file.Files.getLastModifiedTime(p).toMillis))
-    }
-    out.toSet
-  }
-
-  test("graft.commit.layout TBLPROPERTY pins direct commits against default-conf writers") {
-    val (c, root) = newCatalogWithRoot()
-    spark.sql(s"CREATE NAMESPACE $c.dw")
-    spark.sql(s"CREATE TABLE $c.dw.t (id INT, v STRING) " +
-      s"TBLPROPERTIES ('graft.commit.layout'='direct')")
-    assert(spark.conf.getOption("graft.commit.layout").isEmpty,
-      "precondition: this session runs on the DEFAULT (rename) conf")
-    // every commit from this default-conf session must stay direct:
-    // data lives write-once in the pool, the version line never appears
-    spark.sql(s"INSERT INTO $c.dw.t VALUES (1, 'a'), (2, 'b')")
-    val afterFirst = dataFiles(s"$root/dw/t")
-    spark.sql(s"INSERT INTO $c.dw.t VALUES (3, 'c')")
-    spark.sql(s"INSERT OVERWRITE $c.dw.t SELECT id, upper(v) AS v FROM $c.dw.t")
-    assert(!new java.io.File(s"$root/dw/t/snapshots").exists(),
-      "a pinned-direct table reverted to rename commits under a default-conf writer")
-    assert(new java.io.File(s"$root/dw/t/data").exists())
-    // write-once: the first commit's files are bit-identical after two more
-    assert(afterFirst.subsetOf(dataFiles(s"$root/dw/t")),
-      "later commits moved or rewrote a pinned-direct table's files")
-    assert(rows(s"SELECT * FROM $c.dw.t ORDER BY id") ==
-      Seq(Row(1, "A"), Row(2, "B"), Row(3, "C")))
-    // SHOW TBLPROPERTIES surfaces the pin
-    val props = rows(s"SHOW TBLPROPERTIES $c.dw.t")
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(props.get("graft.commit.layout").contains("direct"), props.toString)
-    // ALTER flips it: later commits rename-stage into the version line
-    spark.sql(s"ALTER TABLE $c.dw.t SET TBLPROPERTIES ('graft.commit.layout'='rename')")
-    spark.sql(s"INSERT INTO $c.dw.t VALUES (4, 'd')")
-    assert(new java.io.File(s"$root/dw/t/snapshots").exists(),
-      "after ALTER to rename, the next commit must use the version line")
-    assert(rows(s"SELECT count(*) AS c FROM $c.dw.t") == Seq(Row(4L)))
-    // mixed history stays readable + time-travels
-    assert(rows(s"SELECT count(*) AS c FROM $c.dw.t VERSION AS OF 1") == Seq(Row(2L)))
-  }
-
-  test("invalid graft.commit.layout is refused with zero side effects") {
-    val (c, root) = newCatalogWithRoot()
-    spark.sql(s"CREATE NAMESPACE $c.dw")
-    intercept[Exception](spark.sql(
-      s"CREATE TABLE $c.dw.bad (id INT) TBLPROPERTIES ('graft.commit.layout'='s3magic')"))
-    // the CREATE failed BEFORE declareTable: no table dir, no catalog entry
-    assert(!new java.io.File(s"$root/dw/bad").exists(),
-      "invalid layout property left a half-declared table behind")
-    assert(!spark.sql(s"SHOW TABLES IN $c.dw").collect().map(_.getString(1)).contains("bad"))
-    // and on ALTER: the statement fails, the standing pin survives
-    spark.sql(s"CREATE TABLE $c.dw.t (id INT) TBLPROPERTIES ('graft.commit.layout'='direct')")
-    spark.sql(s"INSERT INTO $c.dw.t VALUES (1)")
-    intercept[Exception](spark.sql(
-      s"ALTER TABLE $c.dw.t SET TBLPROPERTIES ('graft.commit.layout'='nope')"))
-    spark.sql(s"INSERT INTO $c.dw.t VALUES (2)")
-    assert(!new java.io.File(s"$root/dw/t/snapshots").exists(),
-      "a refused ALTER value must leave the direct pin standing")
-  }
-
-  test("session conf is the CREATE-time layout default for new tables, pinned at creation") {
-    val (c, root) = newCatalogWithRoot()
-    spark.sql(s"CREATE NAMESPACE $c.dw")
-    spark.conf.set("graft.commit.layout", "direct")
-    try spark.sql(s"CREATE TABLE $c.dw.t (id INT, v STRING)")
-    finally spark.conf.unset("graft.commit.layout")
-    // the conf is now back to default — the pin taken at CREATE governs
-    spark.sql(s"INSERT INTO $c.dw.t VALUES (1, 'a')")
-    spark.sql(s"INSERT INTO $c.dw.t VALUES (2, 'b')")
-    assert(!new java.io.File(s"$root/dw/t/snapshots").exists(),
-      "a table created under graft.commit.layout=direct must stay direct " +
-        "after the session conf resets")
-    val props = rows(s"SHOW TBLPROPERTIES $c.dw.t")
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(props.get("graft.commit.layout").contains("direct"))
-    // REPLACE without the property keeps the pin (new-tables-only default)
-    spark.sql(s"CREATE OR REPLACE TABLE $c.dw.t (id INT, v STRING)")
-    spark.sql(s"INSERT INTO $c.dw.t VALUES (9, 'z')")
-    assert(!new java.io.File(s"$root/dw/t/snapshots").exists(),
-      "REPLACE on a pinned table must not re-derive the layout from the session conf")
-    // UNSET unpins: the table follows the (default) session conf again
-    spark.sql(s"ALTER TABLE $c.dw.t UNSET TBLPROPERTIES ('graft.commit.layout')")
-    spark.sql(s"INSERT INTO $c.dw.t VALUES (10, 'y')")
-    assert(new java.io.File(s"$root/dw/t/snapshots").exists())
   }
 
   test("branch-addressed expire_snapshots / remove_orphan_files maintain the branch line only") {

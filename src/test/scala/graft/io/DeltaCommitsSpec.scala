@@ -18,18 +18,24 @@ class DeltaCommitsSpec extends SparkSpec {
     (new SnapshotTables(spark, root, previousVersionsMax = retention), root)
   }
 
-  private def snapDirOf(root: String, table: String, v: Int) =
-    f"$root/$table/snapshots/v$v%05d"
+  /** Version `v`'s data dir, resolved through its meta. */
+  private def snapDirOf(t: SnapshotTables, table: String, v: Int): String =
+    new org.apache.hadoop.fs.Path(t.snapshotDirString(table, v)).toUri.getPath
+
+  /** `/<name>/` of version `v`'s data dir: a file path holding it lies
+    * in that version's segment. */
+  private def segOf(t: SnapshotTables, table: String, v: Int): String =
+    "/" + new org.apache.hadoop.fs.Path(t.snapshotDirString(table, v)).getName + "/"
 
   test("append commits O(delta) bytes: the new version dir holds only the appended rows") {
-    val (t, root) = newTables()
+    val (t, _) = newTables()
     t.overwriteTable((1 to 1000).map(i => (i, s"r$i")).toDF("id", "v"), "tab")
     t.append(Seq((1001, "x"), (1002, "y")).toDF("id", "v"), "tab")
     assert(t.currentVersion("tab") == 2)
     // the whole table reads through the chain…
     assert(t.read("tab").count() == 1002)
     // …but version 2's directory physically holds ONLY the delta
-    assert(spark.read.parquet(snapDirOf(root, "tab", 2)).count() == 2)
+    assert(spark.read.parquet(snapDirOf(t, "tab", 2)).count() == 2)
     // time travel to the pre-append version still works
     assert(t.readVersion("tab", 1).count() == 1000)
     // appends keep the version line auditable
@@ -48,14 +54,14 @@ class DeltaCommitsSpec extends SparkSpec {
   }
 
   test("upsertMor matches merge() exactly; the commit dir holds only the batch") {
-    val (t, root) = newTables()
+    val (t, _) = newTables()
     val base = Seq((1, "a"), (2, "b"), (3, "c")).toDF("id", "v")
     val batch = Seq((2, "B2"), (4, "d")).toDF("id", "v")
     t.overwriteTable(base, "cow"); t.merge("cow", batch, Seq("id"))
     t.overwriteTable(base, "mor"); t.upsertMor("mor", batch, Seq("id"))
     assert(t.read("mor").as[(Int, String)].collect().toSet ==
       t.read("cow").as[(Int, String)].collect().toSet)
-    assert(spark.read.parquet(snapDirOf(root, "mor", 2)).count() == 2) // O(batch), not O(table)
+    assert(spark.read.parquet(snapDirOf(t, "mor", 2)).count() == 2) // O(batch), not O(table)
     // a replayed identical upsert changes nothing (streaming retry contract)
     t.upsertMor("mor", batch, Seq("id"))
     assert(t.read("mor").as[(Int, String)].collect().toSet ==
@@ -66,14 +72,14 @@ class DeltaCommitsSpec extends SparkSpec {
   }
 
   test("deleteKeysMor writes only the purged keys; matches COW delete") {
-    val (t, root) = newTables()
+    val (t, _) = newTables()
     val base = (1 to 500).map(i => (i, s"r$i")).toDF("id", "v")
     t.overwriteTable(base, "cow"); t.delete("cow", $"id" % 100 === 7)
     t.overwriteTable(base, "mor")
     t.deleteKeysMor("mor", Seq(7, 107, 207, 307, 407).toDF("id"))
     assert(t.read("mor").as[(Int, String)].collect().toSet ==
       t.read("cow").as[(Int, String)].collect().toSet)
-    assert(spark.read.parquet(snapDirOf(root, "mor", 2)).count() == 5) // five ids, not 495 rows
+    assert(spark.read.parquet(snapDirOf(t, "mor", 2)).count() == 5) // five ids, not 495 rows
     intercept[IllegalArgumentException](t.deleteKeysMor("mor", Seq(1).toDF("nope")))
   }
 
@@ -198,7 +204,7 @@ class DeltaCommitsSpec extends SparkSpec {
   }
 
   test("hidden-partitioned tables: appends derive the layout; partition pruning spans the chain") {
-    val (t, root) = newTables()
+    val (t, _) = newTables()
     val pt = SnapshotTables.PartitionTransform.days("ts")
     val base = Seq(("2024-01-01 10:00:00", 1L), ("2024-01-02 11:00:00", 2L))
       .toDF("ts", "id").withColumn("ts", to_timestamp($"ts"))
@@ -207,7 +213,7 @@ class DeltaCommitsSpec extends SparkSpec {
       .withColumn("ts", to_timestamp($"ts"))
     t.append(delta, "ev")
     // the delta segment's directory carries the derived layout
-    val v2 = new java.io.File(snapDirOf(root, "ev", 2))
+    val v2 = new java.io.File(snapDirOf(t, "ev", 2))
     assert(v2.listFiles().exists(_.getName.startsWith("__p_days_ts=2024-01-03")))
     // hidden column stays concealed; range read prunes across segments
     assert(!t.read("ev").columns.exists(_.startsWith("__p_")))
@@ -295,10 +301,10 @@ class DeltaCommitsSpec extends SparkSpec {
     t.append(Seq((1001, "x")).toDF("id", "v"), "tab")
     t.append(Seq((1002, "y")).toDF("id", "v"), "tab")
     val step = t.diff("tab", 1, 2)
-    assert(step.inputFiles.forall(_.contains("/v00002")), "step diff must not open base files")
+    assert(step.inputFiles.forall(_.contains(segOf(t, "tab", 2))), "step diff must not open base files")
     assert(step.select("id").as[Int].collect().toSeq == Seq(1001))
     val range = t.diff("tab", 1, 3) // all-append range: union of segments
-    assert(range.inputFiles.forall(f => f.contains("/v00002") || f.contains("/v00003")))
+    assert(range.inputFiles.forall(f => f.contains(segOf(t, "tab", 2)) || f.contains(segOf(t, "tab", 3))))
     assert(range.select("id", "__change").as[(Int, String)].collect().toSet ==
       Set((1001, "insert"), (1002, "insert")))
     val _ = root
@@ -311,7 +317,7 @@ class DeltaCommitsSpec extends SparkSpec {
   // ---------------------------------------------------------------
 
   test("minor compaction folds an all-append chain into one O(Σ deltas) append segment") {
-    val (t, root) = newTables()
+    val (t, _) = newTables()
     t.overwriteTable((1 to 1000).map(i => (i.toLong, s"r$i")).toDF("id", "v"), "tab", Nil,
       statsCols = Seq("id"))
     t.append((1001L to 1010L).map(i => (i, s"r$i")).toDF("id", "v"), "tab") // v2
@@ -320,7 +326,7 @@ class DeltaCommitsSpec extends SparkSpec {
     assert(t.currentVersion("tab") == 4)
     assert(t.chainKinds("tab", 4) == Seq("full", "append"))
     // the folded segment physically holds ONLY the 15 delta rows
-    assert(spark.read.parquet(snapDirOf(root, "tab", 4)).count() == 15)
+    assert(spark.read.parquet(snapDirOf(t, "tab", 4)).count() == 15)
     assert(t.read("tab").count() == 1015)
     // pre-fold versions still time travel through their own chains
     assert(t.readVersion("tab", 2).count() == 1010)
@@ -337,7 +343,7 @@ class DeltaCommitsSpec extends SparkSpec {
   }
 
   test("minor compaction folds keyed chains (append+upsert+delete) into one mor_revise; matches COW") {
-    val (t, root) = newTables()
+    val (t, _) = newTables()
     val base = (1 to 100).map(i => (i, s"r$i")).toDF("id", "v")
     // the same op sequence on a COW twin is the truth
     t.overwriteTable(base, "cow")
@@ -360,7 +366,7 @@ class DeltaCommitsSpec extends SparkSpec {
     assert(before == t.read("cow").as[(Int, String)].collect().toSet)
     // the folded segment holds delta-sized data: del/ keys ⊆ touched
     // keys, add/ the surviving new rows — never the 100-row base
-    val foldDir = snapDirOf(root, "mor", cur)
+    val foldDir = snapDirOf(t, "mor", cur)
     assert(spark.read.parquet(s"$foldDir/del").count() <= 6) // 5,101,200,7,102 distinct
     assert(spark.read.parquet(s"$foldDir/add").count() <= 4) // a101(upserted), up5, up101 survive…
     // keyed CDC across the fold still classifies correctly
@@ -468,12 +474,12 @@ class DeltaCommitsSpec extends SparkSpec {
     assert(range.select("id", "__change").as[(Int, String)].collect().toSet ==
       Set((11, "insert"), (12, "insert"), (13, "insert")))
     assert(range.inputFiles.forall(f =>
-      f.contains("/v00002") || f.contains("/v00003") || f.contains("/v00005")),
+      f.contains(segOf(t, "t2", 2)) || f.contains(segOf(t, "t2", 3)) || f.contains(segOf(t, "t2", 5))),
       "range diff must skip the fold segment (v4) and never open the base")
   }
 
   test("folds on hidden-partitioned tables re-derive the layout; partition range reads stay correct") {
-    val (t, root) = newTables()
+    val (t, _) = newTables()
     val pt = SnapshotTables.PartitionTransform.days("ts")
     def day(d: String, id: Long) =
       Seq((s"2024-01-0$d 10:00:00", id)).toDF("ts", "id").withColumn("ts", to_timestamp($"ts"))
@@ -482,7 +488,7 @@ class DeltaCommitsSpec extends SparkSpec {
     t.append(day("3", 3L), "ev") // v3
     assert(t.compactDeltas("ev")) // v4: all-append fold
     // the folded segment carries the derived day layout
-    val foldDir = new java.io.File(snapDirOf(root, "ev", 4))
+    val foldDir = new java.io.File(snapDirOf(t, "ev", 4))
     assert(foldDir.listFiles().exists(_.getName.startsWith("__p_days_ts=2024-01-02")))
     assert(foldDir.listFiles().exists(_.getName.startsWith("__p_days_ts=2024-01-03")))
     // range read prunes across [base, fold] and returns exact rows
@@ -501,11 +507,11 @@ class DeltaCommitsSpec extends SparkSpec {
   }
 
   test("metadata-only ADD/DROP COLUMN: empty commit, declared schema governs reads, rewrite restores fast paths") {
-    val (t, root) = newTables()
+    val (t, _) = newTables()
     t.overwriteTable((1 to 1000).map(i => (i, s"r$i")).toDF("id", "v"), "tab", Nil,
       statsCols = Seq("id"))
     t.addColumn("tab", "score", org.apache.spark.sql.types.DoubleType) // v2: EMPTY commit
-    val v2 = new java.io.File(snapDirOf(root, "tab", 2))
+    val v2 = new java.io.File(snapDirOf(t, "tab", 2))
     assert(v2.listFiles() == null || v2.listFiles().forall(!_.getName.endsWith(".parquet")),
       "ADD COLUMN must write no data files")
     // declared schema governs: new column reads NULL everywhere

@@ -53,7 +53,8 @@ class IcebergBucketSpec extends SparkSpec {
     t.overwriteTableTransformed(df, "tab",
       Seq(SnapshotTables.PartitionTransform.bucketMurmur3(8, "id")))
     // directory values ARE the Iceberg buckets
-    val snapDir = new java.io.File(s"$root/tab/snapshots").listFiles().head
+    val snapDir = new java.io.File(
+      new org.apache.hadoop.fs.Path(t.snapshotDirString("tab", t.currentVersion("tab"))).toUri.getPath)
     val dirs = snapDir.listFiles().filter(_.isDirectory).map(_.getName).toSet
     assert(dirs.forall(_.startsWith("__p_m3bucket8_id=")))
     val seen = dirs.map(_.stripPrefix("__p_m3bucket8_id=").toInt)

@@ -272,11 +272,13 @@ class IcebergDeletesSpec extends SparkSpec {
       .as[(String, Long)].collect()
     assert(pd2.length == 2, "patch v2 removes exactly the two v1 copies")
     assert(pd2.sortBy(x => (x._1, x._2)).sameElements(pd2), "position deletes must be sorted")
-    assert(pd2.forall(_._1.contains("v00001")), "patch v2 must only address v1 files")
+    // a version's files lie in its data dir, resolved through its meta
+    def dirName(v: Int) = "/" + new org.apache.hadoop.fs.Path(t.snapshotDirString("tab", v)).getName + "/"
+    assert(pd2.forall(_._1.contains(dirName(1))), "patch v2 must only address v1 files")
     val pd4 = spark.read.parquet(pdFs.find(_.contains("pd-00004")).get)
       .as[(String, Long)].collect()
     assert(pd4.length == 2, "patch v4 removes (1,a) and (2,b)")
-    assert(pd4.exists(_._1.contains("v00003")),
+    assert(pd4.exists(_._1.contains(dirName(3))),
       "patch v4 must consume the v3 re-added copy (v1 copies were consumed by v2)")
 
     // the reserved field ids ride the parquet footer (external readers

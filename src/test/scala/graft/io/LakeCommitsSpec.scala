@@ -164,6 +164,29 @@ class LakeCommitsSpec extends SparkSpec {
     } finally pool.shutdownNow()
   }
 
+  test("two unpaced publishers committing back to back both finish: no CAS starvation") {
+    val lake = new LakeCommits(spark,
+      java.nio.file.Files.createTempDirectory("graft-lake-starve").resolve("_log").toString)
+    // wide commits (each carries every key) make every attempt slow
+    // enough for the winner of a slot to be first at the next one too
+    val keys = (1 to 2000).map(i => s"ns.table_$i")
+    val rounds = 40
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      val start = new java.util.concurrent.CyclicBarrier(2)
+      val publishers = Seq(0, 1).map { w =>
+        pool.submit(new java.util.concurrent.Callable[Unit] {
+          override def call(): Unit = {
+            start.await()
+            (1 to rounds).foreach(r => lake.advance(keys.map(_ -> (2 * r + w)).toMap))
+          }
+        })
+      }
+      publishers.foreach(_.get(120, java.util.concurrent.TimeUnit.SECONDS))
+      assert(lake.log == (1 to 2 * rounds))
+    } finally pool.shutdownNow()
+  }
+
   test("expireLog keeps head resolution intact; only deep time travel is retired") {
     val (lake, silver, _) = newLake()
     (1 to 5).foreach { i =>

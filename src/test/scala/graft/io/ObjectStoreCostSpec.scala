@@ -4,17 +4,15 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 /** X104's asymptotic claim under an S3 cost model: on object stores
-  * rename is a billed server-side COPY, so the stage-then-rename
-  * commit protocol pays O(data) per commit while the direct layout's
-  * CAS-only publish pays O(metadata). [[CostModelFileSystem]] meters
-  * every rename's bytes; both layouts run the SAME operations over the
-  * SAME data through `costfs://` URIs and the spec asserts the cost
-  * split — not just file identity. The parquet task commit itself
-  * renames task temps into place under BOTH layouts (a real deployment
-  * swaps in an S3 direct committer for that half), so the assert
-  * isolates the snapshot-layer commit: rename-layout must pay at least
-  * the data bytes AGAIN on top of whatever the write paid, the direct
-  * layout must pay 0 extra data bytes. */
+  * rename is a billed server-side COPY, so a stage-then-rename commit
+  * would pay O(data) per commit, while writing the files once and
+  * claiming the version meta pays O(metadata). [[CostModelFileSystem]]
+  * meters every rename's bytes through `costfs://` URIs and the spec
+  * asserts the cost — not just file identity. The parquet task commit
+  * itself renames task temps into place (a real deployment swaps in an
+  * S3 direct committer for that half), so the assert isolates the
+  * snapshot-layer commit: it must pay 0 extra data bytes on top of the
+  * write phase. */
 class ObjectStoreCostSpec extends SparkSpec {
   import spark.implicits._
 
@@ -46,59 +44,36 @@ class ObjectStoreCostSpec extends SparkSpec {
   private def df(n: Int) =
     spark.range(n).select(col("id"), concat(lit("payload-"), col("id")).as("v"))
 
-  test("commit cost: rename layout pays O(data) in rename bytes, direct pays O(metadata)") {
-    val renameRoot = newCostRoot()
-    val tRename = new SnapshotTables(spark, renameRoot)
-    // the parquet write itself renames task temps into place under
-    // either layout; measure it once so the commit-layer delta is clean
-    val renameTotal = renameBytes(tRename.overwriteTable(df(20000), "tab"))
-    val data = dataBytesUnder(renameRoot)
+  test("commit cost: a snapshot commit pays O(metadata) in rename bytes beyond its parquet write") {
+    val root = newCostRoot()
+    val t = new SnapshotTables(spark, root)
+    val total = renameBytes(t.overwriteTable(df(20000), "tab"))
+    val data = dataBytesUnder(root)
     assert(data > 0)
-
-    val directRoot = newCostRoot()
-    val tDirect = new SnapshotTables(spark, directRoot)
-    spark.conf.set("graft.commit.layout", "direct")
-    val directTotal =
-      try renameBytes(tDirect.overwriteTable(df(20000), "tab"))
-      finally spark.conf.unset("graft.commit.layout")
-    val dataDirect = dataBytesUnder(directRoot)
-
-    // same data both sides (same rows, same codec)
-    assert(math.abs(data - dataDirect) < data / 10, s"fixtures diverged: $data vs $dataDirect")
-    // rename layout moved the data files at least once MORE than direct
-    assert(renameTotal - directTotal >= data,
-      s"rename-layout commit should cost >= $data extra rename bytes: " +
-        s"rename=$renameTotal direct=$directTotal")
-    // the shared write phase costs 2x data (FileOutputCommitter v1:
-    // task commit + job commit each rename the files once); the direct
-    // layout must add only metadata on top of that, the rename layout
-    // adds the whole data set a third time
-    assert(directTotal < data * 5 / 2,
-      s"direct=$directTotal should be write-phase-only (~${2 * data})")
-    assert(renameTotal >= data * 3,
-      s"rename=$renameTotal should pay the data a third time (~${3 * data})")
-    // both roots answer identically
-    assert(tRename.read("tab").count() == 20000 && tDirect.read("tab").count() == 20000)
+    // the write phase costs 2x data (FileOutputCommitter v1: task
+    // commit + job commit each rename the files once); the commit must
+    // add only metadata on top of that — moving the data once more
+    // would reach 3x
+    assert(total < data * 5 / 2,
+      s"commit=$total should be write-phase-only (~${2 * data})")
+    assert(t.read("tab").count() == 20000)
   }
 
   test("WAP publish cost: direct adopts the branch pool by reference — zero data rename bytes") {
     val root = newCostRoot()
     val t = new SnapshotTables(spark, root)
-    spark.conf.set("graft.commit.layout", "direct")
-    try {
-      t.overwriteTable(df(5000), "tab")
-      t.createBranch("tab", "audit")
-      t.mergeToBranch("tab", "audit",
-        df(5000).withColumn("v", concat(col("v"), lit("-u"))).filter(col("id") < 100),
-        keyCols = Seq("id"))
-      val branchData = dataBytesUnder(root)
-      val publishCost = renameBytes { t.publish("tab", "audit") }
-      // the publish may move METADATA (manifest/pointer files), never data:
-      // its rename bytes must be tiny relative to the table's data bytes
-      assert(publishCost < branchData / 100,
-        s"direct publish should move ~0 data bytes: cost=$publishCost data=$branchData")
-      assert(t.read("tab").filter(col("v").endsWith("-u")).count() == 100)
-    } finally spark.conf.unset("graft.commit.layout")
+    t.overwriteTable(df(5000), "tab")
+    t.createBranch("tab", "audit")
+    t.mergeToBranch("tab", "audit",
+      df(5000).withColumn("v", concat(col("v"), lit("-u"))).filter(col("id") < 100),
+      keyCols = Seq("id"))
+    val branchData = dataBytesUnder(root)
+    val publishCost = renameBytes { t.publish("tab", "audit") }
+    // the publish may move METADATA (manifest/pointer files), never data:
+    // its rename bytes must be tiny relative to the table's data bytes
+    assert(publishCost < branchData / 100,
+      s"direct publish should move ~0 data bytes: cost=$publishCost data=$branchData")
+    assert(t.read("tab").filter(col("v").endsWith("-u")).count() == 100)
   }
 
   test("scheme-qualified URIs round-trip the whole stack: reads, time travel, pruning") {

@@ -143,8 +143,7 @@ class ObjectStoreWireSpec extends SparkSpec {
     withStore { (srv, root) =>
       val st = new SnapshotTables(spark, s"$root/wh/snap")
       val li = (1 to 5000).map(i => (i.toLong, s"v$i")).toDF("id", "v")
-      def publishBytes(tab: String, layout: String): Long = {
-        st.setCommitLayout(tab, Some(layout))
+      def publishBytes(tab: String): Long = {
         st.overwriteTable(li, tab)
         st.createBranch(tab, "wip")
         st.commitToBranch(tab, "wip",
@@ -153,15 +152,11 @@ class ObjectStoreWireSpec extends SparkSpec {
         st.publish(tab, "wip")
         srv.bytesCopied.get() - before
       }
-      val renameBytes = publishBytes("t_rename", "rename")
-      val directBytes = publishBytes("t_direct", "direct")
-      // both layouts read identically after the publish (the staged
-      // branch commit replaced the content — an overwrite commit)
-      assert(st.read("t_rename").count() == 500 && st.read("t_direct").count() == 500)
+      val directBytes = publishBytes("t_direct")
+      // the staged branch commit replaced the content (an overwrite commit)
+      assert(st.read("t_direct").count() == 500)
       assert(directBytes == 0L,
         s"direct-layout publish must move zero data bytes over the wire, moved $directBytes")
-      assert(renameBytes > 0L,
-        "rename-layout publish on an object store is a server-side copy of the staged data")
     }
   }
 

@@ -143,13 +143,14 @@ class SnapshotReadSchemaSpec extends SparkSpec {
     assert(empty.schema.map(_.dataType.simpleString) == Seq("int", "string"))
 
     // a meta with no recorded schema reads through footer inference
-    st.setCommitLayout("bare", Some("rename")) // `{}` names no data dir
     st.overwriteTable(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), "bare")
     val meta = new org.apache.hadoop.fs.Path(s"${st.rootPath}/bare/metadata/v00001.json")
     val cached = st.read("bare").schema
     val fs = meta.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val bare = Json.mapper.writeValueAsString(Json.mapper.createObjectNode()
+      .put("data_dir", st.snapshotDirString("bare", 1))) // names its data dir only
     val out = fs.create(meta, true)
-    try out.write("{}".getBytes("UTF-8")) finally out.close()
+    try out.write(bare.getBytes("UTF-8")) finally out.close()
     assert(st.read("bare").schema == cached)
     assert(st.read("bare").as[(Long, String)].collect().toSeq.sorted == Seq((1L, "a"), (2L, "b")))
     assert(spark.table(s"$c.dw.bare").count() == 2)

@@ -10,6 +10,15 @@ class SnapshotTablesSpec extends SparkSpec {
     new SnapshotTables(spark, root, previousVersionsMax = retention)
   }
 
+  /** Version `v`'s data dir, resolved through its meta. */
+  private def versionDir(t: SnapshotTables, table: String, v: Int): java.io.File =
+    new java.io.File(new org.apache.hadoop.fs.Path(t.snapshotDirString(table, v)).toUri.getPath)
+
+  /** The commit dirs in `table`'s write-once pool. */
+  private def poolDirs(root: String, table: String): Seq[String] =
+    Option(new java.io.File(s"$root/$table/data").listFiles()).toSeq.flatten
+      .filter(_.isDirectory).map(_.getName).sorted
+
   test("overwrite commits versions; read resolves the current pointer") {
     val t = newTables()
     t.overwriteTable(Seq((1, "a")).toDF("id", "v"), "tab")
@@ -152,17 +161,18 @@ class SnapshotTablesSpec extends SparkSpec {
     val root = java.nio.file.Files.createTempDirectory("graft-snap").toString
     val t = new SnapshotTables(spark, root)
     t.overwriteTable(Seq((1, "a")).toDF("id", "v"), "tab")
-    // Simulate writer B mid-commit of v2: it has won the metadata CAS
-    // (exclusive create) but not yet advanced the pointer.
+    // Simulate writer B mid-commit of v2, a writer of the layout before
+    // the pool (data in `snapshots/v00002`, named by no `data_dir`): it
+    // has won the metadata CAS (exclusive create) but not yet placed
+    // its data or advanced the pointer.
     val meta2 = java.nio.file.Paths.get(root, "tab", "metadata", "v00002.json")
     java.nio.file.Files.write(meta2, """{"version":2}""".getBytes("UTF-8"))
     // Writer A now attempts its own v2 commit and must lose the CAS.
     intercept[SnapshotTables.ConcurrentCommitException] {
       t.overwriteTable(Seq((9, "z")).toDF("id", "v"), "tab")
     }
-    // The loser left no debris: no staged temp dirs, table unchanged.
-    val snaps = new java.io.File(s"$root/tab/snapshots").listFiles().map(_.getName)
-    assert(!snaps.exists(_.startsWith(".tmp-")))
+    // The loser left no debris: its pool dir is gone, table unchanged.
+    assert(poolDirs(root, "tab") == Seq(versionDir(t, "tab", 1).getName))
     assert(t.currentVersion("tab") == 1)
     assert(t.read("tab").as[(Int, String)].collect().toSet == Set((1, "a")))
     // B's commit completes (pointer flip is the last step) -> A's retry
@@ -236,7 +246,7 @@ class SnapshotTablesSpec extends SparkSpec {
     t.overwriteTable(df, "tab", Seq("region"))
     // a delete WITHOUT re-threading partitionCols keeps region=... dirs
     t.delete("tab", $"id" >= 300)
-    val snap = new java.io.File(t.snapshotDirString("tab", t.currentVersion("tab")))
+    val snap = versionDir(t, "tab", t.currentVersion("tab"))
     val dirs = snap.listFiles().filter(_.isDirectory).map(_.getName).sorted.toSeq
     assert(dirs == Seq("region=eu", "region=us"), dirs)
     assert(t.read("tab").count() == 300)
@@ -320,7 +330,7 @@ class SnapshotTablesSpec extends SparkSpec {
     }
     // v1: UNPARTITIONED full snapshot (flat layout)
     t.overwriteTable(df.filter($"id" < 500), "ev")
-    assert(!new java.io.File(s"$root/ev/snapshots/v00001").listFiles()
+    assert(!versionDir(t, "ev", 1).listFiles()
       .exists(_.getName.startsWith("__p_")))
     // evolve to days(ts): METADATA ONLY — no new version committed
     val byDay = PartitionTransform.days("ts")
@@ -329,7 +339,7 @@ class SnapshotTablesSpec extends SparkSpec {
     assert(t.persistedTransforms("ev").map(_.name) == Seq("__p_days_ts"))
     // the NEXT commit (an append delta) lays out under the new spec…
     t.append(df.filter($"id" >= 500), "ev")
-    assert(new java.io.File(s"$root/ev/snapshots/v00002").listFiles()
+    assert(versionDir(t, "ev", 2).listFiles()
       .exists(_.getName.startsWith("__p_days_ts=")))
     // …while v1's flat files are untouched, and reads span both layouts
     assert(t.read("ev").count() == 1000)
@@ -344,12 +354,12 @@ class SnapshotTablesSpec extends SparkSpec {
     assert(partitionFiltered(r, "__p_days_ts"), "new segment must contribute directory pruning")
     // a full rewrite under the evolved spec restores pruning everywhere
     t.compact("ev") // materializes; plain overwrite re-derives the spec's layout
-    assert(new java.io.File(s"$root/ev/snapshots/v%05d".format(t.currentVersion("ev")))
+    assert(versionDir(t, "ev", t.currentVersion("ev"))
       .listFiles().exists(_.getName.startsWith("__p_days_ts=")))
     // evolve AGAIN to bucket(4, id): next commit buckets; old day dirs stay
     t.evolvePartitioning("ev", Seq(PartitionTransform.bucket(4, "id")))
     t.overwriteTable(df, "ev")
-    assert(new java.io.File(s"$root/ev/snapshots/v%05d".format(t.currentVersion("ev")))
+    assert(versionDir(t, "ev", t.currentVersion("ev"))
       .listFiles().exists(_.getName.startsWith("__p_bucket4_id=")))
     val probe = t.readPartitionValues("ev", PartitionTransform.bucket(4, "id"), Seq(7L))
     assert(partitionFiltered(probe, "__p_bucket4_id"))
@@ -357,7 +367,7 @@ class SnapshotTablesSpec extends SparkSpec {
     // dropping the spec: next commit is flat again
     t.evolvePartitioning("ev", Nil)
     t.overwriteTable(df, "ev")
-    assert(!new java.io.File(s"$root/ev/snapshots/v%05d".format(t.currentVersion("ev")))
+    assert(!versionDir(t, "ev", t.currentVersion("ev"))
       .listFiles().exists(_.getName.startsWith("__p_")))
     // refusals: unknown source column, duplicate transforms
     intercept[IllegalArgumentException](
@@ -395,8 +405,7 @@ class SnapshotTablesSpec extends SparkSpec {
     // appends sort too — and a small delta lands in FEW files, not a
     // session-width shatter (byte-sized shuffle width)
     t.append(spark.range(20000, 20100).toDF("id").repartition(3), "tidy")
-    val segFiles = new java.io.File(
-      f"${t.rootPath}/tidy/snapshots/v${t.currentVersion("tidy")}%05d").listFiles()
+    val segFiles = versionDir(t, "tidy", t.currentVersion("tidy")).listFiles()
       .count(_.getName.endsWith(".parquet"))
     assert(segFiles <= 2, s"a 100-row delta must not shatter (got $segFiles files)")
     // OPTIMIZE's explicit shaping is not re-shuffled away by the sort
@@ -468,7 +477,7 @@ class SnapshotTablesSpec extends SparkSpec {
       .localCheckpoint(true)
     t.overwriteTable(df, "pt", Seq("region"))
     t.optimize("pt", Seq("a", "b"), targetFileBytes = 8L << 10)
-    val vdir = new java.io.File(s"$root/pt/snapshots/v%05d".format(t.currentVersion("pt")))
+    val vdir = versionDir(t, "pt", t.currentVersion("pt"))
     // the Hive layout survives the clustering rewrite…
     assert(vdir.listFiles().exists(_.getName.startsWith("region=")))
     // …and each partition DIRECTORY holds several z-run files (a hash
@@ -498,13 +507,14 @@ class SnapshotTablesSpec extends SparkSpec {
     t.overwriteTable(df, "tab", Nil, statsCols = Seq("id"))
     t.overwriteTable(df.filter(col("id") < 50), "tab")
     // fabricate crash debris: a version dir ABOVE the pointer with no
-    // metadata (lost-race data rename) — it inflates currentVersion
-    // and breaks reads until swept
+    // metadata (a lost-race data rename of a table written before the
+    // pool layout) — a version is its meta, so it is no version and
+    // reads never see it, but it holds storage until swept
     val orphanDir = new java.io.File(s"$root/tab/snapshots/v00009")
     orphanDir.mkdirs()
     java.nio.file.Files.write(orphanDir.toPath.resolve("junk.parquet"), Array[Byte](1, 2, 3))
-    assert(t.currentVersion("tab") == 9) // the harm is real
-    intercept[Exception](t.read("tab").count())
+    assert(t.currentVersion("tab") == 2)
+    assert(t.read("tab").count() == 50)
     // and a manifest whose version metadata is gone
     val orphanMan = new java.io.File(s"$root/tab/metadata/v00008-manifest.parquet")
     orphanMan.mkdirs()
@@ -621,6 +631,7 @@ class SnapshotTablesSpec extends SparkSpec {
     val root = Files.createTempDirectory("graft-snap").toString
     val t = new SnapshotTables(spark, root)
     t.overwriteTable(Seq((1, "a")).toDF("id", "v"), "tab") // v1, the branch base
+    val base = versionDir(t, "tab", 1).toPath
     t.setRetention("tab", Some(1))
     t.createBranch("tab", "torn")
     Files.writeString(Paths.get(root, "tab", "metadata", "refs", "torn"), """{"base":""")
@@ -628,7 +639,6 @@ class SnapshotTablesSpec extends SparkSpec {
       t.overwriteTable(Seq((i, "x")).toDF("id", "v"), "tab")
       assert(t.currentVersion("tab") == i)
     }
-    val base = Paths.get(root, "tab", "snapshots", "v00001")
     assert(Files.isDirectory(base), "an unreadable ref must not release its base")
     val e = intercept[IllegalStateException](t.expireSnapshots("tab", Long.MaxValue))
     assert(e.getMessage.contains("refs/torn"), e.getMessage)
@@ -819,8 +829,8 @@ class SnapshotTablesSpec extends SparkSpec {
     val root = java.nio.file.Files.createTempDirectory("graft-snap").toString
     val t = new SnapshotTables(spark, root, orphanGraceMs = 0L)
     t.overwriteTable(Seq((1, "a")).toDF("id", "v"), "tab")
-    // a winner that died after the CAS but before the data rename:
-    // v00002.json exists with no snapshots/v00002 directory
+    // a claim that names no data: v00002.json exists, with neither a
+    // `data_dir` nor a snapshots/v00002 directory
     java.nio.file.Files.write(
       java.nio.file.Paths.get(root, "tab", "metadata", "v00002.json"), "{}".getBytes("UTF-8"))
     t.overwriteTable(Seq((2, "b")).toDF("id", "v"), "tab") // reclaims instead of wedging
@@ -832,26 +842,22 @@ class SnapshotTablesSpec extends SparkSpec {
   test("crash-orphaned metadata that is empty or torn is never a commit and is reclaimed, both layouts") {
     // the CAS creates the meta file, then writes it: a crash in between
     // leaves it empty or holding a prefix of the rendering
-    Seq("rename", "direct").foreach { layout =>
-      val inputs = Seq("{}", "", """{"version":2,"writer":"dead-wr""") ++
-        (if (layout == "direct")
-          Seq("""{"version":2,"writer":"dead-writer","partition_cols":[],""" +
-            "\"data_dir\":\"file:/tmp/graft-dead/tab/data/dead-writer\",")
-        else Nil)
-      inputs.foreach { orphan =>
-        val root = java.nio.file.Files.createTempDirectory("graft-snap").toString
-        val t = new SnapshotTables(spark, root, orphanGraceMs = 0L)
-        t.setCommitLayout("tab", Some(layout))
-        t.overwriteTable(Seq((1, "a")).toDF("id", "v"), "tab")
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(root, "tab", "metadata", "v00002.json"), orphan.getBytes("UTF-8"))
-        val clue = s"$layout layout, orphan '$orphan'"
-        assert(t.history("tab") == Seq(1), clue)
-        t.overwriteTable(Seq((2, "b")).toDF("id", "v"), "tab") // reclaims instead of wedging
-        assert(t.currentVersion("tab") == 2, clue)
-        assert(t.history("tab") == Seq(1, 2), clue)
-        assert(t.read("tab").as[(Int, String)].collect().toSeq == Seq((2, "b")), clue)
-      }
+    // (the rendering without a `data_dir` is the layout before the pool)
+    val inputs = Seq("{}", "", """{"version":2,"writer":"dead-wr""",
+      """{"version":2,"writer":"dead-writer","partition_cols":[],""" +
+        "\"data_dir\":\"file:/tmp/graft-dead/tab/data/dead-writer\",")
+    inputs.foreach { orphan =>
+      val root = java.nio.file.Files.createTempDirectory("graft-snap").toString
+      val t = new SnapshotTables(spark, root, orphanGraceMs = 0L)
+      t.overwriteTable(Seq((1, "a")).toDF("id", "v"), "tab")
+      java.nio.file.Files.write(
+        java.nio.file.Paths.get(root, "tab", "metadata", "v00002.json"), orphan.getBytes("UTF-8"))
+      val clue = s"orphan '$orphan'"
+      assert(t.history("tab") == Seq(1), clue)
+      t.overwriteTable(Seq((2, "b")).toDF("id", "v"), "tab") // reclaims instead of wedging
+      assert(t.currentVersion("tab") == 2, clue)
+      assert(t.history("tab") == Seq(1, 2), clue)
+      assert(t.read("tab").as[(Int, String)].collect().toSeq == Seq((2, "b")), clue)
     }
   }
 
@@ -863,7 +869,7 @@ class SnapshotTablesSpec extends SparkSpec {
     val meta = java.nio.file.Paths.get(root, "tab", "metadata", "v00002.json")
     val text = java.nio.file.Files.readString(meta)
     java.nio.file.Files.writeString(meta, text.take(text.length / 2))
-    assert(t.history("tab") == Seq(1, 2)) // the version dir is still there
+    assert(t.history("tab") == Seq(1, 2)) // the version is still committed
     intercept[java.io.IOException](t.read("tab").collect())
     intercept[java.io.IOException](t.chainKinds("tab", 2))
   }
@@ -880,27 +886,15 @@ class SnapshotTablesSpec extends SparkSpec {
     assert(t.currentVersion("tab") == 1) // table untouched, orphan left for the owner/grace expiry
   }
 
-  test("abandoned staging directories are vacuumed by the next commit's retention pass") {
-    val root = java.nio.file.Files.createTempDirectory("graft-snap").toString
-    val t = new SnapshotTables(spark, root, orphanGraceMs = 0L, stagingGraceMs = 0L)
-    t.overwriteTable(Seq((1, "a")).toDF("id", "v"), "tab")
-    // a crashed writer's leftover staging dir (full table copy = storage leak)
-    java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(root, "tab", "snapshots", ".tmp-dead-writer", "p"))
-    t.overwriteTable(Seq((2, "b")).toDF("id", "v"), "tab")
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(root, "tab", "snapshots", ".tmp-dead-writer")))
-    assert(t.history("tab") == Seq(1, 2)) // debris never visible as a version
-  }
-
   test("a staging dir with a FRESH heartbeat is never vacuumed (live long write), a stale one is") {
     val root = java.nio.file.Files.createTempDirectory("graft-snap").toString
-    // stagingGraceMs=0 would sweep ANY dir without a heartbeat — the
-    // fresh marker must be what saves the live writer's dir
-    val t = new SnapshotTables(spark, root, orphanGraceMs = 0L, stagingGraceMs = 0L)
+    val t = new SnapshotTables(spark, root, orphanGraceMs = 0L)
     t.overwriteTable(Seq((1, "a")).toDF("id", "v"), "tab")
-    val live = java.nio.file.Paths.get(root, "tab", "snapshots", ".tmp-live-writer")
-    val dead = java.nio.file.Paths.get(root, "tab", "snapshots", ".tmp-stale-writer")
+    // two writers' pool dirs no meta references yet: graceMs=0 would
+    // sweep ANY dir without a heartbeat — the fresh marker must be what
+    // saves the live writer's dir
+    val live = java.nio.file.Paths.get(root, "tab", "data", "live-writer")
+    val dead = java.nio.file.Paths.get(root, "tab", "data", "stale-writer")
     java.nio.file.Files.createDirectories(live)
     java.nio.file.Files.createDirectories(dead)
     java.nio.file.Files.write(live.resolve("._graft_heartbeat"), "now".getBytes("UTF-8"))
@@ -908,9 +902,10 @@ class SnapshotTablesSpec extends SparkSpec {
     // a writer that stopped beating long ago (4 missed beats = dead)
     java.nio.file.Files.setLastModifiedTime(old,
       java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis - 3600000L))
-    t.overwriteTable(Seq((2, "b")).toDF("id", "v"), "tab")
+    t.removeOrphans("tab", graceMs = 0L)
     assert(java.nio.file.Files.exists(live), "fresh heartbeat must protect a live writer's staging dir")
     assert(!java.nio.file.Files.exists(dead), "a writer whose beats stopped is reclaimable")
+    assert(t.read("tab").as[(Int, String)].collect().toSeq == Seq((1, "a")))
   }
 
   test("commit meta carries the writer's fence UUID; reclaim backs off when the meta changed hands") {
@@ -950,12 +945,11 @@ class SnapshotTablesSpec extends SparkSpec {
     val t = new SnapshotTables(spark, root)
     val wins = outcomes.count(_ == "ok")
     assert(wins >= 1 && wins + outcomes.count(_ == "lost") == 4)
-    // Exactly one snapshot per committed version, no temp debris, and
-    // the pointer resolves to the newest committed version.
+    // Exactly one pool dir per committed version (losers deleted
+    // theirs), and the pointer resolves to the newest committed version.
     val hist = t.history("tab")
     assert(hist == (1 to wins))
-    val snaps = new java.io.File(s"$root/tab/snapshots").listFiles().map(_.getName).toSeq
-    assert(snaps.sorted == hist.map(v => f"v$v%05d"))
+    assert(poolDirs(root, "tab") == hist.map(versionDir(t, "tab", _).getName).sorted)
     assert(t.currentVersion("tab") == wins)
     assert(t.read("tab").count() == 1)
   }
@@ -985,8 +979,9 @@ class SnapshotTablesSpec extends SparkSpec {
     // main is exactly the winner's content, one new version, no nesting
     assert(t.currentVersion("tab") == 2)
     assert(t.read("tab").as[(Int, String)].collect().toSet == Set((winner, s"branch$winner")))
-    val snapFiles = new java.io.File(s"$root/tab/snapshots/v00002").listFiles().map(_.getName)
-    assert(!snapFiles.exists(_.startsWith("v")), s"no nested snapshot dirs: ${snapFiles.toSeq}")
+    val snapFiles = versionDir(t, "tab", 2).listFiles()
+    assert(!snapFiles.exists(f => f.getName.startsWith("v") || f.isDirectory),
+      s"no nested snapshot dirs: ${snapFiles.map(_.getName).toSeq}")
     // losers' branches survive untouched for re-audit on the new base
     val losers = (1 to 3).filterNot(_ == winner)
     losers.foreach { i =>
@@ -1028,12 +1023,12 @@ class SnapshotTablesSpec extends SparkSpec {
     // spec must re-derive the bucketed layout, not flatten it
     t.commitToBranch("ptab", "wap", (1 to 60).map(i => (i, s"v$i")).toDF("id", "v"))
     t.publish("ptab", "wap")
-    val snap = new java.io.File(s"$root/ptab/snapshots/v00002")
+    val snap = versionDir(t, "ptab", 2)
     assert(snap.listFiles().exists(f => f.isDirectory && f.getName.startsWith("__p_")),
       "published snapshot keeps the hidden-partition directory layout")
     // and later plain MAIN commits keep re-deriving it too
     t.overwriteTable((1 to 30).map(i => (i, s"v$i")).toDF("id", "v"), "ptab")
-    val snap3 = new java.io.File(s"$root/ptab/snapshots/v00003")
+    val snap3 = versionDir(t, "ptab", 3)
     assert(snap3.listFiles().exists(f => f.isDirectory && f.getName.startsWith("__p_")))
     assert(t.readPartitionValues("ptab", pt, Seq(7)).count() > 0)
   }

@@ -39,7 +39,6 @@ class TablePropertiesSpec extends SparkSpec {
     "write_mode" -> "mor",
     "sort_order" -> "id,k",
     "retention" -> "20",
-    "commit_layout" -> "direct",
     "stats_cols" -> "id,k",
     "sketch_cols" -> "k",
     "partition_transforms" -> "days:ts,bucket8:id,trunc3:k,m3bucket4:id")
@@ -54,7 +53,6 @@ class TablePropertiesSpec extends SparkSpec {
     assert(st.writeMode("t") == "mor")
     assert(st.sortOrder("t") == Seq("id", "k"))
     assert(st.retentionFor("t") == 20)
-    assert(st.pinnedCommitLayout("t").contains("direct") && st.commitLayoutFor("t") == "direct")
     assert(st.statsColsFor("t") == Seq("id", "k"))
     assert(st.sketchColsFor("t") == Seq("k"))
     assert(st.persistedTransforms("t").map(_.name) ==
@@ -63,7 +61,6 @@ class TablePropertiesSpec extends SparkSpec {
     assert(props.get("graft.write.mode").contains("mor"), props)
     assert(props.get("graft.write.sort_by").contains("id,k"), props)
     assert(props.get("graft.retention.versions").contains("20"), props)
-    assert(props.get("graft.commit.layout").contains("direct"), props)
     assert(props.get("graft.stats.columns").contains("id,k"), props)
     assert(props.get("graft.sketch.columns").contains("k"), props)
   }
@@ -76,7 +73,6 @@ class TablePropertiesSpec extends SparkSpec {
     st.setWriteMode("t", "mor")
     st.setSortOrder("t", Seq("id", "k"))
     st.setRetention("t", Some(20))
-    st.setCommitLayout("t", Some("direct"))
     st.setStatsCols("t", Seq("id", "k"))
     st.setSketchCols("t", Seq("k"))
     st.evolvePartitioning("t", Seq(PartitionTransform.days("ts"), PartitionTransform.bucket(8, "id"),
@@ -84,11 +80,10 @@ class TablePropertiesSpec extends SparkSpec {
     onDisk.foreach { case (f, text) => assert(bytesOf(s"$root/t/metadata/$f") == text, f) }
     st.setSortOrder("t", Nil)
     st.setRetention("t", None)
-    st.setCommitLayout("t", None)
     st.setStatsCols("t", Nil)
     st.setSketchCols("t", Nil)
     st.evolvePartitioning("t", Nil)
-    Seq("sort_order", "retention", "commit_layout", "stats_cols", "sketch_cols", "partition_transforms")
+    Seq("sort_order", "retention", "stats_cols", "sketch_cols", "partition_transforms")
       .foreach(f => assert(!new java.io.File(s"$root/t/metadata/$f").exists(), f))
   }
 
@@ -134,14 +129,14 @@ class TablePropertiesSpec extends SparkSpec {
     spark.sql(s"CREATE NAMESPACE $c.dw")
     spark.sql(s"CREATE TABLE $c.dw.t AS SELECT id FROM range(10)")
     intercept[Exception](spark.sql(
-      s"ALTER TABLE $c.dw.t SET TBLPROPERTIES ('graft.write.mode'='mor', 'graft.commit.layout'='bogus')"))
+      s"ALTER TABLE $c.dw.t SET TBLPROPERTIES ('graft.write.mode'='mor', 'graft.write.sort_by'='nope')"))
     assert(showProps(s"$c.dw.t").get("graft.write.mode").contains("cow"))
     intercept[Exception](spark.sql(
       s"ALTER TABLE $c.dw.t SET TBLPROPERTIES ('graft.retention.versions'='3', 'graft.stats.columns'='nope')"))
     assert(showProps(s"$c.dw.t").get("graft.retention.versions").contains("10"))
     // an unsupported key is refused with a message naming every supported one
     val e = intercept[Exception](spark.sql(s"ALTER TABLE $c.dw.t SET TBLPROPERTIES ('graft.nope'='1')"))
-    Seq("graft.write.mode", "graft.write.sort_by", "graft.retention.versions", "graft.commit.layout",
+    Seq("graft.write.mode", "graft.write.sort_by", "graft.retention.versions",
       "graft.stats.columns", "graft.sketch.columns").foreach(k => assert(e.getMessage.contains(k), e.getMessage))
   }
 

@@ -16,9 +16,9 @@ class TieredFoldSpec extends SparkSpec {
   }
 
   /** (path, length, mtime) of every data file under a version dir. */
-  private def fileIdentity(root: String, table: String, v: Int): Set[(String, Long, Long)] = {
+  private def fileIdentity(t: SnapshotTables, table: String, v: Int): Set[(String, Long, Long)] = {
     import scala.jdk.CollectionConverters._
-    val d = java.nio.file.Paths.get(f"$root/$table/snapshots/v$v%05d")
+    val d = java.nio.file.Paths.get(new org.apache.hadoop.fs.Path(t.snapshotDirString(table, v)).toUri.getPath)
     java.nio.file.Files.walk(d).iterator().asScala
       .filter(p => p.toString.endsWith(".parquet") && java.nio.file.Files.isRegularFile(p))
       .map(p => (p.toString, java.nio.file.Files.size(p),
@@ -27,10 +27,10 @@ class TieredFoldSpec extends SparkSpec {
   }
 
   test("tiered fold rewrites only the small-append run; the big segment is untouched") {
-    val (t, root) = newTables()
+    val (t, _) = newTables()
     t.overwriteTable((1 to 500).map(i => (i, s"r$i")).toDF("id", "v"), "tab") // v1 base
     t.append((1001 to 2000).map(i => (i, "big")).toDF("id", "v"), "tab")      // v2: the "big" segment
-    val bigBytes = fileIdentity(root, "tab", 2)
+    val bigBytes = fileIdentity(t, "tab", 2)
     (1 to 3).foreach(i => t.append(Seq((3000 + i, "s")).toDF("id", "v"), "tab")) // v3..v5 smalls
     // tier sized between the smalls and the big segment
     val tier = bigBytes.toSeq.map(_._2).sum // big >= tier, smalls < tier
@@ -39,23 +39,23 @@ class TieredFoldSpec extends SparkSpec {
     assert(t.read("tab").count() == 500 + 1000 + 3)
     assert(t.chainKinds("tab", t.currentVersion("tab")) == Seq("full", "append", "append"))
     // the big segment's files did not move, byte for byte
-    assert(fileIdentity(root, "tab", 2) == bigBytes)
+    assert(fileIdentity(t, "tab", 2) == bigBytes)
     // time travel through the fold still resolves mid-chain
     assert(t.readVersion("tab", 4).count() == 500 + 1000 + 2)
   }
 
   test("repeated tiered folds never re-read earlier folds (file identity across rounds)") {
-    val (t, root) = newTables(retention = 20)
+    val (t, _) = newTables(retention = 20)
     t.overwriteTable((1 to 100).map(i => (i, s"r$i")).toDF("id", "v"), "tab")
     (1 to 3).foreach(i => t.append(Seq((200 + i, "a")).toDF("id", "v"), "tab"))
     assert(t.compactDeltasTiered("tab", 1L << 20)) // fold #1
     val fold1V = t.currentVersion("tab")
-    val fold1Files = fileIdentity(root, "tab", fold1V)
+    val fold1Files = fileIdentity(t, "tab", fold1V)
     (1 to 3).foreach(i => t.append(Seq((300 + i, "b")).toDF("id", "v"), "tab"))
     // fold #2 with a tier placed BELOW fold #1's size: fold #1 stays
     val tier = fold1Files.toSeq.map(_._2).sum
     assert(t.compactDeltasTiered("tab", tier))
-    assert(fileIdentity(root, "tab", fold1V) == fold1Files)
+    assert(fileIdentity(t, "tab", fold1V) == fold1Files)
     assert(t.read("tab").count() == 106)
     assert(t.chainKinds("tab", t.currentVersion("tab")) == Seq("full", "append", "append"))
   }
@@ -82,7 +82,7 @@ class TieredFoldSpec extends SparkSpec {
   }
 
   test("chain budget folds tiered: a big fold output stops being re-read by later budget trips") {
-    val (t, root) = newTables(retention = 30)
+    val (t, _) = newTables(retention = 30)
     spark.conf.set("graft.delta.maxChainLength", "3")
     try {
       t.overwriteTable((1 to 1000).map(i => (i, s"r$i")).toDF("id", "v"), "tab")
@@ -94,12 +94,12 @@ class TieredFoldSpec extends SparkSpec {
       assert(t.read("tab").count() == 1006)
       // force the fold output to look "big": tier below its size
       val foldSeg = t.history("tab").max
-      val foldFiles = fileIdentity(root, "tab", foldSeg)
+      val foldFiles = fileIdentity(t, "tab", foldSeg)
       spark.conf.set("graft.delta.foldTierBytes", foldFiles.toSeq.map(_._2).sum.toString)
       (1 to 4).foreach(i => t.append(Seq((2000 + i, "y")).toDF("id", "v"), "tab"))
       // budget tripped at least once more; the old fold segment's files
       // were never rewritten and the base was never re-materialized
-      assert(fileIdentity(root, "tab", foldSeg) == foldFiles)
+      assert(fileIdentity(t, "tab", foldSeg) == foldFiles)
       assert(t.read("tab").count() == 1010)
       (2 to t.currentVersion("tab")).foreach(v =>
         assert(t.chainKinds("tab", v).count(_ == "full") == 1))

@@ -508,7 +508,7 @@ class StreamsSpec extends SparkSpec {
       assert(tables.chainKinds("tab", tables.currentVersion("tab")) ==
         Seq("full", "mor_upsert"))
       // the delta version's directory holds ONLY the batch (O(batch) write)
-      assert(spark.read.parquet(f"$root/tab/snapshots/v${2}%05d").count() == 2)
+      assert(spark.read.parquet(tables.snapshotDirString("tab", 2)).count() == 2)
       // every batch state still time-travels
       assert(tables.readVersion("tab", 1).as[(Long, String)].collect().toSet ==
         Set((1L, "a"), (2L, "b")))
